@@ -14,9 +14,12 @@ import os
 
 from pyspark.sql import SparkSession
 
+from koalas_spark.memo import workdir
+
 
 def get_spark(app_name: str = "koalas_spark", cpus: int | None = None) -> SparkSession:
     """Create (or fetch) the SparkSession with engine defaults."""
+    package = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     builder = (
@@ -71,6 +74,12 @@ def get_spark(app_name: str = "koalas_spark", cpus: int | None = None) -> SparkS
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
+        # Python workers (UDFs, Python data sources) import koalas_spark
+        # from the package's parent, whatever the working directory
+        .config("spark.executorEnv.PYTHONPATH", os.path.dirname(package))
+        # managed tables land in the per-process work directory, not
+        # the working directory
+        .config("spark.sql.warehouse.dir", os.path.join(workdir(), "spark-warehouse"))
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -13,11 +13,10 @@ the brief, following the repo's cross-engine determinism rules
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from koalas_spark.memo import staged
 from koalas_spark.queries import query
 from koalas_spark.queries.analytics import _t
 
@@ -301,20 +300,21 @@ def knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
 # day filter resolves against the directory manifest (PartitionFilters
 # in the plan — tests/test_analytics10.py pins it), so a 3-day query
 # over a 10-year lake touches 3 directories, not the corpus. Staged
-# per sf under .tmp (idempotent overwrite, same device as read_table).
+# once per session (koalas_spark.memo).
 _PRUNE_DAYS = ("2024-01-05", "2024-01-12", "2024-01-21")
 
 
 def _partitioned_events(spark: SparkSession, sf_dir: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = f"/root/repo/.tmp/part_events_{tag}"
-    marker = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(marker):
-        ev = _t(spark, sf_dir, "events").withColumn(
-            "day", F.date_format("ts", "yyyy-MM-dd")
-        )
-        ev.write.mode("overwrite").partitionBy("day").parquet(path)
-    return path
+    ev = _t(spark, sf_dir, "events").withColumn(
+        "day", F.date_format("ts", "yyyy-MM-dd")
+    )
+    return staged(
+        spark,
+        "part_events",
+        (sf_dir, "events"),
+        ev.write.partitionBy("day").parquet,
+        "_SUCCESS",
+    )
 
 
 def partitioned_scan_source(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -355,8 +355,8 @@ def partitioned_write_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 # an EXPLICIT schema (inference re-scans the data and can widen
 # types), and aggregate per-language; matching the oracle computed on
 # the original parquet proves the round-trip is byte-faithful through
-# JSON string escaping (unicode, quotes, newlines-in-text). Staged per
-# sf under .tmp like #223.
+# JSON string escaping (unicode, quotes, newlines-in-text). Staged
+# once per session like #223.
 @query(
     "jsonl_roundtrip_stats",
     oracle="""
@@ -367,11 +367,10 @@ FROM documents GROUP BY lang
 """,
 )
 def jsonl_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = f"/root/repo/.tmp/docs_jsonl_{tag}"
     docs = _t(spark, sf_dir, "documents")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        docs.write.mode("overwrite").json(path)
+    path = staged(
+        spark, "docs_jsonl", (sf_dir, "documents"), docs.write.json, "_SUCCESS"
+    )
     back = spark.read.schema(docs.schema).json(path)
     return back.groupBy("lang").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -887,14 +886,11 @@ SELECT 'removed', 0, 0
 """,
 )
 def snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from koalas_spark.queries.analytics7 import snapshot_time_travel
+    from koalas_spark.queries.analytics7 import orders_snapshot
     from koalas_spark.sources.snapshots import read_snapshot
 
-    # building #176's frame materializes the snapshot dir (idempotent)
-    snapshot_time_travel(spark, sf_dir)
-    src = os.path.join(sf_dir, "orders.parquet")
-    tag = f"{os.path.basename(os.path.normpath(sf_dir))}_{os.stat(src).st_mtime_ns}"
-    path = os.path.join("/root/repo/.tmp", f"snap_orders_{tag}")
+    # #176's snapshot table, staged once per session
+    path = orders_snapshot(spark, sf_dir)
     v1 = read_snapshot(spark, path, version=1).select("o_orderkey")
     v2 = read_snapshot(spark, path, version=2).select("o_orderkey")
 

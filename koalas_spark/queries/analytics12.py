@@ -18,11 +18,10 @@ first)."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from koalas_spark.memo import staged
 from koalas_spark.queries import query
 from koalas_spark.queries.analytics import _t
 
@@ -429,7 +428,7 @@ def acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # parquet proves the round-trip preserves BIGINT ids, DOUBLE values
 # and TIMESTAMP instants (ORC's timestamp encoding is
 # timezone-sensitive — the min_ts column would catch a shifted
-# rebase). Staged per sf under .tmp like #223/#224.
+# rebase). Staged once per session (koalas_spark.memo).
 @query(
     "orc_roundtrip_stats",
     oracle="""
@@ -442,13 +441,12 @@ FROM events GROUP BY event_type
 """,
 )
 def orc_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = f"/root/repo/.tmp/events_orc_{tag}"
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        ev.write.mode("overwrite").orc(path)
+    path = staged(
+        spark, "events_orc", (sf_dir, "events"), ev.write.orc, "_SUCCESS"
+    )
     back = spark.read.schema(ev.schema).orc(path)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),

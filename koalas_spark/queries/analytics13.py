@@ -19,11 +19,10 @@ identical doubles are bit-identical everywhere).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from koalas_spark.memo import staged
 from koalas_spark.queries import query
 from koalas_spark.queries.analytics import _t
 from koalas_spark.queries.analytics9 import _COV_DIM, _SCALE
@@ -313,8 +312,8 @@ def khop_reach_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------
 # 259. parquet schema evolution (mergeSchema) — the lakehouse reality
 # that a column added in March must read cleanly over February's
-# files. Stages two snapshot generations under .tmp: v1 carries only
-# (event_id, ts, event_type) — the "legacy" files written before the
+# files. Stages two snapshot generations once per session: v1 carries
+# only (event_id, ts, event_type) — the "legacy" files written before the
 # value column existed (even event_ids) — and v2 adds value (odd
 # event_ids). A single mergeSchema read unions the schemas, nulls
 # filling the legacy rows; per-type stats prove both the fill and the
@@ -335,18 +334,18 @@ FROM events GROUP BY event_type
 """,
 )
 def schema_evolution_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    base = f"/root/repo/.tmp/events_evol_{tag}"
-    v1, v2 = f"{base}/v1", f"{base}/v2"
     ev = _t(spark, sf_dir, "events")
-    if not os.path.exists(os.path.join(v1, "_SUCCESS")):
+
+    def write(base: str) -> None:
         ev.filter(F.col("event_id") % 2 == 0).select(
             "event_id", "ts", "event_type"
-        ).write.mode("overwrite").parquet(v1)
-    if not os.path.exists(os.path.join(v2, "_SUCCESS")):
+        ).write.parquet(f"{base}/v1")
         ev.filter(F.col("event_id") % 2 == 1).select(
             "event_id", "ts", "event_type", "value"
-        ).write.mode("overwrite").parquet(v2)
+        ).write.parquet(f"{base}/v2")
+
+    base = staged(spark, "events_evol", (sf_dir, "events"), write, "v2/_SUCCESS")
+    v1, v2 = f"{base}/v1", f"{base}/v2"
     merged = spark.read.option("mergeSchema", "true").parquet(v1, v2)
     # n_legacy counts by the partition key that DEFINES a legacy row
     # (even event_id), not by NULL-ness of the merged value column —
@@ -494,8 +493,8 @@ def theil_sen_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 # aggregate; matching the oracle computed on the original parquet
 # proves BIGINT, shortest-repr DOUBLE (Spark writes Java
 # Double.toString, which re-parses to the identical bits) and
-# microsecond NTZ timestamps all survive the text hop. Staged per sf
-# under .tmp like the ORC/JSONL twins (#255/#224).
+# microsecond NTZ timestamps all survive the text hop. Staged once
+# per session like the ORC/JSONL twins (#255/#224).
 @query(
     "csv_roundtrip_stats",
     oracle="""
@@ -508,20 +507,20 @@ FROM events GROUP BY event_type
 """,
 )
 def csv_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = f"/root/repo/.tmp/events_csv_{tag}"
     fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (
-            ev.write.mode("overwrite")
-            .option("header", "true")
-            .option("timestampNTZFormat", fmt)
-            .option("timestampFormat", fmt)
-            .csv(path)
-        )
+    path = staged(
+        spark,
+        "events_csv",
+        (sf_dir, "events"),
+        ev.write.option("header", "true")
+        .option("timestampNTZFormat", fmt)
+        .option("timestampFormat", fmt)
+        .csv,
+        "_SUCCESS",
+    )
     back = (
         spark.read.schema(ev.schema)
         .option("header", "true")

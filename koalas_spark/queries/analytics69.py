@@ -19,6 +19,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from koalas_spark.memo import staged
 from koalas_spark.queries import query
 from koalas_spark.queries.analytics import _t
 
@@ -28,7 +29,7 @@ from koalas_spark.queries.analytics import _t
 # (image/audio shards land as FILES; Spark's binaryFile source reads
 # (path, modificationTime, length, content) with no row-format
 # assumptions). Stages one .bin file per doc for the bounded doc_id <
-# 200 probe set (fingerprinted .tmp dir, idempotent), reads them back
+# 200 probe set (staged once per session), reads them back
 # through format("binaryFile"), and proves byte-exact ingest: per-file
 # md5(content) must reproduce md5(text bytes) — aggregated order-
 # insensitively (sorted-hex concat md5, the #138 device) so the check
@@ -47,14 +48,7 @@ FROM src
 """,
 )
 def binaryfile_ingest_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    stage = (
-        f"/root/repo/.tmp/binfiles_{tag}_{st.st_size}_{int(st.st_mtime)}"
-    )
-    done = os.path.join(stage, "_DONE")
-    if not os.path.exists(done):
+    def write(stage: str) -> None:
         # bounded staging: exactly the doc_id < 200 probe set (#220
         # discipline — the demo ingests a fixed fleet of files, the
         # PLAN is what scales to millions of shards)
@@ -64,12 +58,14 @@ def binaryfile_ingest_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "text")
             .collect()
         )
-        os.makedirs(stage, exist_ok=True)
+        os.makedirs(stage)
         for r in rows:
             with open(os.path.join(stage, f"doc_{r['doc_id']:06d}.bin"), "wb") as f:
                 f.write(r["text"].encode("utf-8"))
-        with open(done, "w") as f:
+        with open(os.path.join(stage, "_DONE"), "w") as f:
             f.write("ok")
+
+    stage = staged(spark, "binfiles", (sf_dir, "documents"), write, "_DONE")
     files = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.bin")

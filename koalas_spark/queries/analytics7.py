@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from koalas_spark.memo import staged
 from koalas_spark.queries import query
 from koalas_spark.queries.analytics import _t
 
@@ -240,29 +241,9 @@ FROM orders
 """,
 )
 def snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
+    from koalas_spark.sources.snapshots import read_snapshot
 
-    from koalas_spark.sources.snapshots import read_snapshot, write_snapshot
-
-    src = os.path.join(sf_dir, "orders.parquet")
-    # nanosecond mtime in the cache key: int-seconds could serve a
-    # stale snapshot if the source parquet were regenerated within the
-    # same second as the cached build
-    tag = f"{os.path.basename(os.path.normpath(sf_dir))}_{os.stat(src).st_mtime_ns}"
-    path = os.path.join("/root/repo/.tmp", f"snap_orders_{tag}")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    if not os.path.exists(os.path.join(path, "_v2.json")):
-        # a run interrupted between the two commits leaves _v1.json
-        # behind; appending to that partial table would make version 2
-        # contain the pre-1995 slice twice and poison the cache until
-        # manual cleanup — rebuild the snapshot dir from scratch
-        if os.path.exists(path):
-            import shutil
-
-            shutil.rmtree(path)
-        cut = F.lit("1995-01-01").cast("timestamp")
-        write_snapshot(o.filter(F.col("o_orderdate") < cut), path)
-        write_snapshot(o.filter(F.col("o_orderdate") >= cut), path)
+    path = orders_snapshot(spark, sf_dir)
 
     def as_of(v: int) -> DataFrame:
         return read_snapshot(spark, path, version=v).agg(
@@ -272,6 +253,23 @@ def snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return as_of(1).unionByName(as_of(2))
+
+
+def orders_snapshot(spark: SparkSession, sf_dir: str) -> str:
+    """The two-version orders snapshot table (v1 = pre-1995, v2 = the
+    rest appended), staged once per session. A write interrupted
+    between the two commits leaves no ``_v2.json``, so the staging
+    rebuilds the table from scratch rather than append to it."""
+    from koalas_spark.sources.snapshots import write_snapshot
+
+    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    cut = F.lit("1995-01-01").cast("timestamp")
+
+    def write(path: str) -> None:
+        write_snapshot(o.filter(F.col("o_orderdate") < cut), path)
+        write_snapshot(o.filter(F.col("o_orderdate") >= cut), path)
+
+    return staged(spark, "snap_orders", (sf_dir, "orders"), write, "_v2.json")
 
 
 # --------------------------------------------------------------------

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from koalas_spark.memo import staged
 from koalas_spark.queries import query
 from koalas_spark.queries.analytics import _t, dsum, _dsum_sql
 
@@ -399,12 +400,6 @@ FROM daily
 """,
 )
 def partition_overwrite_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    src = os.path.join(sf_dir, "events.parquet")
-    tag = f"{os.path.basename(os.path.normpath(sf_dir))}_{os.stat(src).st_mtime_ns}"
-    table = os.path.join("/root/repo/.tmp", f"backfill_daily_{tag}")
-
     ev = _t(spark, sf_dir, "events")
     daily = ev.groupBy(
         F.to_date("ts").alias("day"), F.col("event_type")
@@ -412,8 +407,13 @@ def partition_overwrite_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n"),
         dsum("value").alias("sum_value"),
     )
-    if not os.path.exists(os.path.join(table, "_SUCCESS")):
-        daily.write.mode("overwrite").partitionBy("day").parquet(table)
+    table = staged(
+        spark,
+        "backfill_daily",
+        (sf_dir, "events"),
+        daily.write.partitionBy("day").parquet,
+        "_SUCCESS",
+    )
 
     # the backfill: recompute the earliest day and dynamically
     # overwrite ONLY its partition — repeated runs are no-ops
@@ -775,11 +775,6 @@ FROM events GROUP BY 1, 2
 """,
 )
 def incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    src = os.path.join(sf_dir, "events.parquet")
-    tag = f"{os.path.basename(os.path.normpath(sf_dir))}_{os.stat(src).st_mtime_ns}"
-    state = os.path.join("/root/repo/.tmp", f"ivm_state_{tag}")
     cut = "2024-01-24"
 
     ev = _t(spark, sf_dir, "events").select(
@@ -792,8 +787,13 @@ def incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(25,6)")).alias("psum"),
         )
 
-    if not os.path.exists(os.path.join(state, "_SUCCESS")):
-        partials(ev.filter(F.col("day") < cut)).write.mode("overwrite").parquet(state)
+    state = staged(
+        spark,
+        "ivm_state",
+        (sf_dir, "events"),
+        partials(ev.filter(F.col("day") < cut)).write.parquet,
+        "_SUCCESS",
+    )
 
     delta = partials(ev.filter(F.col("day") >= cut))
     merged = (

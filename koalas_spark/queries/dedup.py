@@ -15,7 +15,7 @@ from koalas_spark.operators.dedup import (
     verify_pairs_jaccard,
 )
 from koalas_spark.functions.textfn import tokens, word_shingles
-from koalas_spark.memo import register_memo
+from koalas_spark.memo import artifact
 from koalas_spark.queries import query
 from koalas_spark.queries.analytics import _t
 
@@ -106,17 +106,14 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MH_CACHE: dict = register_memo({})
-
-
 def minhash_sig_table(
     spark: SparkSession, sf_dir: str, rebuild: bool = False
 ) -> tuple[DataFrame, DataFrame]:
     """The canonical (hashed shingle table, 64-perm minhash signature
-    table) over this sf_dir's documents, built ONCE PER SESSION (r13,
-    the copurchase_pair_table discipline) and shared by the three
-    batch consumers that previously each re-ran scan + tokenize +
-    shingle + the signature UDF (#38 dedup_minhash_lsh, #209
+    table) over this sf_dir's documents, a session artifact
+    (koalas_spark.memo) shared by the three batch consumers that
+    previously each re-ran scan + tokenize + shingle + the signature
+    UDF (#38 dedup_minhash_lsh, #209
     incremental_neardup_minhash, #273 minhash_estimate_audit; each
     keeps its own LSH banding / verify stages — only the pure
     function of the documents table is shared).
@@ -124,12 +121,8 @@ def minhash_sig_table(
     Lazy localCheckpoints on both frames for the same reason the
     per-query versions had them (r4/r5 A/B: MEMORY_AND_DISK persist
     measured WORSE than recompute; a lazy checkpoint materializes
-    local blocks AND truncates lineage). Session-scoped only: every
-    bench/oracle invocation recomputes from the documents parquet,
-    fingerprinted by the source file; ``rebuild=True`` bypasses the
-    memo (parity test)."""
-    import os
-
+    local blocks AND truncates lineage). ``rebuild=True`` bypasses the
+    store (parity test)."""
     from koalas_spark.operators.dedup import minhash_sigs, shingle_sets
 
     docs = _t(spark, sf_dir, "documents")
@@ -138,20 +131,12 @@ def minhash_sig_table(
             eager=False
         )
         return base, minhash_sigs(base, num_perm=64)
-    st_f = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = (
-        id(spark),
-        os.path.basename(sf_dir.rstrip("/")),
-        st_f.st_size,
-        st_f.st_mtime_ns,
-    )
-    got = _MH_CACHE.get(key)
-    if got is not None:
-        return got
-    base = shingle_sets(docs, "doc_id", "text").localCheckpoint(eager=False)
-    sigs = minhash_sigs(base, num_perm=64).localCheckpoint(eager=False)
-    _MH_CACHE[key] = (base, sigs)
-    return base, sigs
+
+    def build():
+        base = shingle_sets(docs, "doc_id", "text").localCheckpoint(eager=False)
+        return base, minhash_sigs(base, num_perm=64).localCheckpoint(eager=False)
+
+    return artifact(spark, "minhash_sigs", (sf_dir, "documents"), build)
 
 
 # 39. exact n-gram Jaccard inside (lang, source) blocks — fully

@@ -16,11 +16,10 @@ multi-dimensional clustering a columnar lake needs at 100 TB.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from koalas_spark.memo import staged
 from koalas_spark.queries import query
 from koalas_spark.queries.analytics import _t
 
@@ -56,25 +55,23 @@ def zorder_box_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def zordered_lineitem_path(spark: SparkSession, sf_dir: str) -> str:
-    """Stage lineitem Z-ordered by (l_partkey, l_suppkey) under .tmp,
-    keyed by (sf dir, source mtime) so regenerating the source data in
-    place restages instead of serving stale rows; reused across calls
-    within a run (the _SUCCESS marker makes restage idempotent)."""
+    """Stage lineitem Z-ordered by (l_partkey, l_suppkey), once per
+    session (koalas_spark.memo)."""
     from koalas_spark.operators.layout import zorder_write
 
-    src = os.path.join(sf_dir, "lineitem.parquet")
-    mtime = int(os.stat(src).st_mtime)
-    tag = f"{os.path.basename(os.path.normpath(sf_dir))}_{mtime}"
-    path = os.path.join("/root/repo/.tmp", f"zorder_lineitem_{tag}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        zorder_write(
+    return staged(
+        spark,
+        "zorder_lineitem",
+        (sf_dir, "lineitem"),
+        lambda path: zorder_write(
             _t(spark, sf_dir, "lineitem"),
             ["l_partkey", "l_suppkey"],
             path,
             bits=12,
             num_files=16,
-        )
-    return path
+        ),
+        "_SUCCESS",
+    )
 
 
 # --------------------------------------------------------------------
@@ -117,20 +114,19 @@ def hilbert_box_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def hilbert_lineitem_path(spark: SparkSession, sf_dir: str) -> str:
     """Stage lineitem Hilbert-clustered by (l_partkey, l_suppkey),
-    keyed by (sf dir, source mtime) — same idempotent staging contract
-    as zordered_lineitem_path."""
+    once per session like zordered_lineitem_path."""
     from koalas_spark.operators.layout import hilbert_write
 
-    src = os.path.join(sf_dir, "lineitem.parquet")
-    mtime = int(os.stat(src).st_mtime)
-    tag = f"{os.path.basename(os.path.normpath(sf_dir))}_{mtime}"
-    path = os.path.join("/root/repo/.tmp", f"hilbert_lineitem_{tag}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        hilbert_write(
+    return staged(
+        spark,
+        "hilbert_lineitem",
+        (sf_dir, "lineitem"),
+        lambda path: hilbert_write(
             _t(spark, sf_dir, "lineitem"),
             ["l_partkey", "l_suppkey"],
             path,
             bits=12,
             num_files=16,
-        )
-    return path
+        ),
+        "_SUCCESS",
+    )

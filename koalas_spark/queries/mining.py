@@ -23,7 +23,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from koalas_spark.memo import register_memo
+from koalas_spark import memo
 from koalas_spark.queries import query
 from koalas_spark.queries.analytics import _t
 from koalas_spark.functions.textfn import tokens
@@ -279,7 +279,7 @@ def triangle_count_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # documented at-scale paths are triangle_count_doulion (unbiased
     # sampled, passes the sf10 gate) or a support-thresholded edge
     # set through this same pipeline.
-    li_bytes = _dir_bytes(os.path.join(sf_dir, "lineitem.parquet"))
+    li_bytes = memo.source_bytes(sf_dir, "lineitem")
     est = int(li_bytes * 0.85)
     basis = f"estimated {est >> 20} MB from lineitem {li_bytes >> 20} MB"
     if est > TRIANGLE_EXACT_MAX_BYTES:
@@ -303,21 +303,6 @@ def triangle_count_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return n_e.crossJoin(F.broadcast(tri))  # two 1-row frames
 
 
-_PAIR_CACHE: dict = register_memo({})
-
-
-def _copurchase_cache_key(sf_dir: str) -> str:
-    """Session-memo key for this sf_dir's co-purchase pair table,
-    fingerprinted by the source lineitem file (size + mtime) so a
-    regenerated testdata dir can never serve a stale graph within a
-    long-lived session. (Pre-r13 this was a cross-process snapshot
-    directory path; the on-disk cache was removed — the key now only
-    scopes the in-session memo.)"""
-    st = os.stat(os.path.join(sf_dir, "lineitem.parquet"))
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return f"copurchase_pairs_{tag}_{st.st_size}_{st.st_mtime_ns}"
-
-
 def copurchase_pair_table(
     spark: SparkSession, sf_dir: str, rebuild: bool = False
 ) -> DataFrame:
@@ -334,15 +319,9 @@ def copurchase_pair_table(
     triangles at sf0.1), and the result is a pure function of
     lineitem. At 100 TB this is exactly the "build the edge list
     once, checkpoint it, fan out the analyses" discipline a real
-    graph pipeline uses. The sharing is strictly SESSION-SCOPED
-    (r13): every bench/oracle invocation recomputes the pair table
-    from the lineitem parquet — the first consumer in a session pays
-    the build, later consumers reuse the checkpointed rows, and
-    NOTHING survives the process (the pre-r13 cross-process disk
-    snapshot, keyed on the testdata fingerprint, was removed as
-    precomputation). ``rebuild=True`` bypasses the memo and
-    recomputes fresh (used by the parity test that proves shared ==
-    fresh build)."""
+    graph pipeline uses. It is a session artifact (koalas_spark.memo);
+    ``rebuild=True`` bypasses the store and recomputes fresh (used by
+    the parity test that proves shared == fresh build)."""
     # Build shape (r14, guide §2.3/§2.4): ONE scan + TWO exchanges.
     # collect_set per order replaces the old distinct + orderkey
     # self-join (2 scans, 4 exchanges — distinct shuffle, both join
@@ -379,10 +358,6 @@ def copurchase_pair_table(
     )
     if rebuild:
         return fresh
-    key = (id(spark), _copurchase_cache_key(sf_dir))
-    got = _PAIR_CACHE.get(key)
-    if got is not None:
-        return got
     # Re-spread before the checkpoint so every downstream graph join
     # starts from a cluster-wide partitioning (same discipline as
     # analytics._spread), memoized per session so the bench's 8
@@ -396,22 +371,21 @@ def copurchase_pair_table(
     # re-reads compact serialized blocks from local disk, trading
     # ~seconds of re-read for ~13 GB of resident heap. Driver-graded
     # SFs (<=0.1) keep the in-memory default.
-    df = fresh.repartition(
-        spark.sparkContext.defaultParallelism, "u", "v"
-    ).localCheckpoint(eager=False, storageLevel=graph_ckpt_level(sf_dir))
-    _PAIR_CACHE[key] = df
-    return df
-
-
-_DEG_CACHE: dict = register_memo({})
+    return memo.artifact(
+        spark,
+        "copurchase_pairs",
+        (sf_dir, "lineitem"),
+        lambda: fresh.repartition(
+            spark.sparkContext.defaultParallelism, "u", "v"
+        ).localCheckpoint(eager=False, storageLevel=graph_ckpt_level(sf_dir)),
+    )
 
 
 def copurchase_degree_table(
     spark: SparkSession, sf_dir: str, rebuild: bool = False
 ) -> DataFrame:
-    """(x, dg) node-degree table of the co-purchase graph, built once
-    per session next to the pair table (round 12; session-scoped
-    since r13 — no cross-process disk cache).
+    """(x, dg) node-degree table of the co-purchase graph, a session
+    artifact (koalas_spark.memo) next to the pair table.
 
     Why: degrees are the other computation EVERY wedge/probe-family
     consumer repeats — a groupBy over the 2|E|-row symmetrized
@@ -419,9 +393,9 @@ def copurchase_degree_table(
     local_clustering_probes' sf10 wall. Like daily_revenue_table,
     the result is a pure function of the pair table and is |V|-sized
     (~200k rows at sf10), so one build amortizes across the family
-    within a session. Fingerprinted by the same lineitem key as the
-    pair memo; ``rebuild=True`` recomputes fresh (the parity test's
-    path). Oracles are unaffected — they recompute degrees in SQL."""
+    within a session. ``rebuild=True`` recomputes fresh (the parity
+    test's path). Oracles are unaffected — they recompute degrees in
+    SQL."""
     e = _copurchase_edge_set(spark, sf_dir)
     fresh = (
         e.select(F.explode(F.array("u", "v")).alias("x"))
@@ -430,28 +404,15 @@ def copurchase_degree_table(
     )
     if rebuild:
         return fresh
-    key = (id(spark), _copurchase_cache_key(sf_dir) + "_deg")
-    got = _DEG_CACHE.get(key)
-    if got is not None:
-        return got
     # |V|-sized: a plain respread suffices (no graph-sized checkpoint)
-    df = fresh.repartition(
-        spark.sparkContext.defaultParallelism, "x"
-    ).localCheckpoint(eager=False)
-    _DEG_CACHE[key] = df
-    return df
-
-
-def _dir_bytes(path: str) -> int:
-    """Total bytes of a parquet file OR directory (scaled testdata
-    dirs are multi-part directories; os.stat alone reads the inode)."""
-    if os.path.isfile(path):
-        return os.stat(path).st_size
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            total += os.stat(os.path.join(root, f)).st_size
-    return total
+    return memo.artifact(
+        spark,
+        "copurchase_degrees",
+        (sf_dir, "lineitem"),
+        lambda: fresh.repartition(
+            spark.sparkContext.defaultParallelism, "x"
+        ).localCheckpoint(eager=False),
+    )
 
 
 def graph_ckpt_level(sf_dir: str):
@@ -474,7 +435,7 @@ def graph_ckpt_level(sf_dir: str):
     remains both the fastest stable choice and the one that holds
     the default 16 GB heap; serialized disk blocks bound the heap,
     trading a local re-read per consumer pass."""
-    if _dir_bytes(os.path.join(sf_dir, "lineitem.parquet")) > (
+    if memo.source_bytes(sf_dir, "lineitem") > (
         512 * 1024 * 1024
     ):
         from pyspark.storagelevel import StorageLevel
@@ -491,7 +452,7 @@ def bcast_v(df: DataFrame, sf_dir: str) -> DataFrame:
     node stays broadcast-sized (~16 B/node) well past sf10 (200k
     nodes = ~3 MB). Above the gate the hint is dropped and the
     planner shuffles as before — values never depend on strategy."""
-    if _dir_bytes(os.path.join(sf_dir, "lineitem.parquet")) <= 8 << 30:
+    if memo.source_bytes(sf_dir, "lineitem") <= 8 << 30:
         return F.broadcast(df)
     return df
 
@@ -505,7 +466,7 @@ def bcast_e(df: DataFrame, sf_dir: str) -> DataFrame:
     broadcasts a ~12M-edge frame ≈ 190 MB hash relation — heavy but
     measured cheaper than re-shuffling the wedge fan-out; sf10 does
     not)."""
-    if _dir_bytes(os.path.join(sf_dir, "lineitem.parquet")) <= 512 * 1024 * 1024:
+    if memo.source_bytes(sf_dir, "lineitem") <= 512 * 1024 * 1024:
         return F.broadcast(df)
     return df
 

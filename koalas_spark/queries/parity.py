@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from koalas_spark.frame import KFrame, concat
+from koalas_spark.memo import workdir
 from koalas_spark.queries import query
 from koalas_spark.queries.analytics import _t, dsum, _dsum_sql
 
@@ -37,7 +38,7 @@ def read_table_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("l_orderkey") <= 100)
         .select("l_orderkey", "l_linenumber", "l_returnflag", "l_linestatus")
     )
-    path = os.path.join("/root/repo/.tmp", "read_table_roundtrip")
+    path = os.path.join(workdir(), "read_table_roundtrip")
     KFrame(src).to_csv(path, sep="\t")
     return KFrame.from_table(
         spark,

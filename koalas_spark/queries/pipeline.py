@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from koalas_spark.memo import staged
 from koalas_spark.queries import query
 from koalas_spark.queries.analytics import _t
 
@@ -552,29 +553,25 @@ FROM documents GROUP BY lang
 """,
 )
 def shard_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from koalas_spark.sources.pyshardsink import ShardSinkSource
 
     try:
         spark.dataSource.register(ShardSinkSource)
     except Exception:
         pass  # already registered in this session
-    # key the staged copy by (sf dir, source mtime): regenerating the
-    # source parquet in place restages instead of serving stale shards
-    src = os.path.join(sf_dir, "documents.parquet")
-    tag = f"{os.path.basename(os.path.normpath(sf_dir))}_{int(os.stat(src).st_mtime)}"
-    path = os.path.join("/root/repo/.tmp", f"shards_{tag}")
-    if not os.path.exists(os.path.join(path, "_manifest.json")):
-        (
-            _t(spark, sf_dir, "documents")
-            .select("doc_id", "lang", "n_chars")
-            .repartition(8, "doc_id")
-            .write.format("shardsink")
-            .option("path", path)
-            .mode("append")
-            .save()
-        )
+    path = staged(
+        spark,
+        "shards",
+        (sf_dir, "documents"),
+        lambda p: _t(spark, sf_dir, "documents")
+        .select("doc_id", "lang", "n_chars")
+        .repartition(8, "doc_id")
+        .write.format("shardsink")
+        .option("path", p)
+        .mode("append")
+        .save(),
+        "_manifest.json",
+    )
     loaded = (
         spark.read.schema("doc_id bigint, lang string, n_chars bigint")
         .format("shardsink")
@@ -914,9 +911,8 @@ def span_corruption_masks(spark: SparkSession, sf_dir: str) -> DataFrame:
 # of the contract: the file count collapses to the target AND the
 # data survives bit-for-bit (row count + exact decimal sum of a value
 # column, which is what the oracle checks against the source table).
-# Staging is keyed by (sf dir, source mtime) like the other .tmp
-# artifacts, so regenerated testdata restages instead of serving
-# stale files. At cluster scale the same rewrite is
+# Both layouts are staged once per session (koalas_spark.memo). At
+# cluster scale the same rewrite is
 # repartitionByRange on the layout key + a maxRecordsPerFile cap.
 @query(
     "compact_small_files",
@@ -935,15 +931,14 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
     import os
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    tag = f"{os.path.basename(os.path.normpath(sf_dir))}_{int(os.stat(src).st_mtime)}"
-    small = os.path.join("/root/repo/.tmp", f"compact_small_{tag}")
-    big = os.path.join("/root/repo/.tmp", f"compact_big_{tag}")
     d = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    if not os.path.exists(os.path.join(small, "_SUCCESS")):
-        d.repartition(64).write.mode("overwrite").parquet(small)
-    if not os.path.exists(os.path.join(big, "_SUCCESS")):
-        spark.read.parquet(small).repartition(4).write.mode("overwrite").parquet(big)
+
+    def write(base: str) -> None:
+        d.repartition(64).write.parquet(f"{base}/small")
+        spark.read.parquet(f"{base}/small").repartition(4).write.parquet(f"{base}/big")
+
+    base = staged(spark, "compact", (sf_dir, "documents"), write, "big/_SUCCESS")
+    small, big = f"{base}/small", f"{base}/big"
 
     def stats(path: str, label: str):
         n_files = len(glob.glob(os.path.join(path, "part-*.parquet")))

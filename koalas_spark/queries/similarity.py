@@ -6,7 +6,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from koalas_spark.operators.similarity import brute_force_topk, lsh_topk
-from koalas_spark.memo import register_memo
+from koalas_spark import memo
 from koalas_spark.queries import query
 from koalas_spark.queries.analytics import _t
 
@@ -159,9 +159,6 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kmeans_finish(base, centroids)
 
 
-_KM_CACHE: dict = register_memo({})
-
-
 def kmeans_embeddings_core(
     spark: SparkSession,
     sf_dir: str,
@@ -171,35 +168,22 @@ def kmeans_embeddings_core(
 ):
     """The trained Lloyd core — quantized-embeddings checkpoint plus
     the converged k×dim centroid matrix — over this sf_dir's
-    embeddings table, built ONCE PER SESSION (r13, the
-    copurchase_pair_table discipline) and shared by the two consumers
-    that previously each re-ran the identical 3-round EM with its
-    per-round driver collect (#80 kmeans_clusters, #312
-    silhouette_simplified; each keeps its own final assignment pass).
-    Session-scoped only: every bench/oracle invocation retrains from
-    the embeddings parquet, fingerprinted by the source file;
-    ``rebuild=True`` bypasses the memo (parity test)."""
-    import os
-
+    embeddings table, a session artifact (koalas_spark.memo) shared
+    by the two consumers that previously each re-ran the identical
+    3-round EM with its per-round driver collect (#80
+    kmeans_clusters, #312 silhouette_simplified; each keeps its own
+    final assignment pass). ``rebuild=True`` bypasses the store
+    (parity test)."""
     from koalas_spark.operators.clustering import kmeans_core
 
     emb = _t(spark, sf_dir, "embeddings")
-    if rebuild:
+
+    def build():
         return kmeans_core(emb, "vec_id", "embedding", k=k, iters=iters)
-    st_f = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    key = (
-        id(spark),
-        os.path.basename(sf_dir.rstrip("/")),
-        st_f.st_size,
-        st_f.st_mtime_ns,
-        k,
-        iters,
-    )
-    got = _KM_CACHE.get(key)
-    if got is None:
-        got = kmeans_core(emb, "vec_id", "embedding", k=k, iters=iters)
-        _KM_CACHE[key] = got
-    return got
+
+    if rebuild:
+        return build()
+    return memo.artifact(spark, "kmeans_core", (sf_dir, "embeddings"), build, k, iters)
 
 
 # 135. int8-quantized ANN — the memory lever for billion-vector search
@@ -644,41 +628,31 @@ FROM (
 # rows-only under the xxhash64 init). Recall against exact brute-force
 # neighbors and per-iteration monotonicity stay unit-tested
 # (tests/test_similarity.py::test_nn_descent_recall_improves).
-_NN_GRAPH_CACHE: dict = register_memo({})
 
 
 def nn_descent_graph_table(
     spark: SparkSession, sf_dir: str, rebuild: bool = False
 ) -> DataFrame:
     """The canonical k=10 / iters=4 NN-Descent graph over this
-    sf_dir's embeddings, built ONCE PER SESSION (the
-    copurchase_pair_table discipline, r13) and shared by its three
+    sf_dir's embeddings, a session artifact (koalas_spark.memo)
+    shared by its three
     consumers (#199 ann_nn_descent, #474 ann_graph_search, #477
     graph_search_recall_audit), each of which previously re-ran the
     identical 5-round construction. The result is a pure function of
     the embeddings table; nn_descent's final round already ends in a
-    localCheckpoint, so the memo stores that frame directly. Sharing
-    is strictly SESSION-SCOPED: every bench/oracle invocation
-    recomputes from the embeddings parquet (nothing survives the
-    process), fingerprinted by the source file so a regenerated
-    testdata dir can never serve a stale graph. ``rebuild=True``
-    bypasses the memo (the parity test proving shared == fresh)."""
-    import os
-
+    localCheckpoint, so the store keeps that frame directly.
+    ``rebuild=True`` bypasses the store (the parity test proving
+    shared == fresh)."""
     from koalas_spark.operators.similarity import nn_descent
 
     emb = _t(spark, sf_dir, "embeddings")
-    if rebuild:
+
+    def build():
         return nn_descent(emb, "vec_id", "embedding", k=10, iters=4)
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    key = (id(spark), tag, st.st_size, st.st_mtime_ns)
-    got = _NN_GRAPH_CACHE.get(key)
-    if got is not None:
-        return got
-    df = nn_descent(emb, "vec_id", "embedding", k=10, iters=4)
-    _NN_GRAPH_CACHE[key] = df
-    return df
+
+    if rebuild:
+        return build()
+    return memo.artifact(spark, "nn_descent_graph", (sf_dir, "embeddings"), build)
 
 
 @query("ann_nn_descent", oracle=_nn_descent_oracle_sql(k=10, iters=4, tgt=5))
@@ -758,12 +732,7 @@ def _graph_search_frames(
     # probing the corpus-sized tables. Join strategy only — values
     # are identical either way. 64 MB of source parquet ≈ 160k
     # vectors ≈ a ~160 MB vector relation / ~26 MB edge relation.
-    import os as _os
-
-    _bc_walk = (
-        _os.stat(_os.path.join(sf_dir, "embeddings.parquet")).st_size
-        <= 64 << 20
-    )
+    _bc_walk = memo.source_bytes(sf_dir, "embeddings") <= 64 << 20
 
     def walk_side(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if _bc_walk else df

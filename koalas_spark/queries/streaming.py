@@ -187,15 +187,19 @@ FROM events GROUP BY event_type
 """,
 )
 def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
+    from koalas_spark.memo import staged
     from koalas_spark.streaming.windows import stream_foreachbatch_parquet
 
-    src = os.path.join(sf_dir, "events.parquet")
-    # key the lake by (sf dir, source mtime): regenerated testdata
-    # restages instead of serving a stale lake
-    tag = f"{os.path.basename(os.path.normpath(sf_dir))}_{int(os.stat(src).st_mtime)}"
-    out = os.path.join("/root/repo/.tmp", f"fb_lake_{tag}")
+    src = f"{sf_dir}/events.parquet"
+    # the lake is a staged session artifact: the stream runs once per
+    # session, the returned frame re-reads the lake
+    out = staged(
+        spark,
+        "fb_lake",
+        (sf_dir, "events"),
+        lambda p: stream_foreachbatch_parquet(spark, src, p),
+        "_DONE",
+    )
     return stream_foreachbatch_parquet(spark, src, out)
 
 
@@ -448,6 +452,4 @@ FROM events GROUP BY event_type
 def stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.streaming.windows import stream_checkpoint_restart
 
-    return stream_checkpoint_restart(
-        spark, f"{sf_dir}/events.parquet", "/root/repo/.tmp/ckpt_restart"
-    )
+    return stream_checkpoint_restart(spark, f"{sf_dir}/events.parquet")

@@ -27,33 +27,33 @@ def _staged_events_stream(
     streaming source monitors a directory, so the input is staged
     behind a symlink dir. Normalizes nanos/NTZ ts flavors to
     TIMESTAMP_LTZ (withWatermark rejects TIMESTAMP_NTZ) via the shared
-    read-path cast, so oracles agree."""
+    read-path cast, so oracles agree. The stage is a session artifact
+    (koalas_spark.memo)."""
     import glob
-    import hashlib
 
+    from koalas_spark.memo import staged
     from koalas_spark.sources.io import normalize_event_time
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(events_path).schema
-    # stable stage key: md5 of path + source mtime (hash() is salted
-    # per process, which restaged on every run; mtime restages when
-    # the driver regenerates testdata in place)
-    tag = hashlib.md5(events_path.encode()).hexdigest()[:8]
-    tag += f"_{int(os.stat(events_path).st_mtime)}"
-    stage = f"/root/repo/.tmp/stream_{prefix}_{tag}"
-    os.makedirs(stage, exist_ok=True)
-    # the file source lists plain files in the monitored dir — it does
-    # NOT recurse into a symlinked Spark output DIRECTORY (sf1 scaled
-    # tables are directories of part files; this silently streamed 0
-    # rows before the sf1 sweep caught it) — so link part files flat
-    if os.path.isdir(events_path):
-        parts = sorted(glob.glob(os.path.join(events_path, "*.parquet")))
-    else:
-        parts = [events_path]
-    for i, p in enumerate(parts):
-        link = os.path.join(stage, f"part_{i:05d}.parquet")
-        if not os.path.exists(link):
-            os.symlink(p, link)
+
+    def link_parts(stage: str) -> None:
+        # the file source lists plain files in the monitored dir — it
+        # does NOT recurse into a symlinked Spark output DIRECTORY (sf1
+        # scaled tables are directories of part files; this silently
+        # streamed 0 rows before the sf1 sweep caught it) — so link
+        # part files flat
+        if os.path.isdir(events_path):
+            parts = sorted(glob.glob(os.path.join(events_path, "*.parquet")))
+        else:
+            parts = [events_path]
+        os.makedirs(stage)
+        for i, p in enumerate(parts):
+            os.symlink(p, os.path.join(stage, f"part_{i:05d}.parquet"))
+
+    stage = staged(
+        spark, f"stream_{prefix}", (events_path,), link_parts, "part_00000.parquet"
+    )
     src = spark.readStream.schema(schema).parquet(stage)
     # normalize=False for sources without an event-time column
     # (e.g. the documents table)
@@ -307,8 +307,8 @@ def stream_foreachbatch_parquet(
     done = os.path.join(out_dir, "_DONE")
     if not os.path.exists(done):
         shutil.rmtree(out_dir, ignore_errors=True)
-        ckpt = out_dir + "_ckpt"
-        shutil.rmtree(ckpt, ignore_errors=True)
+        # inside the lake, which the re-read skips ("_" prefix)
+        ckpt = os.path.join(out_dir, "_ckpt")
         q = (
             src.writeStream.foreachBatch(write_batch)
             .option("checkpointLocation", ckpt)
@@ -741,9 +741,7 @@ def stream_chained_window_agg(
     )
 
 
-def stream_checkpoint_restart(
-    spark: SparkSession, events_path: str, out_dir: str
-) -> DataFrame:
+def stream_checkpoint_restart(spark: SparkSession, events_path: str) -> DataFrame:
     """Checkpointed RESTART recovery — the exactly-once claim actually
     exercised: phase 1 streams HALF the source (even event_ids) into a
     foreachBatch parquet lake under a checkpoint, then the query
@@ -753,50 +751,44 @@ def stream_checkpoint_restart(
     idempotent-by-batch_id sink absorbs any replay. The re-read lake
     must equal ONE batch pass over the full source (the oracle): rows
     lost on restart or duplicated on replay both break the equality.
-    Stage/checkpoint/lake are keyed by the source fingerprint and kept
-    (idempotent re-runs skip the replay, like the other staged ops)."""
+    Stage, checkpoint and lake live under one staged path
+    (koalas_spark.memo), so the replay runs once per session."""
     import glob
-    import hashlib
     import shutil
 
+    from koalas_spark.memo import staged
     from koalas_spark.sources.io import normalize_event_time
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    tag = hashlib.md5(events_path.encode()).hexdigest()[:8]
-    tag += f"_{int(os.stat(events_path).st_mtime)}"
-    stage = f"{out_dir}_stage_{tag}"
-    ckpt = f"{out_dir}_ckpt_{tag}"
-    lake = f"{out_dir}_lake_{tag}"
-    done = os.path.join(lake, "_DONE")
     schema = spark.read.parquet(events_path).schema
 
-    def start_query():
-        src = normalize_event_time(
-            spark.readStream.schema(schema).parquet(stage)
-        )
+    def replay(out: str) -> None:
+        stage, ckpt, lake = (os.path.join(out, d) for d in ("stage", "ckpt", "lake"))
 
-        def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("overwrite").parquet(
-                os.path.join(lake, f"batch_id={batch_id}")
+        def start_query():
+            src = normalize_event_time(
+                spark.readStream.schema(schema).parquet(stage)
             )
 
-        return (
-            src.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
+            def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+                batch_df.write.mode("overwrite").parquet(
+                    os.path.join(lake, f"batch_id={batch_id}")
+                )
 
-    if not os.path.exists(done):
-        for d in (stage, ckpt, lake):
-            shutil.rmtree(d, ignore_errors=True)
-        os.makedirs(stage, exist_ok=True)
+            return (
+                src.writeStream.foreachBatch(write_batch)
+                .option("checkpointLocation", ckpt)
+                .start()
+            )
+
+        os.makedirs(stage)
         full = spark.read.parquet(events_path)
         # deterministic halves; each written as one file, staged in turn
         for n, half in (
             (1, full.filter(F.col("event_id") % 2 == 0)),
             (2, full.filter(F.col("event_id") % 2 != 0)),
         ):
-            tmp = f"{stage}_build_{n}"
+            tmp = os.path.join(out, f"build_{n}")
             half.coalesce(1).write.mode("overwrite").parquet(tmp)
             part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
             os.replace(part, os.path.join(stage, f"half_{n}.parquet"))
@@ -806,10 +798,12 @@ def stream_checkpoint_restart(
                 q.processAllAvailable()
             finally:
                 q.stop()
-        with open(done, "w") as fh:
+        with open(os.path.join(lake, "_DONE"), "w") as fh:
             fh.write("ok\n")
-    out = spark.read.parquet(lake)
-    return out.groupBy("event_type").agg(
+
+    out = staged(spark, "ckpt_restart", (events_path,), replay, "lake/_DONE")
+    lake = spark.read.parquet(os.path.join(out, "lake"))
+    return lake.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum(F.col("value").cast("decimal(18,6)"))
         .cast("double")

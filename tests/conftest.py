@@ -1,8 +1,4 @@
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 SF_SMOKE = "/root/testdata/sf0.001"
 

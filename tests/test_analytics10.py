@@ -39,8 +39,8 @@ def test_partitioned_scan_prunes(spark):
 
 
 def test_jsonl_roundtrip_idempotent(spark):
-    """Re-running #224 must reuse the staged JSONL and return identical
-    per-language stats (same device as read_table's .tmp staging)."""
+    """Re-running #224 in one session must reuse the staged JSONL and
+    return identical per-language stats."""
     from koalas_spark.queries.analytics10 import jsonl_roundtrip_stats
 
     a = sorted(map(tuple, jsonl_roundtrip_stats(spark, SF_SMOKE).collect()))

@@ -1,22 +1,18 @@
 """Sources/sinks: JSONL round-trip, partitioned parquet write with
 partition pruning visible in the plan."""
 
-import shutil
-
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
 
-TMP = "/root/repo/.tmp/io_tests"
 
-
-def test_jsonl_roundtrip(spark):
+def test_jsonl_roundtrip(spark, tmp_path):
     from koalas_spark.sources.io import read_jsonl, write_jsonl
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").select(
         "doc_id", "lang", "n_chars"
     )
-    path = f"{TMP}/docs_jsonl"
+    path = str(tmp_path / "docs_jsonl")
     write_jsonl(docs, path)
     back = read_jsonl(spark, path, "doc_id bigint, lang string, n_chars bigint")
     assert back.count() == docs.count()
@@ -27,16 +23,15 @@ def test_jsonl_roundtrip(spark):
     wider = read_jsonl(spark, path, "doc_id bigint, lang string, missing double")
     row = wider.filter(F.col("doc_id") == docs.first().doc_id).first()
     assert row.missing is None
-    shutil.rmtree(path, ignore_errors=True)
 
 
-def test_orc_roundtrip_pushdown(spark):
+def test_orc_roundtrip_pushdown(spark, tmp_path):
     from koalas_spark.sources.io import read_orc, write_orc
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").select(
         "doc_id", "lang", "n_chars"
     )
-    path = f"{TMP}/docs_orc"
+    path = str(tmp_path / "docs_orc")
     write_orc(docs, path)
     back = read_orc(spark, path)
     assert back.schema == docs.schema
@@ -52,14 +47,13 @@ def test_orc_roundtrip_pushdown(spark):
         .toString()
     )
     assert "PushedFilters: []" not in plan and "lang" in plan
-    shutil.rmtree(path, ignore_errors=True)
 
 
-def test_partitioned_parquet_prunes(spark):
+def test_partitioned_parquet_prunes(spark, tmp_path):
     from koalas_spark.sources.io import write_parquet_partitioned
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    path = f"{TMP}/docs_by_lang"
+    path = str(tmp_path / "docs_by_lang")
     write_parquet_partitioned(docs, path, ("lang",))
     back = spark.read.parquet(path)
     assert back.count() == docs.count()
@@ -70,10 +64,9 @@ def test_partitioned_parquet_prunes(spark):
     assert "PartitionFilters" in plan and "lang" in plan.split("PartitionFilters")[1][:120]
     expected = docs.filter(F.col("lang") == "en").count()
     assert one.count() == expected
-    shutil.rmtree(path, ignore_errors=True)
 
 
-def test_ntz_parquet_event_time_normalized(spark):
+def test_ntz_parquet_event_time_normalized(spark, tmp_path):
     """Regression: the driver's generator writes events.ts as tz-less
     TIMESTAMP(MICROS), which Spark 4.x reads as TIMESTAMP_NTZ — a type
     that withWatermark rejects and CAST(.. AS BIGINT) refuses. The
@@ -85,11 +78,7 @@ def test_ntz_parquet_event_time_normalized(spark):
 
     from koalas_spark.sources.io import normalize_event_time
 
-    path = f"{TMP}/ntz_events"
-    shutil.rmtree(path, ignore_errors=True)
-    import os
-
-    os.makedirs(path, exist_ok=True)
+    path = str(tmp_path)
     tbl = pa.table(
         {
             "event_id": pa.array([1, 2, 3], pa.int64()),
@@ -115,21 +104,17 @@ def test_ntz_parquet_event_time_normalized(spark):
     assert secs == [1704067200, 1704070800, 1704078000]
     # watermark analysis accepts the normalized column (batch plan check)
     df.withWatermark("ts", "1 hour").groupBy(F.window("ts", "1 hour")).count().schema
-    shutil.rmtree(path, ignore_errors=True)
 
 
-def test_snapshot_time_travel_isolation(spark):
+def test_snapshot_time_travel_isolation(spark, tmp_path):
     """Version-pinned reads must not see later appends; latest sees all."""
-    import shutil as _sh
-
     from koalas_spark.sources.snapshots import (
         latest_version,
         read_snapshot,
         write_snapshot,
     )
 
-    path = f"{TMP}/snap_tbl"
-    _sh.rmtree(path, ignore_errors=True)
+    path = str(tmp_path / "snap_tbl")
     df1 = spark.range(0, 10).withColumnRenamed("id", "k")
     df2 = spark.range(10, 15).withColumnRenamed("id", "k")
     assert write_snapshot(df1, path) == 1
@@ -142,23 +127,20 @@ def test_snapshot_time_travel_isolation(spark):
     assert got == list(range(10))
 
 
-def test_snapshot_commit_race_retries_next_version(spark):
+def test_snapshot_commit_race_retries_next_version(spark, tmp_path):
     """If another committer publishes _v{N}.json between our read of
     the latest manifest and our publish, the os.link CAS must fail and
     the commit must land on N+1 with the racer's dirs included —
     never silently overwrite the racer's manifest (lost update)."""
     import json
     import os
-    import shutil as _sh
-
     from koalas_spark.sources.snapshots import (
         latest_version,
         read_snapshot,
         write_snapshot,
     )
 
-    path = f"{TMP}/snap_race"
-    _sh.rmtree(path, ignore_errors=True)
+    path = str(tmp_path / "snap_race")
     assert write_snapshot(spark.range(0, 5).withColumnRenamed("id", "k"), path) == 1
 
     # simulate a racer: hand-publish _v2.json pointing at its own dir
@@ -175,4 +157,3 @@ def test_snapshot_commit_race_retries_next_version(spark):
     # racer's manifest intact, v3 sees everything: 5 + 3 + 2 rows
     assert read_snapshot(spark, path, version=2).count() == 8
     assert read_snapshot(spark, path, version=3).count() == 10
-    _sh.rmtree(path, ignore_errors=True)

@@ -3,7 +3,6 @@ file-skipping payoff vs a linear sort (SURVEY.md §2.2 #121)."""
 
 import glob
 import os
-import shutil
 
 import pyarrow.parquet as pq
 import pytest
@@ -68,7 +67,7 @@ def test_zorder_box_scan_matches_straight_scan(spark):
     assert got == want and got
 
 
-def test_zorder_skips_more_files_than_linear_sort(spark):
+def test_zorder_skips_more_files_than_linear_sort(spark, tmp_path):
     from koalas_spark.operators.layout import zorder_write
 
     cols = ["l_partkey", "l_suppkey"]
@@ -84,10 +83,8 @@ def test_zorder_skips_more_files_than_linear_sort(spark):
         cols[1]: (smn + (smx - smn) * 2 // 5, smn + (smx - smn) * 3 // 5),
     }
 
-    zpath = "/root/repo/.tmp/test_zorder_layout"
-    lpath = "/root/repo/.tmp/test_linear_layout"
-    for p in (zpath, lpath):
-        shutil.rmtree(p, ignore_errors=True)
+    zpath = str(tmp_path / "zorder")
+    lpath = str(tmp_path / "linear")
     n_files = 16
     zorder_write(li, cols, zpath, bits=12, num_files=n_files)
     li.repartitionByRange(n_files, cols[0]).sortWithinPartitions(
@@ -138,7 +135,7 @@ def test_hilbert_key_matches_reference_walk_and_is_bijective(spark):
     assert sorted(got.values()) == list(range(n * n))
 
 
-def test_hilbert_skips_more_files_than_linear_sort(spark):
+def test_hilbert_skips_more_files_than_linear_sort(spark, tmp_path):
     """Same harness as the Z-order test: a second-dimension-only box
     that a linear l_partkey sort cannot prune at all."""
     from koalas_spark.operators.layout import hilbert_write
@@ -150,10 +147,8 @@ def test_hilbert_skips_more_files_than_linear_sort(spark):
     smn, smx = li.agg(F.min(cols[1]), F.max(cols[1])).first()
     box = {cols[1]: (smn + (smx - smn) * 2 // 5, smn + (smx - smn) * 3 // 5)}
 
-    hpath = "/root/repo/.tmp/test_hilbert_layout"
-    lpath = "/root/repo/.tmp/test_linear_layout_h"
-    for p in (hpath, lpath):
-        shutil.rmtree(p, ignore_errors=True)
+    hpath = str(tmp_path / "hilbert")
+    lpath = str(tmp_path / "linear")
     n_files = 16
     hilbert_write(li, cols, hpath, bits=12, num_files=n_files)
     li.repartitionByRange(n_files, cols[0]).sortWithinPartitions(

@@ -14,13 +14,14 @@ Regenerate the baseline intentionally with
 after reviewing that the new plan is the plan you want."""
 
 import json
+from pathlib import Path
 
 from tests.conftest import SF_SMOKE
 from tools.audit_plans import collect
 
 
 def test_plans_match_expectations(spark):
-    with open("/root/repo/PLAN_BASELINE.json") as f:
+    with open(Path(__file__).parents[1] / "PLAN_BASELINE.json") as f:
         baseline = json.load(f)
     facts = collect(spark, SF_SMOKE)
 

@@ -4,20 +4,17 @@ driver manifest commit (two-phase write protocol)."""
 import glob
 import json
 import os
-import shutil
 
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
 
-OUT = "/root/repo/.tmp/test_shardsink"
 
-
-def test_shard_sink_writes_manifest_and_roundtrips(spark):
+def test_shard_sink_writes_manifest_and_roundtrips(spark, tmp_path):
     from koalas_spark.sources.pyshardsink import ShardSinkSource
 
     spark.dataSource.register(ShardSinkSource)
-    shutil.rmtree(OUT, ignore_errors=True)
+    out = str(tmp_path / "shards")
 
     docs = (
         spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
@@ -25,25 +22,25 @@ def test_shard_sink_writes_manifest_and_roundtrips(spark):
         .repartition(4, "doc_id")
     )
     n_expected = docs.count()
-    docs.write.format("shardsink").option("path", OUT).mode("append").save()
+    docs.write.format("shardsink").option("path", out).mode("append").save()
 
-    manifest = json.load(open(os.path.join(OUT, "_manifest.json")))
+    manifest = json.load(open(os.path.join(out, "_manifest.json")))
     assert manifest["total_rows"] == n_expected
     assert len(manifest["shards"]) == 4
-    files = sorted(glob.glob(os.path.join(OUT, "shard-*.jsonl")))
+    files = sorted(glob.glob(os.path.join(out, "shard-*.jsonl")))
     assert sorted(s["file"] for s in manifest["shards"]) == [
         os.path.basename(f) for f in files
     ]
     # per-shard counts in the manifest match the files
     for s in manifest["shards"]:
-        with open(os.path.join(OUT, s["file"])) as f:
+        with open(os.path.join(out, s["file"])) as f:
             assert sum(1 for _ in f) == s["rows"]
     # no staged temp files left behind
-    assert not glob.glob(os.path.join(OUT, ".*.tmp"))
+    assert not glob.glob(os.path.join(out, ".*.tmp"))
 
     # round-trip 1: plain JSON reader over the shard files
     back = spark.read.schema("doc_id bigint, lang string, n_chars bigint").json(
-        os.path.join(OUT, "shard-*.jsonl")
+        os.path.join(out, "shard-*.jsonl")
     )
     assert back.count() == n_expected
     diff = docs.exceptAll(back).count() + back.exceptAll(docs).count()
@@ -54,7 +51,7 @@ def test_shard_sink_writes_manifest_and_roundtrips(spark):
     loaded = (
         spark.read.schema("doc_id bigint, lang string, n_chars bigint")
         .format("shardsink")
-        .option("path", OUT)
+        .option("path", out)
         .load()
     )
     assert loaded.rdd.getNumPartitions() == 4
@@ -62,15 +59,14 @@ def test_shard_sink_writes_manifest_and_roundtrips(spark):
     assert diff2 == 0
 
     # no job staging dirs survive a successful commit
-    assert not glob.glob(os.path.join(OUT, ".staging-*"))
+    assert not glob.glob(os.path.join(out, ".staging-*"))
 
 
-def test_shard_sink_overwrite_replaces_prior_job(spark):
+def test_shard_sink_overwrite_replaces_prior_job(spark, tmp_path):
     from koalas_spark.sources.pyshardsink import ShardSinkSource
 
     spark.dataSource.register(ShardSinkSource)
-    out = OUT + "_ow"
-    shutil.rmtree(out, ignore_errors=True)
+    out = str(tmp_path / "shards_ow")
 
     docs = (
         spark.read.parquet(f"{SF_SMOKE}/documents.parquet")

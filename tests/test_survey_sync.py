@@ -4,6 +4,7 @@ the explicitly tests-only entries) and every registered query is
 inventoried."""
 
 import re
+from pathlib import Path
 
 from koalas_spark.queries import all_queries
 
@@ -11,9 +12,11 @@ from koalas_spark.queries import all_queries
 # "tests only" in the table)
 TESTS_ONLY = {"write_csv", "append_rows", "shape_len_cols"}
 
+ROOT = Path(__file__).parents[1]
+
 
 def _survey_keys() -> set[str]:
-    text = open("/root/repo/SURVEY.md").read()
+    text = (ROOT / "SURVEY.md").read_text()
     sec2 = text.split("## §2", 1)[1].split("## §3", 1)[0]
     keys = set()
     for m in re.finditer(
@@ -35,11 +38,7 @@ def test_survey_matches_registry():
 
 
 def test_tests_only_entries_have_tests():
-    src = ""
-    import glob
-
-    for p in glob.glob("/root/repo/tests/test_*.py"):
-        src += open(p).read()
+    src = "".join(p.read_text() for p in (ROOT / "tests").glob("test_*.py"))
     # each tests-only surface is exercised somewhere in the suite
     assert "to_csv" in src or "write_csv" in src
     assert "append" in src

@@ -12,9 +12,11 @@ Usage: python tools/audit_plans.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from koalas_spark import get_spark
 from koalas_spark.queries import all_queries
@@ -533,7 +535,7 @@ def _daily_revenue_consumers() -> frozenset[str]:
         r"|daily_revenue_table\(",
         re.M,
     )
-    for f in glob.glob("/root/repo/koalas_spark/queries/*.py"):
+    for f in glob.glob(os.path.join(ROOT, "koalas_spark/queries/*.py")):
         src = open(f).read()
         if "daily_revenue_table" not in src:
             continue
@@ -730,7 +732,7 @@ def audit(sf_dir: str) -> int:
             bad += 1
     # checked-in expectations for the pytest gate (tests/test_plan_audit.py):
     # per-query flag set + whether the scan had pushed filters
-    with open("/root/repo/PLAN_BASELINE.json", "w") as f:
+    with open(os.path.join(ROOT, "PLAN_BASELINE.json"), "w") as f:
         json.dump(
             {
                 n: {"flags": sorted(d["flags"]), "pushdown": d["pushdown"]}
@@ -740,7 +742,7 @@ def audit(sf_dir: str) -> int:
             indent=1,
             sort_keys=True,
         )
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write(
             "# PLANS — physical-plan audit (auto-generated by "
             "tools/audit_plans.py)\n\n"

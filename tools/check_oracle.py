@@ -25,10 +25,12 @@ apart), but it catches every mechanism observed so far.
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb
 import pyarrow as pa
@@ -211,7 +213,7 @@ def shard_drive(sf_dir: str, n_shards: int, mem: str, cpus: int) -> int:
         env = dict(os.environ)
         env["SPARK_GRAFT_DRIVER_MEM"] = mem
         env["SPARK_GRAFT_CPUS"] = str(cpus)
-        log = open(f"/root/repo/.tmp_sweep_shard{i}.log", "w")
+        log = open(os.path.join(ROOT, f".tmp_sweep_shard{i}.log"), "w")
         procs.append(
             (
                 i,
@@ -231,7 +233,7 @@ def shard_drive(sf_dir: str, n_shards: int, mem: str, cpus: int) -> int:
     for i, chunk, p, log in procs:
         p.wait()
         log.close()
-        text = open(f"/root/repo/.tmp_sweep_shard{i}.log").read()
+        text = open(os.path.join(ROOT, f".tmp_sweep_shard{i}.log")).read()
         seen = set()
         for m in re.finditer(r"^\s*([a-z0-9_]+): (OK|[A-Z-]+MISMATCH|ERROR|rows-only)", text, re.M):
             seen.add(m.group(1))

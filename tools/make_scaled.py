@@ -2,7 +2,7 @@
 
 The driver only ships sf{0.001,0.01,0.1}; every 100 TB claim in the
 docstrings deserves at least one measured scaling point, so this tool
-manufactures sf1-equivalent data (10x sf0.1) under /root/repo/.tmp/
+manufactures sf1-equivalent data (10x sf0.1) under the checkout's .tmp/
 WITHOUT touching the read-only testdata: replica r shifts every key
 family by r * 10^9, which preserves join fan-outs, group cardinality
 growth, and key uniqueness exactly the way a larger TPC-H SF does
@@ -19,7 +19,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
 
@@ -77,5 +78,5 @@ def build(replicas: int, out_dir: str) -> None:
 
 if __name__ == "__main__":
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    out = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/.tmp/sf1"
+    out = sys.argv[2] if len(sys.argv) > 2 else os.path.join(ROOT, ".tmp", "sf1")
     build(n, out)

@@ -16,7 +16,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from koalas_spark import get_spark
 from koalas_spark.queries import all_queries
@@ -53,7 +54,7 @@ def main(sf_dir: str, tag: str) -> None:
     spark = get_spark(f"scale_r9b_{tag}", cpus=32)
     spark.sparkContext.setLogLevel("ERROR")
     Q = all_queries()
-    path = f"/root/repo/.tmp/scale_r9b_{tag}.jsonl"
+    path = os.path.join(ROOT, ".tmp", f"scale_r9b_{tag}.jsonl")
     done = set()
     if os.path.exists(path):
         with open(path) as f:

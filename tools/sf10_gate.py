@@ -38,14 +38,15 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def _bench_map() -> tuple[float, dict[str, float]]:
     """(bench sf, full per-query timing map) from the last local
     bench run (BENCH_local.json keeps the full-precision map)."""
     try:
-        with open("/root/repo/BENCH_local.json") as f:
+        with open(os.path.join(ROOT, "BENCH_local.json")) as f:
             d = json.load(f)
         sf = d.get("sf", 0.1)
         return (
@@ -103,7 +104,7 @@ DEFAULT_OPS = [
 
 
 def main(argv: list[str]) -> int:
-    sf_dir = "/root/repo/.tmp/sf10"
+    sf_dir = os.path.join(ROOT, ".tmp", "sf10")
     ops: list[str] = list(DEFAULT_OPS)
     top_n = 20
     one: str | None = None

@@ -11,10 +11,12 @@ Usage: SPARK_GRAFT_DRIVER_MEM=16g python tools/sf10_mem.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from koalas_spark import get_spark
 from koalas_spark.queries import all_queries
@@ -72,4 +74,4 @@ def main(sf_dir: str) -> None:
 
 
 if __name__ == "__main__":
-    main(sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.tmp/sf10")
+    main(sys.argv[1] if len(sys.argv) > 1 else os.path.join(ROOT, ".tmp", "sf10"))
