@@ -29,15 +29,6 @@ from pyspark.sql import functions as F
 QUANT = 10_000  # 1e-4 grid; |x| ≤ ~50 keeps Σ(q−m)² inside exact-double range
 
 
-def _q_sq_dist(qvec_col, centroid: list[int]):
-    """Exact integer squared L2 distance between an array<long> column
-    and a literal quantized centroid — codegen'd zip_with + aggregate,
-    no UDF."""
-    lit = F.array(*[F.lit(int(m)) for m in centroid])
-    diffs = F.zip_with(qvec_col, lit, lambda a, b: (a - b) * (a - b))
-    return F.aggregate(diffs, F.lit(0).cast("long"), lambda acc, x: acc + x)
-
-
 def _half_up_div(s: int, n: int) -> int:
     """Sign-aware round-half-up integer division s/n (n > 0) — the same
     ((2|s|+n) // 2n) form the SQL oracles use (grouped_demean pattern)."""

@@ -366,7 +366,6 @@ def exact_jaccard_pairs(
     block_col: str = "lang",
     shingle_n: int = 3,
     threshold: float = 0.25,
-    prefix_filter: bool = False,
 ) -> DataFrame:
     """EXACT n-gram-Jaccard >= threshold pairs via inverted-index
     (index-nested-loop) generation, not a quadratic block self-join:
@@ -377,28 +376,7 @@ def exact_jaccard_pairs(
     exploded row carries its doc's set size, so one groupBy
     reconstructs |A|, |B|, |A∩B|. Cost scales with Σ_shingle df²
     instead of Σ_block n², and the shingle equi-join is a uniform
-    shuffle at any scale. Returns (src, dst) with src < dst.
-
-    ``prefix_filter=True`` adds the AllPairs/PPJoin prefix filter
-    (Bayardo et al. WWW'07; Xiao et al. WWW'08): under a consistent
-    global shingle order, the globally-smallest common shingle of any
-    pair with J >= t must sit within the first |X| - ceil(t*|X|) + 1
-    shingles of BOTH docs (were it later in either, the >= ceil(t*|X|)
-    common shingles could not fit in that doc's remaining suffix), so
-    candidates only generate where PREFIXES collide. Results are
-    IDENTICAL to the unfiltered path (asserted in tests).
-
-    It is OFF by default because it measured SLOWER on this corpus at
-    both sf0.1 and sf1 (sf1 dedup_cluster_canonical: 10.8s unfiltered
-    vs 16.2s df-ordered / 40.7s hash-ordered prefix): the count-
-    aggregation path gets each pair's intersection for free as the
-    join-match count, while the prefix path must materialize distinct
-    candidates and re-intersect full shingle arrays per pair — and
-    with this corpus's near-uniform shingle-frequency distribution
-    (max df 7 at sf0.01) the prefix prunes only the generic (1-t)
-    fraction, not a heavy tail. On a boilerplate-heavy real corpus
-    whose hottest shingles dominate Σ df², the trade flips; the
-    switch is per-call for exactly that case."""
+    shuffle at any scale. Returns (src, dst) with src < dst."""
     toks = docs.select(
         F.col(id_col).alias("id"),
         F.col(block_col).alias("blk"),
@@ -426,82 +404,24 @@ def exact_jaccard_pairs(
     ex = sh.select(
         "id", "blk", F.size("shingles").alias("sz"), F.explode("shingles").alias("s")
     )
-    if not prefix_filter:
-        uni = F.col("sza") + F.col("szb") - F.col("inter")
-        return (
-            ex.alias("a")
-            .join(
-                ex.alias("b"),
-                (F.col("a.blk") == F.col("b.blk"))
-                & (F.col("a.s") == F.col("b.s"))
-                & (F.col("a.id") < F.col("b.id")),
-            )
-            .groupBy(F.col("a.id").alias("src"), F.col("b.id").alias("dst"))
-            .agg(
-                F.count(F.lit(1)).alias("inter"),
-                F.max("a.sz").alias("sza"),
-                F.max("b.sz").alias("szb"),
-            )
-            .filter((F.col("inter").cast("double") / uni) >= threshold)
-            .select("src", "dst")
-        )
-    # threshold as an exact rational so the prefix bound and the final
-    # compare are integer arithmetic (no float boundary cases)
-    from fractions import Fraction
-
-    fr = Fraction(threshold).limit_denominator(10**6)
-    tn, td = fr.numerator, fr.denominator
-    # AllPairs prefix under ascending-hash global order: sort each
-    # doc's shingle hashes and slice the first |X| - ceil(t*|X|) + 1
-    # (integer ceil via (sz*tn + td - 1) div td). A pure-codegen
-    # array op — no df ranking: a frequency-ascending order would
-    # maximize pruning on heavy-tailed (boilerplate) corpora, but
-    # costs a df aggregate + a per-doc window shuffle that measured
-    # SLOWER than it saved here; hash order keeps the (1-t) candidate
-    # cut with zero extra exchanges.
-    pref = sh.select(
-        "id",
-        "blk",
-        F.explode(
-            F.slice(
-                F.sort_array("shingles"),
-                1,
-                F.greatest(
-                    F.lit(1),
-                    F.size("shingles")
-                    - F.expr(
-                        f"(size(shingles) * {tn} + {td - 1}) div {td}"
-                    )
-                    + 1,
-                ),
-            )
-        ).alias("s"),
-    )
-    cand = (
-        pref.alias("a")
+    uni = F.col("sza") + F.col("szb") - F.col("inter")
+    return (
+        ex.alias("a")
         .join(
-            pref.alias("b"),
+            ex.alias("b"),
             (F.col("a.blk") == F.col("b.blk"))
             & (F.col("a.s") == F.col("b.s"))
             & (F.col("a.id") < F.col("b.id")),
         )
-        .select(F.col("a.id").alias("src"), F.col("b.id").alias("dst"))
-        .distinct()
-    )
-    # exact verify on the materialized arrays: two gather joins by doc
-    # id (candidates only — far below corpus scale), integer compare
-    # inter*td >= tn*(|A|+|B|-inter) === inter/union >= t
-    arrs = sh.select("id", "shingles")
-    verified = (
-        cand.join(arrs.select(F.col("id").alias("src"), F.col("shingles").alias("_sa")), "src")
-        .join(arrs.select(F.col("id").alias("dst"), F.col("shingles").alias("_sb")), "dst")
-        .withColumn("_i", F.size(F.array_intersect("_sa", "_sb")))
-        .filter(
-            F.col("_i") * td
-            >= tn * (F.size("_sa") + F.size("_sb") - F.col("_i"))
+        .groupBy(F.col("a.id").alias("src"), F.col("b.id").alias("dst"))
+        .agg(
+            F.count(F.lit(1)).alias("inter"),
+            F.max("a.sz").alias("sza"),
+            F.max("b.sz").alias("szb"),
         )
+        .filter((F.col("inter").cast("double") / uni) >= threshold)
+        .select("src", "dst")
     )
-    return verified.select("src", "dst")
 
 
 def containment_pairs(

@@ -22,12 +22,7 @@ data.
 
 At 100 TB the label frame is |V| rows of two longs and every round's
 shuffle is bounded by |E| — no step ever materializes anything
-quadratic. For graphs with long chains or giant components the
-alternating large-star/small-star variant (Kiveris et al.,
-"Connected Components in MapReduce and Beyond") converges in
-O(log^2 n) rounds instead of O(diameter) — select it with
-``algorithm="star"``. Dup graphs are shallow bounded-degree stars,
-so plain LP stays the default (cheaper constant per round).
+quadratic.
 
 Reference parity: extends `groupby.d:48 count`-style grouping to the
 iterative clustering the reference cannot express.
@@ -45,7 +40,6 @@ def connected_components(
     dst: str = "dst",
     max_iter: int = 50,
     batch: int = 2,
-    algorithm: str = "lp",
     driver_edge_limit: int = 1_000_000,
 ) -> DataFrame:
     """Components of the undirected graph given by (src, dst) pairs.
@@ -55,7 +49,7 @@ def connected_components(
 
     Size-adaptive, the same way AQE picks join strategies at runtime:
     the edge list is materialized once (a checkpoint the iterative
-    paths need anyway) and counted; at or under ``driver_edge_limit``
+    path needs anyway) and counted; at or under ``driver_edge_limit``
     edges (default 1M ≈ 16 MB of longs — broadcast-threshold-scale
     driver state, NOT proportional to the corpus) a driver-side
     union-find answers in one collect instead of paying 2-3 distributed
@@ -64,22 +58,14 @@ def connected_components(
     when the corpus is 100 TB — dup EDGES are the rare survivors of a
     verified near-dup test — while a graph above it takes the
     distributed path untouched. Pass ``driver_edge_limit=0`` to force
-    the distributed path (tests exercise both).
-
-    algorithm="lp" (default): min-label propagation, O(diameter)
-    rounds — the right constant for shallow dup graphs.
-    algorithm="star": alternating large-star/small-star, O(log^2 n)
-    rounds — use when components may be deep (long chains) or huge.
+    the distributed path (tests exercise both), which is min-label
+    propagation in O(diameter) rounds.
     """
-    if algorithm not in ("lp", "star"):
-        raise ValueError(f"unknown algorithm {algorithm!r}")
     raw = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     if driver_edge_limit > 0:
         raw = raw.localCheckpoint(eager=True)
         if raw.count() <= driver_edge_limit:
             return _driver_components(raw)
-    if algorithm == "star":
-        return _star_components(raw, "src", "dst", max_iter)
     e = (
         raw.union(raw.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
@@ -157,108 +143,3 @@ def _driver_components(edges: DataFrame) -> DataFrame:
                 parent[ra] = rb
     rows = [(n, find(n)) for n in parent]
     return edges.sparkSession.createDataFrame(rows, "node long, comp long")
-
-
-def _star_components(
-    edges: DataFrame, src: str, dst: str, max_iter: int
-) -> DataFrame:
-    """Alternating large-star/small-star CC (Kiveris et al. 2014).
-
-    Each round rewires edges toward per-neighborhood minima:
-
-      large-star(u): m = min(N(u) ∪ {u}); emit (v, m) for v ∈ N(u),
-        v > u — strictly larger neighbors hook onto u's minimum.
-      small-star(u): over Ns = {v ∈ N(u): v < u}, m = min(Ns); emit
-        (v, m) for v ∈ Ns \\ {m} and (u, m) — u and its smaller
-        neighbors collapse onto the smallest.
-
-    Both phases are one groupBy(min) + one join, each shuffling on
-    the SAME node key, and the edge set never grows beyond |E|. At
-    the fixed point every component is a star rooted at its minimum
-    id, so the answer is read off the final edge list with one
-    aggregation — no separate label frame to iterate.
-
-    Convergence is detected with a deterministic one-scan signature
-    (count, bit_xor(xxhash64(u, v))) on the canonical (undirected,
-    distinct) edge set — XOR over 64-bit hashes of a SET is an
-    order-insensitive, overflow-free identity (sums overflow under
-    ANSI mode); two rounds agreeing on it means the edge set reached
-    the fixed point.
-    """
-    # canonical undirected edge list, smaller id first; self-loops
-    # (used by callers to force isolated nodes into the output) are
-    # carried through as (n, n)
-    canon = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        canon.select(F.col("u").alias("node"))
-        .union(canon.select(F.col("v").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    def _sig(df: DataFrame) -> tuple:
-        row = df.agg(
-            F.count(F.lit(1)),
-            F.bit_xor(F.xxhash64("u", "v")),
-        ).collect()[0]
-        return tuple(row)
-
-    sig = _sig(canon)
-    for _ in range(max_iter):
-        sym = canon.select("u", "v").union(
-            canon.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        # large-star: strictly larger neighbors of u hook to
-        # m(u) = min(N(u) ∪ {u})
-        lmins = sym.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        large = (
-            sym.join(lmins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(
-                F.least(F.col("v"), F.col("m")).alias("u"),
-                F.greatest(F.col("v"), F.col("m")).alias("v"),
-            )
-        )
-        lsym = large.select("u", "v").union(
-            large.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        # small-star: u and its strictly smaller neighbors collapse
-        # onto the smallest of them
-        small_n = lsym.filter(F.col("v") < F.col("u"))
-        smins = small_n.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
-            small_n.join(smins, "u")
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .union(smins.select(F.col("u").alias("a"), F.col("m").alias("b")))
-            .filter(F.col("a") != F.col("b"))
-            .select(
-                F.least(F.col("a"), F.col("b")).alias("u"),
-                F.greatest(F.col("a"), F.col("b")).alias("v"),
-            )
-        )
-        # keep self-loops alive so isolated nodes stay representable
-        loops = canon.filter(F.col("u") == F.col("v"))
-        canon = small.union(loops).distinct().localCheckpoint(eager=True)
-        new_sig = _sig(canon)
-        if new_sig == sig:
-            break
-        sig = new_sig
-    # fixed point: non-root nodes appear as v of exactly one star
-    # edge (u=root); roots and isolated nodes fall back to themselves
-    parents = (
-        canon.filter(F.col("u") != F.col("v"))
-        .groupBy(F.col("v").alias("node"))
-        .agg(F.min("u").alias("parent"))
-    )
-    return nodes.join(parents, "node", "left").select(
-        "node", F.coalesce("parent", "node").alias("comp")
-    )

@@ -23,15 +23,21 @@ not in this container — plugging PIL/ffmpeg into the decode functions
 is the only change a real deployment makes; every Spark-side shape
 stays identical.
 
-At 100 TB: binary payloads ride in the same parquet row groups;
-``spark.sql.files.maxPartitionBytes`` bounds per-task memory, and the
-mapInPandas iterator processes one Arrow batch at a time so a task
-never holds a partition of blobs in memory at once.
+Every per-row operator below is a kernel plus an output schema, run
+by ``_map_rows`` — one ``mapInPandas`` over (id, blob), so each op is
+a single shuffle-free MapInPandas node. The contract, stated once:
+
+- one Arrow batch at a time, so a task never holds a partition of
+  blobs in memory (``spark.sql.files.maxPartitionBytes`` bounds the
+  rest at 100 TB, where payloads ride in the same parquet row groups);
+- undecodable input (the kernel returns None or raises ValueError /
+  NotImplementedError) becomes one row whose non-id columns are all
+  null instead of a failed task — a crawl shard always has junk bytes;
+- output columns are nullable, their dtypes taken from the schema
+  (``bigint`` -> Int64, ``int`` -> Int32, everything else object).
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -40,6 +46,39 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 META_SCHEMA = "doc_id bigint, n_bytes bigint, kind string"
+
+_NULLABLE = {"bigint": "Int64", "int": "Int32"}
+
+
+def _map_rows(df: DataFrame, id_col: str, col: str, schema: str, fn) -> DataFrame:
+    """Run ``fn(bytes)`` once per row of ``col`` under the module's
+    per-row contract. ``fn`` returns the non-id output columns as a
+    tuple, a list of such tuples (one input row fans out to several
+    output rows), or None. ``schema`` is a flat DDL string (no commas
+    inside a type); its first field names the id column, copied from
+    ``id_col``."""
+    fields = [f.split(None, 1) for f in schema.split(",")]
+    names = [name for name, _ in fields]
+    dtypes = [_NULLABLE.get(ddl.strip(), object) for _, ddl in fields]
+    null_row = (None,) * (len(names) - 1)
+
+    def op(batches):
+        for pdf in batches:
+            rows = []
+            for doc_id, blob in zip(pdf[id_col], pdf[col]):
+                try:
+                    out = fn(bytes(blob))
+                except (ValueError, NotImplementedError):
+                    out = None
+                if not isinstance(out, list):
+                    out = [out or null_row]
+                rows.extend((doc_id, *row) for row in out)
+            cols = list(zip(*rows)) or [()] * len(names)
+            yield pd.DataFrame(
+                {n: pd.array(list(c), dtype=d) for n, c, d in zip(names, cols, dtypes)}
+            )
+
+    return df.select(id_col, col).mapInPandas(op, schema=schema)
 
 
 def with_blob(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -202,25 +241,12 @@ decode_stub = decode_image
 
 
 def extract_meta(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Per-blob metadata via Arrow-batched mapInPandas.
-
-    The pandas path is deliberate: it exercises the exact batch shape a
-    real decoder would use (bytes in → features out), with a
-    deterministic fake (byte length + kind sniff) standing in for the
-    decode call.
-    """
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "n_bytes": pdf["blob"].map(len).astype("int64"),
-                    "kind": pdf["blob"].map(lambda b: sniff_kind(bytes(b))),
-                }
-            )
-
-    return df.select(id_col, "blob").mapInPandas(op, schema=META_SCHEMA)
+    """Per-blob metadata: byte length + magic-byte kind sniff, a
+    deterministic stand-in for a real decoder's bytes-in, features-out
+    call."""
+    return _map_rows(
+        df, id_col, "blob", META_SCHEMA, lambda blob: (len(blob), sniff_kind(blob))
+    )
 
 
 def decode_resize_reencode(
@@ -230,51 +256,56 @@ def decode_resize_reencode(
     target_h: int = 8,
 ) -> DataFrame:
     """REAL image pipeline: decode raster blob → nearest-neighbor
-    resize → re-encode, through Arrow-batched mapInPandas.
+    resize → re-encode. Unlike ``resize_frames`` (which views raw
+    bytes as a raster), this parses actual image container bytes with
+    ``decode_image`` (netpbm/BMP headers, row padding, channel order)
+    and writes back a valid netpbm file per row."""
 
-    Unlike ``resize_frames`` (which views raw bytes as a raster), this
-    path parses actual image container bytes with ``decode_image``
-    (netpbm/BMP headers, row padding, channel order) and writes back a
-    valid netpbm file per row. Undecodable blobs pass through with
-    null kind/dims — the malformed-media path — rather than failing
-    the task, since at 100 TB a crawl shard ALWAYS contains junk
-    bytes. Shuffle-free: the decode fan-out happens where the rows
-    sit, one Arrow batch at a time."""
+    def resize(blob: bytes):
+        img, kind = decode_image(blob)
+        ys = (np.arange(target_h) * img.shape[0]) // target_h
+        xs = (np.arange(target_w) * img.shape[1]) // target_w
+        small = img[np.ix_(ys, xs)]
+        out = encode_ppm(small) if img.ndim == 3 else encode_pgm(small)
+        return kind, target_w, target_h, out
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, kinds, ws, hs, blobs = [], [], [], [], []
-            for doc_id, blob in zip(pdf[id_col], pdf["blob"]):
-                ids.append(doc_id)
-                try:
-                    img, kind = decode_image(bytes(blob))
-                except (ValueError, NotImplementedError):
-                    kinds.append(None)
-                    ws.append(None)
-                    hs.append(None)
-                    blobs.append(None)
-                    continue
-                ys = (np.arange(target_h) * img.shape[0]) // target_h
-                xs = (np.arange(target_w) * img.shape[1]) // target_w
-                small = img[np.ix_(ys, xs)]
-                out = encode_ppm(small) if img.ndim == 3 else encode_pgm(small)
-                kinds.append(kind)
-                ws.append(target_w)
-                hs.append(target_h)
-                blobs.append(out)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "kind": kinds,
-                    "width": pd.array(ws, dtype="Int32"),
-                    "height": pd.array(hs, dtype="Int32"),
-                    "resized": blobs,
-                }
-            )
-
-    return df.select(id_col, "blob").mapInPandas(
-        op, schema="doc_id bigint, kind string, width int, height int, resized binary"
+    return _map_rows(
+        df,
+        id_col,
+        "blob",
+        "doc_id bigint, kind string, width int, height int, resized binary",
+        resize,
     )
+
+
+def _pool8(blob: bytes):
+    """Decode ``blob`` and integer mean-pool it to 8x8 blocks: (block
+    sums, block areas) as int64 (8, 8) arrays, or None under 8 px a
+    side. RGB collapses to the exact integer channel sum (r+g+b), so
+    the pooling stays integer-exact."""
+    img, _ = decode_image(blob)
+    if img.ndim == 3:
+        img = img.astype(np.int64).sum(axis=2)
+    h, w = img.shape
+    if h < 8 or w < 8:
+        return None
+    # block edges, then block sums from one 2-D prefix sum
+    ye = (np.arange(9) * h) // 8
+    xe = (np.arange(9) * w) // 8
+    padded = np.zeros((h + 1, w + 1), dtype=np.int64)
+    padded[1:, 1:] = np.add.accumulate(np.add.accumulate(img.astype(np.int64), 0), 1)
+    bs = (
+        padded[ye[1:, None], xe[None, 1:]]
+        - padded[ye[:-1, None], xe[None, 1:]]
+        - padded[ye[1:, None], xe[None, :-1]]
+        + padded[ye[:-1, None], xe[None, :-1]]
+    )
+    areas = (ye[1:] - ye[:-1])[:, None] * (xe[1:] - xe[:-1])[None, :]
+    return bs, areas
+
+
+def _bitstring(bits: np.ndarray) -> str:
+    return "".join("1" if b else "0" for b in bits.ravel())
 
 
 def ahash_images(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -282,55 +313,20 @@ def ahash_images(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     near-duplicate-image key (pHash family): decode the REAL container
     bytes (netpbm/BMP via decode_image), mean-pool the raster to 8x8
     blocks, threshold each block against the global mean, read the 64
-    bits row-major. All arithmetic is INTEGER (block sums compared as
-    bs*64 >= total) so the hash is bit-reproducible in any engine —
-    no float mean to drift. Runs in Arrow-batched mapInPandas where
-    the rows already sit (no shuffle); undecodable blobs yield a null
-    hash instead of failing the task. Grayscale conversion for RGB
-    inputs uses the exact integer channel sum (r+g+b), keeping
-    integer-exactness."""
+    bits row-major. All arithmetic is INTEGER — block areas differ
+    when h, w % 8 != 0, so the means compare as cross-multiplied
+    integers sum_b * A_tot >= total * A_b — and the hash is
+    bit-reproducible in any engine, no float mean to drift. Images
+    under 8x8 get a null hash."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes = [], []
-            for doc_id, blob in zip(pdf[id_col], pdf["blob"]):
-                ids.append(doc_id)
-                try:
-                    img, _ = decode_image(bytes(blob))
-                except (ValueError, NotImplementedError):
-                    hashes.append(None)
-                    continue
-                if img.ndim == 3:  # integer grayscale: exact channel sum
-                    img = img.astype(np.int64).sum(axis=2)
-                h, w = img.shape
-                if h < 8 or w < 8:
-                    hashes.append(None)
-                    continue
-                # integer mean-pool to 8x8: gather equal block edges
-                ye = (np.arange(9) * h) // 8
-                xe = (np.arange(9) * w) // 8
-                acc = np.add.accumulate(
-                    np.add.accumulate(img.astype(np.int64), 0), 1
-                )
-                padded = np.zeros((h + 1, w + 1), dtype=np.int64)
-                padded[1:, 1:] = acc
-                bs = (
-                    padded[ye[1:, None], xe[None, 1:]]
-                    - padded[ye[:-1, None], xe[None, 1:]]
-                    - padded[ye[1:, None], xe[None, :-1]]
-                    + padded[ye[:-1, None], xe[None, :-1]]
-                )
-                # block areas differ when h,w % 8 != 0: compare means as
-                # cross-multiplied integers sum_b * A_tot >= total * A_b
-                areas = (ye[1:] - ye[:-1])[:, None] * (xe[1:] - xe[:-1])[None, :]
-                total = int(bs.sum())
-                bits = (bs * int(areas.sum()) >= total * areas).ravel()
-                hashes.append("".join("1" if b else "0" for b in bits))
-            yield pd.DataFrame({"doc_id": ids, "ahash": hashes})
+    def ahash(blob: bytes):
+        pooled = _pool8(blob)
+        if pooled is None:
+            return None
+        bs, areas = pooled
+        return (_bitstring(bs * int(areas.sum()) >= int(bs.sum()) * areas),)
 
-    return df.select(id_col, "blob").mapInPandas(
-        op, schema="doc_id bigint, ahash string"
-    )
+    return _map_rows(df, id_col, "blob", "doc_id bigint, ahash string", ahash)
 
 
 def dhash_images(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -342,48 +338,18 @@ def dhash_images(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     mean exceeds its cyclic right neighbor (r, (c+1) % 8) — the cyclic
     wrap keeps exactly 64 bits without pooling a 9th column, and the
     comparison cross-multiplies the block AREAS (bs1 * A2 > bs2 * A1)
-    so non-multiple-of-8 images stay integer-exact. Same Arrow
-    mapInPandas placement and null-on-undecodable policy as aHash."""
+    so non-multiple-of-8 images stay integer-exact."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes = [], []
-            for doc_id, blob in zip(pdf[id_col], pdf["blob"]):
-                ids.append(doc_id)
-                try:
-                    img, _ = decode_image(bytes(blob))
-                except (ValueError, NotImplementedError):
-                    hashes.append(None)
-                    continue
-                if img.ndim == 3:
-                    img = img.astype(np.int64).sum(axis=2)
-                h, w = img.shape
-                if h < 8 or w < 8:
-                    hashes.append(None)
-                    continue
-                ye = (np.arange(9) * h) // 8
-                xe = (np.arange(9) * w) // 8
-                acc = np.add.accumulate(
-                    np.add.accumulate(img.astype(np.int64), 0), 1
-                )
-                padded = np.zeros((h + 1, w + 1), dtype=np.int64)
-                padded[1:, 1:] = acc
-                bs = (
-                    padded[ye[1:, None], xe[None, 1:]]
-                    - padded[ye[:-1, None], xe[None, 1:]]
-                    - padded[ye[1:, None], xe[None, :-1]]
-                    + padded[ye[:-1, None], xe[None, :-1]]
-                )
-                areas = (ye[1:] - ye[:-1])[:, None] * (xe[1:] - xe[:-1])[None, :]
-                nb = np.roll(bs, -1, axis=1)
-                na = np.roll(areas, -1, axis=1)
-                bits = (bs * na > nb * areas).ravel()
-                hashes.append("".join("1" if b else "0" for b in bits))
-            yield pd.DataFrame({"doc_id": ids, "dhash": hashes})
+    def dhash(blob: bytes):
+        pooled = _pool8(blob)
+        if pooled is None:
+            return None
+        bs, areas = pooled
+        nb = np.roll(bs, -1, axis=1)
+        na = np.roll(areas, -1, axis=1)
+        return (_bitstring(bs * na > nb * areas),)
 
-    return df.select(id_col, "blob").mapInPandas(
-        op, schema="doc_id bigint, dhash string"
-    )
+    return _map_rows(df, id_col, "blob", "doc_id bigint, dhash string", dhash)
 
 
 def frame_sample(
@@ -420,28 +386,21 @@ def frame_sample(
 def byte_histogram_features(
     df: DataFrame, id_col: str = "doc_id", bins: int = 16
 ) -> DataFrame:
-    """Fixed-width feature vector per blob via Arrow-batched
-    mapInPandas — the image-embedding pipeline shape (bytes in, float
-    vector out). The stand-in featurizer is a REAL computation (L1-
-    normalized histogram of byte values into ``bins`` buckets, numpy
-    vectorized per batch); a real deployment swaps in decode +
-    model inference per batch without touching the Spark plumbing."""
-    import numpy as np
+    """Fixed-width feature vector per blob — the image-embedding
+    pipeline shape (bytes in, float vector out). The stand-in
+    featurizer is a REAL computation (L1-normalized histogram of byte
+    values into ``bins`` buckets); a real deployment swaps in decode +
+    model inference without touching the Spark plumbing."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for blob in pdf["blob"]:
-                arr = np.frombuffer(blob, dtype=np.uint8)
-                if arr.size == 0:
-                    feats.append(np.zeros(bins, dtype=np.float64))
-                    continue
-                hist = np.bincount(arr >> (8 - bins.bit_length() + 1), minlength=bins)[:bins]
-                feats.append(hist / arr.size)
-            yield pd.DataFrame({"doc_id": pdf[id_col], "features": feats})
+    def histogram(blob: bytes):
+        arr = np.frombuffer(blob, dtype=np.uint8)
+        if arr.size == 0:
+            return (np.zeros(bins, dtype=np.float64),)
+        hist = np.bincount(arr >> (8 - bins.bit_length() + 1), minlength=bins)[:bins]
+        return (hist / arr.size,)
 
-    return df.select(id_col, "blob").mapInPandas(
-        op, schema="doc_id bigint, features array<double>"
+    return _map_rows(
+        df, id_col, "blob", "doc_id bigint, features array<double>", histogram
     )
 
 
@@ -453,48 +412,33 @@ def resize_frames(
     target_h: int = 8,
 ) -> DataFrame:
     """Image-resize pipeline shape: blob + typed dimension metadata in,
-    resized blob + new dimensions out, through Arrow-batched
-    mapInPandas.
+    resized blob + new dimensions out.
 
     Each blob is viewed as a row-major ``src_w``-wide byte raster
     (height = len/src_w) and downsampled to ``target_h x target_w`` by
     nearest-neighbor index sampling — a REAL vectorized computation
     with the exact shape of a PIL/cv2 resize (decode → ndarray →
     strided gather → re-encode), so swapping in a real decoder touches
-    only the two marked lines. Blobs shorter than one source row are
-    passed through untouched with null dims, the malformed-media path
-    a production pipeline needs."""
-    import numpy as np
+    only the two marked lines. Blobs shorter than one source row pass
+    through untouched with null dims."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_blob, out_w, out_h = [], [], []
-            for blob in pdf["blob"]:
-                arr = np.frombuffer(blob, dtype=np.uint8)  # decode_stub seam
-                src_h = arr.size // src_w
-                if src_h < 1:
-                    out_blob.append(bytes(blob))
-                    out_w.append(None)
-                    out_h.append(None)
-                    continue
-                img = arr[: src_h * src_w].reshape(src_h, src_w)
-                ys = (np.arange(target_h) * src_h) // target_h
-                xs = (np.arange(target_w) * src_w) // target_w
-                small = img[np.ix_(ys, xs)]  # re-encode seam
-                out_blob.append(small.tobytes())
-                out_w.append(target_w)
-                out_h.append(target_h)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "resized": out_blob,
-                    "width": pd.array(out_w, dtype="Int32"),
-                    "height": pd.array(out_h, dtype="Int32"),
-                }
-            )
+    def resize(blob: bytes):
+        arr = np.frombuffer(blob, dtype=np.uint8)  # decode_stub seam
+        src_h = arr.size // src_w
+        if src_h < 1:
+            return blob, None, None
+        img = arr[: src_h * src_w].reshape(src_h, src_w)
+        ys = (np.arange(target_h) * src_h) // target_h
+        xs = (np.arange(target_w) * src_w) // target_w
+        small = img[np.ix_(ys, xs)]  # re-encode seam
+        return small.tobytes(), target_w, target_h
 
-    return df.select(id_col, "blob").mapInPandas(
-        op, schema="doc_id bigint, resized binary, width int, height int"
+    return _map_rows(
+        df,
+        id_col,
+        "blob",
+        "doc_id bigint, resized binary, width int, height int",
+        resize,
     )
 
 
@@ -561,58 +505,36 @@ def audio_frame_features(
 ) -> DataFrame:
     """REAL audio pipeline: parse WAV containers, then per fixed-size
     frame compute RMS energy and zero-crossing rate — the two features
-    every VAD/segmentation front-end starts from. Vectorized numpy per
-    Arrow batch (reshape to (n_frames, frame) then axis-1 reductions);
-    undecodable blobs pass through with null kind — the malformed-media
-    path. Shuffle-free: frames explode where the rows sit."""
+    every VAD/segmentation front-end starts from, vectorized as a
+    reshape to (n_frames, frame) then axis-1 reductions. One row per
+    frame; a WAV shorter than one frame gives one row with only its
+    kind set."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fnos, rms, zcr, kinds = [], [], [], [], []
-            for doc_id, blob in zip(pdf[id_col], pdf["blob"]):
-                try:
-                    samples, _rate = decode_wav(bytes(blob))
-                except (ValueError, NotImplementedError):
-                    ids.append(doc_id)
-                    fnos.append(None)
-                    rms.append(None)
-                    zcr.append(None)
-                    kinds.append(None)
-                    continue
-                nf = len(samples) // frame_samples
-                if nf == 0:
-                    ids.append(doc_id)
-                    fnos.append(None)
-                    rms.append(None)
-                    zcr.append(None)
-                    kinds.append(KIND_WAV)
-                    continue
-                fr = samples[: nf * frame_samples].reshape(nf, frame_samples)
-                # exact integer sum-of-squares, THEN one division + sqrt:
-                # both correctly rounded IEEE ops, so rms is bit-equal
-                # across engines (a float mean would depend on
-                # accumulation order)
-                xi = fr.astype(np.int64)
-                r = np.sqrt((xi * xi).sum(axis=1) / float(frame_samples))
-                neg = fr < 0
-                z = (neg[:, 1:] != neg[:, :-1]).sum(axis=1) / float(frame_samples - 1)
-                ids.extend([doc_id] * nf)
-                fnos.extend(range(nf))
-                rms.extend(np.round(r, 6))
-                zcr.extend(np.round(z, 6))
-                kinds.extend([KIND_WAV] * nf)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "frame_no": pd.array(fnos, dtype="Int32"),
-                    "rms": pd.array(rms, dtype="float64"),
-                    "zcr": pd.array(zcr, dtype="float64"),
-                    "kind": kinds,
-                }
-            )
+    def frames(blob: bytes):
+        samples, _rate = decode_wav(blob)
+        nf = len(samples) // frame_samples
+        if nf == 0:
+            return None, None, None, KIND_WAV
+        fr = samples[: nf * frame_samples].reshape(nf, frame_samples)
+        # exact integer sum-of-squares, THEN one division + sqrt:
+        # both correctly rounded IEEE ops, so rms is bit-equal
+        # across engines (a float mean would depend on
+        # accumulation order)
+        xi = fr.astype(np.int64)
+        r = np.sqrt((xi * xi).sum(axis=1) / float(frame_samples))
+        neg = fr < 0
+        z = (neg[:, 1:] != neg[:, :-1]).sum(axis=1) / float(frame_samples - 1)
+        return [
+            (i, ri, zi, KIND_WAV)
+            for i, (ri, zi) in enumerate(zip(np.round(r, 6), np.round(z, 6)))
+        ]
 
-    return df.select(id_col, "blob").mapInPandas(
-        op, schema="doc_id bigint, frame_no int, rms double, zcr double, kind string"
+    return _map_rows(
+        df,
+        id_col,
+        "blob",
+        "doc_id bigint, frame_no int, rms double, zcr double, kind string",
+        frames,
     )
 
 
@@ -741,52 +663,25 @@ def video_frame_index(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """REAL video pipeline: parse AVI containers from the binary
     column, emit one row per frame with geometry and the sha256 of the
     frame's raw stored payload (hash of what the container carries, so
-    an external tool slicing the same file agrees). Undecodable blobs
-    pass through with null kind — the malformed-media path. A real
-    deployment swaps ffmpeg into decode_avi for compressed codecs; the
-    Spark plumbing (Arrow batches, row-per-frame fan-out where the
-    data sits) is unchanged."""
+    an external tool slicing the same file agrees). A real deployment
+    swaps ffmpeg into decode_avi for compressed codecs; the row-per-
+    frame fan-out stays the same."""
     import hashlib
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fnos, ws, hs, shas, kinds = [], [], [], [], [], []
-            for doc_id, blob in zip(pdf[id_col], pdf["blob"]):
-                b = bytes(blob)
-                try:
-                    frames, (w, h) = decode_avi(b)
-                except (ValueError, NotImplementedError):
-                    ids.append(doc_id)
-                    fnos.append(None)
-                    ws.append(None)
-                    hs.append(None)
-                    shas.append(None)
-                    kinds.append(None)
-                    continue
-                for i, fr in enumerate(frames):
-                    ids.append(doc_id)
-                    fnos.append(i)
-                    ws.append(w)
-                    hs.append(h)
-                    # hash the stored payload (re-apply DIB conventions)
-                    shas.append(
-                        hashlib.sha256(fr[::-1, :, ::-1].tobytes()).hexdigest()
-                    )
-                    kinds.append(KIND_AVI)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "frame_no": pd.array(fnos, dtype="Int32"),
-                    "width": pd.array(ws, dtype="Int32"),
-                    "height": pd.array(hs, dtype="Int32"),
-                    "frame_sha": shas,
-                    "kind": kinds,
-                }
-            )
+    def index(blob: bytes):
+        frames, (w, h) = decode_avi(blob)
+        # hash the stored payload (re-apply DIB conventions)
+        return [
+            (i, w, h, hashlib.sha256(fr[::-1, :, ::-1].tobytes()).hexdigest(), KIND_AVI)
+            for i, fr in enumerate(frames)
+        ]
 
-    return df.select(id_col, "blob").mapInPandas(
-        op,
-        schema="doc_id bigint, frame_no int, width int, height int, frame_sha string, kind string",
+    return _map_rows(
+        df,
+        id_col,
+        "blob",
+        "doc_id bigint, frame_no int, width int, height int, frame_sha string, kind string",
+        index,
     )
 
 
@@ -855,7 +750,9 @@ def decode_png(blob: bytes) -> np.ndarray:
     walk with CRC32 verification, multi-IDAT concatenation, zlib
     inflate, and ALL FIVE scanline filters (None/Sub/Up/Average/
     Paeth). Interlace, palette, and sub-8-bit depths raise
-    NotImplementedError like the other codecs' unsupported variants."""
+    NotImplementedError like the other codecs' unsupported variants.
+    The roundtrip query only reaches the None/Sub/Up filters and
+    grayscale; Average, Paeth and RGB are pinned by unit tests."""
     import struct
     import zlib
 
@@ -920,77 +817,23 @@ def decode_png(blob: bytes) -> np.ndarray:
     return out.reshape((h, w, 3)) if bpp == 3 else out.reshape((h, w))
 
 
-def png_roundtrip(df: DataFrame, id_col: str = "doc_id", w: int = 16, h: int = 16) -> DataFrame:
-    """Compressed-codec pipeline: raster bytes → REAL PNG encode
-    (zlib DEFLATE + CRC-checked chunks) → REAL PNG decode → decoded
-    pixels out, through Arrow-batched mapInPandas. The decode fully
-    re-derives the pixels from the compressed container (filters
-    un-applied, CRCs verified), so a sha over the output proves the
-    codec lossless end-to-end. Shuffle-free map; short payloads yield
-    null pixels (the malformed-media path)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ns, pix = [], [], []
-            for doc_id, blob in zip(pdf[id_col], pdf["raster"]):
-                ids.append(doc_id)
-                b = bytes(blob)
-                if len(b) < w * h:
-                    ns.append(None)
-                    pix.append(None)
-                    continue
-                img = np.frombuffer(b, np.uint8, w * h).reshape((h, w))
-                png = encode_png(img)
-                ns.append(len(png))
-                pix.append(decode_png(png).tobytes())
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "png_bytes": pd.array(ns, dtype="Int64"),
-                    "pixels": pix,
-                }
-            )
-
-    return df.select(id_col, "raster").mapInPandas(
-        op, schema=f"{id_col} bigint, png_bytes bigint, pixels binary"
-    )
-
-
 def audio_resample(df: DataFrame, id_col: str = "doc_id", factor: int = 2) -> DataFrame:
     """REAL audio DSP step: decode PCM16 WAV → decimate by ``factor``
     (drop-sample resampling; a production pipeline would low-pass
     first, which needs no new plumbing — the seam is this one numpy
-    line) → re-encode a valid WAV at the reduced rate. Arrow-batched
-    mapInPandas, shuffle-free; undecodable blobs yield null output
-    (the malformed-media path)."""
+    line) → re-encode a valid WAV at the reduced rate."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, nin, nout, blobs = [], [], [], []
-            for doc_id, blob in zip(pdf[id_col], pdf["blob"]):
-                ids.append(doc_id)
-                try:
-                    samples, rate = decode_wav(bytes(blob))
-                except (ValueError, NotImplementedError):
-                    nin.append(None)
-                    nout.append(None)
-                    blobs.append(None)
-                    continue
-                res = samples[::factor]
-                nin.append(len(samples))
-                nout.append(len(res))
-                blobs.append(encode_wav(res, rate // factor))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_in": pd.array(nin, dtype="Int64"),
-                    "n_out": pd.array(nout, dtype="Int64"),
-                    "wav": blobs,
-                }
-            )
+    def resample(blob: bytes):
+        samples, rate = decode_wav(blob)
+        res = samples[::factor]
+        return len(samples), len(res), encode_wav(res, rate // factor)
 
-    return df.select(id_col, "blob").mapInPandas(
-        op, schema=f"{id_col} bigint, n_in bigint, n_out bigint, wav binary"
+    return _map_rows(
+        df,
+        id_col,
+        "blob",
+        f"{id_col} bigint, n_in bigint, n_out bigint, wav binary",
+        resample,
     )
 
 
@@ -1041,6 +884,10 @@ def _lzw_compress(indices: np.ndarray, min_code_size: int = 8) -> bytes:
                 next_code = eoi + 1
             w = c
     emit(w, size)
+    # the decoder adds a table entry for this last code too; EOI must
+    # be written at the width that entry gives it
+    if next_code + 1 == (1 << size) and size < 12:
+        size += 1
     emit(eoi, size)
     if nbits:
         out.append(acc & 0xFF)
@@ -1117,7 +964,9 @@ def decode_gif(blob: bytes) -> np.ndarray:
     """Decode a single-frame non-interlaced GIF87a/89a back to the 2-D
     uint8 raster via the global color table (graylevel = red channel
     of the palette entry). Walks the real container: header, LSD,
-    GCT, image descriptor, sub-block-framed LZW stream."""
+    GCT, image descriptor, sub-block-framed LZW stream; the LZW
+    decoder grows its code width one entry early and resets on the
+    encoder's 4096-entry CLEAR."""
     if len(blob) < 13 or blob[:4] != b"GIF8" or blob[4:6] not in (b"7a", b"9a"):
         raise ValueError("not a GIF file")
     packed = blob[10]
@@ -1153,39 +1002,6 @@ def decode_gif(blob: bytes) -> np.ndarray:
     if len(idx) != w * h:
         raise ValueError(f"decoded {len(idx)} pixels for {w}x{h} image")
     return palette[idx, 0].reshape(h, w)
-
-
-def gif_roundtrip(df: DataFrame, id_col: str = "doc_id", w: int = 16, h: int = 16) -> DataFrame:
-    """Raster bytes → REAL GIF87a encode (LZW) → REAL decode → decoded
-    pixels out, through Arrow-batched mapInPandas — the same lossless
-    proof shape as png_roundtrip, over the second compressed container.
-    Shuffle-free map; short payloads yield null pixels."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ns, pix = [], [], []
-            for doc_id, blob in zip(pdf[id_col], pdf["raster"]):
-                ids.append(doc_id)
-                b = bytes(blob)
-                if len(b) < w * h:
-                    ns.append(None)
-                    pix.append(None)
-                    continue
-                img = np.frombuffer(b, np.uint8, w * h).reshape((h, w))
-                gif = encode_gif(img)
-                ns.append(len(gif))
-                pix.append(decode_gif(gif).tobytes())
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "gif_bytes": pd.array(ns, dtype="Int64"),
-                    "pixels": pix,
-                }
-            )
-
-    return df.select(id_col, "raster").mapInPandas(
-        op, schema=f"{id_col} bigint, gif_bytes bigint, pixels binary"
-    )
 
 
 # ---------------- real compressed codec: baseline JPEG ----------------
@@ -1585,48 +1401,35 @@ def jpeg_roundtrip(
     """Compressed-codec pipeline #3: text bytes -> a 32x32 grayscale
     raster of 8x8 CONSTANT blocks (one per input byte) -> REAL
     baseline JPEG encode (all-ones quant table) -> REAL JPEG decode ->
-    decoded pixels out, through Arrow-batched mapInPandas.
+    decoded pixels out.
 
     Why constant blocks: JPEG is lossy in general, but a constant
     block's spectrum is pure DC = 8*(v-128) — an exact integer that
     survives quantization at q=1 and inverts to exactly v — so THIS
     JPEG decodes bit-exactly and the decoded-pixel sha is
     SQL-derivable (repeat-expansion of the source chars), giving the
-    lossy codec the same end-to-end oracle as PNG/GIF. The AC
-    coefficient path (runs, ZRL, EOB), general lossy accuracy vs an
-    independent naive IDCT, restart markers, and the color path are
-    pinned by unit tests (tests/test_multimodal.py) where exactness
-    is not required. Shuffle-free map; short payloads yield null
-    pixels (the malformed-media path)."""
+    lossy codec the same end-to-end oracle as the lossless roundtrips.
+    The AC coefficient path (runs, ZRL, EOB), general lossy accuracy
+    vs an independent naive IDCT, restart markers, and the color path
+    are pinned by unit tests (tests/test_multimodal.py) where
+    exactness is not required. Payloads shorter than ``blocks`` bytes
+    yield null pixels."""
+    side = int(np.sqrt(blocks))
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ns, pix = [], [], []
-            for doc_id, blob in zip(pdf[id_col], pdf["raster"]):
-                ids.append(doc_id)
-                b = bytes(blob)
-                if len(b) < blocks:
-                    ns.append(None)
-                    pix.append(None)
-                    continue
-                side = int(np.sqrt(blocks))
-                vals = np.frombuffer(b, np.uint8, blocks)
-                img = np.repeat(
-                    np.repeat(vals.reshape(side, side), 8, axis=0), 8, axis=1
-                )
-                jpg = encode_jpeg(img)
-                ns.append(len(jpg))
-                pix.append(decode_jpeg(jpg).tobytes())
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "jpeg_bytes": pd.array(ns, dtype="Int64"),
-                    "pixels": pix,
-                }
-            )
+    def roundtrip(raster: bytes):
+        if len(raster) < blocks:
+            return None
+        vals = np.frombuffer(raster, np.uint8, blocks)
+        img = np.repeat(np.repeat(vals.reshape(side, side), 8, axis=0), 8, axis=1)
+        jpg = encode_jpeg(img)
+        return len(jpg), decode_jpeg(jpg).tobytes()
 
-    return df.select(id_col, "raster").mapInPandas(
-        op, schema=f"{id_col} bigint, jpeg_bytes bigint, pixels binary"
+    return _map_rows(
+        df,
+        id_col,
+        "raster",
+        f"{id_col} bigint, jpeg_bytes bigint, pixels binary",
+        roundtrip,
     )
 
 
@@ -1636,7 +1439,8 @@ KIND_TIFF = "image/tiff"
 
 
 def encode_tiff_gray(img: np.ndarray) -> bytes:
-    """Minimal valid TIFF 6.0: little-endian header, ONE IFD with the
+    """Minimal valid TIFF 6.0 — the archival/scan format — with a
+    little-endian header and ONE IFD holding the
     baseline-required tags for an uncompressed 8-bit grayscale image
     (ImageWidth 256, ImageLength 257, BitsPerSample 258,
     Compression 259 = 1, PhotometricInterpretation 262 = 1 (BlackIsZero),
@@ -1731,47 +1535,14 @@ def decode_tiff_gray(blob: bytes) -> np.ndarray:
     return np.frombuffer(data, np.uint8, w * h).reshape((h, w))
 
 
-def tiff_roundtrip(
-    df: DataFrame, id_col: str = "doc_id", w: int = 16, h: int = 16
-) -> DataFrame:
-    """raster -> REAL TIFF encode (IFD + strip) -> REAL TIFF decode
-    (IFD walk, both byte orders) -> decoded pixels, Arrow-batched
-    mapInPandas; same lossless-proof contract as png_roundtrip."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ns, pix = [], [], []
-            for doc_id, blob in zip(pdf[id_col], pdf["raster"]):
-                ids.append(doc_id)
-                b = bytes(blob)
-                if len(b) < w * h:
-                    ns.append(None)
-                    pix.append(None)
-                    continue
-                img = np.frombuffer(b, np.uint8, w * h).reshape((h, w))
-                t = encode_tiff_gray(img)
-                ns.append(len(t))
-                pix.append(decode_tiff_gray(t).tobytes())
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "tiff_bytes": pd.array(ns, dtype="Int64"),
-                    "pixels": pix,
-                }
-            )
-
-    return df.select(id_col, "raster").mapInPandas(
-        op, schema="doc_id bigint, tiff_bytes bigint, pixels binary"
-    )
-
-
 # ---------------- QOI (Quite OK Image, 2022 spec) ----------------
 
 KIND_QOI = "image/qoi"
 
 
 def encode_qoi_gray(img: np.ndarray) -> bytes:
-    """QOI encoder for a grayscale raster (emitted as 3-channel, r=g=b
+    """QOI (2022), the modern lossless byte-stream codec: encoder for a
+    grayscale raster (emitted as 3-channel, r=g=b
     — QOI has no gray mode): the full op set from the public 1-page
     spec — RUN (up to 62), INDEX (64-slot (3r+5g+7b+11a)%64 hash
     table), DIFF (2-bit channel deltas, bias 2), LUMA (6-bit dg plus
@@ -1880,40 +1651,6 @@ def decode_qoi_gray(blob: bytes) -> np.ndarray:
     return px.reshape((h, w))
 
 
-def qoi_roundtrip(
-    df: DataFrame, id_col: str = "doc_id", w: int = 16, h: int = 16
-) -> DataFrame:
-    """raster -> REAL QOI encode -> REAL QOI decode -> decoded pixels,
-    Arrow-batched mapInPandas; same lossless-proof contract as the
-    PNG/GIF/TIFF roundtrips."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ns, pix = [], [], []
-            for doc_id, blob in zip(pdf[id_col], pdf["raster"]):
-                ids.append(doc_id)
-                b = bytes(blob)
-                if len(b) < w * h:
-                    ns.append(None)
-                    pix.append(None)
-                    continue
-                img = np.frombuffer(b, np.uint8, w * h).reshape((h, w))
-                q = encode_qoi_gray(img)
-                ns.append(len(q))
-                pix.append(decode_qoi_gray(q).tobytes())
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "qoi_bytes": pd.array(ns, dtype="Int64"),
-                    "pixels": pix,
-                }
-            )
-
-    return df.select(id_col, "raster").mapInPandas(
-        op, schema="doc_id bigint, qoi_bytes bigint, pixels binary"
-    )
-
-
 # ---------------- real container #6: TGA (Truevision TARGA) ----------------
 # Implemented from the public TGA 2.0 spec (Truevision, 1991): 18-byte
 # header, image types 3 (uncompressed grayscale) and 11 (RLE
@@ -1928,7 +1665,9 @@ KIND_TGA = "image/x-tga"
 
 def encode_tga_gray(img: np.ndarray) -> bytes:
     """REAL RLE TGA encoder for an (h, w) uint8 grayscale raster:
-    type-11 (RLE black&white), top-down, per-row run packets."""
+    type-11 (RLE black&white), top-down, per-row run packets — the
+    one run-length-compressed path among the lossless roundtrips
+    (PNG/GIF use DEFLATE/LZW, TIFF/QOI strips and byte ops)."""
     h, w = img.shape
     hdr = bytes(
         [
@@ -2021,38 +1760,41 @@ def decode_tga_gray(blob: bytes) -> np.ndarray:
     return np.ascontiguousarray(img)
 
 
-def tga_roundtrip(
-    df: DataFrame, id_col: str = "doc_id", w: int = 16, h: int = 16
+# ---------------- lossless roundtrips over the five grayscale codecs ----------------
+
+LOSSLESS_CODECS = {
+    "png": (encode_png, decode_png),
+    "gif": (encode_gif, decode_gif),
+    "tiff": (encode_tiff_gray, decode_tiff_gray),
+    "qoi": (encode_qoi_gray, decode_qoi_gray),
+    "tga": (encode_tga_gray, decode_tga_gray),
+}
+
+
+def lossless_roundtrip(
+    df: DataFrame, codec: str, id_col: str = "doc_id", w: int = 16, h: int = 16
 ) -> DataFrame:
-    """raster -> REAL RLE TGA encode -> REAL TGA decode -> decoded
-    pixels, Arrow-batched mapInPandas; same lossless-proof contract as
-    the PNG/GIF/TIFF/QOI roundtrips (tga_bytes stays out of the oracle
-    — RLE stream length is not SQL-derivable)."""
+    """raster -> REAL ``codec`` encode -> REAL decode -> decoded pixels,
+    for any codec in ``LOSSLESS_CODECS``. The decode re-derives the
+    pixels from the container alone, so a sha over ``pixels`` equal to
+    the sha of the first ``w*h`` raster bytes proves the codec lossless
+    end to end. ``{codec}_bytes`` is the encoded size; it stays out of
+    the oracles (compressed stream length is not SQL-derivable).
+    Payloads shorter than ``w*h`` bytes yield nulls."""
+    encode, decode = LOSSLESS_CODECS[codec]
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ns, pix = [], [], []
-            for doc_id, blob in zip(pdf[id_col], pdf["raster"]):
-                ids.append(doc_id)
-                b = bytes(blob)
-                if len(b) < w * h:
-                    ns.append(None)
-                    pix.append(None)
-                    continue
-                img = np.frombuffer(b, np.uint8, w * h).reshape((h, w))
-                t = encode_tga_gray(img)
-                ns.append(len(t))
-                pix.append(decode_tga_gray(t).tobytes())
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "tga_bytes": pd.array(ns, dtype="Int64"),
-                    "pixels": pix,
-                }
-            )
+    def roundtrip(raster: bytes):
+        if len(raster) < w * h:
+            return None
+        enc = encode(np.frombuffer(raster, np.uint8, w * h).reshape((h, w)))
+        return len(enc), decode(enc).tobytes()
 
-    return df.select(id_col, "raster").mapInPandas(
-        op, schema="doc_id bigint, tga_bytes bigint, pixels binary"
+    return _map_rows(
+        df,
+        id_col,
+        "raster",
+        f"doc_id bigint, {codec}_bytes bigint, pixels binary",
+        roundtrip,
     )
 
 
@@ -2073,48 +1815,25 @@ def audio_vad_segments(
     oracle (a float RMS threshold would be cut-point fragile). One
     row per doc: frames, active frames, segment count, longest run."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, nf_, na_, ns_, mr_ = [], [], [], [], []
-            for doc_id, blob in zip(pdf[id_col], pdf["blob"]):
-                ids.append(doc_id)
-                try:
-                    samples, _rate = decode_wav(bytes(blob))
-                except (ValueError, NotImplementedError):
-                    nf_.append(None)
-                    na_.append(None)
-                    ns_.append(None)
-                    mr_.append(None)
-                    continue
-                nf = len(samples) // frame_samples
-                fr = samples[: nf * frame_samples].reshape(nf, frame_samples)
-                xi = fr.astype(np.int64)
-                energy = (xi * xi).sum(axis=1)
-                active = energy >= thr_sumsq
-                # segment = maximal run of active frames
-                edges = np.diff(np.concatenate(([0], active.view(np.int8), [0])))
-                starts = np.flatnonzero(edges == 1)
-                ends = np.flatnonzero(edges == -1)
-                nf_.append(nf)
-                na_.append(int(active.sum()))
-                ns_.append(len(starts))
-                mr_.append(int((ends - starts).max()) if len(starts) else 0)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_frames": pd.array(nf_, dtype="Int64"),
-                    "n_active": pd.array(na_, dtype="Int64"),
-                    "n_segments": pd.array(ns_, dtype="Int64"),
-                    "max_run": pd.array(mr_, dtype="Int64"),
-                }
-            )
+    def vad(blob: bytes):
+        samples, _rate = decode_wav(blob)
+        nf = len(samples) // frame_samples
+        fr = samples[: nf * frame_samples].reshape(nf, frame_samples)
+        xi = fr.astype(np.int64)
+        active = (xi * xi).sum(axis=1) >= thr_sumsq
+        # segment = maximal run of active frames
+        edges = np.diff(np.concatenate(([0], active.view(np.int8), [0])))
+        starts = np.flatnonzero(edges == 1)
+        ends = np.flatnonzero(edges == -1)
+        max_run = int((ends - starts).max()) if len(starts) else 0
+        return nf, int(active.sum()), len(starts), max_run
 
-    return df.select(id_col, "blob").mapInPandas(
-        op,
-        schema=(
-            "doc_id bigint, n_frames bigint, n_active bigint,"
-            " n_segments bigint, max_run bigint"
-        ),
+    return _map_rows(
+        df,
+        id_col,
+        "blob",
+        "doc_id bigint, n_frames bigint, n_active bigint, n_segments bigint, max_run bigint",
+        vad,
     )
 
 
@@ -2126,43 +1845,21 @@ def video_motion_profile(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     across pairs, and peak pair SAD — the scene-cut / static-content
     signal a video curation pipeline thresholds on."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, nf_, ts_, ps_ = [], [], [], []
-            for doc_id, blob in zip(pdf[id_col], pdf["blob"]):
-                ids.append(doc_id)
-                try:
-                    frames, _wh = decode_avi(bytes(blob))
-                except (ValueError, NotImplementedError):
-                    nf_.append(None)
-                    ts_.append(None)
-                    ps_.append(None)
-                    continue
-                nf = len(frames)
-                nf_.append(nf)
-                if nf < 2:
-                    ts_.append(0)
-                    ps_.append(0)
-                    continue
-                x = frames.astype(np.int64).reshape(nf, -1)
-                sad = np.abs(x[1:] - x[:-1]).sum(axis=1)
-                ts_.append(int(sad.sum()))
-                ps_.append(int(sad.max()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_frames": pd.array(nf_, dtype="Int64"),
-                    "sad_total": pd.array(ts_, dtype="Int64"),
-                    "sad_peak": pd.array(ps_, dtype="Int64"),
-                }
-            )
+    def motion(blob: bytes):
+        frames, _wh = decode_avi(blob)
+        nf = len(frames)
+        if nf < 2:
+            return nf, 0, 0
+        x = frames.astype(np.int64).reshape(nf, -1)
+        sad = np.abs(x[1:] - x[:-1]).sum(axis=1)
+        return nf, int(sad.sum()), int(sad.max())
 
-    return df.select(id_col, "blob").mapInPandas(
-        op,
-        schema=(
-            "doc_id bigint, n_frames bigint, sad_total bigint,"
-            " sad_peak bigint"
-        ),
+    return _map_rows(
+        df,
+        id_col,
+        "blob",
+        "doc_id bigint, n_frames bigint, sad_total bigint, sad_peak bigint",
+        motion,
     )
 
 
@@ -2177,40 +1874,19 @@ def audio_pitch_probe(
     # The tie rule holds because np.argmax returns the FIRST max —
     # which is the smallest lag only if lags are ascending and
     # duplicate-free, so normalize at entry (duplicates would also
-    # collide in the r{l} column dict).
+    # collide in the r{l} output columns).
     lags = tuple(sorted(set(int(l) for l in lags)))
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {f"r{l}": [] for l in lags}
-            ids, best = [], []
-            for doc_id, blob in zip(pdf[id_col], pdf["blob"]):
-                ids.append(doc_id)
-                try:
-                    samples, _rate = decode_wav(bytes(blob))
-                except (ValueError, NotImplementedError):
-                    for l in lags:
-                        out[f"r{l}"].append(None)
-                    best.append(None)
-                    continue
-                x = samples.astype(np.int64)
-                rs = []
-                for l in lags:
-                    r = int((x[:-l] * x[l:]).sum()) if len(x) > l else 0
-                    out[f"r{l}"].append(r)
-                    rs.append(r)
-                # argmax, ties to the smallest lag: first max wins
-                best.append(int(lags[int(np.argmax(rs))]))
-            cols = {"doc_id": ids}
-            cols.update(
-                {k: pd.array(v, dtype="Int64") for k, v in out.items()}
-            )
-            cols["pitch_lag"] = pd.array(best, dtype="Int64")
-            yield pd.DataFrame(cols)
+    def probe(blob: bytes):
+        samples, _rate = decode_wav(blob)
+        x = samples.astype(np.int64)
+        rs = [int((x[:-l] * x[l:]).sum()) if len(x) > l else 0 for l in lags]
+        # argmax, ties to the smallest lag: first max wins
+        return *rs, int(lags[int(np.argmax(rs))])
 
     schema = (
         "doc_id bigint, "
         + ", ".join(f"r{l} bigint" for l in lags)
         + ", pitch_lag bigint"
     )
-    return df.select(id_col, "blob").mapInPandas(op, schema=schema)
+    return _map_rows(df, id_col, "blob", schema, probe)

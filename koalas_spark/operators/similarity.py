@@ -15,8 +15,6 @@ number of planes / probe multi-probing.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -711,9 +709,7 @@ def nn_descent(
     # shuffle joins stay, so the plan degrades exactly as before at
     # cluster scale. Join strategy never changes values.
     n_vec = vec.count()
-    bcast_vec = n_vec <= int(
-        os.environ.get("SPARK_GRAFT_VEC_BROADCAST_LIMIT", 100_000)
-    )
+    bcast_vec = n_vec <= 100_000
     # Scale-adaptive candidate fan (guide §2): each refinement round
     # scores about n_vec * k * 3 pairs; size the one per-round
     # exchange to ~16k scored pairs per task instead of pinning the

@@ -40,14 +40,10 @@ def get_spark(app_name: str = "koalas_spark", cpus: int | None = None) -> SparkS
         # label-propagation round-1 rewrite removed the pathological
         # vote aggregate — more tiny post-shuffle tasks cost more in
         # scheduling than they recover in parallelism (guide §2.2:
-        # fewer, larger partitions). So the SPARK default stands; the
-        # env knob remains for clusters that need to move it either
-        # way, and truly compute-heavy-but-small-byte stages fix their
+        # fewer, larger partitions). So the Spark default stands, and
+        # truly compute-heavy-but-small-byte stages fix their
         # parallelism locally (explicit repartition at the operator).
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "1m"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # let the planner pick shuffled-hash join when its size checks
         # pass (guide §3.1/§9): the iterative graph rounds join a
@@ -55,10 +51,7 @@ def get_spark(app_name: str = "koalas_spark", cpus: int | None = None) -> SparkS
         # label/degree frame every round, and sort-merge re-sorts the
         # edge side per round for no benefit. Sort-merge remains the
         # planner's fallback whenever the build side could not fit.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         # 16g, NOT most-of-RAM: measured at sf0.1, a 48g heap made G1
         # pathological — lazy heap commit page-faulted in kernel mode
         # (97% sys CPU bursts) and rare giant mixed collections turned

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from koalas_spark.memo import staged
 from koalas_spark.queries import query
 from koalas_spark.queries.analytics import _t
-from koalas_spark.queries.analytics9 import _COV_DIM, _SCALE
+from koalas_spark.queries.analytics9 import _COV_DIM, _SCALE, gram_partials
 
 _PCA_ITERS = 8
 _V_SCALE = 100000  # eigenvector components live on a 1e-5 grid
@@ -138,37 +138,8 @@ FROM v8, ray, den
 def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
-    import pandas as pd
-
-    e = _t(spark, sf_dir, "embeddings").select("embedding")
-    d, scale = _COV_DIM, _SCALE
-
-    def partial_gram(batches):
-        import numpy as np
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.stack(pdf["embedding"].to_numpy())[:, :d].astype(np.float64)
-            v = np.trunc(x * scale).astype(np.int64)
-            gram = v.T @ v
-            sx = v.sum(axis=0)
-            iu, ju = np.triu_indices(d)
-            yield pd.DataFrame(
-                {
-                    "i": iu.astype("int32"),
-                    "j": ju.astype("int32"),
-                    "n_part": np.full(len(iu), len(pdf), dtype=np.int64),
-                    "sx_part": sx[iu],
-                    "sy_part": sx[ju],
-                    "sxy_part": gram[iu, ju],
-                }
-            )
-
-    partials = e.mapInPandas(
-        partial_gram,
-        schema="i int, j int, n_part long, sx_part long, sy_part long, sxy_part long",
-    )
+    d = _COV_DIM
+    partials = gram_partials(_t(spark, sf_dir, "embeddings"))
     rows = (
         partials.groupBy("i", "j")
         .agg(

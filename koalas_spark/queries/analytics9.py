@@ -25,6 +25,43 @@ _COV_DIM = 16  # leading block of the 64-dim embedding (oracle cost bound)
 _SCALE = 1048576  # 2^20 — float->double exact, |x|<1 so v fits 21 bits
 
 
+def gram_partials(embeddings: DataFrame) -> DataFrame:
+    """Exact integer partial sums per Arrow batch over the leading
+    ``_COV_DIM`` embedding components on the ``_SCALE`` grid: for every
+    upper-triangle (i, j), the batch's row count, sum v_i, sum v_j and
+    sum v_i*v_j. Summing the partials per (i, j) gives the exact inputs
+    of the covariance matrix."""
+    d, scale = _COV_DIM, _SCALE
+
+    def partial_gram(batches):
+        import numpy as np
+        import pandas as pd
+
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            x = np.stack(pdf["embedding"].to_numpy())[:, :d].astype(np.float64)
+            v = np.trunc(x * scale).astype(np.int64)  # == CAST(double AS BIGINT)
+            gram = v.T @ v  # exact: |v|<2^21, 10k rows -> <2^56
+            sx = v.sum(axis=0)
+            iu, ju = np.triu_indices(d)
+            yield pd.DataFrame(
+                {
+                    "i": iu.astype("int32"),
+                    "j": ju.astype("int32"),
+                    "n_part": np.full(len(iu), len(pdf), dtype=np.int64),
+                    "sx_part": sx[iu],
+                    "sy_part": sx[ju],
+                    "sxy_part": gram[iu, ju],
+                }
+            )
+
+    return embeddings.select("embedding").mapInPandas(
+        partial_gram,
+        schema="i int, j int, n_part long, sx_part long, sy_part long, sxy_part long",
+    )
+
+
 # --------------------------------------------------------------------
 # 213. embedding covariance matrix — the d x d second-moment / Gram
 # matrix that feeds PCA whitening, OPQ rotation training, and mahalanobis
@@ -61,37 +98,7 @@ FROM m
 """,
 )
 def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
-    e = _t(spark, sf_dir, "embeddings").select("embedding")
-    d, scale = _COV_DIM, _SCALE
-
-    def partial_gram(batches):
-        import numpy as np
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.stack(pdf["embedding"].to_numpy())[:, :d].astype(np.float64)
-            v = np.trunc(x * scale).astype(np.int64)  # == CAST(double AS BIGINT)
-            gram = v.T @ v  # exact: |v|<2^21, 10k rows -> <2^56
-            sx = v.sum(axis=0)
-            iu, ju = np.triu_indices(d)
-            yield pd.DataFrame(
-                {
-                    "i": iu.astype("int32"),
-                    "j": ju.astype("int32"),
-                    "n_part": np.full(len(iu), len(pdf), dtype=np.int64),
-                    "sx_part": sx[iu],
-                    "sy_part": sx[ju],
-                    "sxy_part": gram[iu, ju],
-                }
-            )
-
-    partials = e.mapInPandas(
-        partial_gram,
-        schema="i int, j int, n_part long, sx_part long, sy_part long, sxy_part long",
-    )
+    partials = gram_partials(_t(spark, sf_dir, "embeddings"))
     dsum = lambda c: F.sum(F.col(c).cast("decimal(25,0)")).cast("string").cast("double")
     m = partials.groupBy("i", "j").agg(
         F.sum("n_part").cast("bigint").alias("n"),
@@ -102,7 +109,7 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     cov = (
         F.col("sxy") / F.col("n")
         - (F.col("sx") / F.col("n")) * (F.col("sy") / F.col("n"))
-    ) / F.lit(float(scale) * float(scale))
+    ) / F.lit(float(_SCALE) * float(_SCALE))
     return m.select("i", "j", "n", F.round(cov, 12).alias("cov"))
 
 

@@ -6,7 +6,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from koalas_spark.operators.multimodal import extract_meta, with_blob
+from koalas_spark.operators.multimodal import (
+    LOSSLESS_CODECS,
+    extract_meta,
+    lossless_roundtrip,
+    with_blob,
+)
 from koalas_spark.queries import query
 from koalas_spark.queries.analytics import _t
 
@@ -286,69 +291,41 @@ def multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     return video_frame_index(avi, "doc_id")
 
 
-# 154. REAL compressed codec: raster -> PNG (stdlib-zlib DEFLATE,
-# CRC32-checked chunks, mixed None/Sub/Up scanline filters) -> full
-# PNG decode (chunk walk + inflate + unfilter) through mapInPandas,
-# proving losslessness end-to-end: the sha of the DECODED pixels must
-# equal the sha of the raw 256-char raster the oracle computes in SQL
-# (corpus is ASCII, so DuckDB chars == Spark bytes). png_bytes stays
-# out of the result on purpose — DEFLATE stream length is not
-# SQL-derivable; the Average/Paeth filter paths and the RGB color
-# type are pinned by unit tests instead (tests/test_multimodal.py).
-@query(
-    "multimodal_png_roundtrip",
-    oracle="""
-SELECT doc_id, TRUE AS png_ok,
+# 154 / 196 / 424 / 432 / 445. Lossless codec roundtrips: the first
+# 256 text bytes as a 16x16 raster -> REAL encode -> REAL decode (PNG,
+# GIF87a, TIFF 6.0, QOI, TGA; operators/multimodal.py
+# lossless_roundtrip). The decoded pixels' sha must equal the sha of
+# the raw raster the oracle computes in SQL (corpus is ASCII, so
+# DuckDB chars == Spark bytes); the encoded size only feeds {codec}_ok.
+_ROUNDTRIP_ORACLE = """
+SELECT doc_id, TRUE AS {codec}_ok,
        sha256(substring(text, 1, 256)) AS pixel_sha
 FROM documents WHERE octet_length(encode(text)) >= 256
-""",
-)
-def multimodal_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from koalas_spark.operators.multimodal import png_roundtrip
-
-    docs = _t(spark, sf_dir, "documents").filter(F.octet_length("text") >= 256)
-    rast = docs.select(
-        "doc_id",
-        F.substring(F.encode(F.col("text"), "UTF-8"), 1, 256).alias("raster"),
-    )
-    out = png_roundtrip(rast, "doc_id", w=16, h=16)
-    return out.select(
-        "doc_id",
-        (F.col("png_bytes") > 0).alias("png_ok"),
-        F.sha2("pixels", 256).alias("pixel_sha"),
-    )
+"""
 
 
-# 196. REAL compressed codec #2: GIF87a — variable-width LSB-first LZW
-# (the patent-famous algorithm), grayscale global color table,
-# sub-block-framed code stream, implemented from the public format
-# spec (operators/multimodal.py encode_gif/decode_gif, incl. the
-# decoder's one-entry-behind width-growth rule and the 4096-entry
-# CLEAR reset). Same lossless proof as the PNG roundtrip: the decoded
-# pixels' sha must equal the raw raster sha the oracle computes
-# straight from the text bytes.
-@query(
-    "multimodal_gif_roundtrip",
-    oracle="""
-SELECT doc_id, TRUE AS gif_ok,
-       sha256(substring(text, 1, 256)) AS pixel_sha
-FROM documents WHERE octet_length(encode(text)) >= 256
-""",
-)
-def multimodal_gif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from koalas_spark.operators.multimodal import gif_roundtrip
+def _roundtrip_query(codec: str):
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        docs = _t(spark, sf_dir, "documents").filter(F.octet_length("text") >= 256)
+        rast = docs.select(
+            "doc_id",
+            F.substring(F.encode(F.col("text"), "UTF-8"), 1, 256).alias("raster"),
+        )
+        out = lossless_roundtrip(rast, codec, "doc_id", w=16, h=16)
+        return out.select(
+            "doc_id",
+            (F.col(f"{codec}_bytes") > 0).alias(f"{codec}_ok"),
+            F.sha2("pixels", 256).alias("pixel_sha"),
+        )
 
-    docs = _t(spark, sf_dir, "documents").filter(F.octet_length("text") >= 256)
-    rast = docs.select(
-        "doc_id",
-        F.substring(F.encode(F.col("text"), "UTF-8"), 1, 256).alias("raster"),
-    )
-    out = gif_roundtrip(rast, "doc_id", w=16, h=16)
-    return out.select(
-        "doc_id",
-        (F.col("gif_bytes") > 0).alias("gif_ok"),
-        F.sha2("pixels", 256).alias("pixel_sha"),
-    )
+    return run
+
+
+for _codec in LOSSLESS_CODECS:
+    query(
+        f"multimodal_{_codec}_roundtrip",
+        oracle=_ROUNDTRIP_ORACLE.format(codec=_codec),
+    )(_roundtrip_query(_codec))
 
 
 # 289. REAL compressed codec #3: baseline JPEG (ITU T.81) — the
@@ -553,104 +530,6 @@ def multimodal_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_imgs"),
             F.min("doc_id").cast("bigint").alias("canonical_id"),
         )
-    )
-
-
-# 424. REAL container #4: TIFF 6.0 — the archival/scan format the
-# PNG/GIF/JPEG trio doesn't cover. Minimal-baseline encoder (LE
-# header, one IFD, required grayscale tags, single strip) and a
-# spec-complete-enough decoder (BOTH byte orders, typed tag walk,
-# multi-strip reassembly, explicit NotImplementedError on compressed
-# / non-gray variants) in operators/multimodal.py — built from the
-# public TIFF 6.0 spec, no imaging libs. Same lossless proof as the
-# other roundtrips: decoded-pixel sha equals the raw raster sha the
-# oracle computes from the text bytes.
-@query(
-    "multimodal_tiff_roundtrip",
-    oracle="""
-SELECT doc_id, TRUE AS tiff_ok,
-       sha256(substring(text, 1, 256)) AS pixel_sha
-FROM documents WHERE octet_length(encode(text)) >= 256
-""",
-)
-def multimodal_tiff_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from koalas_spark.operators.multimodal import tiff_roundtrip
-
-    docs = _t(spark, sf_dir, "documents").filter(F.octet_length("text") >= 256)
-    rast = docs.select(
-        "doc_id",
-        F.substring(F.encode(F.col("text"), "UTF-8"), 1, 256).alias("raster"),
-    )
-    out = tiff_roundtrip(rast, "doc_id", w=16, h=16)
-    return out.select(
-        "doc_id",
-        (F.col("tiff_bytes") > 0).alias("tiff_ok"),
-        F.sha2("pixels", 256).alias("pixel_sha"),
-    )
-
-
-# 432. REAL container #5: QOI (Quite OK Image, 2022) — the modern
-# lossless byte-stream codec (RUN / 64-slot hash INDEX / 2-bit DIFF /
-# LUMA / literal ops), implemented in full from the public one-page
-# spec (operators/multimodal.py encode_qoi_gray/decode_qoi_gray; the
-# decoder raises explicitly on RGBA streams). Same Arrow mapInPandas
-# placement and lossless proof as PNG/GIF/TIFF/JPEG: decoded-pixel
-# sha equals the raw raster sha the oracle computes from text bytes.
-@query(
-    "multimodal_qoi_roundtrip",
-    oracle="""
-SELECT doc_id, TRUE AS qoi_ok,
-       sha256(substring(text, 1, 256)) AS pixel_sha
-FROM documents WHERE octet_length(encode(text)) >= 256
-""",
-)
-def multimodal_qoi_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from koalas_spark.operators.multimodal import qoi_roundtrip
-
-    docs = _t(spark, sf_dir, "documents").filter(F.octet_length("text") >= 256)
-    rast = docs.select(
-        "doc_id",
-        F.substring(F.encode(F.col("text"), "UTF-8"), 1, 256).alias("raster"),
-    )
-    out = qoi_roundtrip(rast, "doc_id", w=16, h=16)
-    return out.select(
-        "doc_id",
-        (F.col("qoi_bytes") > 0).alias("qoi_ok"),
-        F.sha2("pixels", 256).alias("pixel_sha"),
-    )
-
-
-# 445. REAL container #6: TGA (Truevision TARGA 2.0) — the first
-# roundtrip through a RUN-LENGTH-compressed raster path (PNG/GIF/JPEG
-# exercise DEFLATE/LZW/DCT; TIFF/QOI are strip/byte-stream): type-11
-# RLE grayscale encoder (per-row packets, top-down descriptor) and a
-# decoder accepting raw + RLE types and both vertical orientations,
-# from the public spec (operators/multimodal.py encode_tga_gray /
-# decode_tga_gray). Same Arrow mapInPandas placement and lossless
-# proof as the other five containers: decoded-pixel sha equals the
-# raw raster sha the oracle computes from text bytes (RLE stream
-# length stays out — not SQL-derivable).
-@query(
-    "multimodal_tga_roundtrip",
-    oracle="""
-SELECT doc_id, TRUE AS tga_ok,
-       sha256(substring(text, 1, 256)) AS pixel_sha
-FROM documents WHERE octet_length(encode(text)) >= 256
-""",
-)
-def multimodal_tga_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from koalas_spark.operators.multimodal import tga_roundtrip
-
-    docs = _t(spark, sf_dir, "documents").filter(F.octet_length("text") >= 256)
-    rast = docs.select(
-        "doc_id",
-        F.substring(F.encode(F.col("text"), "UTF-8"), 1, 256).alias("raster"),
-    )
-    out = tga_roundtrip(rast, "doc_id", w=16, h=16)
-    return out.select(
-        "doc_id",
-        (F.col("tga_bytes") > 0).alias("tga_ok"),
-        F.sha2("pixels", 256).alias("pixel_sha"),
     )
 
 

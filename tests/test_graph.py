@@ -38,62 +38,6 @@ def test_star_graph_single_round_shape(spark):
     assert _comps(spark, pairs) == [list(range(5, 20))]
 
 
-# ---------------- large-star/small-star variant ----------------
-
-
-def _comps_star(spark, pairs, max_iter=50):
-    edges = spark.createDataFrame(pairs, "src long, dst long")
-    rows = connected_components(
-        edges, algorithm="star", max_iter=max_iter, driver_edge_limit=0
-    ).collect()
-    got = {}
-    for r in rows:
-        got.setdefault(r["comp"], set()).add(r["node"])
-    return sorted(sorted(v) for v in got.values())
-
-
-def test_star_algo_matches_lp_on_known_graphs(spark):
-    for pairs in (
-        [(1, 2), (2, 3), (3, 4), (4, 5)],
-        [(1, 2), (2, 3), (1, 3), (10, 11)],
-        [(9, 4), (4, 7), (100, 9)],
-        [(7, 7), (1, 2)],  # self-loop keeps an isolated node visible
-    ):
-        assert _comps_star(spark, pairs) == _comps(spark, pairs)
-
-
-def test_star_algo_high_degree_star_converges_in_two_rounds(spark):
-    # degree-10^4 hub (the boilerplate-page dup-graph shape): one
-    # alternating round reaches the fixed point, the second proves it
-    # — max_iter=2 would raise/diverge if more rounds were needed,
-    # so a correct answer here IS the convergence assertion
-    pairs = [(0, i) for i in range(1, 10_001)]
-    comps = _comps_star(spark, pairs, max_iter=2)
-    assert comps == [list(range(0, 10_001))]
-
-
-def test_star_algo_long_chain_logsq_rounds(spark):
-    # 256-node path: diameter 255, so plain LP needs ~255 rounds;
-    # alternating star rounds collapse it within 10 (O(log^2 n))
-    pairs = [(i, i + 1) for i in range(255)]
-    comps = _comps_star(spark, pairs, max_iter=10)
-    assert comps == [list(range(0, 256))]
-
-
-def test_star_algo_random_graphs_match_lp(spark):
-    # deterministic pseudo-random edge soup, compared against LP
-    pairs = []
-    x = 1
-    for _ in range(300):
-        x = (x * 1103515245 + 12345) % (2**31)
-        a = x % 500
-        x = (x * 1103515245 + 12345) % (2**31)
-        b = x % 500
-        if a != b:
-            pairs.append((a, b))
-    assert _comps_star(spark, pairs) == _comps(spark, pairs)
-
-
 # ---------------- size-gated driver union-find ----------------
 
 

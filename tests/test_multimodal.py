@@ -4,6 +4,7 @@ ASCII precondition the frame-sample oracle relies on."""
 import hashlib
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
@@ -498,18 +499,6 @@ def test_png_rejects_corruption_and_unsupported():
         decode_png(deep)
 
 
-def test_png_roundtrip_query_null_path(spark):
-    from koalas_spark.operators.multimodal import png_roundtrip
-
-    df = spark.createDataFrame(
-        [(1, bytearray(bytes(range(256)))), (2, bytearray(b"short"))],
-        "doc_id long, raster binary",
-    )
-    got = {r.doc_id: r for r in png_roundtrip(df, "doc_id").collect()}
-    assert got[2].png_bytes is None and got[2].pixels is None
-    assert got[1].png_bytes > 0 and bytes(got[1].pixels) == bytes(range(256))
-
-
 def test_audio_resample_roundtrip_and_malformed(spark):
     from koalas_spark.operators.multimodal import (
         audio_resample,
@@ -596,6 +585,11 @@ def test_gif_codec_roundtrip_and_structure():
     # width-growth + CLEAR-reset path: >4096 dictionary entries
     big = rng.randint(0, 256, (200, 200), dtype=np.uint8)
     assert (decode_gif(encode_gif(big)) == big).all()
+    # 254 distinct pixels are 254 single-pixel codes: the decoder's
+    # entry for the LAST one fills the 9-bit table, so it reads EOI at
+    # 10 bits and the encoder must write it at that width
+    edge = np.arange(254, dtype=np.uint8).reshape(2, 127)
+    assert (decode_gif(encode_gif(edge)) == edge).all()
     # malformed-media paths
     import pytest as _pytest
 
@@ -781,23 +775,6 @@ def test_jpeg_restart_markers_and_color():
     assert tuple(rgb[0, 0]) == (exp_r, exp_g, exp_b)
 
 
-def test_jpeg_roundtrip_query_null_path(spark):
-    # short payloads yield null pixels (malformed-media path)
-    import numpy as np
-
-    from koalas_spark.operators.multimodal import jpeg_roundtrip
-
-    df = spark.createDataFrame(
-        [(1, bytearray(b"short")), (2, bytearray(bytes(range(16))))],
-        "doc_id long, raster binary",
-    )
-    rows = {r["doc_id"]: r for r in jpeg_roundtrip(df, "doc_id").collect()}
-    assert rows[1]["pixels"] is None and rows[1]["jpeg_bytes"] is None
-    assert rows[2]["jpeg_bytes"] > 0
-    pix = np.frombuffer(rows[2]["pixels"], np.uint8).reshape(32, 32)
-    assert np.all(pix[0:8, 0:8] == 0) and np.all(pix[24:32, 24:32] == 15)
-
-
 def test_tga_codec_roundtrip_fuzz():
     import numpy as np
 
@@ -880,3 +857,113 @@ def test_audio_pitch_probe_lags_normalized(spark):
     assert set(r) == {"doc_id", "r25", "r50", "r100", "pitch_lag"}
     assert r["r25"] == r["r50"] == r["r100"] == 0
     assert r["pitch_lag"] == 25
+
+
+# ---------------- the per-row contract, once per operator ----------------
+# Every per-row operator runs through one row map: a junk (or short)
+# blob yields one row with null non-id columns instead of failing the
+# task. Three kernels define a value for any bytes instead: extract_meta
+# (length + "text/plain"), byte_histogram_features (the histogram) and
+# resize_frames (the blob passed through with null dimensions). Binary
+# outputs compare by sha256 prefix.
+
+
+def _sha(b) -> str:
+    return hashlib.sha256(bytes(b)).hexdigest()[:16]
+
+
+def _contract_cases():
+    import koalas_spark.operators.multimodal as mm
+
+    pix = (np.arange(256) * 7 % 256).astype(np.uint8).reshape(16, 16)
+    img = mm.encode_pgm(pix)
+    t = np.arange(1000)
+    samples = np.where(
+        t < 500, np.where(t % 50 < 25, 30000, -30000), (t % 7) - 3
+    ).astype(np.int16)
+    wav = mm.encode_wav(samples)
+    avi = mm.encode_avi(
+        (np.arange(3 * 4 * 6 * 3) * 5 % 256).astype(np.uint8).reshape(3, 4, 6, 3)
+    )
+    raster = bytes(range(256))
+    jpeg_pix = np.repeat(np.repeat(np.arange(16, dtype=np.uint8).reshape(4, 4), 8, 0), 8, 1)
+
+    def hist(b):
+        arr = np.frombuffer(b, np.uint8)
+        return tuple(np.bincount(arr >> 4, minlength=16)[:16] / arr.size)
+
+    cases = [
+        ("extract_meta", mm.extract_meta, "blob", img, b"junk",
+         "n_bytes:bigint,kind:string",
+         [(len(img), mm.KIND_PGM)], [(4, "text/plain")]),
+        ("decode_resize_reencode", mm.decode_resize_reencode, "blob", img, b"junk",
+         "kind:string,width:int,height:int,resized:binary",
+         [(mm.KIND_PGM, 8, 8, _sha(mm.encode_pgm(pix[::2, ::2])))], None),
+        ("ahash_images", mm.ahash_images, "blob", img, b"junk", "ahash:string",
+         [("0000011111000000011110000001111011000111111100000111110000011111",)], None),
+        ("dhash_images", mm.dhash_images, "blob", img, b"junk", "dhash:string",
+         [("0000000101100000000010000000001011000000001100000000010000000001",)], None),
+        ("byte_histogram_features", mm.byte_histogram_features, "blob", img, b"junk",
+         "features:array<double>", [(hist(img),)], [(hist(b"junk"),)]),
+        ("resize_frames", mm.resize_frames, "blob", img, b"junk",
+         "resized:binary,width:int,height:int",
+         [(_sha(np.frombuffer(img, np.uint8, 256).reshape(16, 16)[::2, ::2].tobytes()), 8, 8)],
+         [(_sha(b"junk"), None, None)]),
+        ("audio_frame_features", mm.audio_frame_features, "blob", wav, b"nope",
+         "frame_no:int,rms:double,zcr:double,kind:string",
+         [(0, 30000.0, 0.037594, mm.KIND_WAV), (1, 15000.0001, 0.223058, mm.KIND_WAV)],
+         None),
+        ("audio_resample", mm.audio_resample, "blob", wav, b"nope",
+         "n_in:bigint,n_out:bigint,wav:binary",
+         [(1000, 500, _sha(mm.encode_wav(samples[::2], 8000)))], None),
+        ("audio_vad_segments", mm.audio_vad_segments, "blob", wav, b"nope",
+         "n_frames:bigint,n_active:bigint,n_segments:bigint,max_run:bigint",
+         [(10, 5, 1, 5)], None),
+        ("audio_pitch_probe", mm.audio_pitch_probe, "blob", wav, b"nope",
+         "r25:bigint,r50:bigint,r100:bigint,pitch_lag:bigint",
+         [(-427500180949, 405000360450, 360000509601, 50)], None),
+        ("video_frame_index", mm.video_frame_index, "blob", avi, b"junk",
+         "frame_no:int,width:int,height:int,frame_sha:string,kind:string",
+         [
+             (0, 6, 4, "45ae8915f6092929a48cee4badfcc5983a6987b252df7490ac81b6afff62413c", mm.KIND_AVI),
+             (1, 6, 4, "154dea8c8570e33c469a8fb33aac2e738f4129bf226591ca51941767303696e8", mm.KIND_AVI),
+             (2, 6, 4, "abcf76b3cf4b6b08cdd0990d3d6c9cd712fe92770d9ed867fb5b59e82c442123", mm.KIND_AVI),
+         ],
+         None),
+        ("video_motion_profile", mm.video_motion_profile, "blob", avi, b"junk",
+         "n_frames:bigint,sad_total:bigint,sad_peak:bigint", [(3, 17520, 9024)], None),
+        ("jpeg_roundtrip", mm.jpeg_roundtrip, "raster", bytes(range(16)), b"short",
+         "jpeg_bytes:bigint,pixels:binary", [(337, _sha(jpeg_pix.tobytes()))], None),
+    ]
+    sizes = {"png": 114, "gif": 1087, "tiff": 378, "qoi": 278, "tga": 290}
+    for codec, size in sizes.items():
+        cases.append(
+            (f"{codec}_roundtrip",
+             lambda df, codec=codec: mm.lossless_roundtrip(df, codec),
+             "raster", raster, b"short",
+             f"{codec}_bytes:bigint,pixels:binary", [(size, _sha(raster))], None)
+        )
+    return [pytest.param(*c[1:], id=c[0]) for c in cases]
+
+
+@pytest.mark.parametrize(
+    "op,col,valid,junk,schema,want_valid,want_junk", _contract_cases()
+)
+def test_per_row_contract(spark, op, col, valid, junk, schema, want_valid, want_junk):
+    df = spark.createDataFrame(
+        [(1, bytearray(valid)), (2, bytearray(junk))], f"doc_id bigint, {col} binary"
+    )
+    out = op(df)
+    assert out.schema.simpleString() == f"struct<doc_id:bigint,{schema}>"
+
+    def norm(v):
+        if isinstance(v, (bytes, bytearray)):
+            return _sha(v)
+        return tuple(v) if isinstance(v, list) else v
+
+    got = {1: [], 2: []}
+    for r in out.collect():
+        got[r[0]].append(tuple(norm(v) for v in r[1:]))
+    n_out = len(out.columns) - 1
+    assert sorted(got[1], key=repr) == want_valid
+    assert got[2] == (want_junk or [(None,) * n_out])

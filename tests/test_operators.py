@@ -179,25 +179,6 @@ def test_pii_scrub_actually_fires(spark):
     assert sum(r["n_ips"] for r in out) > 0
 
 
-def test_exact_jaccard_prefix_filter_identical(spark):
-    """AllPairs prefix filtering must not change the pair set — it is
-    a pure candidate-pruning optimization (soundness argument in the
-    operator docstring), kept off by default on perf grounds."""
-    from koalas_spark.operators.dedup import exact_jaccard_pairs
-
-    d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    for t in (0.25, 0.5):
-        base = {
-            (r.src, r.dst)
-            for r in exact_jaccard_pairs(d, threshold=t, prefix_filter=False).collect()
-        }
-        pref = {
-            (r.src, r.dst)
-            for r in exact_jaccard_pairs(d, threshold=t, prefix_filter=True).collect()
-        }
-        assert base == pref
-
-
 def test_containment_pairs_planted_subset(spark):
     """A doc embedded verbatim inside a longer one must surface as
     (contained, container) with 100% containment."""
