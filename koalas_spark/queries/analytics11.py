@@ -177,70 +177,10 @@ FROM sz GROUP BY size
 def label_propagation_communities(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from koalas_spark.queries.mining import (
-        _copurchase_edge_set,
-        bcast_v,
-        graph_ckpt_level,
-    )
+    from koalas_spark.queries.mining import label_rounds
 
-    e = _copurchase_edge_set(spark, sf_dir)
-    d = e.union(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=False, storageLevel=graph_ckpt_level(sf_dir))
-    # Round 1 in closed form (optimization r13): with identity labels
-    # over a DISTINCT edge set, every (node, neighbor-label) vote has
-    # count exactly 1, so argmax((c DESC, l ASC)) degenerates to the
-    # MINIMUM neighbor id — one map-side-combined aggregate replaces
-    # the join + two vote shuffles of the generic round (and the
-    # init's |2E|-row distinct disappears with it). Rounds 2-4 run the
-    # generic vote loop unchanged; values are identical by the
-    # argument above (the oracle still replays all four rounds).
-    labels = (
-        d.groupBy(F.col("u").alias("x"))
-        .agg(F.min("v").alias("lbl"))
-        .localCheckpoint(eager=True)
-    )
-    # label rotation lifecycle (VERDICT r10 #2): each round's labels
-    # checkpoint EAGERLY so the superseded round can be unpersisted
-    # the moment its successor is materialized — only the latest
-    # rotation (198 MB at sf10) stays resident, and the per-call
-    # symmetrized edge checkpoint is released after the final round
-    # (the returned rollup reads labels only).
-    prev = labels
-    for _ in range(3):
-        # the label lookup side is |V|-sized (one (x, lbl) row per
-        # node), so it rides the bcast_v gate (r13, guide §2.4/§3.1):
-        # as a broadcast build the 2|E|-row edge frame STREAMS through
-        # the neighbor-label join with NO exchange, leaving the
-        # map-side-combined vote aggregate as the round's only
-        # shuffle (was: edge frame re-shuffled on v every round).
-        # Above the gate the old shuffle join returns unchanged.
-        # r14 (guide §2.4): the whole per-round argmax — count votes
-        # per (node, label), keep the most frequent label, break ties
-        # to the SMALLEST label — is exactly Spark 4's deterministic
-        # MODE aggregate (ties return the lowest value), so the round
-        # is ONE map-side-combined aggregate + ONE exchange instead of
-        # the old two ((x, l) count shuffle, then per-node argmax
-        # shuffle). Value-identical by the mode(deterministic=true)
-        # contract; the oracle still replays the two-step form.
-        labels = (
-            d.join(
-                bcast_v(
-                    labels.select(
-                        F.col("x").alias("nx"), F.col("lbl").alias("l")
-                    ),
-                    sf_dir,
-                ),
-                d["v"] == F.col("nx"),
-            )
-            .groupBy(F.col("u").alias("x"))
-            .agg(F.mode("l", True).alias("lbl"))
-            .localCheckpoint(eager=True)
-        )
-        if prev is not None:
-            prev.unpersist()
-        prev = labels
-    d.unpersist()
+    # the oracle replays all four rounds in the two-step form
+    labels = label_rounds(spark, sf_dir, rounds=4)
     sz = labels.groupBy("lbl").agg(
         F.count(F.lit(1)).cast("bigint").alias("size")
     )

@@ -244,32 +244,18 @@ SELECT s AS seed, hop, n_reach FROM (
 def khop_reach_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.queries.mining import (
         _bfs_layer_counts,
-        _copurchase_edge_set,
-        graph_ckpt_level,
+        copurchase_adjacency,
     )
 
-    e0 = _copurchase_edge_set(spark, sf_dir)
-    # key the symmetrized adjacency on u BEFORE checkpointing (r13):
-    # every BFS hop equi-joins on e.u, and the checkpoint preserves
-    # the hash partitioning, so the |2E|-row frame is exchanged once
-    # here instead of once per hop (guide §2.4 — share one exchange).
-    e = (
-        e0.unionAll(
-            e0.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        .repartition(spark.sparkContext.defaultParallelism, "u")
-        .localCheckpoint(eager=False, storageLevel=graph_ckpt_level(sf_dir))
-    )
+    e = copurchase_adjacency(spark, sf_dir)
     seeds = (
         e.select("u").distinct().orderBy("u").limit(3).select(
             F.col("u").alias("s")
         )
     )
-    # per-hop frontier rotation + eager counts (VERDICT r10 #2): the
-    # 9 (seed, hop, n) integers are bounded driver state; superseded
-    # hop checkpoints are unpersisted inside _bfs_layer_counts, and
-    # the per-call symmetrized edge checkpoint is released here once
-    # the counts are in hand — nothing graph-sized survives the call.
+    # 9 (seed, hop, n) integers of driver state; the helper rotates
+    # the hop checkpoints and the adjacency is released here, so
+    # nothing graph-sized survives the call
     counts = _bfs_layer_counts(e, seeds, hops=3)
     e.unpersist()
     rows = [

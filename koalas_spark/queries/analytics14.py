@@ -148,7 +148,7 @@ WHERE rk <= 5
 """,
 )
 def item_item_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from koalas_spark.queries.mining import copurchase_pair_table
+    from koalas_spark.queries.mining import copurchase_pair_table, symmetric
 
     li = (
         _t(spark, sf_dir, "lineitem")
@@ -156,16 +156,11 @@ def item_item_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=False)
     )
-    # cooc comes from the once-per-sf_dir materialized pair artifact
+    # pairs come from the once-per-sf_dir materialized pair artifact
     # (mining.copurchase_pair_table); only the per-part degree pass
     # still reads lineitem (degree counts singleton baskets the pair
     # table cannot see).
-    cooc = copurchase_pair_table(spark, sf_dir)
-    sym = cooc.unionAll(
-        cooc.select(
-            F.col("v").alias("u"), F.col("u").alias("v"), F.col("cnt")
-        )
-    )
+    sym = symmetric(copurchase_pair_table(spark, sf_dir))
     deg = li.groupBy(F.col("l_partkey").alias("p")).agg(
         F.count(F.lit(1)).cast("bigint").alias("d")
     )

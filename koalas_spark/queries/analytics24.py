@@ -304,12 +304,11 @@ def adamic_adar_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
         bcast_e,
         bcast_v,
         copurchase_degree_table,
+        symmetric,
     )
 
     e = _copurchase_edge_set(spark, sf_dir)
-    adj = e.select(F.col("u").alias("c"), F.col("v").alias("x")).unionAll(
-        e.select(F.col("v").alias("c"), F.col("u").alias("x"))
-    )
+    adj = symmetric(e).toDF("c", "x")
     # r13 plan rework (the jaccard_link_copurchase shape, guide
     # §2.4/§3.1): center weights come from the shared |V|-sized degree
     # table (no fresh 2|E|-row aggregate) and broadcast under the |V|

@@ -76,22 +76,10 @@ FROM sizes
 def harmonic_centrality_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.queries.mining import (
         _bfs_layer_counts,
-        _copurchase_edge_set,
-        graph_ckpt_level,
+        copurchase_adjacency,
     )
 
-    e0 = _copurchase_edge_set(spark, sf_dir)
-    # key the symmetrized adjacency on u BEFORE checkpointing (r13):
-    # every BFS hop equi-joins on e.u, and the checkpoint preserves
-    # the hash partitioning, so the |2E|-row frame is exchanged once
-    # here instead of once per hop (guide §2.4 — share one exchange).
-    e = (
-        e0.unionAll(
-            e0.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        .repartition(spark.sparkContext.defaultParallelism, "u")
-        .localCheckpoint(eager=False, storageLevel=graph_ckpt_level(sf_dir))
-    )
+    e = copurchase_adjacency(spark, sf_dir)
     probes = (
         e.select("u")
         .filter(F.col("u") % 97 == 0)
@@ -100,10 +88,8 @@ def harmonic_centrality_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(5)
         .select(F.col("u").alias("s"))
     )
-    # per-hop frontier rotation + eager counts (VERDICT r10 #2, the
-    # khop discipline): 15 (probe, hop, n) integers of driver state;
-    # superseded hop checkpoints are unpersisted in the helper and
-    # the per-call symmetrized edge checkpoint released here.
+    # 15 (probe, hop, n) integers of driver state; the helper rotates
+    # the hop checkpoints and the adjacency is released here
     counts = _bfs_layer_counts(e, probes.select("s"), hops=3)
     e.unpersist()
     rows = []

@@ -52,12 +52,9 @@ ORDER BY cnt DESC, u ASC LIMIT 50
 """,
 )
 def mutual_best_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from koalas_spark.queries.mining import copurchase_pair_table
+    from koalas_spark.queries.mining import copurchase_pair_table, symmetric
 
-    p = copurchase_pair_table(spark, sf_dir)
-    sym = p.select("u", "v", "cnt").unionAll(
-        p.select(F.col("v").alias("u"), F.col("u").alias("v"), "cnt")
-    )
+    sym = symmetric(copurchase_pair_table(spark, sf_dir))
     wk = Window.partitionBy("u").orderBy(F.col("cnt").desc(), F.col("v").asc())
     best = (
         sym.withColumn("rk", F.row_number().over(wk))

@@ -236,20 +236,13 @@ FROM m
 )
 def copurchase_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.queries.mining import (
-        _copurchase_edge_set,
+        copurchase_adjacency,
         copurchase_degree_table,
-        graph_ckpt_level,
     )
 
-    e0 = _copurchase_edge_set(spark, sf_dir)
-    e = e0.unionAll(
-        e0.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(
-        eager=False, storageLevel=graph_ckpt_level(sf_dir)
-    )
+    e = copurchase_adjacency(spark, sf_dir)
     # degrees from the materialized |V|-sized artifact (round 12) —
-    # drops the per-call 2|E|-row degree shuffle; the symmetrized
-    # checkpoint also rides graph_ckpt_level (sf10 gate discipline)
+    # drops the per-call 2|E|-row degree shuffle
     dg = copurchase_degree_table(spark, sf_dir).select(
         F.col("x").alias("node"), "dg"
     )

@@ -57,9 +57,9 @@ SELECT rnd, n_survivors FROM (
 )
 def kcore_peeling_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.queries.mining import (
-        _copurchase_edge_set,
+        bcast_v,
+        copurchase_adjacency,
         copurchase_degree_table,
-        graph_ckpt_level,
     )
 
     # Round-13 rewrite of the peel loop (VERDICT r12 #3 — was
@@ -69,25 +69,18 @@ def kcore_peeling_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     #     that halved local_clustering_probes), replacing a full
     #     2|E|-row groupBy scan;
     #   * survivor sets are |V|-bounded single-long frames, so BOTH
-    #     per-round semi-joins BROADCAST them instead of sort-merge-
-    #     shuffling the 2|E|-row edge frame twice per round (the r12
-    #     plan's dominant cost — 4 full-graph shuffles across the
-    #     loop). The edge frame is checkpointed ONCE (DISK_ONLY at
-    #     sf10 via graph_ckpt_level) and every later pass re-reads it
-    #     with ≤4 stacked broadcast-hash probes — no intermediate
-    #     graph checkpoints, no graph shuffle after the first.
+    #     per-round semi-joins BROADCAST them (bcast_v) instead of
+    #     sort-merge-shuffling the 2|E|-row edge frame twice per round
+    #     (the r12 plan's dominant cost — 4 full-graph shuffles across
+    #     the loop). The adjacency is checkpointed ONCE and every
+    #     later pass re-reads it with ≤4 stacked broadcast-hash
+    #     probes — no intermediate graph checkpoints, no graph
+    #     shuffle after the first. Above the |V| gate the semi-joins
+    #     shuffle instead; the values are unchanged either way.
     #   * the per-round degree groupBy keeps map-side partial combine:
     #     the shuffle moves O(partitions × |V|) partial counts, never
     #     2|E| rows.
-    # 100× posture: broadcast is right while |V| ≪ |E| (200k nodes vs
-    # 300M edges at sf10; ~2 MB of longs). If |V| ever outgrows the
-    # driver, the semi-joins fall back to shuffles by dropping the
-    # broadcast hints — the values are unchanged either way.
-    lvl = graph_ckpt_level(sf_dir)
-    e0 = _copurchase_edge_set(spark, sf_dir)
-    g = e0.unionAll(
-        e0.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=False, storageLevel=lvl)
+    g = copurchase_adjacency(spark, sf_dir)
     surv = (
         copurchase_degree_table(spark, sf_dir)
         .filter(F.col("dg") >= 8)
@@ -103,8 +96,8 @@ def kcore_peeling_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         if rnd < 3:
-            g = g.join(F.broadcast(surv), "u", "left_semi").join(
-                F.broadcast(surv.select(F.col("u").alias("v"))),
+            g = g.join(bcast_v(surv, sf_dir), "u", "left_semi").join(
+                bcast_v(surv.select(F.col("u").alias("v")), sf_dir),
                 "v",
                 "left_semi",
             )

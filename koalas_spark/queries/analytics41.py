@@ -172,37 +172,23 @@ WHERE rk <= 5
 def jaccard_link_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.queries.mining import (
         _copurchase_edge_set,
-        bcast_e,
         bcast_v,
         copurchase_degree_table,
+        open_pairs,
+        probe_wedges,
+        symmetric,
     )
 
     e = _copurchase_edge_set(spark, sf_dir)
-    adj = e.select(F.col("u").alias("c"), F.col("v").alias("x")).unionAll(
-        e.select(F.col("v").alias("c"), F.col("u").alias("x"))
-    )
-    # r13 plan rework (guide §2.4/§3.1): degrees come from the shared
-    # |V|-sized degree table instead of a fresh 2|E|-row aggregate;
-    # the cap filter (ctr) and both denominator lookups broadcast
-    # under the |V| gate; the probe side a1 (|2E|/97 rows by the %97
-    # filter) broadcasts under the |E| gate so the full adjacency is
-    # STREAMED through the wedge join instead of shuffled. The only
-    # remaining exchanges are the inherent (u, v) wedge aggregate and
-    # the per-probe window. Was: 10 exchanges / 5 sort-merge joins.
+    # degrees come from the shared |V|-sized degree table instead of a
+    # fresh 2|E|-row aggregate (r13); the cap filter (ctr) and both
+    # denominator lookups ride the |V| gate.
     deg = copurchase_degree_table(spark, sf_dir)
     ctr = deg.filter((F.col("dg") >= 2) & (F.col("dg") <= 256)).select(
         F.col("x").alias("c")
     )
-    a1 = (
-        adj.filter(F.col("x") % 97 == 0)
-        .select(F.col("c"), F.col("x").alias("u"))
-        .join(bcast_v(ctr, sf_dir), "c")
-    )
-    a2 = adj.select(F.col("c"), F.col("x").alias("v"))
     cand = (
-        bcast_e(a1, sf_dir)
-        .join(a2, "c")
-        .filter(F.col("v") != F.col("u"))
+        probe_wedges(symmetric(e).toDF("c", "x"), ctr, sf_dir)
         .groupBy("u", "v")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_common"))
     )
@@ -212,43 +198,20 @@ def jaccard_link_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     dv = bcast_v(
         deg.select(F.col("x").alias("v"), F.col("dg").alias("dg_v")), sf_dir
     )
-    # the anti-join's edge side rides the |E| broadcast gate: as a
-    # broadcast build the candidate frame is NOT re-shuffled on the
-    # pair key (above the gate it degrades to the old shuffle anti)
-    closed = bcast_e(
-        e.select(
-            F.col("u").alias("eu"),
-            F.col("v").alias("ev"),
-            F.lit(1).alias("is_e"),
-        ),
-        sf_dir,
-    )
-    open_pairs = (
-        cand.join(du, "u")
-        .join(dv, "v")
-        .join(
-            closed,
-            (F.least(F.col("u"), F.col("v")) == F.col("eu"))
-            & (F.greatest(F.col("u"), F.col("v")) == F.col("ev")),
-            "left_anti",
-        )
-        .select(
-            "u",
-            "v",
-            "n_common",
-            F.expr(
-                "CAST((n_common * 1000000)"
-                " div (dg_u + dg_v - n_common) AS BIGINT)"
-            ).alias("jac_ppm"),
-        )
+    scored = open_pairs(cand.join(du, "u").join(dv, "v"), e, sf_dir).select(
+        "u",
+        "v",
+        "n_common",
+        F.expr(
+            "CAST((n_common * 1000000)"
+            " div (dg_u + dg_v - n_common) AS BIGINT)"
+        ).alias("jac_ppm"),
     )
     wk = Window.partitionBy("u").orderBy(
         F.col("jac_ppm").desc(), F.col("v").asc()
     )
     return (
-        open_pairs.withColumn(
-            "rk", F.row_number().over(wk).cast("int")
-        )
+        scored.withColumn("rk", F.row_number().over(wk).cast("int"))
         .filter(F.col("rk") <= 5)
         .select("u", "v", "n_common", "jac_ppm", "rk")
     )

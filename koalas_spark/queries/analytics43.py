@@ -344,13 +344,14 @@ def local_clustering_copurchase(
 ) -> DataFrame:
     from koalas_spark.queries.mining import (
         _copurchase_edge_set,
+        bcast_e,
+        bcast_v,
         copurchase_degree_table,
+        symmetric,
     )
 
     e = _copurchase_edge_set(spark, sf_dir)
-    adj = e.select(F.col("u").alias("c"), F.col("v").alias("x")).unionAll(
-        e.select(F.col("v").alias("c"), F.col("u").alias("x"))
-    )
+    adj = symmetric(e).toDF("c", "x")
     # degrees from the materialized |V|-sized artifact (round 12)
     deg = copurchase_degree_table(spark, sf_dir).select(
         F.col("x").alias("c"), "dg"
@@ -358,8 +359,6 @@ def local_clustering_copurchase(
     probes = deg.filter(
         (F.col("c") % 97 == 0) & (F.col("dg") >= 2) & (F.col("dg") <= 256)
     ).select(F.col("c").alias("u"), "dg")
-    from koalas_spark.queries.mining import bcast_e, bcast_v
-
     a1 = adj.select(F.col("c").alias("u"), F.col("x").alias("c1"))
     a2 = adj.select(F.col("c").alias("u"), F.col("x").alias("c2"))
     # r14 (guide §3.1, the jaccard-family r13 treatment): the probe
@@ -370,10 +369,11 @@ def local_clustering_copurchase(
     # the |E|-gate (bcast_e) like the wedge family's closing joins.
     # Above the gates the shuffle joins return unchanged.
     w1 = bcast_v(probes, sf_dir).join(a1, "u")
-    # the half-open wedge frame is Σ_probe dg ≤ (|V|/97)·256 rows —
-    # |V|-linear with a bounded constant, so it rides the same gate
+    # the half-open wedge frame is Σ_probe dg ≤ (|V|/97)·256 rows of
+    # three longs — about 2.6 rows per node, ~4× what the |V| gate was
+    # calibrated for — so it rides the |E| gate
     wedges = (
-        bcast_v(w1, sf_dir)
+        bcast_e(w1, sf_dir)
         .join(a2, "u")
         .filter(F.col("c2") > F.col("c1"))
         .select("u", "dg", "c1", "c2")

@@ -169,7 +169,7 @@ def capture_recapture_customers(
 # graph have a scale-free tail? (the graph-shelf twin of #374's Hill
 # on revenue): Hill estimator over degrees >= kmin = 8, per-value
 # nano-ln of deg/kmin quantized before the exact // mean — degrees
-# come from the #170 artifact's adjacency, one groupBy.
+# come from the shared |V|-sized degree artifact.
 @query(
     "degree_powerlaw_fit",
     oracle="""
@@ -198,15 +198,9 @@ FROM s
 """,
 )
 def degree_powerlaw_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from koalas_spark.queries.mining import _copurchase_edge_set
+    from koalas_spark.queries.mining import copurchase_degree_table
 
-    e = _copurchase_edge_set(spark, sf_dir)
-    adj = e.select(F.col("u").alias("c")).unionAll(
-        e.select(F.col("v").alias("c"))
-    )
-    deg = adj.groupBy("c").agg(
-        F.count(F.lit(1)).cast("bigint").alias("dg")
-    )
+    deg = copurchase_degree_table(spark, sf_dir)
     tail = deg.filter(F.col("dg") >= 8).select(
         F.floor(
             1000000000

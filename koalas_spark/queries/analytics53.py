@@ -87,8 +87,10 @@ WHERE rk <= 5
 def jaccard_link_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.queries.mining import (
         _copurchase_edge_set,
-        bcast_e,
         bcast_v,
+        open_pairs,
+        probe_wedges,
+        symmetric,
     )
 
     coin = F.substring(
@@ -103,22 +105,12 @@ def jaccard_link_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     # full edge set once; the sampled projection filters it (the coin
     # commutes with the pair dedup — see #207's pushdown note)
     e = _copurchase_edge_set(spark, sf_dir)
-    es = e.filter(coin < "8000")
-    adj = es.select(F.col("u").alias("c"), F.col("v").alias("x")).unionAll(
-        es.select(F.col("v").alias("c"), F.col("u").alias("x"))
-    )
-    # r13 plan rework — the #353 (jaccard_link_copurchase) broadcast
-    # discipline applied to the sampled twin (guide §2.4/§3.1). The
-    # SAMPLED degree table cannot come from the shared artifact (it
-    # counts the coin-surviving adjacency only), but it is still
+    adj = symmetric(e.filter(coin < "8000")).toDF("c", "x")
+    # The SAMPLED degree table cannot come from the shared artifact
+    # (it counts the coin-surviving adjacency only), but it is still
     # |V|-sized, so one localCheckpoint lets the cap filter, both
     # denominator lookups and the center gate share a single build
     # instead of re-aggregating the sampled adjacency three times.
-    # The cap/denominator/center sides broadcast under the |V| gate,
-    # the %97 probe slice and the closing anti-join's edge side under
-    # the |E| gate — above the gates the old shuffle plan returns
-    # unchanged. Remaining exchanges: the inherent (u, v) wedge
-    # aggregate and the per-probe ranking window.
     deg = (
         adj.groupBy("c")
         .agg(F.count(F.lit(1)).cast("bigint").alias("dg"))
@@ -128,16 +120,8 @@ def jaccard_link_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     ctr = deg.filter((F.col("dg") >= 2) & (F.col("dg") <= 64)).select(
         F.col("x").alias("c")
     )
-    a1 = (
-        adj.filter(F.col("x") % 97 == 0)
-        .select(F.col("c"), F.col("x").alias("u"))
-        .join(bcast_v(ctr, sf_dir), "c")
-    )
-    a2 = adj.select(F.col("c"), F.col("x").alias("v"))
     cand = (
-        bcast_e(a1, sf_dir)
-        .join(a2, "c")
-        .filter(F.col("v") != F.col("u"))
+        probe_wedges(adj, ctr, sf_dir)
         .groupBy("u", "v")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_common_s"))
     )
@@ -147,36 +131,26 @@ def jaccard_link_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     dv = bcast_v(
         deg.select(F.col("x").alias("v"), F.col("dg").alias("dg_v")), sf_dir
     )
-    closed = bcast_e(
-        e.select(F.col("u").alias("eu"), F.col("v").alias("ev")), sf_dir
-    )
-    open_pairs = (
+    scored = open_pairs(
         cand.join(du, "u")
         .join(dv, "v")
-        .filter(
-            F.col("dg_u") + F.col("dg_v") - 2 * F.col("n_common_s") > 0
-        )
-        .join(
-            closed,
-            (F.least(F.col("u"), F.col("v")) == F.col("eu"))
-            & (F.greatest(F.col("u"), F.col("v")) == F.col("ev")),
-            "left_anti",
-        )
-        .select(
-            "u",
-            "v",
-            "n_common_s",
-            F.expr(
-                "CAST((n_common_s * 2000000)"
-                " div (dg_u + dg_v - 2 * n_common_s) AS BIGINT)"
-            ).alias("jac_ppm_est"),
-        )
+        .filter(F.col("dg_u") + F.col("dg_v") - 2 * F.col("n_common_s") > 0),
+        e,
+        sf_dir,
+    ).select(
+        "u",
+        "v",
+        "n_common_s",
+        F.expr(
+            "CAST((n_common_s * 2000000)"
+            " div (dg_u + dg_v - 2 * n_common_s) AS BIGINT)"
+        ).alias("jac_ppm_est"),
     )
     wk = Window.partitionBy("u").orderBy(
         F.col("jac_ppm_est").desc(), F.col("v").asc()
     )
     return (
-        open_pairs.withColumn("rk", F.row_number().over(wk).cast("int"))
+        scored.withColumn("rk", F.row_number().over(wk).cast("int"))
         .filter(F.col("rk") <= 5)
         .select("u", "v", "n_common_s", "jac_ppm_est", "rk")
     )

@@ -80,65 +80,15 @@ def modularity_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         _copurchase_edge_set,
         bcast_v,
         copurchase_degree_table,
-        graph_ckpt_level,
+        label_rounds,
     )
 
-    lvl = graph_ckpt_level(sf_dir)
-    # e is a column-prune of the session-memoized pair table, which is
-    # already checkpointed — re-checkpointing it here only duplicated
-    # the blocks (r13); d (the symmetrized view) keeps its own.
     e = _copurchase_edge_set(spark, sf_dir)
-    d = e.union(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=False, storageLevel=lvl)
-    # Round 1 in closed form (the #242 r13 optimization): identity
-    # labels over a distinct edge set make every vote count 1, so the
-    # argmax collapses to MIN(neighbor) — one aggregate instead of the
-    # generic join + two vote shuffles (values identical; the oracle
-    # replays both generic rounds).
-    labels = (
-        d.groupBy(F.col("u").alias("x"))
-        .agg(F.min("v").alias("lbl"))
-        .localCheckpoint(eager=True)
-    )
-    # LP rotation lifecycle (VERDICT r10 #2, the #242 discipline):
-    # eager checkpoints + unpersist the superseded round. Unlike #242,
-    # e/d/final labels all feed the returned modularity rollup, so
-    # only the intermediate rotation is releasable here.
-    prev = labels
-    for _ in range(1):
-        # |V|-sized label lookup rides the bcast_v gate (the #242 r13
-        # rework): the edge frame streams through the join with no
-        # exchange; the vote aggregate is the round's only shuffle.
-        # r14 (the #242 rework, guide §2.4): the vote count + per-node
-        # argmax (c DESC, l ASC) is exactly Spark 4's deterministic
-        # MODE aggregate (most frequent, ties to the lowest), so the
-        # round is ONE map-side-combined aggregate + ONE exchange
-        # instead of two. Values identical; the oracle replays the
-        # two-step form.
-        labels = (
-            d.join(
-                bcast_v(
-                    labels.select(
-                        F.col("x").alias("nx"), F.col("lbl").alias("l")
-                    ),
-                    sf_dir,
-                ),
-                d["v"] == F.col("nx"),
-            )
-            .groupBy(F.col("u").alias("x"))
-            .agg(F.mode("l", True).alias("lbl"))
-            .localCheckpoint(eager=True)
-        )
-        if prev is not None:
-            prev.unpersist()
-        prev = labels
+    labels = label_rounds(spark, sf_dir, rounds=2)
     # degrees of the symmetrized adjacency == the session-shared
-    # |V|-sized degree artifact (d = e ∪ swap(e) is distinct by
-    # construction), so the fresh 2|E|-row aggregate is gone (r13);
-    # the label joins for the degree rollup and the m_in edge pass
-    # broadcast the |V|-sized side under the bcast_v gate, so the
-    # edge set streams with no exchange.
+    # |V|-sized degree artifact (e ∪ swap(e) is distinct by
+    # construction), so no fresh 2|E|-row aggregate (r13); the label
+    # joins broadcast under the bcast_v gate, so the edge set streams.
     deg = copurchase_degree_table(spark, sf_dir).select(
         "x", F.col("dg")
     )

@@ -541,18 +541,18 @@ FROM deg LEFT JOIN tri ON tri.s = deg.s
 def local_clustering_probes(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from koalas_spark.queries.mining import _copurchase_edge_set
+    from koalas_spark.queries.mining import (
+        _copurchase_edge_set,
+        copurchase_degree_table,
+        symmetric,
+    )
 
     e = _copurchase_edge_set(spark, sf_dir)
-    adj = e.select(F.col("u").alias("c"), F.col("v").alias("x")).unionAll(
-        e.select(F.col("v").alias("c"), F.col("u").alias("x"))
-    )
+    adj = symmetric(e).toDF("c", "x")
     # probe selection reads the MATERIALIZED degree artifact (round
     # 12): recomputing degrees was a 2|E|-row shuffle per consumer —
     # roughly half this query's sf10 wall — for a |V|-sized pure
     # function of the pair table
-    from koalas_spark.queries.mining import copurchase_degree_table
-
     alldeg = copurchase_degree_table(spark, sf_dir).select(
         F.col("x").alias("c"), "dg"
     )

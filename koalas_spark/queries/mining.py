@@ -294,6 +294,7 @@ def triangle_count_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _copurchase_edge_set(spark, sf_dir)
     tri = _count_triangles(
         e,
+        sf_dir,
         ckpt_level=graph_ckpt_level(sf_dir),
         deg=copurchase_degree_table(spark, sf_dir).select(
             "x", F.col("dg").alias("dg")
@@ -415,11 +416,17 @@ def copurchase_degree_table(
     )
 
 
+# Source lineitem bytes above which |E|-sized frames stop fitting in
+# memory (sf1's lineitem is 103 MB, sf10's 1.1 GB): graph checkpoints
+# go DISK_ONLY, bcast_e drops its hint and the triangle wedge joins
+# fall back from SHUFFLE_HASH to sort-merge.
+E_GATE_BYTES = 512 << 20
+
+
 def graph_ckpt_level(sf_dir: str):
     """Storage level for GRAPH-SIZED per-call checkpoints (symmetrized
-    edge frames, adjacency derivatives): DISK_ONLY once the source
-    lineitem exceeds ~0.5 GB on disk (sf10+), None (the MEMORY_AND_
-    DESER default) at driver-graded SFs.
+    edge frames, adjacency derivatives): DISK_ONLY above E_GATE_BYTES
+    (sf10+), None (the MEMORY_AND_DESER default) at driver-graded SFs.
 
     BOTH softer alternatives were A/B-measured at sf10 in round 12
     and REJECTED (SCALING.md r12, the Bloom-precedent disposition):
@@ -435,9 +442,7 @@ def graph_ckpt_level(sf_dir: str):
     remains both the fastest stable choice and the one that holds
     the default 16 GB heap; serialized disk blocks bound the heap,
     trading a local re-read per consumer pass."""
-    if memo.source_bytes(sf_dir, "lineitem") > (
-        512 * 1024 * 1024
-    ):
+    if memo.source_bytes(sf_dir, "lineitem") > E_GATE_BYTES:
         from pyspark.storagelevel import StorageLevel
 
         return StorageLevel.DISK_ONLY
@@ -460,13 +465,12 @@ def bcast_v(df: DataFrame, sf_dir: str) -> DataFrame:
 def bcast_e(df: DataFrame, sf_dir: str) -> DataFrame:
     """Metadata-only broadcast gate for |E|-DERIVED frames (probe-
     filtered adjacency slices, the edge set itself in closing/anti
-    joins). Edge-linear frames outgrow broadcast around the same
-    scale the graph checkpoints go DISK_ONLY, so the gate shares
-    graph_ckpt_level's 512 MB source threshold (sf1's 103 MB lineitem
-    broadcasts a ~12M-edge frame ≈ 190 MB hash relation — heavy but
-    measured cheaper than re-shuffling the wedge fan-out; sf10 does
-    not)."""
-    if memo.source_bytes(sf_dir, "lineitem") <= 512 * 1024 * 1024:
+    joins, wedge frames). Edge-linear frames outgrow broadcast around
+    the same scale the graph checkpoints go DISK_ONLY, so the gate is
+    E_GATE_BYTES (sf1's 103 MB lineitem broadcasts a ~12M-edge frame
+    ≈ 190 MB hash relation — heavy but measured cheaper than
+    re-shuffling the wedge fan-out; sf10 does not)."""
+    if memo.source_bytes(sf_dir, "lineitem") <= E_GATE_BYTES:
         return F.broadcast(df)
     return df
 
@@ -485,6 +489,107 @@ def _copurchase_edge_set(
     if pre_distinct_filter is not None:
         e = e.filter(pre_distinct_filter)
     return e
+
+
+def symmetric(e: DataFrame) -> DataFrame:
+    """``e`` UNION ALL ``e`` with columns u and v swapped; any other
+    column rides along. Over a canonical (u < v) distinct edge set the
+    result is the distinct directed adjacency, 2|E| rows."""
+    swap = {"u": F.col("v").alias("u"), "v": F.col("u").alias("v")}
+    return e.unionAll(e.select(*[swap.get(c, c) for c in e.columns]))
+
+
+def copurchase_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The symmetrized (u, v) co-purchase edge frame, checkpointed
+    lazily at graph_ckpt_level — one build per call, not a session
+    artifact. Iterating callers unpersist it once their last round
+    has materialized. It is not keyed before the checkpoint: Spark
+    4.1's localCheckpoint records UnknownPartitioning, so every
+    consumer join exchanges it anyway."""
+    return symmetric(_copurchase_edge_set(spark, sf_dir)).localCheckpoint(
+        eager=False, storageLevel=graph_ckpt_level(sf_dir)
+    )
+
+
+def label_rounds(spark: SparkSession, sf_dir: str, rounds: int) -> DataFrame:
+    """(x, lbl) node labels after ``rounds`` synchronous label-
+    propagation rounds over the co-purchase graph, starting from
+    identity labels; each round a node takes its neighbors' most
+    frequent label, ties to the smallest.
+
+    Round 1 is a closed form: identity labels over a distinct edge set
+    give every (node, neighbor-label) vote count 1, so the argmax is
+    the MINIMUM neighbor id — one map-side-combined aggregate. Every
+    later round is one Spark 4 ``mode(l, deterministic=true)``
+    aggregate (most frequent, ties to the lowest value — exactly the
+    oracle's two-step count + ROW_NUMBER argmax) over the adjacency
+    joined to the |V|-sized label lookup, which rides the bcast_v
+    gate: as a broadcast build the 2|E|-row adjacency streams through
+    the join, and the vote aggregate is the round's only exchange.
+
+    Rotation (VERDICT r10 #2): each round's labels checkpoint EAGERLY
+    so the superseded round is unpersisted as soon as its successor
+    is materialized — only the latest rotation (198 MB at sf10) stays
+    resident — and the adjacency checkpoint is released on return."""
+    d = copurchase_adjacency(spark, sf_dir)
+    labels = (
+        d.groupBy(F.col("u").alias("x"))
+        .agg(F.min("v").alias("lbl"))
+        .localCheckpoint(eager=True)
+    )
+    for _ in range(rounds - 1):
+        prev = labels
+        labels = (
+            d.join(
+                bcast_v(
+                    prev.select(F.col("x").alias("nx"), F.col("lbl").alias("l")),
+                    sf_dir,
+                ),
+                d["v"] == F.col("nx"),
+            )
+            .groupBy(F.col("u").alias("x"))
+            .agg(F.mode("l", True).alias("lbl"))
+            .localCheckpoint(eager=True)
+        )
+        prev.unpersist()
+    d.unpersist()
+    return labels
+
+
+def probe_wedges(adj: DataFrame, ctr: DataFrame, sf_dir: str) -> DataFrame:
+    """Probe wedges of the link-prediction family: every path
+    u - c - v (v != u) of the symmetrized (c, x) adjacency ``adj``
+    from a probe u (x % 97 = 0, the slate-request batch) through a
+    center c kept by ``ctr`` (column c plus per-center columns, which
+    ride along) → (c, u, *ctr columns, v); callers aggregate by
+    (u, v). ctr broadcasts under the |V| gate and the probe slice
+    (|2E|/97 rows) under the |E| gate, so the full adjacency STREAMS
+    through the wedge join; the only exchanges left are the callers'
+    (u, v) aggregate and ranking window."""
+    a1 = (
+        adj.filter(F.col("x") % 97 == 0)
+        .select(F.col("c"), F.col("x").alias("u"))
+        .join(bcast_v(ctr, sf_dir), "c")
+    )
+    a2 = adj.select(F.col("c"), F.col("x").alias("v"))
+    return bcast_e(a1, sf_dir).join(a2, "c").filter(F.col("v") != F.col("u"))
+
+
+def open_pairs(cand: DataFrame, e: DataFrame, sf_dir: str) -> DataFrame:
+    """``cand`` rows whose (u, v) is not already an edge of the
+    canonical (u < v) edge set ``e`` — the link-prediction family's
+    closing anti-join. The edge side rides the |E| broadcast gate: as
+    a broadcast build the candidate frame is not re-shuffled on the
+    pair key (above the gate this is a shuffle anti-join)."""
+    closed = bcast_e(
+        e.select(F.col("u").alias("eu"), F.col("v").alias("ev")), sf_dir
+    )
+    return cand.join(
+        closed,
+        (F.least(F.col("u"), F.col("v")) == F.col("eu"))
+        & (F.greatest(F.col("u"), F.col("v")) == F.col("ev")),
+        "left_anti",
+    )
 
 
 def _bfs_layer_counts(
@@ -528,7 +633,9 @@ def _bfs_layer_counts(
     return counts
 
 
-def _count_triangles(e: DataFrame, ckpt_level=None, deg: DataFrame | None = None) -> DataFrame:
+def _count_triangles(
+    e: DataFrame, sf_dir: str, ckpt_level=None, deg: DataFrame | None = None
+) -> DataFrame:
     """Degree-oriented wedge join + closing equi-join over a canonical
     (u, v) edge frame → 1-row (n_triangles) frame. ``ckpt_level``
     feeds the oriented-edge checkpoint (callers pass
@@ -571,10 +678,10 @@ def _count_triangles(e: DataFrame, ckpt_level=None, deg: DataFrame | None = None
         .select("s.src", "s.dst", "s.ddst")
         # r14 measured-negative: keying this frame on src before the
         # checkpoint (hoping the wedge self-join would reuse the
-        # partitioning, "the khop trick") does NOT work — Spark 4.1's
-        # localCheckpoint records UnknownPartitioning on the LogicalRDD
-        # (verified with and without AQE, eager and lazy), so the
-        # extra exchange was pure overhead (7.09 -> 7.73s).
+        # partitioning) does NOT work — Spark 4.1's localCheckpoint
+        # records UnknownPartitioning on the LogicalRDD (verified with
+        # and without AQE, eager and lazy), so the extra exchange was
+        # pure overhead (7.09 -> 7.73s).
         .localCheckpoint(eager=False, storageLevel=ckpt_level)
     )
     # r14 (guide §3.1): both wedge-stage joins sit behind the
@@ -587,9 +694,13 @@ def _count_triangles(e: DataFrame, ckpt_level=None, deg: DataFrame | None = None
     # across 200 partitions) and the wedge stream probes it. Same-
     # session alternating A/B at sf0.1: SMJ min 7.54 / med 8.3 vs SHJ
     # min 5.58 / med 6.0. Join strategy only — counts identical.
-    x = o.alias("x")
-    y = o.hint("shuffle_hash").alias("y")
-    z = o.select("src", "dst").hint("shuffle_hash").alias("z")
+    # Each hash build holds an |E|/P slice, so above E_GATE_BYTES the
+    # hints are dropped and the planner falls back to sort-merge,
+    # which spills instead of failing.
+    y, z = o, o.select("src", "dst")
+    if memo.source_bytes(sf_dir, "lineitem") <= E_GATE_BYTES:
+        y, z = y.hint("shuffle_hash"), z.hint("shuffle_hash")
+    x, y, z = o.alias("x"), y.alias("y"), z.alias("z")
     wedges = x.join(
         y,
         (F.col("x.src") == F.col("y.src"))
@@ -659,7 +770,7 @@ def triangle_count_doulion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # real cluster the dedup shuffle is network-bound and the hash is
     # free CPU, so the trade tilts decisively to the pushdown
     es = _copurchase_edge_set(spark, sf_dir, pre_distinct_filter=coin < "8000")
-    tri = _count_triangles(es)
+    tri = _count_triangles(es, sf_dir)
     n_e = es.agg(F.count(F.lit(1)).cast("bigint").alias("n_edges_sampled"))
     return n_e.crossJoin(F.broadcast(tri)).select(
         "n_edges_sampled",

@@ -781,7 +781,7 @@ def _graph_search_frames(
             .join(walk_side(graph), beam["node"] == graph["src"])
             .select("pid", F.col("dst").alias("node"))
         )
-        # ONE exchange per round (r14, guide §2.4 — the khop trick):
+        # ONE exchange per round (r14, guide §2.4):
         # the candidate union is hash-partitioned on pid once; the
         # (pid, node) dedup rides it (pid ⊆ the dedup keys), the
         # scoring joins are broadcast probes under the walk gate

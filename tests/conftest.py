@@ -9,3 +9,22 @@ def spark():
 
     s = get_spark("koalas_spark_tests", cpus=8)
     yield s
+
+
+@pytest.fixture(scope="session")
+def registry_frames(spark):
+    """name -> DataFrame of every query the plan audit covers, built
+    once per session at SF_SMOKE and shared by the two registry-wide
+    plan gates (test_plan_audit, test_dim_gate)."""
+    from koalas_spark.queries import all_queries
+    from tools.audit_plans import SKIP
+
+    frames = {}
+    for name, fn in sorted(all_queries().items()):
+        if name in SKIP:
+            continue
+        try:
+            frames[name] = fn(spark, SF_SMOKE)
+        except Exception as exc:  # pragma: no cover - surface build errors
+            pytest.fail(f"{name}: query build failed: {exc}")
+    return frames

@@ -17,12 +17,7 @@ averages, probe sets, k-row stats) rename their outputs, so they pass.
 
 from __future__ import annotations
 
-import pytest
-
 from koalas_spark.plans.session import CONSTANT_DIMS, dim
-from koalas_spark.queries import all_queries
-from tests.conftest import SF_SMOKE
-from tools.audit_plans import SKIP
 
 # raw column prefixes of the SF-linear TPC-H tables
 _LINEAR_PREFIXES = ("c_", "s_", "p_")
@@ -57,15 +52,9 @@ def test_dim_broadcasts_only_constant_tables(spark):
         assert not _hint_outputs(unhinted.crossJoin(spark.range(2))), t
 
 
-def test_no_forced_broadcast_of_sf_linear_tables(spark):
+def test_no_forced_broadcast_of_sf_linear_tables(registry_frames):
     offenders = []
-    for name, fn in sorted(all_queries().items()):
-        if name in SKIP:
-            continue
-        try:
-            df = fn(spark, SF_SMOKE)
-        except Exception as exc:  # pragma: no cover - surface build errors
-            pytest.fail(f"{name}: query build failed: {exc}")
+    for name, df in registry_frames.items():
         for cols in _hint_outputs(df):
             bad = [c for c in cols if c.startswith(_LINEAR_PREFIXES)]
             if bad:

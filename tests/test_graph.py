@@ -1,8 +1,10 @@
 """connected_components semantics on known graphs."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from koalas_spark.operators.graph import connected_components
+from tests.conftest import SF_SMOKE
 
 
 def _comps(spark, pairs, driver_edge_limit=0):
@@ -144,12 +146,9 @@ def test_bfs_layer_plan_shape(spark):
     # and the counts themselves stay exact on a known graph: a
     # 0-1-2-...-50 path symmetrized, seed 0 reaches hop+1 nodes,
     # seed 7 reaches 2*hop+1
-    from koalas_spark.queries.mining import _bfs_layer_counts
+    from koalas_spark.queries.mining import _bfs_layer_counts, symmetric
 
-    sym = edges.unionAll(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    counts = _bfs_layer_counts(sym, seeds, hops=3)
+    counts = _bfs_layer_counts(symmetric(edges), seeds, hops=3)
     assert counts[(0, 1)] == 2 and counts[(0, 2)] == 3 and counts[(0, 3)] == 4
     assert counts[(7, 1)] == 3 and counts[(7, 2)] == 5 and counts[(7, 3)] == 7
 
@@ -164,3 +163,97 @@ def test_degree_artifact_matches_fresh_build(spark):
     fresh = copurchase_degree_table(spark, sf, rebuild=True).collect()
     assert sorted(map(tuple, cached)) == sorted(map(tuple, fresh))
     assert len({r["x"] for r in cached}) == len(cached)  # node unique
+
+
+# ---------------- graph-shelf size gates above threshold ----------------
+
+# Output columns of the frames the graph shelf hints, by size class.
+# Constant frames may carry a hint at any scale; |V|-sized ones (one
+# row per node) only below bcast_v's 8 GB gate; everything else —
+# |E|-sized adjacency slices, wedge frames, edge sets, the oriented
+# triangle frames — only below the 512 MB |E| gate.
+_CONST_HINTED = {("n_triangles",)}
+_V_HINTED = {
+    ("u",),  # k-core survivors
+    ("v",),
+    ("nx", "l"),  # label lookup
+    ("u", "dg"),  # probe degrees
+    ("c",),  # admitted wedge centers
+    ("u", "dg_u"),
+    ("v", "dg_v"),
+}
+
+
+def _graph_hints(spark, name):
+    """(rows, [(output columns, hint)] of every hint in the plans of
+    query ``name``). Iterative rounds end in a localCheckpoint, so the
+    analyzed plans handed to it are read as well as the final frame's."""
+    from koalas_spark.queries import all_queries
+
+    DataFrame = type(spark.range(1))  # the concrete (classic) class
+    plans = []
+    real = DataFrame.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().analyzed())
+        return real(self, *args, **kwargs)
+
+    DataFrame.localCheckpoint = spy
+    try:
+        df = all_queries()[name](spark, SF_SMOKE)
+    finally:
+        DataFrame.localCheckpoint = real
+    plans.append(df._jdf.queryExecution().analyzed())  # noqa: SLF001
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    hints = []
+
+    def walk(node) -> None:
+        if node.getClass().getSimpleName() == "ResolvedHint":
+            cols = tuple(a.name() for a in seq(node.output()))
+            hints.append((cols, node.hints().toString()))
+        for child in seq(node.children()):
+            walk(child)
+
+    for plan in plans:
+        walk(plan)
+    return df.collect(), hints
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "kcore_peeling_rounds",
+        "label_propagation_communities",
+        "triangle_count_doulion",
+        "local_clustering_copurchase",
+        "jaccard_link_copurchase",
+    ],
+)
+def test_graph_gates_above_threshold_drop_hints(spark, monkeypatch, name):
+    """Above the |E| gate (1 GB of lineitem) no broadcast or
+    shuffle_hash hint may sit over an |E|-sized frame; above the |V|
+    gate too (16 GB) none over a |V|-sized one either. The rows must
+    equal the oracle's on every side of the gates."""
+    from koalas_spark import memo
+    from koalas_spark.queries import all_oracles
+    from tools.check_oracle import _norm, connect_duck
+
+    res = connect_duck(SF_SMOKE).execute(all_oracles()[name])
+    names = [d[0] for d in res.description]
+    want = sorted(tuple(_norm(v) for v in r) for r in res.fetchall())
+
+    def check(allowed):
+        rows, hints = _graph_hints(spark, name)
+        got = sorted(tuple(_norm(r[c]) for c in names) for r in rows)
+        assert got == want
+        return [h for h in hints if h[0] not in allowed]
+
+    # below the gates a non-constant frame is hinted, so the checks
+    # above them have something to drop
+    assert check(_CONST_HINTED), "below the gates the graph joins carry hints"
+    for gb, allowed in ((1, _CONST_HINTED | _V_HINTED), (16, _CONST_HINTED)):
+        monkeypatch.setattr(memo, "source_bytes", lambda sf_dir, t, gb=gb: gb << 30)
+        assert check(allowed) == [], f"hints above the {gb} GB gate"

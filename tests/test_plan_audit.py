@@ -20,10 +20,10 @@ from tests.conftest import SF_SMOKE
 from tools.audit_plans import collect
 
 
-def test_plans_match_expectations(spark):
+def test_plans_match_expectations(spark, registry_frames):
     with open(Path(__file__).parents[1] / "PLAN_BASELINE.json") as f:
         baseline = json.load(f)
-    facts = collect(spark, SF_SMOKE)
+    facts = collect(spark, SF_SMOKE, registry_frames)
 
     problems = []
     for name, d in facts.items():

@@ -694,14 +694,19 @@ def inspect_plan(plan: str, name: str) -> dict:
     }
 
 
-def collect(spark, sf_dir: str) -> dict[str, dict]:
-    """name -> inspect_plan facts for every non-streaming query."""
+def collect(spark, sf_dir: str, frames: dict | None = None) -> dict[str, dict]:
+    """name -> inspect_plan facts for every non-streaming query.
+    ``frames`` (name -> DataFrame, already built at ``sf_dir``) skips
+    the builds."""
+    if frames is None:
+        frames = {
+            name: fn(spark, sf_dir)
+            for name, fn in sorted(all_queries().items())
+            if name not in SKIP
+        }
     jvm = spark._jvm  # noqa: SLF001
     out = {}
-    for name, fn in sorted(all_queries().items()):
-        if name in SKIP:
-            continue
-        df = fn(spark, sf_dir)
+    for name, df in frames.items():
         plan = jvm.PythonSQLUtils.explainString(  # noqa: SLF001
             df._jdf.queryExecution(), "formatted"  # noqa: SLF001
         )
