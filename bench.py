@@ -1,7 +1,8 @@
 """Benchmark runner.
 
-Runs the registered queries at $SPARK_GRAFT_SF_DIR (default sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+Runs the benched queries (the registry minus those tagged
+``bench=False``) at $SPARK_GRAFT_SF_DIR (default sf0.1) and prints ONE
+JSON line:
   {"metric": ..., "value": total_sec, "unit": "sec",
    "queries": {name: sec, ...}, "sf": ...}
 
@@ -20,388 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from koalas_spark import get_spark
 from koalas_spark.memo import reset_session_artifacts
-from koalas_spark.queries import all_queries
-
-# the headline set benched every round (full registry also available
-# via --all); chosen to cover scan/filter, shuffle-agg, joins, window,
-# text, dedup, ann, streaming
-HEADLINE = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q4_order_priority",
-    "q5_local_supplier",
-    "q6_forecast_revenue",
-    "q10_returned_items",
-    "q18_large_orders",
-    "top_k_per_group",
-    "sessionize_events",
-    "asof_join_events_orders",
-    "window_tumbling_events",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "neardup_embedding",
-    "ann_bruteforce_topk",
-    "ann_ivf_topk",
-    "text_quality_score",
-    "text_langid",
-    "q2_min_cost_supplier",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q14_promo_revenue",
-    "q17_small_qty_revenue",
-    "q19_discount_revenue",
-    "q9_product_profit",
-    "q13_cust_order_dist",
-    "q21_waiting_supplier",
-    "word_count_topk",
-    "multimodal_frame_sample",
-    "funnel_conversion",
-    "session_window_native",
-    "cdc_upsert_compact",
-    "tfidf_top_terms",
-    "dedup_cluster_canonical",
-    "embedding_cluster_canonical",
-    "doc_pack_shards",
-    "gopher_repetition_filter",
-    "unigram_lm_quality",
-    "hll_user_rollup",
-    "zorder_box_scan",
-    "shard_roundtrip_stats",
-    "pipeline_curation_funnel",
-    "scd2_intervals",
-    "lang_temperature_resample",
-    "multimodal_decode_resize",
-    # r4 additions: retrieval, graph, celled semantic dedup, the
-    # compressed codec path, codegen model inference, collocations
-    "bm25_topk",
-    "pagerank_nations",
-    "neardup_embedding_cells",
-    "multimodal_png_roundtrip",
-    "quality_linear_classifier",
-    "collocation_pmi_topk",
-    "duplicate_span_detect",
-    "multimodal_image_ahash",
-    "rag_chunk_windows",
-    "bpe_learn_merges",
-    "char_entropy_quality",
-    # graph miners benched per VERDICT r4 #6. copurchase is ~1.5s;
-    # triangle_count_parts steady-states ~5.4s at sf0.1 (40.7s at
-    # sf1) — past the retry bar by design: the Σ out-deg² wedge join
-    # IS the operator's cost (degree-oriented edges bound it; see the
-    # docstring), so the bar documents rather than hides it.
-    "copurchase_pairs",
-    "triangle_count_parts",
-    # r5 additions: interval sweep, one-pass multi-distinct profile,
-    # anti-join erasure rewrite, second compressed codec, residual
-    # quantization
-    "concurrent_sessions_peak",
-    "table_profile_audit",
-    "user_erasure_compact",
-    "multimodal_gif_roundtrip",
-    "ann_rq_topk",
-    # r7 additions: the DOULION sampled triangle path (vs the exact
-    # plan above), quantized-grid Lloyd, portable-hash LSH ANN,
-    # catalog-probing incremental near-dedup, grouped OLS
-    "triangle_count_doulion",
-    "kmeans_clusters",
-    "ann_lsh_topk",
-    "incremental_neardup_minhash",
-    "grouped_ols_regression",
-    # r8 additions: the seven r7-late operators (VERDICT r7 #3) —
-    # paragraph-level dedup, systematic PPS sampling, skyline,
-    # gated fuzzy matching, A/B lift, the Gram/covariance kernel,
-    # and the UDTF demo
-    "paragraph_dedup_reassemble",
-    "pps_token_sample",
-    "pareto_skyline_parts",
-    "fuzzy_match_parts",
-    "ab_test_conversion_lift",
-    "embedding_covariance",
-    "udtf_term_counts",
-    # r8 additions: growth/backlog prefix-sum shapes, exact-k hash
-    # sampling, Zipf fit, kNN vote, partition-pruned layout, JSONL
-    # round-trip, degree histogram, tolerance as-of
-    "cumulative_distinct_users",
-    "orders_backlog_daily",
-    "doc_sample_exact_k",
-    "zipf_alpha_fit",
-    "knn_label_vote",
-    "partitioned_write_prune",
-    "jsonl_roundtrip_stats",
-    "degree_distribution_copurchase",
-    "asof_join_tolerance",
-    "exact_group_quantiles",
-    "event_cusum_deviation",
-    "source_contamination_matrix",
-    "rrf_fusion_retrieval",
-    "maxsim_late_interaction",
-    "mixture_weight_solver",
-    "ndcg_at_10_eval",
-    "query_likelihood_dirichlet",
-    "daily_revenue_motif",
-    "daily_revenue_discord",
-    "funnel_within_session",
-    "snapshot_diff",
-    "skew_audit_orders",
-    "stable_row_numbering",
-    "time_weighted_avg_value",
-    "decile_lift_table",
-    "audience_overlap_drift",
-    "bloom_filter_membership",
-    "cms_heavy_hitters",
-    "grouped_mode_value",
-    "auc_mann_whitney",
-    "label_propagation_communities",
-    "psi_price_drift",
-    "seasonal_dow_decompose",
-    "benford_price_audit",
-    "weighted_sample_aes",
-    "naive_bayes_langid",
-    "l_diversity_audit",
-    "sketch_kmv_set_ops",
-    "chi2_feature_selection",
-    # r8 batch 7-9 additions: FK integrity audit, Gini concentration,
-    # daily-revenue ACF, Kaplan-Meier, PCA power iteration, BFS
-    # reachability, Theil-Sen, item-item recs, frequent triples,
-    # weighted median, DP release, calibration bins
-    "referential_integrity_audit",
-    "gini_revenue_concentration",
-    "acf_daily_revenue",
-    "km_survival_curve",
-    "calibration_bins_quality",
-    "pca_power_iteration",
-    "khop_reach_copurchase",
-    "theil_sen_daily_trend",
-    "grouped_sample_exact_k",
-    "item_item_topk",
-    "frequent_triples",
-    "weighted_median_price",
-    "dp_noisy_counts",
-    "interval_overlap_join",
-    "vocab_coverage_curve",
-    "cohort_ltv_curve",
-    "type_entropy_anomaly",
-    "revenue_share_hierarchy",
-    "time_decay_attribution",
-    "minhash_estimate_audit",
-    "int8_quant_error_scan",
-    "basket_affinity_lift",
-    "top_parts_string_agg",
-    "pivot_quarter_metrics",
-    "ks_test_price_eras",
-    "mann_kendall_trend",
-    "winsorized_mean_price",
-    "nation_revenue_beta",
-    "geometric_mean_order_value",
-    "daily_revenue_peaks",
-    "interarrival_distribution",
-    "text_readability_flesch",
-    "max_drawdown_daily",
-    "entry_type_engagement",
-    "fulfillment_lag_quantiles",
-    "customer_reactivation",
-    "hour_of_day_profile",
-    "supplier_concentration_hhi",
-    # round-9 additions (representative subset of the 24 new ops)
-    "scd2_user_state_intervals",
-    "leakage_safe_expanding_features",
-    "rtbf_purge_audit",
-    "pii_redaction_scrub",
-    "target_encoding_kfold",
-    "woe_iv_quantity_bins",
-    "wilson_return_ranking",
-    "adamic_adar_link_prediction",
-    "changepoint_binseg_daily",
-    "bollinger_breakout_days",
-    "welch_t_linestatus",
-    "delta_varint_compression_stats",
-    "matryoshka_energy_deciles",
-    "ngram_novelty_curve",
-    "out_of_order_lateness_histogram",
-    "dict_encoding_advisor",
-    "harmonic_centrality_probes",
-    "quantile_normalization_reference",
-    "mutual_best_copurchase",
-    "event_burstiness_fano",
-    "join_cardinality_estimate_audit",
-    "order_total_consistency_audit",
-    "topk_churn_halves",
-    "quantity_return_mutual_info",
-    "dow_anova_f_test",
-    "last_digit_uniformity_audit",
-    "multimodal_jpeg_roundtrip",
-    "t_closeness_audit",
-    "annual_fourier_fit",
-    "copurchase_assortativity",
-    "median_ci_order_stats",
-    "durbin_watson_daily",
-    "markov_entropy_rate",
-    "source_vocab_jaccard_matrix",
-    "kcore_peeling_rounds",
-    "runs_test_daily_direction",
-    "hash_uniformity_audit",
-    "ann_recall_audit",
-    "shuffle_partition_advisor",
-    "weekly_type_kl_drift",
-    "source_token_jsd",
-    "dedup_cluster_size_histogram",
-    "lineitems_poisson_gof",
-    "topk_with_ties_per_nation",
-    "harmonic_mean_price",
-    "iqr_fence_outlier_rate",
-    "yoy_growth_monthly",
-    # round-9 continuation batches 16-26
-    "jarque_bera_ordervalue",
-    "spearman_daily_rank_corr",
-    "kruskal_wallis_quantity",
-    "cramers_v_flag_status",
-    "cross_correlation_daily",
-    "levene_quantity_flag",
-    "variance_ratio_daily",
-    "grubbs_outlier_daily",
-    "abc_classification",
-    "new_vs_returning_monthly",
-    "bootstrap_ci_mean",
-    "footer_stats_integrity_audit",
-    "jaccard_link_copurchase",
-    "doc_lang_source_entropy",
-    "sentence_stats_docs",
-    "mmr_diversified_topk",
-    "feature_hashing_counts",
-    "kendall_tau_daily",
-    "pacf_daily",
-    "local_clustering_copurchase",
-    "theil_u_priority_status",
-    "hurst_rs_daily",
-    "stream_topk_windowed",
-    "shapley_channel_attribution",
-    "source_token_hellinger",
-    "cohens_kappa_order_size",
-    "sax_transition_daily",
-    "burrows_delta_sources",
-    "customer_order_gap_arrays",
-    "brand_price_percentile",
-    "friedman_dow_test",
-    "cochran_armitage_trend",
-    "silhouette_simplified",
-    "hill_tail_index",
-    "gumbel_monthly_maxima",
-    "ewma_control_chart_daily",
-    "pipe_syntax_topk",
-    "group_by_all_revenue",
-    "set_intersect_all",
-    "semi_join_recent_customers",
-    "odds_ratio_returns",
-    "bartlett_test_quantity",
-    "atkinson_index_revenue",
-    "priority_value_skewness",
-    "rbo_token_halves",
-    "wasserstein_quantity_years",
-    "naive_forecast_backtest",
-    "brand_markup_stats",
-    "capture_recapture_customers",
-    "degree_powerlaw_fit",
-    # round-10 additions (40 entries; stream_checkpoint_restart is
-    # deliberately included — the staged-lake restart path is a real
-    # cost surface — while the other stream_* round-10 op rides its
-    # oracle gate only)
-    "jaccard_link_sampled",
-    "skew_hot_key_join_stats",
-    "modularity_copurchase",
-    "negbin_order_counts_fit",
-    "simpson_reversal_audit",
-    "shift_share_nation_growth",
-    "multimodal_image_dhash",
-    "page_hinkley_daily_drift",
-    "lorenz_curve_customer_deciles",
-    "source_lang_enrichment",
-    "blocking_key_workload_audit",
-    "collated_group_count",
-    "identifier_param_query",
-    "xml_roundtrip_stats",
-    "try_arithmetic_overflow_audit",
-    "bitmap_distinct_users",
-    "quality_threshold_per_source",
-    "observe_metrics_audit",
-    "cross_lingual_length_ratio",
-    "dedup_rate_by_source",
-    "spatial_grid_join",
-    "listagg_within_group",
-    "union_by_name_evolution",
-    "approx_top_k_brands",
-    "ljung_box_daily",
-    "theil_between_nations",
-    "laspeyres_paasche_index",
-    "multimodal_tiff_roundtrip",
-    "cogroup_monthly_reconciliation",
-    "array_ops_showcase",
-    "map_ops_showcase",
-    "arrow_python_udf_demo",
-    "event_journey_edit_distance",
-    "csv_corrupt_record_audit",
-    "embedding_dim_stats",
-    "multimodal_qoi_roundtrip",
-    "stream_checkpoint_restart",
-    "revenue_bridge_yoy",
-    "events_dow_hour_heatmap",
-    "nation_trade_balance",
-    # round-11 additions (all 11 new ops; holt/jackknife share the
-    # daily artifact, local_clustering the co-purchase artifact)
-    "mcnemar_test_eras",
-    "jackknife_variance_daily",
-    "holt_linear_daily",
-    "type_token_ratio_sources",
-    "simpson_diversity_sources",
-    "text_perplexity_unigram",
-    "local_clustering_probes",
-    "execute_immediate_param",
-    "multimodal_tga_roundtrip",
-    "multimodal_audio_vad",
-    "multimodal_video_motion",
-    "cramer_von_mises_quantity_years",
-    "rich_club_copurchase",
-    "conformal_interval_order_value",
-    "heaps_law_fit",
-    "hard_negative_mining_embeddings",
-    "pr_auc_priority_value",
-    "brier_decomposition_quality",
-    "holt_winters_dow_daily",
-    "binaryfile_ingest_stats",
-    "cronbach_alpha_dow",
-    "g_test_flag_status",
-    "littles_law_audit",
-    "weibull_survival_fit",
-    "price_elasticity_brands",
-    "null_skew_join_split",
-    "multimodal_audio_pitch",
-    # round-12 retrieval-eval completion (VERDICT r12 #2: the two r12
-    # ops that had no per-round wall trail) + round-13 additions
-    "mrr_full_match",
-    "precision_recall_at_k",
-    "fuzzy_match_topk",
-    "ann_graph_search",
-    "unigram_lm_train",
-    "unigram_fertility_by_lang",
-    "dsir_importance_resample",
-    "jl_projection_norms",
-]
-
-# HEADLINE-exclusion rule (written down per VERDICT r12 #2): the
-# registry entries NOT benched here are, by class, (a) streaming ops
-# that execute at construction against a staged micro-lake — their
-# wall is fixture-dominated, not plan-dominated (they ride the oracle
-# gate; stream_checkpoint_restart is the deliberate exception because
-# the restart path itself is the cost surface); (b) §2.1 parity
-# micro-ops (head/select/filter on one table — sub-100ms scans that
-# measure JVM overhead, not plans); (c) near-duplicate variants of a
-# benched op where the plan shape is identical and only a parameter
-# differs (e.g. the _ps partsupp re-statements of benched TPC-H
-# queries, hilbert vs zorder); (d) tests-only §2.1 surfaces
-# (write_csv/append_rows/shape_len_cols — exercised in pytest, no
-# registered query to time). Everything with a NOVEL plan shape
-# belongs in HEADLINE; when adding an op, add it here unless one of
-# (a)-(d) applies.
+from koalas_spark.queries import all_queries, registry
 
 
 def _measure(spark, queries, name: str, sf_dir: str) -> float:
@@ -558,7 +178,9 @@ def emit(result: dict) -> str:
 
 if __name__ == "__main__":
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    names = HEADLINE
+    # the benched set: every registered query not tagged bench=False
+    # (the exclusion classes are in koalas_spark.queries.query)
+    names = [n for n, q in sorted(registry().items()) if q.bench]
     if "--all" in sys.argv:
         names = sorted(all_queries())
     for a in sys.argv[1:]:

@@ -1,7 +1,9 @@
 """SparkSession factory with scale-aware defaults.
 
-Local mode is a 32-thread single JVM; the configs below are chosen so
-the same logical plans translate to a 1000-executor cluster: AQE for
+Local mode is a single JVM with one thread per core this process may
+run on and a heap of half the physical memory (at most 16g); the
+configs below are chosen so the same logical plans translate to a
+1000-executor cluster: AQE for
 runtime re-planning (skew join splitting, partition coalescing),
 shuffle partitions sized to cores locally (on a cluster this would be
 2-3x total cores), Arrow for any Python exchange, UTC timezone so
@@ -21,7 +23,9 @@ def get_spark(app_name: str = "koalas_spark", cpus: int | None = None) -> SparkS
     """Create (or fetch) the SparkSession with engine defaults."""
     package = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 30
+    heap = f"{max(1, min(16, ram_gb // 2))}g"
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -52,15 +56,16 @@ def get_spark(app_name: str = "koalas_spark", cpus: int | None = None) -> SparkS
         # edge side per round for no benefit. Sort-merge remains the
         # planner's fallback whenever the build side could not fit.
         .config("spark.sql.join.preferSortMergeJoin", "false")
-        # 16g, NOT most-of-RAM: measured at sf0.1, a 48g heap made G1
-        # pathological — lazy heap commit page-faulted in kernel mode
-        # (97% sys CPU bursts) and rare giant mixed collections turned
-        # the array-heavy dedup pipelines bimodal (2.9s vs 37s for the
-        # same query). A right-sized heap keeps collections small and
-        # RSS bounded; at sf0.1 peak usage is well under 16g. On a real
-        # cluster this is per-executor memory and the same rule holds:
-        # size the heap to the working set, not the machine.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # half of RAM up to 16g, NOT most-of-RAM: measured at sf0.1, a
+        # 48g heap made G1 pathological — lazy heap commit page-faulted
+        # in kernel mode (97% sys CPU bursts) and rare giant mixed
+        # collections turned the array-heavy dedup pipelines bimodal
+        # (2.9s vs 37s for the same query). A right-sized heap keeps
+        # collections small and RSS bounded; every benched query runs at
+        # sf0.1 in a 7g heap. On a real cluster this is per-executor
+        # memory and the same rule holds: size the heap to the working
+        # set, not the machine.
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", heap))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # dims under 64MB broadcast automatically; AQE can upgrade at runtime

@@ -457,6 +457,7 @@ SELECT l_returnflag, l_linestatus,
        {_dsum_sql('l_quantity')} AS sum_qty, COUNT(*) AS n
 FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
 """,
+    bench=False,
 )
 def rollup_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
@@ -472,6 +473,7 @@ SELECT l_returnflag, l_linestatus,
        {_dsum_sql('l_quantity')} AS sum_qty, COUNT(*) AS n
 FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
 """,
+    bench=False,
 )
 def cube_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
@@ -490,6 +492,7 @@ SELECT l_returnflag,
        {_dsum_sql("CASE WHEN l_linestatus = 'F' THEN l_quantity END")} AS qty_F
 FROM lineitem GROUP BY l_returnflag
 """,
+    bench=False,
 )
 def pivot_linestatus(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
@@ -613,6 +616,7 @@ SELECT event_type,
        COUNT(*) AS n
 FROM events GROUP BY event_type
 """,
+    bench=False,
 )
 def events_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
@@ -637,6 +641,7 @@ def events_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS approx_within_5pct
     FROM lineitem
     """,
+    bench=False,
 )
 def distinct_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")

@@ -45,6 +45,7 @@ SELECT day, new_users,
          AS cum_users
 FROM d
 """,
+    allow={"GlobalWindow"},
 )
 def cumulative_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").select(
@@ -96,6 +97,7 @@ SELECT day,
          AS open_orders
 FROM g
 """,
+    allow={"GlobalWindow"},
 )
 def orders_backlog_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders").select(
@@ -192,6 +194,7 @@ SELECT np AS n_points,
              / 1048576.0, 6) AS intercept_ln
 FROM m
 """,
+    allow={"GlobalWindow"},
 )
 def zipf_alpha_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.functions.textfn import tokens
@@ -266,6 +269,9 @@ SELECT probe_id, CAST(label AS INT) AS pred_label, votes FROM (
   FROM v) t
 WHERE rk = 1
 """,
+    # built on the #42 brute-force baseline: probes broadcast onto the
+    # corpus without an equi key
+    allow={"BroadcastNestedLoopJoin"},
 )
 def knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.operators.similarity import brute_force_topk
@@ -533,7 +539,7 @@ def exact_group_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cross-multiplication: dev_i = nd * cumsum_i - i * total (both terms
 # bigint — no mean division, no floats, identical on both engines).
 # Daily counts are day-domain-bounded, so the prefix window and the
-# 1-row stats/peak cross-joins are all bounded shapes (same EXPECTED
+# 1-row stats/peak cross-joins are all bounded shapes (same allowed
 # classes as #218/#219).
 @query(
     "event_cusum_deviation",
@@ -558,6 +564,7 @@ SELECT day, n_events, cum_dev_scaled,
        ABS(cum_dev_scaled) = mx.m AS is_peak
 FROM d CROSS JOIN mx
 """,
+    allow={"BroadcastNestedLoopJoin", "GlobalWindow"},
 )
 def event_cusum_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
@@ -713,6 +720,10 @@ SELECT doc_id, rk_sparse, rk_dense, rrf_score FROM (
 ORDER BY rrf_score DESC, doc_id ASC
 LIMIT 10
 """,
+    # rank windows over the bounded top-20 frames; BNLJ from the 1-row
+    # corpus-stats frame (bm25 leg) and the single-probe broadcast
+    # (dense leg)
+    allow={"BroadcastNestedLoopJoin", "GlobalWindow"},
 )
 def rrf_fusion_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.functions.textfn import tokens, token_count
@@ -932,6 +943,8 @@ SELECT st.n_rows, st.n_keys, st.max_cnt, t10.top10 AS top10_cnt,
        CAST(1000000 * t10.top10 // st.n_rows AS BIGINT) AS top10_share_ppm
 FROM st CROSS JOIN t10
 """,
+    # two 1-row stat frames cross-joined
+    allow={"BroadcastNestedLoopJoin"},
 )
 def skew_audit_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = (
@@ -978,6 +991,9 @@ SELECT doc_id,
        CAST(ROW_NUMBER() OVER (ORDER BY doc_id) AS BIGINT) AS ordinal
 FROM documents
 """,
+    # the shared three-level prefix sum's superblock window
+    # (|corpus|/2^20 rows — same bounded shape as doc_pack_shards)
+    allow={"GlobalWindow"},
 )
 def stable_row_numbering(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.queries.pipeline import _distributed_prior
@@ -1093,6 +1109,9 @@ SELECT CAST(decile AS INT) AS decile, CAST(COUNT(*) AS BIGINT) AS n_cust,
        CAST(1000000 * SUM(urgent) // COUNT(*) AS BIGINT) AS urgent_ppm
 FROM dec GROUP BY decile
 """,
+    # $100-bucket-domain prefix window; 1-row n / 1-row boundary-array
+    # frames cross-joined back
+    allow={"BroadcastNestedLoopJoin", "GlobalWindow"},
 )
 def decile_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -1250,6 +1269,8 @@ SELECT 65536 AS m_bits, st.n_keys, sp.n_probes, sf.n_fp,
        CAST(1000000 * sf.n_fp // sp.n_probes AS BIGINT) AS fp_ppm
 FROM st CROSS JOIN sp CROSS JOIN sf
 """,
+    # 3-row hash-index frame + 1-row stat frames cross-joined
+    allow={"BroadcastNestedLoopJoin"},
 )
 def bloom_filter_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.operators.dedup import portable_hash60
@@ -1358,6 +1379,8 @@ SELECT token, cnt AS true_cnt, cms_est,
        CAST(1000000 * (cms_est - cnt) // cnt AS BIGINT) AS over_ppm
 FROM est
 """,
+    # 4-row depth frame cross-joined onto token counts / top-20 probes
+    allow={"BroadcastNestedLoopJoin"},
 )
 def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.functions.textfn import tokens

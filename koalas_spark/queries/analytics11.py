@@ -68,6 +68,9 @@ SELECT n_pos, n_neg,
              6) AS auc
 FROM m
 """,
+    # $100-bucket-domain prefix window (same bounded shape as
+    # decile_lift_table)
+    allow={"GlobalWindow"},
 )
 def auc_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -226,6 +229,8 @@ SELECT bucket, p_ppm, q_ppm,
             * 1000) AS BIGINT) AS psi_nano
 FROM p
 """,
+    # 1-row era-totals frame cross-joined onto the 10-band histogram
+    allow={"BroadcastNestedLoopJoin"},
 )
 def psi_price_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -305,6 +310,7 @@ SELECT weekday,
          AS seasonal
 FROM d GROUP BY weekday
 """,
+    allow={"GlobalWindow"},
 )
 def seasonal_dow_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
@@ -368,6 +374,8 @@ SELECT h.digit, h.n,
            END AS dev_ppm
 FROM h, t
 """,
+    # 1-row total frame cross-joined onto the 9-digit histogram
+    allow={"BroadcastNestedLoopJoin"},
 )
 def benford_price_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # floor(1e6 * log10(1 + 1/d)) for d = 1..9, precomputed once — the
@@ -531,6 +539,9 @@ FROM d JOIN pred ON pred.doc_id = d.doc_id
 WHERE NOT d.is_train
 GROUP BY d.lang, pred.predicted
 """,
+    # 5-row language frame and 1-row vocab-size/train-count frames
+    # cross-joined to build the vocab x language model table
+    allow={"BroadcastNestedLoopJoin"},
 )
 def naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.functions.textfn import tokens
@@ -707,6 +718,8 @@ SELECT ex.na AS exact_a, ex.nb AS exact_b, exi.nab AS exact_inter,
        ROUND(inter.ni * 1152921504606846976.0 / tmin.th, 2) AS est_inter
 FROM ex, exi, ta, tb, tmin, inter
 """,
+    # 256-row sketch frames and 1-row theta/stat frames cross-joined
+    allow={"BroadcastNestedLoopJoin"},
 )
 def sketch_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
@@ -810,6 +823,8 @@ chi AS (
 SELECT token, a AS df_pos, b AS df_neg, chi2_milli
 FROM chi ORDER BY chi2_milli DESC, token LIMIT 20
 """,
+    # 1-row corpus-stats frame cross-joined onto the per-token table
+    allow={"BroadcastNestedLoopJoin"},
 )
 def chi2_feature_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.functions.textfn import tokens as toks

@@ -382,6 +382,8 @@ SELECT k, n AS n_pairs,
          6) AS acf
 FROM m
 """,
+    # 7-row lag frame cross-joined onto the day-domain daily table
+    allow={"BroadcastNestedLoopJoin"},
 )
 def acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.queries.analytics import daily_revenue_table
@@ -439,6 +441,7 @@ SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
        MIN(ts) AS min_ts
 FROM events GROUP BY event_type
 """,
+    bench=False,
 )
 def orc_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").select(
@@ -514,6 +517,10 @@ SELECT dur AS t, n_risk, d AS n_death, cum_lnq,
          AS BIGINT) AS surv_ppm
 FROM c
 """,
+    # 1-row horizon frame cross-joined; suffix/prefix sums over the
+    # ~2.4k-row lifetime-day DOMAIN (same bounded shape as
+    # seasonal_dow_decompose)
+    allow={"BroadcastNestedLoopJoin", "GlobalWindow"},
 )
 def km_survival_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")

@@ -240,6 +240,7 @@ SELECT s AS seed, hop, n_reach FROM (
   UNION ALL
   SELECT s, 3, CAST(COUNT(*) AS BIGINT) FROM r3 GROUP BY s)
 """,
+    audit=False,
 )
 def khop_reach_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.queries.mining import (
@@ -289,6 +290,7 @@ SELECT event_type,
          AS DOUBLE) AS sum_value_new
 FROM events GROUP BY event_type
 """,
+    bench=False,
 )
 def schema_evolution_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
@@ -404,6 +406,10 @@ SELECT days_n.n_days, tot.n_pairs,
         WHERE cum >= (tot.n_pairs + 1) // 2) AS median_slope_micro
 FROM days_n, tot
 """,
+    # prefix sum over the DISTINCT-slope table (bounded: pairs are
+    # day-domain^2, never corpus^2) plus 1-row n_days/n_pairs/median
+    # frames cross-joined back
+    allow={"BroadcastNestedLoopJoin", "GlobalWindow"},
 )
 def theil_sen_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.queries.analytics import daily_revenue_table
@@ -462,6 +468,7 @@ SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
        MIN(ts) AS min_ts
 FROM events GROUP BY event_type
 """,
+    bench=False,
 )
 def csv_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"

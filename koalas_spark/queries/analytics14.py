@@ -352,6 +352,7 @@ FROM iv JOIN camp
   ON iv.o_start <= camp.camp_end AND camp.camp_start <= iv.o_end
 GROUP BY camp.campaign
 """,
+    allow={"BroadcastNestedLoopJoin"},
 )
 def interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")

@@ -57,6 +57,10 @@ SELECT ks.k,
 FROM ks CROSS JOIN tot LEFT JOIN top ON top.rk <= ks.k
 GROUP BY ks.k, tot.n_vocab, tot.total
 """,
+    # rank window over the TakeOrdered top-5000 vocab frame (bounded,
+    # zipf_alpha_fit's shape); 4-row k-table joined on rk<=k (range
+    # predicate against a tiny literal side)
+    allow={"BroadcastNestedLoopJoin", "GlobalWindow"},
 )
 def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.functions.textfn import tokens
@@ -249,6 +253,9 @@ SELECT day, n AS n_events, ent_nano,
 FROM ent, med
 ORDER BY ABS(ent_nano - med.med) DESC, day LIMIT 10
 """,
+    # prefix sum over the day-domain entropy histogram (bounded);
+    # 1-row total/median frames cross-joined back
+    allow={"BroadcastNestedLoopJoin", "GlobalWindow"},
 )
 def type_entropy_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
@@ -335,6 +342,9 @@ SELECT nd.n_name, nd.r_name, nd.rev AS rev_cents,
        1000000 * rrev.rrev // grev.grev AS region_share_ppm
 FROM nd JOIN rrev ON nd.rk = rrev.rk CROSS JOIN grev
 """,
+    # 1-row global-revenue frame cross-joined onto the 25-row nation
+    # domain
+    allow={"BroadcastNestedLoopJoin"},
 )
 def revenue_share_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")

@@ -56,6 +56,8 @@ SELECT u, v, cnt AS support,
        CAST(conf_ppm AS BIGINT) AS conf_ppm
 FROM scored ORDER BY lift_ppm DESC, u, v LIMIT 10
 """,
+    # 1-row basket-count frame cross-joined onto the scored pairs
+    allow={"BroadcastNestedLoopJoin"},
 )
 def basket_affinity_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = (

@@ -64,6 +64,9 @@ SELECT n.na AS n_era_a, n.nb AS n_era_b, mx.d_ppm,
         WHERE diff_ppm = mx.d_ppm) AS argmax_cents
 FROM n, mx
 """,
+    # 1-row n/max/argmax frames cross-joined onto the price-cents
+    # DOMAIN histogram
+    allow={"BroadcastNestedLoopJoin"},
 )
 def ks_test_price_eras(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -162,6 +165,9 @@ SELECT nn.n AS n_days, s.s AS s_stat, v.var18,
              / SQRT(CAST(v.var18 AS DOUBLE) / 18.0), 6) AS z
 FROM nn, s, v
 """,
+    # day-domain pair enumeration (db > da non-equi against the
+    # broadcast ~2.4k-row daily table) + 1-row stat frames
+    allow={"BroadcastNestedLoopJoin"},
 )
 def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.queries.analytics import daily_revenue_table

@@ -213,6 +213,9 @@ FROM nbr, p90
 WHERE nbr.prev IS NOT NULL AND nbr.nxt IS NOT NULL
   AND nbr.x > nbr.prev AND nbr.x > nbr.nxt AND nbr.x >= p90.p90
 """,
+    # lag/lead + p90 prefix sum over the bounded day domain; 1-row
+    # p90/total frames cross-joined back
+    allow={"BroadcastNestedLoopJoin", "GlobalWindow"},
 )
 def daily_revenue_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.queries.analytics import daily_revenue_table

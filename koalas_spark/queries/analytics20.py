@@ -227,6 +227,9 @@ SELECT mx.max_dd AS max_drawdown_cents,
         WHERE drawdown = mx.max_dd) AS peak_cents
 FROM mx
 """,
+    # 1-row max-drawdown frame cross-joined back onto the bounded
+    # day domain
+    allow={"BroadcastNestedLoopJoin"},
 )
 def max_drawdown_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.queries.analytics import daily_revenue_table

@@ -133,6 +133,8 @@ SELECT bin, good, bad, good_ppm, bad_ppm, woe_nano,
        END AS iv_contrib
 FROM w
 """,
+    # WOE/IV over the bounded 1..50 quantity-bin domain
+    allow={"GlobalWindow"},
 )
 def woe_iv_quantity_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").select(
@@ -209,6 +211,8 @@ SELECT brand, n_i AS n, r_i AS r,
 FROM (SELECT brand, CAST(n AS DOUBLE) AS n, CAST(r AS DOUBLE) AS r,
              n AS n_i, r AS r_i FROM b) t
 """,
+    # Wilson-bound rank over the 25-row brand aggregate
+    allow={"GlobalWindow"},
 )
 def wilson_return_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_returnflag")

@@ -63,6 +63,8 @@ FROM (SELECT *, ROW_NUMBER() OVER (ORDER BY score DESC, d ASC) AS rk
       FROM scored) t
 WHERE rk = 1
 """,
+    # prefix sums over the day-domain artifact (split-scan pricing)
+    allow={"GlobalWindow"},
 )
 def changepoint_binseg_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.queries.analytics import daily_revenue_table
@@ -141,6 +143,8 @@ SELECT d AS day_idx, x AS cents,
        CASE WHEN diff > 0 THEN 'up' ELSE 'down' END AS direction
 FROM flagged WHERE lhs > rhs
 """,
+    # trailing-20-day band over the ~2.4k-row day-domain artifact
+    allow={"GlobalWindow"},
 )
 def bollinger_breakout_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.queries.analytics import daily_revenue_table

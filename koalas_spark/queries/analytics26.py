@@ -127,6 +127,8 @@ SELECT CAST((p.doc_id * 10) // (mx.m + 1) AS INT) AS decile,
 FROM per_doc p, mx
 GROUP BY 1
 """,
+    # 1-row max-doc-id frame cross-joined onto the per-doc novelty rows
+    allow={"BroadcastNestedLoopJoin"},
 )
 def ngram_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
@@ -289,6 +291,8 @@ SELECT col_name, n, ndv, raw_bytes,
             // raw_bytes AS BIGINT) AS savings_ppm
 FROM u
 """,
+    # 1-row distinct-value-bytes frame cross-joined onto 1-row col stats
+    allow={"BroadcastNestedLoopJoin"},
 )
 def dict_encoding_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     def advise(df: DataFrame, col: str) -> DataFrame:

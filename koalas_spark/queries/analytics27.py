@@ -72,6 +72,7 @@ SELECT s AS probe,
          AS harmonic_nano
 FROM sizes
 """,
+    audit=False,
 )
 def harmonic_centrality_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.queries.mining import (

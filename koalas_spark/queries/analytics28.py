@@ -117,6 +117,8 @@ SELECT m.event_type,
          AS fano
 FROM m, span
 """,
+    # 1-row hour-span frame cross-joined onto the 5 type-moment rows
+    allow={"BroadcastNestedLoopJoin"},
 )
 def event_burstiness_fano(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").select(
@@ -175,6 +177,8 @@ SELECT d.digit, d.obs,
              / (10.0 * CAST(t.n AS DOUBLE)), 6) AS chi2_cell
 FROM d, t
 """,
+    # 1-row digit-total frame cross-joined onto the 10 digit rows
+    allow={"BroadcastNestedLoopJoin"},
 )
 def last_digit_uniformity_audit(
     spark: SparkSession, sf_dir: str
@@ -242,6 +246,8 @@ SELECT st.na, st.ndva, st.nb, st.ndvb, x.exact_rows,
             END AS BIGINT) AS err_ppm
 FROM st, x
 """,
+    # 1-row stats frames cross-joined together (na/ndv, nb/ndv, exact)
+    allow={"BroadcastNestedLoopJoin"},
 )
 def join_cardinality_estimate_audit(
     spark: SparkSession, sf_dir: str

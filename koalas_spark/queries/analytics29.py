@@ -139,6 +139,9 @@ SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM stay) AS n_stayed,
        pairs.conc, pairs.disc
 FROM pairs
 """,
+    # 20-row top-k frames: non-equi Kendall pair self-join + 1-row
+    # churn-count frames cross-joined for the single summary row
+    allow={"BroadcastNestedLoopJoin", "GlobalWindow"},
 )
 def topk_churn_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").select(
@@ -238,6 +241,8 @@ SELECT x, y, c AS n_cell, lr_nano,
          AS mi_contrib_nano
 FROM w
 """,
+    # 1-row contingency-total frame + <=150-cell domain cross-join
+    allow={"BroadcastNestedLoopJoin"},
 )
 def quantity_return_mutual_info(
     spark: SparkSession, sf_dir: str

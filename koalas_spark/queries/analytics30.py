@@ -56,6 +56,8 @@ SELECT nat, seg, n_g,
             // (n_g * n) AS BIGINT) AS t_closeness_ppm
 FROM present
 """,
+    # variational-distance ranks over the bounded QI x band domain
+    allow={"GlobalWindow"},
 )
 def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cu = _t(spark, sf_dir, "customer").select(

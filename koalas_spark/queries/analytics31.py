@@ -151,6 +151,8 @@ m AS (
   FROM e)
 SELECT n_days, ROUND(num / den, 6) AS dw_stat FROM m
 """,
+    # lag-1 residual window over the day-domain artifact
+    allow={"GlobalWindow"},
 )
 def durbin_watson_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.queries.analytics import daily_revenue_table
@@ -298,6 +300,8 @@ SELECT p.i AS src_a, p.j AS src_b,
 FROM pairs p, mc
 GROUP BY 1, 2
 """,
+    # 190-row pair panel cross-joined with the bounded mask-count table
+    allow={"BroadcastNestedLoopJoin"},
 )
 def source_vocab_jaccard_matrix(
     spark: SparkSession, sf_dir: str

@@ -154,6 +154,8 @@ SELECT n_runs, n_up, n_dn,
              6) AS z_stat
 FROM runs
 """,
+    # run counting over the day-domain artifact
+    allow={"GlobalWindow"},
 )
 def runs_test_daily_direction(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.queries.analytics import daily_revenue_table
@@ -240,6 +242,8 @@ SELECT t.n_cells,
              / (256.0 * CAST(t.n AS DOUBLE)), 6) AS chi2
 FROM b, t GROUP BY t.n_cells, t.n
 """,
+    # 1-row coin-totals frame cross-joined onto the 256 cell counts
+    allow={"BroadcastNestedLoopJoin"},
 )
 def hash_uniformity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = F.md5(F.col("o_orderkey").cast("string"))

@@ -50,6 +50,8 @@ SELECT probe_id, n_exact, n_matched,
        CAST(n_matched * 1000000 // n_exact AS BIGINT) AS recall_ppm
 FROM m
 """,
+    # inherits #42's bounded probe-side nested loop (5-probe frame)
+    allow={"BroadcastNestedLoopJoin"},
 )
 def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     bf = ann_bruteforce_topk(spark, sf_dir).select("probe_id", "neighbor_id")

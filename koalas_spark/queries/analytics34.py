@@ -68,6 +68,8 @@ SELECT wk, CAST(MAX(nw) AS BIGINT) AS n_events,
             AS BIGINT) AS kl_nano
 FROM j GROUP BY wk
 """,
+    # per-week KL over the bounded (week x type) domain
+    allow={"GlobalWindow"},
 )
 def weekly_type_kl_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").select(
@@ -178,6 +180,8 @@ SELECT src, n_src,
        CAST((klp_nano + klq_nano) // 2 AS BIGINT) AS jsd_nano
 FROM halves
 """,
+    # 1-row corpus-token-total frame cross-joined onto per-term rows
+    allow={"BroadcastNestedLoopJoin"},
 )
 def source_token_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select("source", "text")

@@ -70,6 +70,8 @@ SELECT h.k, h.obs,
          AS chi2_cell
 FROM h, t
 """,
+    # 1-row lambda-moments frame cross-joined onto the <=10 count cells
+    allow={"BroadcastNestedLoopJoin"},
 )
 def lineitems_poisson_gof(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey")

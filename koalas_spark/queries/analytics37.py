@@ -46,6 +46,8 @@ SELECT yr, mo, cents, prev_cents,
        END AS yoy_growth_ppm
 FROM l WHERE prev_cents IS NOT NULL
 """,
+    # lag-12 over the bounded month domain
+    allow={"GlobalWindow"},
 )
 def yoy_growth_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")

@@ -178,6 +178,7 @@ SELECT n,
          AS spearman_rho
 FROM s
 """,
+    allow={"GlobalWindow"},
 )
 def spearman_daily_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -300,6 +301,8 @@ SELECT n, ROUND(h_raw, 6) AS h_stat,
          AS h_tie_corrected
 FROM hh
 """,
+    # 1-row tie-correction frame cross-joined onto the 1-row pivot
+    allow={"BroadcastNestedLoopJoin", "GlobalWindow"},
 )
 def kruskal_wallis_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").select(

@@ -74,6 +74,8 @@ SELECT lag, n AS n_days,
        ROUND({_CORR_SHAPE}, 6) AS xcorr
 FROM cd ORDER BY lag
 """,
+    # 15-row lag dimension cross-joined onto the bounded day table
+    allow={"BroadcastNestedLoopJoin"},
 )
 def cross_correlation_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     xd = daily_revenue_table(spark, sf_dir)
@@ -345,6 +347,8 @@ SELECT q, n AS n_diffs,
        ROUND((v / CAST(q AS DOUBLE)) / v1, 6) AS variance_ratio
 FROM vars, base WHERE q > 1 ORDER BY q
 """,
+    # 1-row q=1 variance frame cross-joined onto the 3 q rows
+    allow={"BroadcastNestedLoopJoin", "GlobalWindow"},
 )
 def variance_ratio_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = daily_revenue_table(spark, sf_dir)
@@ -436,6 +440,8 @@ SELECT n, day_idx,
                     / (CAST(n AS DOUBLE) - 1.0)), 6) AS g_stat
 FROM pick
 """,
+    # 1-row moment/max frames cross-joined onto the day table
+    allow={"BroadcastNestedLoopJoin"},
 )
 def grubbs_outlier_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = daily_revenue_table(spark, sf_dir)

@@ -21,6 +21,7 @@ SELECT c_nationkey FROM customer WHERE c_acctbal > 5000
 INTERSECT
 SELECT s_nationkey FROM supplier WHERE s_acctbal > 5000
 """,
+    bench=False,
 )
 def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = _t(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 5000).select("c_nationkey")
@@ -40,6 +41,7 @@ SELECT c_nationkey FROM customer WHERE c_acctbal > 5000
 EXCEPT
 SELECT s_nationkey FROM supplier WHERE s_acctbal > 5000
 """,
+    bench=False,
 )
 def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = _t(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 5000).select("c_nationkey")
@@ -67,6 +69,7 @@ SELECT c_custkey,
        levenshtein(c_mktsegment, 'BUILDING') AS lev_building
 FROM customer
 """,
+    bench=False,
 )
 def string_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer")
@@ -97,6 +100,7 @@ SELECT o_orderkey,
        CAST(date_diff('day', DATE '1995-01-01', o_orderdate) AS INT) AS days_since_95
 FROM orders WHERE o_orderkey <= 1000
 """,
+    bench=False,
 )
 def date_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 1000)
@@ -124,6 +128,7 @@ FROM (
   FROM events) t
 GROUP BY event_type, k_bucket
 """,
+    bench=False,
 )
 def json_struct_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
@@ -149,6 +154,7 @@ SELECT o_orderpriority, COUNT(*) AS n_items,
 FROM orders JOIN lineitem ON l_orderkey = o_orderkey
 GROUP BY o_orderpriority
 """,
+    bench=False,
 )
 def bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.operators.bucketing import bucketed_pair

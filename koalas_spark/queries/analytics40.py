@@ -69,6 +69,10 @@ SELECT abc_class,
                   / CAST(MAX(total) AS DOUBLE)) AS BIGINT) AS share_ppm
 FROM cls GROUP BY 1 ORDER BY 1
 """,
+    # gate (the old plan-wide conjunction missed them); each is also
+    # STRUCTURALLY verified bounded by _global_window_audit ----
+    # value-domain bucket table (digit-count x leading-2-digits)
+    allow={"GlobalWindow"},
 )
 def abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
@@ -276,6 +280,8 @@ SELECT n AS n_orders,
        ROUND(MAX(CASE WHEN r = 31 THEN mean_b END), 6) AS ci_hi
 FROM rk, full_m GROUP BY n, s1
 """,
+    # 32-row replica dimension cross-joined after the scan projection
+    allow={"BroadcastNestedLoopJoin", "GlobalWindow"},
 )
 def bootstrap_ci_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.queries.analytics import _spread

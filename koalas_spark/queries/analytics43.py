@@ -63,6 +63,10 @@ SELECT n AS n_days, c AS concordant, dct AS discordant,
          AS tau_b
 FROM s, nd
 """,
+    # 1-row day-count frame cross-joined onto the 1-row sign counts;
+    # the days^2 pair sweep is a non-equi range join (d2 > d1) over
+    # the bounded day domain — the theil_sen shape
+    allow={"BroadcastNestedLoopJoin"},
 )
 def kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -205,6 +209,8 @@ SELECT n AS n_days,
              / (1.0 - a21 * r1 - p2 * r2), 6) AS pacf3
 FROM dl2
 """,
+    # 1-row lag-moment pivot cross-joined onto the 1-row global frame
+    allow={"BroadcastNestedLoopJoin"},
 )
 def pacf_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = daily_revenue_table(spark, sf_dir)

@@ -68,6 +68,8 @@ SELECT n, mi_nano, hx_nano,
             AS BIGINT) AS theil_u_ppm
 FROM u
 """,
+    # 1-row corpus-total frame cross-joined onto the 15-cell table
+    allow={"BroadcastNestedLoopJoin"},
 )
 def theil_u_priority_status(
     spark: SparkSession, sf_dir: str
@@ -234,6 +236,8 @@ SELECT n AS n_days,
        ROUND({_HURST_SLOPE}, 6) AS hurst
 FROM pv
 """,
+    # four 1-row per-w mean frames cross-joined into the slope pivot
+    allow={"BroadcastNestedLoopJoin"},
 )
 def hurst_rs_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = daily_revenue_table(spark, sf_dir)

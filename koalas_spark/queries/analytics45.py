@@ -197,6 +197,8 @@ SELECT source,
        CAST(1000000000 - SUM(t_nano) AS BIGINT) AS hellinger_sq_nano
 FROM terms GROUP BY source ORDER BY source
 """,
+    # 1-row corpus-token-total frame cross-joined onto the cells
+    allow={"BroadcastNestedLoopJoin"},
 )
 def source_token_hellinger(
     spark: SparkSession, sf_dir: str

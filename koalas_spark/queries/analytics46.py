@@ -65,6 +65,8 @@ SELECT s_from, s_to, CAST(COUNT(*) AS BIGINT) AS n
 FROM tr WHERE s_from IS NOT NULL
 GROUP BY 1, 2 ORDER BY 1, 2
 """,
+    # 1-row moment frame cross-joined onto the bounded day table
+    allow={"BroadcastNestedLoopJoin", "GlobalWindow"},
 )
 def sax_transition_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = daily_revenue_table(spark, sf_dir)
@@ -155,6 +157,8 @@ SELECT src_a, src_b,
        CAST(SUM(d_micro) // COUNT(*) AS BIGINT) AS delta_micro
 FROM pairs GROUP BY 1, 2 ORDER BY 1, 2
 """,
+    # 30-row top-token frame cross-joined onto the 20 sources
+    allow={"BroadcastNestedLoopJoin"},
 )
 def burrows_delta_sources(
     spark: SparkSession, sf_dir: str

@@ -70,6 +70,8 @@ SELECT n AS n_weeks,
              - 3.0 * n_d * 8.0, 6) AS friedman_chi2
 FROM cd
 """,
+    # 1-row week-count frame cross-joined onto the 1-row dow pivot
+    allow={"BroadcastNestedLoopJoin"},
 )
 def friedman_dow_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = daily_revenue_table(spark, sf_dir)

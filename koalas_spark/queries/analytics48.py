@@ -53,6 +53,8 @@ SELECT k, CAST(t // k AS BIGINT) AS mean_ln_nano,
        ROUND(1000000000e0 / CAST(t // k AS DOUBLE), 6) AS hill_alpha
 FROM s
 """,
+    # 1-row x_ref frame cross-joined onto the 500 top rows
+    allow={"BroadcastNestedLoopJoin", "GlobalWindow"},
 )
 def hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders").select(
@@ -253,6 +255,8 @@ SELECT d AS day_idx, z_cents,
        CASE WHEN dev > 0 THEN 'up' ELSE 'down' END AS side
 FROM v WHERE ABS(dev) > lim ORDER BY d
 """,
+    # bounded day-domain pair join (j.idx <= t.idx) + 1-row moments
+    allow={"BroadcastNestedLoopJoin"},
 )
 def ewma_control_chart_daily(
     spark: SparkSession, sf_dir: str

@@ -270,6 +270,9 @@ SELECT l_partkey, value FROM val
 WHERE value > (SELECT CAST(CAST(SUM(CAST(value AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE) * 0.001
                FROM val)
 """,
+    # scalar-subquery sides (1-row count/avg frames) joined without a
+    # key — a broadcast nested loop over a single row is the plan
+    allow={"BroadcastNestedLoopJoin"},
 )
 def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")

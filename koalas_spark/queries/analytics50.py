@@ -242,6 +242,8 @@ SELECT CAST((SELECT COUNT(*) FROM shared) AS BIGINT) AS n_shared,
        CAST(SUM(t_nano) AS BIGINT) AS rbo_nano
 FROM terms
 """,
+    # 50-row depth-weight table range-joined onto the shared ranks
+    allow={"BroadcastNestedLoopJoin", "GlobalWindow"},
 )
 def rbo_token_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.functions.textfn import tokens

@@ -62,6 +62,8 @@ SELECT na, nb,
             AS BIGINT) AS emd_ppm
 FROM s
 """,
+    # CDF gaps over the bounded quantity-value domain (1..50)
+    allow={"GlobalWindow"},
 )
 def wasserstein_quantity_years(
     spark: SparkSession, sf_dir: str
@@ -151,6 +153,8 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_days,
        CAST(SUM(ape_ppm) // COUNT(*) AS BIGINT) AS mape_ppm
 FROM e
 """,
+    # lag-7 over the day-domain artifact
+    allow={"GlobalWindow"},
 )
 def naive_forecast_backtest(
     spark: SparkSession, sf_dir: str

@@ -110,6 +110,8 @@ SELECT n1, n2, m,
        CAST((SELECT COUNT(*) FROM customer) AS BIGINT) AS true_n
 FROM s
 """,
+    # four 1-row capture-count frames cross-joined into the estimate
+    allow={"BroadcastNestedLoopJoin"},
 )
 def capture_recapture_customers(
     spark: SparkSession, sf_dir: str

@@ -74,6 +74,8 @@ SELECT m_edges, m_in, n_communities,
                          AS VARCHAR) AS DOUBLE), 6) AS q_modularity
 FROM agg
 """,
+    # three 1-row frames (m, m_in, community stats) cross-joined
+    allow={"BroadcastNestedLoopJoin"},
 )
 def modularity_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.queries.mining import (
@@ -276,6 +278,8 @@ SELECT s.status, s.yr, s.n_r, s.n_n,
 FROM s, o
 ORDER BY s.status, s.yr
 """,
+    # 1-row overall-sign frame cross-joined onto the 14-row strata
+    allow={"BroadcastNestedLoopJoin"},
 )
 def simpson_reversal_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = _t(spark, sf_dir, "lineitem").select(

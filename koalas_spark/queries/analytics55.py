@@ -62,6 +62,7 @@ SELECT day, cents, ph_cents,
             > 10 * CAST(total AS DECIMAL(38,0)) AS INT) AS is_alarm
 FROM ph ORDER BY day
 """,
+    allow={"GlobalWindow"},
 )
 def page_hinkley_daily_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
@@ -150,6 +151,9 @@ SELECT decile, n_cust, decile_cents,
            / CAST(total AS DOUBLE)) AS BIGINT) AS cum_share_ppm
 FROM cum ORDER BY decile
 """,
+    # NTILE over the <=customer-domain cents table (decile collapse);
+    # bounded: deciles computed on the per-customer AGGREGATE
+    allow={"GlobalWindow"},
 )
 def lorenz_curve_customer_deciles(
     spark: SparkSession, sf_dir: str
@@ -232,6 +236,8 @@ FROM ct JOIN rt ON rt.source = ct.source
         CROSS JOIN n
 ORDER BY ct.source, ct.lang
 """,
+    # 1-row corpus-total frame cross-joined onto the 25-cell domain
+    allow={"BroadcastNestedLoopJoin"},
 )
 def source_lang_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     ct = (

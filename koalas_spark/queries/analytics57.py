@@ -214,6 +214,8 @@ SELECT s.lang, s.n_docs, s.toks, s.chars,
                   AS DOUBLE)) AS BIGINT) AS density_vs_en_ppm
 FROM s CROSS JOIN e ORDER BY s.lang
 """,
+    # 1-row English-baseline frame cross-joined onto the 5-lang domain
+    allow={"BroadcastNestedLoopJoin"},
 )
 def cross_lingual_length_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = (

@@ -74,6 +74,9 @@ SELECT CAST((SELECT COUNT(*) FROM pt) AS BIGINT) AS n_points,
          AS max_cell_pop,
        CAST((SELECT COUNT(*) FROM pairs) AS BIGINT) AS n_neighbor_pairs
 """,
+    # 3-row offset dims cross-joined for the bounded 3x3 cell fan-out;
+    # three 1-row stats frames cross-joined for the summary row
+    allow={"BroadcastNestedLoopJoin"},
 )
 def spatial_grid_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = "md5(CAST(c_custkey AS STRING))"
@@ -276,6 +279,8 @@ SELECT brand, cnt,
        CAST(ROW_NUMBER() OVER (ORDER BY cnt DESC, brand ASC) AS INT) AS rk
 FROM c ORDER BY rk LIMIT 3
 """,
+    # rank over the sketch's <=maxItemsTracked frequent-item rows
+    allow={"GlobalWindow"},
 )
 def approx_top_k_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window

@@ -78,6 +78,9 @@ SELECT k, r_k,
          AS BIGINT) AS lb_cum_p12
 FROM t ORDER BY k
 """,
+    # 7-row lag frame fanned over the bounded day table + 1-row n frame
+    # (the #254 acf shape)
+    allow={"BroadcastNestedLoopJoin", "GlobalWindow"},
 )
 def ljung_box_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
@@ -205,6 +208,8 @@ FROM g, tot
 JOIN nation n ON n.n_nationkey = g.nk
 ORDER BY nation
 """,
+    # 1-row corpus-total frame cross-joined onto the 25-row group table
+    allow={"BroadcastNestedLoopJoin"},
 )
 def theil_between_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")

@@ -124,6 +124,7 @@ FROM (
   FROM events) t
 GROUP BY cohort_week, weeks_since
 """,
+    bench=False,
 )
 def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").select("user_id", "ts")
@@ -213,6 +214,7 @@ SELECT channel, COUNT(*) AS n_users,
 FROM first_touch f LEFT JOIN rev r ON f.user_id = r.user_id
 GROUP BY channel
 """,
+    bench=False,
 )
 def first_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
@@ -254,6 +256,7 @@ SELECT l_returnflag, l_linestatus,
 FROM lineitem
 GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
 """,
+    bench=False,
 )
 def grouping_sets_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
@@ -286,6 +289,7 @@ SELECT event_type, CAST(FLOOR(value / 50) AS INT) AS bucket,
 FROM events
 GROUP BY event_type, bucket
 """,
+    bench=False,
 )
 def value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
@@ -364,6 +368,7 @@ SELECT COALESCE(o.day, e.day) AS day,
             ELSE 'both' END AS presence
 FROM o FULL OUTER JOIN e ON o.day = e.day
 """,
+    bench=False,
 )
 def full_outer_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = (
@@ -405,6 +410,7 @@ EXCEPT ALL
 SELECT l_partkey FROM lineitem
 WHERE l_shipdate >= TIMESTAMP '1998-01-01' AND l_shipdate < TIMESTAMP '1999-01-01'
 """,
+    bench=False,
 )
 def set_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
@@ -439,6 +445,7 @@ b AS (
 SELECT a.pclass, n_orders, avg_price
 FROM a JOIN b ON a.pclass IS NOT DISTINCT FROM b.pclass
 """,
+    bench=False,
 )
 def null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -479,6 +486,7 @@ SELECT event_type,
 FROM events
 GROUP BY event_type
 """,
+    bench=False,
 )
 def events_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
@@ -510,6 +518,7 @@ FROM customer c, LATERAL (
   FROM orders o WHERE o.o_custkey = c.c_custkey
   ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
 """,
+    bench=False,
 )
 def lateral_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
@@ -593,6 +602,7 @@ GROUP BY token
 ORDER BY approx_count DESC, token
 LIMIT 50
 """,
+    bench=False,
 )
 def approx_token_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.functions.textfn import tokens
@@ -626,6 +636,7 @@ FROM lineitem
 WHERE l_shipdate <= DATE '1998-09-02'
 GROUP BY l_returnflag, l_linestatus
 """,
+    bench=False,
 )
 def pipe_syntax_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     _t(spark, sf_dir, "lineitem").createOrReplaceTempView("_pipe_lineitem")
@@ -668,6 +679,7 @@ SELECT 'sum_price',
        CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(25,6))) FILTER (o_orderpriority = '5-LOW') AS VARCHAR) AS DOUBLE)
 FROM orders
 """,
+    bench=False,
 )
 def transpose_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -753,6 +765,7 @@ SELECT anc AS node, COUNT(*) AS subtree_docs,
        CAST(SUM(n_chars) AS BIGINT) AS subtree_chars
 FROM up GROUP BY anc
 """,
+    bench=False,
 )
 def recursive_subtree_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
@@ -792,6 +805,7 @@ SELECT o_orderpriority,
        TRUE AS approx_within_2pct
 FROM orders GROUP BY o_orderpriority
 """,
+    bench=False,
 )
 def percentile_approx_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -833,6 +847,7 @@ c AS (
 SELECT s.minute, CAST(COALESCE(c.n, 0) AS BIGINT) AS n
 FROM spine s LEFT JOIN c ON s.minute = c.minute
 """,
+    bench=False,
 )
 def timeseries_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
@@ -873,6 +888,7 @@ FROM (
     ON o.o_custkey = e.user_id AND o.o_orderdate >= e.ts) t
 WHERE rk = 1
 """,
+    bench=False,
 )
 def asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.operators.asof import asof_join
@@ -916,6 +932,7 @@ SELECT e.event_type,
 FROM events e JOIN profile p USING (user_id)
 GROUP BY e.event_type
 """,
+    bench=False,
 )
 def salted_join_hot_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.operators.skew import salted_join

@@ -187,6 +187,7 @@ SELECT CAST(ds % 10 AS BIGINT) AS check_digit,
        CAST(COUNT(*) AS BIGINT) AS n_orders
 FROM d GROUP BY 1 ORDER BY 1
 """,
+    allow={"Python"},
 )
 def arrow_python_udf_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.functions import udf

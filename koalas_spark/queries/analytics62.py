@@ -47,6 +47,8 @@ d AS (
 SELECT CAST(dist AS INT) AS dist, CAST(COUNT(*) AS BIGINT) AS n_users
 FROM d GROUP BY dist ORDER BY dist
 """,
+    # 1-row modal-journey frame cross-joined onto the per-user journeys
+    allow={"BroadcastNestedLoopJoin"},
 )
 def event_journey_edit_distance(
     spark: SparkSession, sf_dir: str

@@ -153,6 +153,8 @@ SELECT m.n AS n_days,
          AS se_jack
 FROM m, num
 """,
+    # 1-row (n, S) stats frame cross-joined onto the bounded day table
+    allow={"BroadcastNestedLoopJoin"},
 )
 def jackknife_variance_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.queries.analytics import daily_revenue_table
@@ -446,6 +448,8 @@ SELECT source, n_tokens,
          AS BIGINT) AS h_nano
 FROM agg
 """,
+    # 1-row corpus-token-total frame cross-joined onto the vocab model
+    allow={"BroadcastNestedLoopJoin"},
 )
 def text_perplexity_unigram(
     spark: SparkSession, sf_dir: str

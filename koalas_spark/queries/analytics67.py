@@ -63,6 +63,7 @@ SELECT n AS n_1997, m AS n_1998,
              / (CAST(n AS DOUBLE) * m * (n + m) * (n + m)), 6) AS omega2
 FROM agg
 """,
+    allow={"GlobalWindow"},
 )
 def cramer_von_mises_quantity_years(
     spark: SparkSession, sf_dir: str
@@ -158,6 +159,7 @@ SELECT CAST(k AS BIGINT) AS k, n_nodes, n_edges,
          ELSE 0 END AS BIGINT) AS phi_ppm
 FROM agg
 """,
+    allow={"BroadcastNestedLoopJoin"},
 )
 def rich_club_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.queries.mining import (
@@ -263,6 +265,9 @@ SELECT nc.n_cal, tst.n_test,
        CAST(tst.n_cov * 1000000 // tst.n_test AS BIGINT) AS coverage_ppm
 FROM nc, qh, tst
 """,
+    # 1-row n_cal/q_hat/test frames crossed; prefix over the
+    # residual-cents DOMAIN histogram
+    allow={"BroadcastNestedLoopJoin", "GlobalWindow"},
 )
 def conformal_interval_order_value(
     spark: SparkSession, sf_dir: str
@@ -395,6 +400,9 @@ SELECT np AS n_points,
          AS beta
 FROM fit
 """,
+    # 14-row power-of-2 checkpoint dim range-probed against the
+    # first-doc and per-doc-count aggregates; 1-row max-doc frame
+    allow={"BroadcastNestedLoopJoin"},
 )
 def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.functions.textfn import tokens

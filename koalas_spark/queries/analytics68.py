@@ -56,6 +56,8 @@ SELECT probe_id, neighbor_id, neg_label, cos_sim, rk FROM (
   WHERE p.vec_id < 5) t
 WHERE rk <= 5
 """,
+    # 5-probe frame broadcast onto the corpus without an equi key
+    allow={"BroadcastNestedLoopJoin"},
 )
 def hard_negative_mining_embeddings(
     spark: SparkSession, sf_dir: str
@@ -141,6 +143,8 @@ SELECT MAX(p) AS n_pos, MAX(n) AS n_neg,
        CAST(SUM(t_nano) AS BIGINT) AS auc_pr_nano
 FROM terms
 """,
+    # prefix sums over the bounded $100 score-bucket domain
+    allow={"GlobalWindow"},
 )
 def pr_auc_priority_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -255,6 +259,8 @@ SELECT n AS n_test,
              / (CAST(n AS DOUBLE) * n)) AS BIGINT) AS unc_nano
 FROM agg
 """,
+    # 1-row (n, ybar) frame crossed onto the 11-bin domain table
+    allow={"BroadcastNestedLoopJoin"},
 )
 def brier_decomposition_quality(
     spark: SparkSession, sf_dir: str

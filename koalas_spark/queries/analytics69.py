@@ -128,6 +128,8 @@ SELECT n.n AS n_weeks,
          AS alpha
 FROM n, num, den
 """,
+    # 1-row span frame crossed onto the bounded week x item matrix
+    allow={"BroadcastNestedLoopJoin"},
 )
 def cronbach_alpha_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "orders").select(
@@ -228,6 +230,8 @@ SELECT n.n AS n_obs, agg.n_cells,
        agg.g_nano
 FROM n, agg
 """,
+    # 1-row N / row-count frames crossed onto the 6-cell domain
+    allow={"BroadcastNestedLoopJoin"},
 )
 def g_test_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "lineitem").groupBy(
@@ -338,6 +342,8 @@ SELECT m.n AS n_orders,
          AS steady_state_ppm
 FROM m, intr
 """,
+    # 1-row horizon frame crossed onto the day-domain backlog prefix
+    allow={"BroadcastNestedLoopJoin", "GlobalWindow"},
 )
 def littles_law_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders").select(
@@ -468,6 +474,8 @@ SELECT np AS n_points,
          AS k_shape
 FROM fit
 """,
+    # 1-row n frame crossed onto the bounded lag-domain suffix sums
+    allow={"BroadcastNestedLoopJoin", "GlobalWindow"},
 )
 def weibull_survival_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")

@@ -54,6 +54,7 @@ SELECT user_id, last_ts, ema8 FROM (
   WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)) t
 WHERE rk = 1
 """,
+    bench=False,
 )
 def ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
@@ -103,6 +104,7 @@ FROM events
 WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
              RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
 """,
+    bench=False,
 )
 def trailing_hour_user_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
@@ -154,6 +156,7 @@ SELECT dev.event_type,
 FROM dev JOIN mad ON dev.event_type = mad.event_type
 GROUP BY dev.event_type
 """,
+    bench=False,
 )
 def mad_outlier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
@@ -202,6 +205,7 @@ FROM (
   FROM orders) t
 WHERE prev IS NULL OR o_totalprice > prev
 """,
+    bench=False,
 )
 def record_breaking_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders").select(
@@ -239,6 +243,7 @@ UNION ALL
 SELECT 2, CAST(COUNT(*) AS BIGINT), CAST(SUM(o_orderkey) AS BIGINT)
 FROM orders
 """,
+    bench=False,
 )
 def snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.sources.snapshots import read_snapshot
@@ -297,6 +302,7 @@ SELECT event_type, next_type,
 FROM seq WHERE next_type IS NOT NULL
 GROUP BY event_type, next_type
 """,
+    bench=False,
 )
 def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "events").select("user_id", "event_type", "ts", "event_id")
@@ -345,6 +351,8 @@ SELECT CAST((SELECT COUNT(*) FROM v) AS BIGINT) AS n_viewers,
        CAST(MAX(secs) AS BIGINT)                AS max_s
 FROM l
 """,
+    bench=False,
+    allow={"BroadcastNestedLoopJoin"},
 )
 def conversion_latency_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "events").select("user_id", "event_type", "ts")
@@ -402,6 +410,7 @@ r AS (SELECT user_id, streak_len, streak_start,
 SELECT user_id, CAST(streak_len AS BIGINT) AS streak_len, streak_start
 FROM r WHERE rk = 1
 """,
+    bench=False,
 )
 def longest_daily_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "events").select(

@@ -219,6 +219,8 @@ SELECT doc_id,
          AS pitch_lag
 FROM r
 """,
+    # real WAV decode + integer autocorrelation runs in mapInPandas
+    allow={"Python"},
 )
 def multimodal_audio_pitch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.operators.multimodal import audio_pitch_probe
@@ -283,6 +285,10 @@ FROM pairs
 ORDER BY dist_scaled ASC, d_i ASC, d_j ASC
 LIMIT 3
 """,
+    # matrix-profile pair: day-squared non-equi self-join over the
+    # ~2.4k-row daily artifact (theil_sen class) + bounded-domain
+    # subsequence windows over the same artifact
+    allow={"BroadcastNestedLoopJoin", "GlobalWindow"},
 )
 def daily_revenue_motif(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -386,6 +392,10 @@ FROM prof
 ORDER BY nn_dist DESC, d_i ASC
 LIMIT 3
 """,
+    # matrix-profile pair: day-squared non-equi self-join over the
+    # ~2.4k-row daily artifact (theil_sen class) + bounded-domain
+    # subsequence windows over the same artifact
+    allow={"BroadcastNestedLoopJoin", "GlobalWindow"},
 )
 def daily_revenue_discord(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window

@@ -46,6 +46,7 @@ FROM (
   FROM events) t
 GROUP BY event_type
 """,
+    bench=False,
 )
 def event_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").select("user_id", "event_type", "ts", "event_id")
@@ -235,6 +236,10 @@ SELECT a.label AS label_a, b.label AS label_b,
                     * list_dot_product(b.v, b.v)), 6) AS cosine
 FROM vecs a JOIN vecs b ON a.label < b.label
 """,
+    bench=False,
+    # 10-row centroid frames self-joined on label < label (non-equi
+    # upper triangle) — k x k tiny by construction
+    allow={"BroadcastNestedLoopJoin"},
 )
 def centroid_similarity_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings")
@@ -351,6 +356,7 @@ SELECT d.event_type, d.day, CAST(d.x AS BIGINT) AS cnt,
           > 4 * m.n * (m.n * m.q - m.s * m.s)) AS is_outlier
 FROM daily d JOIN mom m ON d.event_type = m.event_type
 """,
+    bench=False,
 )
 def event_volume_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").select("event_type", F.to_date("ts").alias("day"))
@@ -398,6 +404,7 @@ SELECT CAST(COUNT(DISTINCT day) AS BIGINT) AS n_days,
          AS sum_value_total
 FROM daily
 """,
+    bench=False,
 )
 def partition_overwrite_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
@@ -474,6 +481,9 @@ SELECT CONCAT(CASE WHEN r_days <= med_r THEN 'R' ELSE 'r' END,
 FROM rfm CROSS JOIN med
 GROUP BY segment
 """,
+    bench=False,
+    # 1-row median-threshold frame cross-joined onto the RFM table
+    allow={"BroadcastNestedLoopJoin"},
 )
 def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -535,6 +545,7 @@ SELECT o_orderpriority,
 FROM lineitem JOIN orders ON l_orderkey = o_orderkey
 GROUP BY 1, 2
 """,
+    bench=False,
 )
 def ship_latency_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
@@ -588,6 +599,7 @@ WITH pit AS (
 SELECT state, CAST(COUNT(*) AS BIGINT) AS n_events
 FROM pit GROUP BY state
 """,
+    bench=False,
 )
 def scd2_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.operators.asof import asof_join
@@ -655,6 +667,7 @@ SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
        CAST(SUM(k * 1000000 // n_bg) // COUNT(*) AS BIGINT) AS avg_cov_ppm
 FROM per_doc GROUP BY lang
 """,
+    bench=False,
 )
 def bigram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.functions.textfn import tokens
@@ -726,6 +739,7 @@ FROM (
     FROM documents) t) s
 GROUP BY lang
 """.replace("{profile_counts}", __import__("koalas_spark.queries.text", fromlist=["_profile_counts_sql"])._profile_counts_sql()),
+    bench=False,
 )
 def langid_confidence_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.functions.textfn import tokens
@@ -773,6 +787,7 @@ SELECT CAST(ts AS DATE) AS day, event_type,
        {_dsum_sql('value')} AS sum_value
 FROM events GROUP BY 1, 2
 """,
+    bench=False,
 )
 def incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut = "2024-01-24"
@@ -834,6 +849,7 @@ SELECT d1.day, CAST(d1.exact_users AS BIGINT) AS exact_users,
 FROM d1 LEFT JOIN ret ON ret.day = d1.day
 WHERE EXISTS (SELECT 1 FROM d1 n WHERE n.day = d1.day + 1)
 """,
+    bench=False,
 )
 def sketch_overlap_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").select(
@@ -907,6 +923,7 @@ SELECT CAST(COUNT(gap_days) AS BIGINT) AS n_gaps,
        CAST(MAX(gap_days) AS INT) AS max_days
 FROM gaps
 """,
+    bench=False,
 )
 def repurchase_interval_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderkey", "o_orderdate")
@@ -950,6 +967,7 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
                o_orderpriority), 1, 15)) AS BIGINT)) AS BIGINT) AS xor_sig
 FROM orders
 """,
+    bench=False,
 )
 def table_checksum_xor(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -998,6 +1016,7 @@ GROUP BY path
 ORDER BY support DESC, path
 LIMIT 20
 """,
+    bench=False,
 )
 def event_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").select("user_id", "event_type", "ts", "event_id")
@@ -1049,6 +1068,7 @@ SELECT event_type,
          AS sum_filled
 FROM filled GROUP BY event_type
 """,
+    bench=False,
 )
 def locf_impute(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").select(
@@ -1107,6 +1127,7 @@ SELECT o_year, o_orderpriority, o_orderstatus,
        n < 10 AS reidentifiable
 FROM qi
 """,
+    bench=False,
 )
 def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -1148,6 +1169,7 @@ SELECT CASE WHEN l_quantity < 10 THEN 'small'
 FROM lineitem
 GROUP BY band
 """,
+    bench=False,
 )
 def sql_udf_revenue_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.sql(

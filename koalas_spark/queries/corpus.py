@@ -47,6 +47,9 @@ SELECT lang, term, tf, df, score FROM (
   FROM scored) t
 WHERE rk <= 3
 """,
+    # scalar-subquery sides (1-row count/avg frames) joined without a
+    # key — a broadcast nested loop over a single row is the plan
+    allow={"BroadcastNestedLoopJoin"},
 )
 def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
@@ -98,6 +101,7 @@ FROM (SELECT doc_id, unnest(string_split_regex(TRIM(text), '\\s+')) AS token
       FROM documents) t
 GROUP BY token, doc_id // 128
 """,
+    bench=False,
 )
 def inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")

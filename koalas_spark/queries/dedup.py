@@ -238,6 +238,8 @@ SELECT id_a AS doc_a, id_b AS doc_b,
        CAST(bit_count(xor(ha, hb)) AS BIGINT) AS hamming
 FROM cand WHERE bit_count(xor(ha, hb)) <= 3
 """,
+    bench=False,
+    allow={"Python"},
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
@@ -425,6 +427,7 @@ SELECT source,
        COUNT(*) AS n_new
 FROM kept k GROUP BY source
 """,
+    bench=False,
 )
 def incremental_dedup_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.functions.textfn import normalize_text
@@ -487,6 +490,7 @@ SELECT CASE WHEN sza < szb THEN src ELSE dst END AS contained_id,
        (inter * 100) // LEAST(sza, szb) AS containment_pct
 FROM hits
 """,
+    bench=False,
 )
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.operators.dedup import containment_pairs
@@ -533,6 +537,8 @@ FROM av a JOIN av b
   ON a.label = b.label AND a.cell = b.cell AND a.vec_id < b.vec_id
 WHERE {_NDC_COS.format(a="a", b="b")} >= 0.35
 """,
+    # 16-row centroid frame cross-joined for the cell assignment
+    allow={"BroadcastNestedLoopJoin"},
 )
 def neardup_embedding_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.functions.vectorfn import dot, norm_sq

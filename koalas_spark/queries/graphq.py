@@ -73,6 +73,8 @@ r0 AS (SELECT n_nationkey AS node, {_SCALE} // n.n AS r
 SELECT nn.n_name AS nation, CAST(r3.r AS BIGINT) AS rank_scaled
 FROM r3 JOIN nation nn ON r3.node = nn.n_nationkey
 """,
+    # 1-row node-count frame cross-joined onto the 25-row nation frame
+    allow={"BroadcastNestedLoopJoin"},
 )
 def pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")

@@ -95,6 +95,7 @@ FROM lineitem
 WHERE l_partkey BETWEEN 120 AND 180 AND l_suppkey BETWEEN 6 AND 9
 GROUP BY l_returnflag
 """,
+    bench=False,
 )
 def hilbert_box_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = hilbert_lineitem_path(spark, sf_dir)

@@ -263,6 +263,8 @@ SELECT CAST((SELECT COUNT(*) FROM e) AS BIGINT) AS n_edges,
              JOIN e e3 ON e3.s = e1.t AND e3.t = e2.t) AS BIGINT)
          AS n_triangles
 """,
+    # two 1-row frames (edge count × triangle count) cross-joined
+    allow={"BroadcastNestedLoopJoin"},
 )
 def triangle_count_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # EXPLICIT scale guard (round-12 sf10 gate): the exact wedge set
@@ -750,6 +752,8 @@ SELECT CAST((SELECT COUNT(*) FROM e) AS BIGINT) AS n_edges_sampled,
        CAST(8 * tri.c AS BIGINT) AS est_triangles
 FROM tri
 """,
+    # same two-1-row-frames crossJoin as triangle_count_parts
+    allow={"BroadcastNestedLoopJoin"},
 )
 def triangle_count_doulion(spark: SparkSession, sf_dir: str) -> DataFrame:
     coin = F.substring(
@@ -801,6 +805,7 @@ SELECT d.doc_id, d.lang,
        ROUND((d.n_chars - th.med) / th.iqr, 4) + 0.0 AS robust_z
 FROM documents d JOIN th ON d.lang = th.lang
 """,
+    bench=False,
 )
 def robust_scale_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
@@ -848,6 +853,10 @@ SELECT bucket, n_types, mass,
             // (SELECT SUM(mass) FROM b) AS BIGINT) AS cum_ppm
 FROM b
 """,
+    bench=False,
+    # cumulative coverage over the ≤64-row log2-frequency bucket frame,
+    # plus the 1-row total-mass frame cross-joined onto it
+    allow={"BroadcastNestedLoopJoin", "GlobalWindow"},
 )
 def token_freq_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
@@ -919,6 +928,7 @@ SELECT tot.doc_id,
          AS shared_ppm
 FROM tot LEFT JOIN dup ON tot.doc_id = dup.doc_id
 """,
+    bench=False,
 )
 def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")

@@ -33,6 +33,8 @@ SELECT doc_id,
        sha256(text) AS sha
 FROM documents
 """,
+    bench=False,
+    allow={"Python"},
 )
 def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
@@ -85,6 +87,8 @@ SELECT doc_id,
        END AS features
 FROM documents
 """,
+    bench=False,
+    allow={"Python"},
 )
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.operators.multimodal import byte_histogram_features
@@ -118,6 +122,8 @@ SELECT doc_id, 'image/x-portable-graymap' AS kind,
            AS resized_sha
 FROM src
 """,
+    # real raster decode (pure-numpy netpbm/BMP) runs in mapInPandas
+    allow={"Python"},
 )
 def multimodal_decode_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.operators.multimodal import decode_resize_reencode
@@ -163,6 +169,9 @@ SELECT width, height, CAST(COUNT(*) AS BIGINT) AS n,
          AS content_md5
 FROM r GROUP BY width, height
 """,
+    bench=False,
+    # Arrow-vectorized Python stages (grouped-map / map-in-pandas)
+    allow={"Python"},
 )
 def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.operators.multimodal import resize_frames
@@ -215,6 +224,9 @@ SELECT doc_id, frame_no,
        'audio/wav' AS kind
 FROM s
 """,
+    bench=False,
+    # real WAV parse + frame features run in mapInPandas
+    allow={"Python"},
 )
 def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.operators.multimodal import audio_frame_features
@@ -260,6 +272,9 @@ SELECT doc_id, CAST(frame_no AS INT) AS frame_no,
        'video/x-msvideo' AS kind
 FROM fr
 """,
+    bench=False,
+    # real AVI container walk runs in mapInPandas
+    allow={"Python"},
 )
 def multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.operators.multimodal import video_frame_index
@@ -325,6 +340,8 @@ for _codec in LOSSLESS_CODECS:
     query(
         f"multimodal_{_codec}_roundtrip",
         oracle=_ROUNDTRIP_ORACLE.format(codec=_codec),
+        # each codec's real encode/decode runs in mapInPandas
+        allow={"Python"},
     )(_roundtrip_query(_codec))
 
 
@@ -351,6 +368,8 @@ SELECT doc_id, TRUE AS jpeg_ok,
        ) AS pixel_sha
 FROM documents WHERE octet_length(encode(text)) >= 16
 """,
+    # real baseline JPEG encode/decode runs in mapInPandas
+    allow={"Python"},
 )
 def multimodal_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.operators.multimodal import jpeg_roundtrip
@@ -389,6 +408,9 @@ SELECT doc_id, CAST(200 AS BIGINT) AS n_in, CAST(100 AS BIGINT) AS n_out,
                      k -> substring(d, k*4 + 1, 2)), '')))) AS wav_sha
 FROM src
 """,
+    bench=False,
+    # real WAV decode -> decimate -> re-encode runs in mapInPandas
+    allow={"Python"},
 )
 def multimodal_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.operators.multimodal import audio_resample
@@ -451,6 +473,8 @@ SELECT ahash,
        CAST(MIN(doc_id) AS BIGINT) AS canonical_id
 FROM h GROUP BY ahash
 """,
+    # real raster decode + integer aHash runs in mapInPandas
+    allow={"Python"},
 )
 def multimodal_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.operators.multimodal import ahash_images
@@ -511,6 +535,7 @@ SELECT dhash,
        CAST(MIN(doc_id) AS BIGINT) AS canonical_id
 FROM h GROUP BY dhash
 """,
+    allow={"Python"},
 )
 def multimodal_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.operators.multimodal import dhash_images
@@ -579,6 +604,8 @@ SELECT doc_id, n_frames, n_active,
          AS max_run
 FROM agg
 """,
+    # real WAV decode + integer-energy VAD runs in mapInPandas
+    allow={"Python"},
 )
 def multimodal_audio_vad(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.operators.multimodal import audio_vad_segments
@@ -621,6 +648,8 @@ SELECT doc_id, CAST(2 AS BIGINT) AS n_frames,
        CAST(s AS BIGINT) AS sad_total, CAST(s AS BIGINT) AS sad_peak
 FROM sad
 """,
+    # real AVI walk + frame-diff SAD runs in mapInPandas
+    allow={"Python"},
 )
 def multimodal_video_motion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.operators.multimodal import video_motion_profile

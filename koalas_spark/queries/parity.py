@@ -31,6 +31,7 @@ def _kf(spark: SparkSession, sf_dir: str, name: str) -> KFrame:
 SELECT l_orderkey, l_linenumber, l_returnflag, l_linestatus
 FROM lineitem WHERE l_orderkey <= 100
 """,
+    bench=False,
 )
 def read_table_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = (
@@ -52,6 +53,7 @@ def read_table_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "select_filter",
     oracle="SELECT * FROM lineitem WHERE l_quantity > 45.0",
+    bench=False,
 )
 def select_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _kf(spark, sf_dir, "lineitem").select("l_quantity", ">", 45.0).df
@@ -61,13 +63,14 @@ def select_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "subset_cols",
     oracle="SELECT l_orderkey, l_partkey, l_quantity FROM lineitem",
+    bench=False,
 )
 def subset_cols(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _kf(spark, sf_dir, "lineitem").subset(["l_orderkey", "l_partkey", "l_quantity"]).df
 
 
 # 5. getCol — single column (dataframe.d:86).
-@query("get_col", oracle="SELECT o_totalprice FROM orders")
+@query("get_col", oracle="SELECT o_totalprice FROM orders", bench=False)
 def get_col(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _kf(spark, sf_dir, "orders").get_col("o_totalprice")
 
@@ -81,6 +84,7 @@ SELECT l_orderkey, l_linenumber,
        l_extendedprice * (1 - l_discount) AS net_price
 FROM lineitem
 """,
+    bench=False,
 )
 def add_new_col(spark: SparkSession, sf_dir: str) -> DataFrame:
     kf = _kf(spark, sf_dir, "lineitem").subset(["l_orderkey", "l_linenumber", "l_extendedprice", "l_discount"])
@@ -95,6 +99,7 @@ def add_new_col(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT l_returnflag, l_linestatus, COUNT(*) AS count
 FROM lineitem GROUP BY 1, 2
 """,
+    bench=False,
 )
 def groupby_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _kf(spark, sf_dir, "lineitem").groupby("l_returnflag", "l_linestatus").count().df
@@ -113,6 +118,7 @@ FROM (
   FROM orders) t
 WHERE _rn = 1
 """,
+    bench=False,
 )
 def groupby_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = _kf(spark, sf_dir, "orders").groupby("o_orderpriority").first().df
@@ -132,6 +138,7 @@ SELECT l_returnflag,
        {_dsum_sql('l_tax')} AS l_tax
 FROM lineitem GROUP BY l_returnflag
 """,
+    bench=False,
 )
 def groupby_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     kf = _kf(spark, sf_dir, "lineitem").subset(
@@ -153,6 +160,7 @@ SELECT l_returnflag,
        {_dsum_sql('l_extendedprice')} / COUNT(l_extendedprice) AS l_extendedprice
 FROM lineitem GROUP BY l_returnflag
 """,
+    bench=False,
 )
 def groupby_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
@@ -170,6 +178,7 @@ SELECT l_returnflag,
        MIN(l_extendedprice) AS min_price, MAX(l_extendedprice) AS max_price
 FROM lineitem GROUP BY l_returnflag
 """,
+    bench=False,
 )
 def groupby_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
@@ -191,6 +200,7 @@ FROM lineitem
 ORDER BY l_suppkey, l_shipdate, l_orderkey, l_linenumber
 LIMIT 100
 """,
+    bench=False,
 )
 def sort_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     kf = _kf(spark, sf_dir, "lineitem").subset(
@@ -206,6 +216,7 @@ def sort_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT o_orderkey, o_custkey, o_totalprice FROM orders
 ORDER BY o_orderkey LIMIT 5
 """,
+    bench=False,
 )
 def head_n(spark: SparkSession, sf_dir: str) -> DataFrame:
     kf = _kf(spark, sf_dir, "orders").subset(["o_orderkey", "o_custkey", "o_totalprice"])
@@ -216,6 +227,7 @@ def head_n(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "unique_records",
     oracle="SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem",
+    bench=False,
 )
 def unique_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _kf(spark, sf_dir, "lineitem").subset(["l_returnflag", "l_linestatus"]).unique().df
@@ -228,6 +240,7 @@ def unique_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT l_orderkey, l_linenumber, l_quantity * 2 AS result
 FROM lineitem
 """,
+    bench=False,
 )
 def apply_col(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
@@ -244,6 +257,7 @@ def apply_col(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT o_orderkey, CONCAT(o_orderstatus, '-', o_orderpriority) AS result
 FROM orders
 """,
+    bench=False,
 )
 def apply_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -262,6 +276,7 @@ SELECT * FROM (
   UNION ALL
   SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderstatus = 'O') t
 """,
+    bench=False,
 )
 def concat_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = KFrame(_t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice", "o_orderstatus"))
@@ -277,6 +292,7 @@ def concat_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT l_orderkey, l_linenumber, l_quantity, l_discount
 FROM lineitem WHERE l_quantity > 40.0 AND l_discount < 0.02
 """,
+    bench=False,
 )
 def mask_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     kf = _kf(spark, sf_dir, "lineitem").subset(

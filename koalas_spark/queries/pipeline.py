@@ -41,6 +41,7 @@ WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)
       < CASE WHEN lang = 'en' THEN '199a' ELSE '4ccd' END
 GROUP BY lang
 """,
+    bench=False,
 )
 def stratified_sample_stable(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
@@ -71,6 +72,7 @@ FROM (
   FROM documents) t
 GROUP BY lang, split
 """,
+    bench=False,
 )
 def train_test_split_stable(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
@@ -107,6 +109,7 @@ FROM grams g JOIN probe p
   ON g.doc_id <> p.probe_id AND list_has_any(g.gs, p.gs)
 GROUP BY g.doc_id
 """,
+    bench=False,
 )
 def contamination_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.functions.textfn import tokens, word_shingles
@@ -153,6 +156,7 @@ FROM (SELECT lang, string_split_regex(TRIM(text), '\\s+') AS toks
       FROM documents) t
 GROUP BY lang
 """,
+    bench=False,
 )
 def token_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.functions.textfn import tokens
@@ -189,6 +193,7 @@ FROM (
 WHERE rk <= 50
 GROUP BY source
 """,
+    bench=False,
 )
 def quota_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -231,6 +236,7 @@ FROM (
   FROM embeddings) t
 GROUP BY label, pos
 """,
+    bench=False,
 )
 def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings")
@@ -271,6 +277,7 @@ SELECT lang, CAST(n_chars // 100 AS INT) AS bucket, COUNT(*) AS n,
 FROM documents
 GROUP BY lang, bucket
 """,
+    bench=False,
 )
 def doc_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
@@ -308,6 +315,7 @@ FROM (
   FROM embeddings) t
 GROUP BY label
 """,
+    bench=False,
 )
 def embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings")
@@ -419,6 +427,9 @@ SELECT CAST(FLOOR(prior / 4096) AS BIGINT) AS shard,
        MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc
 FROM c GROUP BY shard
 """,
+    # bounded global window: the level-3 prefix window holds
+    # |corpus|/2^20 superblock rows (~1e5 at 1e11 docs)
+    allow={"GlobalWindow"},
 )
 def doc_pack_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.functions.textfn import token_count
@@ -619,6 +630,8 @@ WHERE r.thresh >= 65536
    OR substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 4) < printf('%04x', r.thresh)
 GROUP BY d.lang
 """,
+    # 1-row c_max frame cross-joined onto the 5-row language counts
+    allow={"BroadcastNestedLoopJoin"},
 )
 def lang_temperature_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
@@ -670,6 +683,7 @@ FROM documents d JOIN th ON d.lang = th.lang
 WHERE d.n_chars >= th.p10
 GROUP BY d.lang
 """,
+    bench=False,
 )
 def length_percentile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
@@ -723,6 +737,7 @@ SELECT source,
        CAST(SUM(n_copies * n_tok) AS BIGINT)       AS tokens_out
 FROM c GROUP BY source
 """,
+    bench=False,
 )
 def doc_mixture_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.functions.textfn import token_count
@@ -872,6 +887,7 @@ SELECT source,
        CAST((SUM(n_masked) * 10000) // SUM(n_tok) AS BIGINT) AS masked_bp
 FROM m GROUP BY source
 """,
+    bench=False,
 )
 def span_corruption_masks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.functions.textfn import token_count
@@ -926,6 +942,7 @@ SELECT 'compacted', CAST(4 AS BIGINT), CAST(COUNT(*) AS BIGINT),
        CAST(SUM(CAST(n_chars AS DECIMAL(25,0))) AS BIGINT)
 FROM documents
 """,
+    bench=False,
 )
 def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
@@ -996,6 +1013,7 @@ SELECT doc_id, tok, tok_offset,
 FROM c
 WHERE (tok_offset + tok) // 1000 - tok_offset // 1000 > 0
 """,
+    allow={"GlobalWindow"},
 )
 def pps_token_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.functions.textfn import token_count
@@ -1101,6 +1119,7 @@ SELECT source, n_docs, qual_ppm, uniq_ppm, eff_langs_milli,
          AS BIGINT) AS w10
 FROM ap3 ORDER BY source
 """,
+    allow={"GlobalWindow"},
 )
 def mixture_weight_solver(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -1257,6 +1276,8 @@ SELECT doc_id, lang, logw_nano,
                          * 1000000000) AS BIGINT) AS BIGINT) AS key_q
 FROM k ORDER BY key_q DESC, doc_id LIMIT 100
 """,
+    # 1-row corpus-totals frame cross-joined onto the 256-row model
+    allow={"BroadcastNestedLoopJoin"},
 )
 def dsir_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.functions.textfn import tokens

@@ -448,6 +448,8 @@ SELECT h.query_id, CAST(h.k AS INT) AS k, h.n_hit, t.n_rel,
 FROM hits h JOIN tot t ON t.query_id = h.query_id
 ORDER BY h.query_id, k
 """,
+    # 2-row k-dimension frame cross-joined onto the per-query hits
+    allow={"BroadcastNestedLoopJoin"},
 )
 def precision_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf, scored = _bm25_parts(spark, sf_dir)
@@ -541,6 +543,9 @@ SELECT query_id, doc_id, ql_nano, rk FROM (
   FROM sc) t
 WHERE rk <= 5
 """,
+    # 1-row collection-token-total frame cross-joined onto the
+    # term statistics
+    allow={"BroadcastNestedLoopJoin"},
 )
 def query_likelihood_dirichlet(
     spark: SparkSession, sf_dir: str
@@ -647,6 +652,7 @@ SELECT shingle, n_docs, n_sources FROM (
   FROM sh GROUP BY shingle HAVING COUNT(*) >= 5) g
 ORDER BY n_docs DESC, shingle ASC LIMIT 20
 """,
+    bench=False,
 )
 def boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
@@ -701,6 +707,8 @@ FROM big JOIN uni u1 ON big.w1 = u1.w
 WHERE c_xy >= 25
 ORDER BY pmi_scaled DESC, w1 ASC, w2 ASC LIMIT 20
 """,
+    # 1-row total-token frame cross-joined onto the bigram aggregate
+    allow={"BroadcastNestedLoopJoin"},
 )
 def collocation_pmi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
@@ -765,6 +773,7 @@ SELECT lang,
        CAST((SUM(n_bpe) * 1000000) // SUM(n_ws) AS BIGINT) AS fertility_ppm
 FROM d GROUP BY lang
 """,
+    bench=False,
 )
 def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.functions.textfn import bpe_token_count, token_count
@@ -1447,6 +1456,7 @@ SELECT query_id, doc_id, maxsim_score, rk FROM (
   FROM s) t
 WHERE rk <= 5
 """,
+    allow={"BroadcastNestedLoopJoin"},
 )
 def maxsim_late_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _vec(col: F.Column, prefix: str) -> list[F.Column]:

@@ -30,7 +30,13 @@ WHERE rk <= 5
 """
 
 
-@query("ann_bruteforce_topk", oracle=_BF_ORACLE)
+@query(
+    "ann_bruteforce_topk",
+    oracle=_BF_ORACLE,
+    # tiny probe/band/count sides joined without equi keys — build side
+    # is bounded by construction, so a broadcast nested loop is the plan
+    allow={"BroadcastNestedLoopJoin"},
+)
 def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     probes = emb.filter(F.col("vec_id") < 5)
@@ -220,6 +226,10 @@ SELECT probe_id, neighbor_id, qdot, qcos, rk FROM (
   WHERE p.vec_id < 5 AND p.n > 0 AND c.n > 0) t
 WHERE rk <= 5
 """,
+    bench=False,
+    # tiny probe/band/count sides joined without equi keys — build side
+    # is bounded by construction, so a broadcast nested loop is the plan
+    allow={"BroadcastNestedLoopJoin"},
 )
 def ann_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.operators.similarity import int8_brute_force_topk
@@ -283,6 +293,9 @@ SELECT probe_id, neighbor_id, adist, rk FROM (
   FROM scored) t
 WHERE rk <= 5
 """,
+    bench=False,
+    # 16-row codebook / 5-row probe frames cross-joined by construction
+    allow={"BroadcastNestedLoopJoin"},
 )
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.operators.similarity import pq_topk
@@ -358,6 +371,9 @@ SELECT probe_id, neighbor_id, adist, rk FROM (
   FROM scored) t
 WHERE rk <= 5
 """,
+    bench=False,
+    # 16-row codebook / 5-row probe frames cross-joined by construction
+    allow={"BroadcastNestedLoopJoin"},
 )
 def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.operators.similarity import ivf_pq_topk
@@ -428,6 +444,9 @@ SELECT probe_id, neighbor_id, adist, rk FROM (
   FROM scored) t
 WHERE rk <= 5
 """,
+    # 16-row codebook frames cross-joined for the two encode passes
+    # and the 256-row cross table — all bounded by construction
+    allow={"BroadcastNestedLoopJoin"},
 )
 def ann_rq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.operators.similarity import rq_topk
@@ -655,7 +674,11 @@ def nn_descent_graph_table(
     return memo.artifact(spark, "nn_descent_graph", (sf_dir, "embeddings"), build)
 
 
-@query("ann_nn_descent", oracle=_nn_descent_oracle_sql(k=10, iters=4, tgt=5))
+@query(
+    "ann_nn_descent",
+    oracle=_nn_descent_oracle_sql(k=10, iters=4, tgt=5),
+    bench=False,
+)
 def ann_nn_descent(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph = nn_descent_graph_table(spark, sf_dir)
     return (
@@ -836,7 +859,12 @@ def ann_graph_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rows broadcast onto one corpus scan); the comparison join is
 # 25 rows against 25. One number per probe, integer ppm.
 @query(
-    "graph_search_recall_audit", oracle=_graph_search_recall_oracle_sql()
+    "graph_search_recall_audit",
+    oracle=_graph_search_recall_oracle_sql(),
+    bench=False,
+    # #477's exact-BF twin: the same 5-probe broadcast non-equi join
+    # as ann_bruteforce_topk, bounded by construction
+    allow={"BroadcastNestedLoopJoin"},
 )
 def graph_search_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec, gsr = _graph_search_frames(spark, sf_dir)

@@ -20,6 +20,8 @@ SELECT DATE_TRUNC('hour', ts) AS window_start, event_type,
        COUNT(*) AS n, {_dsum_sql('value')} AS sum_value
 FROM events GROUP BY 1, 2
 """,
+    bench=False,
+    audit=False,
 )
 def stream_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream_tumbling_counts(spark, f"{sf_dir}/events.parquet", "1 hour", "1 hour")
@@ -43,6 +45,8 @@ FROM events e LEFT JOIN (
 ON e.user_id = p.user_id
 GROUP BY event_type, COALESCE(band, 'none')
 """,
+    bench=False,
+    audit=False,
 )
 def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.queries.analytics import _t
@@ -63,6 +67,8 @@ SELECT event_type, COUNT(*) AS n,
 FROM (SELECT DISTINCT ON (event_id) event_type, value FROM events ORDER BY event_id) t
 GROUP BY event_type
 """,
+    bench=False,
+    audit=False,
 )
 def stream_dedup_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.streaming.windows import stream_dedup_events
@@ -84,6 +90,8 @@ FROM events a JOIN events b
  AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 30 MINUTE
 GROUP BY a.user_id
 """,
+    bench=False,
+    audit=False,
 )
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.streaming.windows import stream_stream_interval_join
@@ -119,6 +127,8 @@ FROM (
     FROM events) a) b
 GROUP BY user_id, sid
 """,
+    bench=False,
+    audit=False,
 )
 def stream_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.streaming.stateful import stream_sessionize
@@ -149,6 +159,8 @@ FROM (
     FROM events) a) b
 GROUP BY user_id, sid
 """,
+    bench=False,
+    audit=False,
 )
 def stream_session_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.streaming.windows import stream_session_counts
@@ -167,6 +179,8 @@ SELECT DATE_TRUNC('hour', ts) AS window_start,
        COUNT(DISTINCT user_id) AS n_users
 FROM events GROUP BY 1
 """,
+    bench=False,
+    audit=False,
 )
 def stream_windowed_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.streaming.windows import stream_windowed_distinct_users as op
@@ -185,6 +199,8 @@ SELECT event_type, COUNT(*) AS n,
        CAST(CAST(SUM(CAST(value AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE) AS sum_value
 FROM events GROUP BY event_type
 """,
+    bench=False,
+    audit=False,
 )
 def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.memo import staged
@@ -218,6 +234,8 @@ WITH shifted AS (
 SELECT window_start, event_type, COUNT(*) AS n, {_dsum_sql('value')} AS sum_value
 FROM shifted GROUP BY window_start, event_type
 """,
+    bench=False,
+    audit=False,
 )
 def stream_sliding_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.streaming.windows import stream_sliding_counts
@@ -256,6 +274,8 @@ SELECT event_type,
          AS sum_filled
 FROM filled GROUP BY event_type
 """,
+    bench=False,
+    audit=False,
 )
 def stream_locf_impute(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.streaming.stateful import stream_locf
@@ -291,6 +311,9 @@ FROM g, t
 WHERE CAST(g.n AS DECIMAL(38,0)) * t.n_windows
       > 2 * CAST(t.total AS DECIMAL(38,0))
 """,
+    bench=False,
+    # 1-row gauge-totals frame cross-joined onto the window counts
+    allow={"BroadcastNestedLoopJoin"},
 )
 def stream_rate_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.streaming.windows import stream_rate_alert_windows
@@ -317,6 +340,7 @@ SELECT event_type AS first_type,
        CAST(MIN(sec) AS BIGINT) AS earliest_sec
 FROM firsts WHERE rk = 1 GROUP BY 1
 """,
+    bench=False,
 )
 def stream_user_first_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.streaming.windows import stream_first_touch_counts
@@ -347,6 +371,7 @@ SELECT g.window_start, g.event_type, g.n, g.sum_value
 FROM g, wm
 WHERE epoch_ms(g.window_start) + 3600000 <= wm.wm_ms
 """,
+    bench=False,
 )
 def stream_append_closed_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.streaming.windows import (
@@ -356,7 +381,7 @@ def stream_append_closed_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     return op(spark, f"{sf_dir}/events.parquet")
 
 
-@query("stream_incremental_neardup", oracle=_INC_ORACLE)
+@query("stream_incremental_neardup", oracle=_INC_ORACLE, bench=False)
 def stream_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.streaming.windows import stream_incremental_neardup as op
 
@@ -390,6 +415,8 @@ SELECT user_id,
          AS n_expired
 FROM j GROUP BY user_id
 """,
+    bench=False,
+    audit=False,
 )
 def stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.streaming.windows import stream_left_outer_interval_join
@@ -425,6 +452,8 @@ SELECT h.window_start, h.event_type, h.peak15, h.total, h.n_cells
 FROM h, wm
 WHERE epoch_ms(h.window_start) + 3600000 <= wm.wm_ms
 """,
+    bench=False,
+    audit=False,
 )
 def stream_chained_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.streaming.windows import stream_chained_window_agg
@@ -448,6 +477,7 @@ SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
          AS sum_value
 FROM events GROUP BY event_type
 """,
+    audit=False,
 )
 def stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     from koalas_spark.streaming.windows import stream_checkpoint_restart

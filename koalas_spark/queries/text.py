@@ -38,6 +38,7 @@ SELECT doc_id,
          / LEN(string_split_regex(TRIM(text), '\\s+')) AS avg_token_len
 FROM documents
 """,
+    bench=False,
 )
 def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
@@ -170,6 +171,7 @@ SELECT doc_id,
        md5(LOWER(TRIM(regexp_replace(text, '\\s+', ' ', 'g')))) AS fingerprint
 FROM documents
 """,
+    bench=False,
 )
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
@@ -191,6 +193,7 @@ SELECT doc_id,
        CAST(LEN(string_split_regex(TRIM(text), '\\s+')) AS BIGINT) AS n_ws_tokens
 FROM documents
 """,
+    bench=False,
 )
 def text_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
@@ -216,6 +219,7 @@ SELECT doc_id,
          (acc, c) -> (acc * 131 + c) % 2147483647) AS BIGINT) AS rolling_hash
 FROM documents
 """,
+    bench=False,
 )
 def text_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
@@ -231,6 +235,7 @@ SELECT source, COUNT(*) AS n_docs,
        COUNT(DISTINCT lang) AS n_langs
 FROM documents GROUP BY source
 """,
+    bench=False,
 )
 def docs_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
@@ -285,6 +290,7 @@ SELECT source,
        md5(string_agg(md5(scrubbed), '' ORDER BY doc_id)) AS scrub_digest
 FROM scrub GROUP BY source
 """,
+    bench=False,
 )
 def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
@@ -383,6 +389,7 @@ SELECT lang,
        CAST(MAX(simpson_ppm) AS BIGINT) AS max_simpson_ppm
 FROM per_doc GROUP BY lang
 """,
+    bench=False,
 )
 def token_simpson_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")

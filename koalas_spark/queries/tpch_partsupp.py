@@ -135,6 +135,10 @@ WHERE p.p_size = 15 AND p.p_type = 'LARGE'
 ORDER BY e.s_acctbal DESC, e.n_name, e.s_name, p.p_partkey
 LIMIT 100
 """,
+    bench=False,
+    # 1-row supplier-count frame cross-joined onto the part scan to
+    # derive partsupp (_partsupp)
+    allow={"BroadcastNestedLoopJoin"},
 )
 def q2_min_cost_supplier_ps(spark: SparkSession, sf_dir: str) -> DataFrame:
     ps = _partsupp(spark, sf_dir)
@@ -200,6 +204,11 @@ FROM grp g, tot t
 WHERE CAST(g.value_cents AS DECIMAL(38,0)) * 10000 > t.total
 ORDER BY g.value_cents DESC, g.ps_partkey
 """,
+    bench=False,
+    # 1-row supplier-count frame cross-joined onto the part scan to
+    # derive partsupp (_partsupp), and the 1-row grand-total frame
+    # crossed back onto the per-part values
+    allow={"BroadcastNestedLoopJoin"},
 )
 def q11_important_parts_ps(spark: SparkSession, sf_dir: str) -> DataFrame:
     ps = _partsupp(spark, sf_dir)
@@ -252,6 +261,10 @@ WHERE p.p_brand <> 'Brand#45' AND p.p_type <> 'MEDIUM'
 GROUP BY 1, 2, 3
 ORDER BY supplier_cnt DESC, p.p_brand, p.p_type, p.p_size
 """,
+    bench=False,
+    # 1-row supplier-count frame cross-joined onto the part scan to
+    # derive partsupp (_partsupp)
+    allow={"BroadcastNestedLoopJoin"},
 )
 def q16_supplier_part_cnt_ps(spark: SparkSession, sf_dir: str) -> DataFrame:
     ps = _partsupp(spark, sf_dir)
@@ -305,6 +318,10 @@ FROM supplier s
 JOIN cand c ON c.ps_suppkey = s.s_suppkey
 ORDER BY s.s_name
 """,
+    bench=False,
+    # 1-row supplier-count frame cross-joined onto the part scan to
+    # derive partsupp (_partsupp)
+    allow={"BroadcastNestedLoopJoin"},
 )
 def q20_promo_suppliers_ps(spark: SparkSession, sf_dir: str) -> DataFrame:
     ps = _partsupp(spark, sf_dir)

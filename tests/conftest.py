@@ -13,18 +13,18 @@ def spark():
 
 @pytest.fixture(scope="session")
 def registry_frames(spark):
-    """name -> DataFrame of every query the plan audit covers, built
-    once per session at SF_SMOKE and shared by the two registry-wide
-    plan gates (test_plan_audit, test_dim_gate)."""
-    from koalas_spark.queries import all_queries
-    from tools.audit_plans import SKIP
+    """name -> DataFrame of every query the plan audit covers (the
+    registry minus ``audit=False``), built once per session at SF_SMOKE
+    and shared by the two registry-wide plan gates (test_plan_audit,
+    test_dim_gate)."""
+    from koalas_spark.queries import registry
 
     frames = {}
-    for name, fn in sorted(all_queries().items()):
-        if name in SKIP:
+    for name, q in sorted(registry().items()):
+        if not q.audit:
             continue
         try:
-            frames[name] = fn(spark, SF_SMOKE)
+            frames[name] = q.fn(spark, SF_SMOKE)
         except Exception as exc:  # pragma: no cover - surface build errors
             pytest.fail(f"{name}: query build failed: {exc}")
     return frames

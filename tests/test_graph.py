@@ -114,7 +114,8 @@ def test_bfs_layer_plan_shape(spark):
     """Pin the PER-HOP expansion plan of mining._bfs_layer_counts
     (ADVICE r11 medium): khop_reach_copurchase and
     harmonic_centrality_probes execute the whole BFS at
-    DataFrame-construction time, so tools/audit_plans.py SKIPs them —
+    DataFrame-construction time, so they are registered with
+    audit=False and tools/audit_plans.py does not build them —
     this test is the replacement scale gate. One hop must be a
     key-partitioned equi-join (frontier x edges) + distinct: shuffle
     hash/sort-merge only, never a broadcast nested loop or cartesian

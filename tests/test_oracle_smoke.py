@@ -1,48 +1,25 @@
 """Fast oracle gate at sf0.001 — every registered query runs and, when
 it has an oracle, matches DuckDB exactly (the driver repeats this at
-sf0.01). The oracle side is materialized through Arrow and its type
-families must match the Spark schema's: DuckDB's silent
-HUGEINT/DOUBLE promotions hash differently at the driver even when
-every Python-level value matches (the grouped_demean_arrow r4/r5
-lesson), so a family mismatch fails here before it can fail there."""
+sf0.01). The comparison is tools/check_oracle.check: column names,
+Arrow type families, row count and sorted values. The oracle side is
+materialized through Arrow because DuckDB's silent HUGEINT/DOUBLE
+promotions hash differently at the driver even when every
+Python-level value matches (the grouped_demean_arrow r4/r5 lesson),
+so a family mismatch fails here before it can fail there."""
 
-import duckdb
 import pytest
 
 from tests.conftest import SF_SMOKE
-from koalas_spark.queries import all_oracles, all_queries
-from koalas_spark.sources.io import TPCH_TABLES
-from tools.check_oracle import _norm, dtype_mismatches
+from koalas_spark.queries import all_queries
+from tools.check_oracle import check, connect_duck
 
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for t in TPCH_TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_SMOKE}/{t}.parquet'")
-    return con
+    return connect_duck(SF_SMOKE)
 
 
 @pytest.mark.parametrize("name", sorted(all_queries()))
 def test_query_matches_oracle(spark, duck, name):
-    fn = all_queries()[name]
-    sdf = fn(spark, SF_SMOKE)
-    s_cols = sorted(sdf.columns)
-    s_rows = sorted(tuple(_norm(r[c]) for c in s_cols) for r in sdf.collect())
-
-    oracle = all_oracles().get(name)
-    if oracle is None:
-        assert s_rows is not None  # rows-only: runs and returns a frame
-        return
-    tbl = duck.execute(oracle).arrow()
-    raw = list(tbl.schema.names)
-    order = sorted(range(len(raw)), key=lambda i: raw[i])
-    d_cols = [raw[i] for i in order]
-    # positional extraction — name-keyed to_pylist() would collapse
-    # duplicate output column names into one value
-    col_vals = [[_norm(v) for v in tbl.column(i).to_pylist()] for i in order]
-    d_rows = sorted(tuple(col[r] for col in col_vals) for r in range(tbl.num_rows))
-    assert s_cols == d_cols
-    assert dtype_mismatches(sdf.schema, tbl.schema) == []
-    assert len(s_rows) == len(d_rows)
-    assert s_rows == d_rows
+    status, detail = check(spark, duck, SF_SMOKE, name)
+    assert status in ("OK", "rows-only"), f"{status} {detail}"

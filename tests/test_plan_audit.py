@@ -1,10 +1,13 @@
 """Plan-quality GATE over the whole registry (VERDICT r3 #5): the
 audit in tools/audit_plans.py used to be a report; this test makes it
-fail the suite when a query's physical plan regresses —
+fail the suite when a query's physical plan drifts from what its
+``@query(..., allow=...)`` declares —
 
-  * any construct outside its documented EXPECTED set (a new Python
-    stage, BroadcastNestedLoopJoin, CartesianProduct, global window,
-    or any row-wise BatchEvalPython anywhere), or
+  * any construct it does not allow (a new Python stage,
+    BroadcastNestedLoopJoin, CartesianProduct, global window, or any
+    row-wise BatchEvalPython anywhere), or
+  * an allowed construct its plan no longer contains (a stale
+    allowance would let that construct come back unnoticed), or
   * losing parquet filter pushdown it had when PLAN_BASELINE.json was
     generated, or
   * a query missing from the checked-in baseline entirely.
@@ -29,6 +32,8 @@ def test_plans_match_expectations(spark, registry_frames):
     for name, d in facts.items():
         if d["unexpected"]:
             problems.append(f"{name}: unexpected constructs {d['unexpected']}")
+        if d["unused"]:
+            problems.append(f"{name}: allowed but absent from plan {d['unused']}")
         base = baseline.get(name)
         if base is None:
             problems.append(

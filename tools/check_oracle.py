@@ -37,7 +37,7 @@ import pyarrow as pa
 from pyspark.sql import types as T
 
 from koalas_spark import get_spark
-from koalas_spark.queries import all_oracles, all_queries
+from koalas_spark.queries import registry
 from koalas_spark.sources.io import TPCH_TABLES
 
 
@@ -136,49 +136,56 @@ def connect_duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
     return con
 
 
+def check(spark, con, sf_dir: str, name: str) -> tuple[str, str]:
+    """(status, detail) of one query against its oracle at ``sf_dir``.
+
+    ``status`` is ``OK``, ``rows-only`` (no oracle) or the first failing
+    check of column names, dtype families, row count and sorted values
+    (``*-MISMATCH``); ``detail`` leads with the Spark row count and
+    names what differs."""
+    q = registry()[name]
+    sdf = q.fn(spark, sf_dir)
+    s_cols = sorted(sdf.columns)
+    s_rows = [tuple(_norm(r[c]) for c in s_cols) for r in sdf.collect()]
+    rows = f"({len(s_rows)} rows)"
+    if q.oracle is None:
+        return "rows-only", rows
+    # .arrow(), not .fetchall(): the driver reads the oracle through a
+    # materialized (dtype-bearing) path, so we must too.
+    tbl = con.execute(q.oracle).arrow()
+    raw_cols = list(tbl.schema.names)
+    order = sorted(range(len(raw_cols)), key=lambda i: raw_cols[i])
+    d_cols = [raw_cols[i] for i in order]
+    # positional column extraction: name-keyed to_pylist() would
+    # silently collapse duplicate output column names
+    col_vals = [[_norm(v) for v in tbl.column(i).to_pylist()] for i in order]
+    d_rows = [tuple(col[r] for col in col_vals) for r in range(tbl.num_rows)]
+    mism = dtype_mismatches(sdf.schema, tbl.schema)
+    if s_cols != d_cols:
+        return "SCHEMA-MISMATCH", f"{rows} spark={s_cols} duck={d_cols}"
+    if mism:
+        return "DTYPE-MISMATCH", f"{rows} " + "; ".join(mism)
+    if len(s_rows) != len(d_rows):
+        return "COUNT-MISMATCH", f"{rows} spark={len(s_rows)} duck={len(d_rows)}"
+    if sorted(s_rows) != sorted(d_rows):
+        only_s = list(set(s_rows) - set(d_rows))[:2]
+        only_d = list(set(d_rows) - set(s_rows))[:2]
+        return "VALUE-MISMATCH", f"{rows} spark-only={only_s} duck-only={only_d}"
+    return "OK", rows
+
+
 def compare(sf_dir: str, names: list[str] | None = None) -> int:
     spark = get_spark("check_oracle")
     con = connect_duck(sf_dir)
-
-    queries, oracles = all_queries(), all_oracles()
-    names = names or sorted(queries)
+    names = names or sorted(registry())
     failures = 0
     for name in names:
         t0 = time.time()
         try:
-            sdf = queries[name](spark, sf_dir)
-            s_cols = sorted(sdf.columns)
-            s_rows = [tuple(_norm(r[c]) for c in s_cols) for r in sdf.collect()]
-            if name not in oracles:
-                print(f"  {name}: rows-only {len(s_rows)} rows [{time.time()-t0:.1f}s]")
-                continue
-            # .arrow(), not .fetchall(): the driver reads the oracle
-            # through a materialized (dtype-bearing) path, so we must too.
-            tbl = con.execute(oracles[name]).arrow()
-            raw_cols = list(tbl.schema.names)
-            order = sorted(range(len(raw_cols)), key=lambda i: raw_cols[i])
-            d_cols = [raw_cols[i] for i in order]
-            # positional column extraction: name-keyed to_pylist() would
-            # silently collapse duplicate output column names
-            col_vals = [[_norm(v) for v in tbl.column(i).to_pylist()] for i in order]
-            d_rows = [tuple(col[r] for col in col_vals) for r in range(tbl.num_rows)]
-            mism = dtype_mismatches(sdf.schema, tbl.schema)
-            status, detail = "OK", ""
-            if s_cols != d_cols:
-                status, detail = "SCHEMA-MISMATCH", f"spark={s_cols} duck={d_cols}"
-            elif mism:
-                status, detail = "DTYPE-MISMATCH", "; ".join(mism)
-            elif len(s_rows) != len(d_rows):
-                status, detail = "COUNT-MISMATCH", f"spark={len(s_rows)} duck={len(d_rows)}"
-            elif sorted(s_rows) != sorted(d_rows):
-                status = "VALUE-MISMATCH"
-                sset, dset = set(s_rows), set(d_rows)
-                only_s = list(sset - dset)[:2]
-                only_d = list(dset - sset)[:2]
-                detail = f"spark-only={only_s} duck-only={only_d}"
-            if status != "OK":
+            status, detail = check(spark, con, sf_dir, name)
+            if status not in ("OK", "rows-only"):
                 failures += 1
-            print(f"  {name}: {status} ({len(s_rows)} rows) [{time.time()-t0:.1f}s] {detail}")
+            print(f"  {name}: {status} {detail} [{time.time()-t0:.1f}s]")
         except Exception as e:
             failures += 1
             print(f"  {name}: ERROR {type(e).__name__}: {str(e)[:300]}")
@@ -191,7 +198,7 @@ def shard_drive(sf_dir: str, n_shards: int, mem: str, cpus: int) -> int:
     (VERDICT r10 #4 — the sf1 standing gate previously needed a
     hand-rolled 4-terminal split; this folds it into the tool).
 
-    Splits sorted(all_queries()) round-robin across n_shards child
+    Splits sorted(registry()) round-robin across n_shards child
     processes (each its own JVM: SPARK_GRAFT_CPUS=cpus,
     SPARK_GRAFT_DRIVER_MEM=mem), streams their per-query verdict
     lines to .tmp_sweep_shard{i}.log, and aggregates to one
@@ -205,7 +212,7 @@ def shard_drive(sf_dir: str, n_shards: int, mem: str, cpus: int) -> int:
     import re
     import subprocess
 
-    names = sorted(all_queries())
+    names = sorted(registry())
     shards = [names[i::n_shards] for i in range(n_shards)]
     procs = []
     here = os.path.dirname(os.path.abspath(__file__))
