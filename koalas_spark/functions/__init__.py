@@ -7,7 +7,7 @@ from koalas_spark.functions.textfn import (
     punct_count,
     word_shingles,
 )
-from koalas_spark.functions.vectorfn import dot, norm_sq, cosine
+from koalas_spark.functions.vectorfn import dot, norm_sq
 
 __all__ = [
     "tokens",
@@ -19,5 +19,4 @@ __all__ = [
     "word_shingles",
     "dot",
     "norm_sq",
-    "cosine",
 ]

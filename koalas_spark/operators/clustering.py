@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from koalas_spark.functions.vectorfn import l2_sq
+
 QUANT = 10_000  # 1e-4 grid; |x| ≤ ~50 keeps Σ(q−m)² inside exact-double range
 
 
@@ -57,16 +59,7 @@ def _dist_pairs(centroids: list[list[int]]) -> F.Column:
     )
     return F.transform(
         cmat,
-        lambda s: F.struct(
-            F.aggregate(
-                F.zip_with(
-                    F.col("q"), s["qc"], lambda a, b: (a - b) * (a - b)
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("d2"),
-            s["c"].alias("c"),
-        ),
+        lambda s: F.struct(l2_sq(F.col("q"), s["qc"], 0).alias("d2"), s["c"].alias("c")),
     )
 
 

@@ -15,26 +15,81 @@ number of planes / probe multi-probing.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from koalas_spark.functions.vectorfn import cosine, dot, norm_sq
+from koalas_spark.functions.vectorfn import as_double, dot, l2_sq, norm_sq, rounded_cosine
+
+# PQ splits a vector into NSUB subspaces of DSUB dims; RQ's level-2
+# codebook is the level-1 rows scaled by SHRINK (an exact power of
+# two). The oracle SQL of ann_pq_topk, ann_ivf_pq_topk and ann_rq_topk
+# (queries/similarity.py: _pq_sub, _pq_l2r, ``x * 0.25``) hard-codes
+# the same values.
+NSUB, DSUB, SHRINK = 4, 16, 0.25
 
 
 def _prep(df: DataFrame, id_col: str, vec_col: str, out_id: str) -> DataFrame:
     """Cast to double and precompute the squared norm ONCE per row —
     per-pair scoring then only pays the dot product."""
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    v = as_double(F.col(vec_col))
     return df.select(
         F.col(id_col).alias(out_id), v.alias(f"_{out_id}_vec"), norm_sq(v).alias(f"_{out_id}_n")
     )
 
 
-def _pair_cos(a: str, b: str):
-    return F.round(
-        dot(F.col(f"_{a}_vec"), F.col(f"_{b}_vec"))
-        / F.sqrt(F.col(f"_{a}_n") * F.col(f"_{b}_n")),
-        6,
+def _pair_cos(a: str, b: str) -> Column:
+    return rounded_cosine(
+        F.col(f"_{a}_vec"), F.col(f"_{b}_vec"), F.col(f"_{a}_n"), F.col(f"_{b}_n")
+    )
+
+
+def per_probe_topk(
+    scored: DataFrame,
+    score: str,
+    k: int,
+    *cols,
+    by: str = "probe_id",
+    tie: str = "neighbor_id",
+    asc: bool = False,
+) -> DataFrame:
+    """The k best rows of each ``by`` group by ``score`` (descending
+    unless ``asc``), ties to the smaller ``tie``, numbered ``rk`` 1..k
+    — a WindowGroupLimit in the physical plan. ``cols`` default to
+    (by, tie, score, rk)."""
+    order = F.col(score).asc() if asc else F.col(score).desc()
+    w = Window.partitionBy(by).orderBy(order, F.col(tie).asc())
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select(*(cols or (by, tie, score, "rk")))
+    )
+
+
+def _sub(v: Column, s: int) -> Column:
+    """PQ sub-vector ``s`` of ``v``."""
+    return F.slice(v, s * DSUB + 1, DSUB)
+
+
+def _argmin(d: Column, i: Column, field: str = "j") -> Column:
+    """Aggregate: the ``i`` of the smallest ``d``, ties to the smaller
+    ``i`` (struct min orders by (d, i))."""
+    return F.min(F.struct(d.alias("d"), i.alias(field))).getField(field)
+
+
+def spread_vector_table(vectors: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(vid, v, n2): the double vector and its squared norm, zero
+    vectors dropped, key-spread on vid and lazily checkpointed. The
+    source is typically one parquet split, and every scoring join
+    downstream would otherwise stream on a single core; an explicit
+    keyed repartition (not AQE-owned) keeps the exchange at cluster
+    parallelism at any scale (guide §2.6)."""
+    fan = vectors.sparkSession.sparkContext.defaultParallelism
+    return (
+        vectors.select(F.col(id_col).alias("vid"), as_double(F.col(vec_col)).alias("v"))
+        .withColumn("n2", norm_sq(F.col("v")))
+        .filter(F.col("n2") > 0)
+        .repartition(fan, "vid")
+        .localCheckpoint(eager=False)
     )
 
 
@@ -51,15 +106,7 @@ def _score(corpus: DataFrame, probes: DataFrame, id_col: str, vec_col: str) -> D
 def brute_force_topk(
     corpus: DataFrame, probes: DataFrame, id_col: str, vec_col: str, k: int = 5
 ) -> DataFrame:
-    scored = _score(corpus, probes, id_col, vec_col)
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("probe_id", "neighbor_id", "cos_sim", "rk")
-    )
+    return per_probe_topk(_score(corpus, probes, id_col, vec_col), "cos_sim", k)
 
 
 def ivf_topk(
@@ -126,14 +173,7 @@ def ivf_topk(
         .filter(F.col("neighbor_id") != F.col("probe_id"))
         .select("probe_id", "neighbor_id", _pair_cos("probe_id", "neighbor_id").alias("cos_sim"))
     )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("probe_id", "neighbor_id", "cos_sim", "rk")
-    )
+    return per_probe_topk(scored, "cos_sim", k)
 
 
 def _bucketed(prepped: DataFrame, id_name: str, num_planes: int) -> DataFrame:
@@ -178,7 +218,6 @@ def lsh_topk(
     vec_col: str,
     k: int = 5,
     num_planes: int = 8,
-    dim: int = 64,
 ) -> DataFrame:
     """Approximate top-k: equi-join probe and corpus on bucket id, then
     exact cosine re-rank within the bucket."""
@@ -189,14 +228,7 @@ def lsh_topk(
         .filter(F.col("neighbor_id") != F.col("probe_id"))
         .select("probe_id", "neighbor_id", _pair_cos("probe_id", "neighbor_id").alias("cos_sim"))
     )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("probe_id", "neighbor_id", "cos_sim", "rk")
-    )
+    return per_probe_topk(scored, "cos_sim", k)
 
 
 def int8_quantize(df: DataFrame, id_col: str, vec_col: str, out_id: str) -> DataFrame:
@@ -210,18 +242,13 @@ def int8_quantize(df: DataFrame, id_col: str, vec_col: str, out_id: str) -> Data
     tie rule but all floor identically. Zero vectors quantize to zero
     and carry qnorm 0 (they cannot rank by cosine; callers filter).
     Shuffle-free: one expression map over the scan."""
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    v = as_double(F.col(vec_col))
     amax = F.array_max(F.transform(v, F.abs))
     qv = F.when(amax == 0.0, F.transform(v, lambda x: F.lit(0).cast("long"))).otherwise(
         F.transform(v, lambda x: F.floor(x * 127.0 / amax + F.lit(0.5)))
     )
     out = df.select(F.col(id_col).alias(out_id), qv.alias(f"_{out_id}_qv"))
-    qn = F.aggregate(
-        F.zip_with(F.col(f"_{out_id}_qv"), F.col(f"_{out_id}_qv"), lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    return out.withColumn(f"_{out_id}_qn", qn)
+    return out.withColumn(f"_{out_id}_qn", norm_sq(F.col(f"_{out_id}_qv"), 0))
 
 
 def int8_brute_force_topk(
@@ -239,11 +266,7 @@ def int8_brute_force_topk(
     qc = int8_quantize(corpus, id_col, vec_col, "neighbor_id").filter(
         F.col("_neighbor_id_qn") > 0
     )
-    qdot = F.aggregate(
-        F.zip_with(F.col("_probe_id_qv"), F.col("_neighbor_id_qv"), lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    qdot = dot(F.col("_probe_id_qv"), F.col("_neighbor_id_qv"), 0)
     qcos = F.round(
         qdot.cast("double")
         / F.sqrt((F.col("_probe_id_qn") * F.col("_neighbor_id_qn")).cast("double")),
@@ -254,14 +277,7 @@ def int8_brute_force_topk(
         .filter(F.col("neighbor_id") != F.col("probe_id"))
         .select("probe_id", "neighbor_id", qdot.alias("qdot"), qcos.alias("qcos"))
     )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("qcos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("probe_id", "neighbor_id", "qdot", "qcos", "rk")
-    )
+    return per_probe_topk(scored, "qcos", k, "probe_id", "neighbor_id", "qdot", "qcos", "rk")
 
 
 def pq_topk(
@@ -271,15 +287,13 @@ def pq_topk(
     id_col: str,
     vec_col: str,
     k: int = 5,
-    nsub: int = 4,
-    dsub: int = 16,
 ) -> DataFrame:
     """Product-quantization ANN (asymmetric distance computation).
 
-    The vector is split into ``nsub`` subspaces of ``dsub`` dims; each
+    The vector is split into NSUB subspaces of DSUB dims; each
     subspace has a 16-entry codebook (here the sub-vectors of the
     deterministic ``codebook_src`` rows, same "trained centroids"
-    convention as ivf_topk). Every corpus vector is ENCODED as nsub
+    convention as ivf_topk). Every corpus vector is ENCODED as NSUB
     bytes — at a billion vectors that is the difference between a
     corpus that fits in executor memory (4 B/vector) and one that
     doesn't (256 B/vector float32) — and probes score candidates by
@@ -288,31 +302,17 @@ def pq_topk(
 
     Plan shape, all scale-safe: encode = one broadcast(16-row
     codebook) pass over the corpus + a groupBy(vec) argmin whose state
-    is nsub structs; the distance table is |probes|x16 rows,
-    broadcast; scoring is nsub broadcast-hash joins on (probe, code)
+    is NSUB structs; the distance table is |probes|x16 rows,
+    broadcast; scoring is NSUB broadcast-hash joins on (probe, code)
     over the code table. The corpus never shuffles its vectors —
     only ids + codes move. Distances round to 6 decimals before every
     argmin/rank so the DuckDB oracle reproduces the exact ranking."""
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-
-    def sub(col, s):
-        return F.slice(col, s * dsub + 1, dsub)
-
-    def l2r(a, b):
-        return F.round(
-            F.aggregate(
-                F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,
-        )
-
+    v = as_double(F.col(vec_col))
     cents = codebook_src.select(
-        F.col(id_col).alias("j"), *[sub(v, s).alias(f"c{s}") for s in range(nsub)]
+        F.col(id_col).alias("j"), *[_sub(v, s).alias(f"c{s}") for s in range(NSUB)]
     )
     vecs = corpus.select(
-        F.col(id_col).alias("vid"), *[sub(v, s).alias(f"v{s}") for s in range(nsub)]
+        F.col(id_col).alias("vid"), *[_sub(v, s).alias(f"v{s}") for s in range(NSUB)]
     )
     # encode: per-subspace argmin over the broadcast codebook; struct
     # min orders by (rounded distance, j) so ties break to smaller j
@@ -322,31 +322,27 @@ def pq_topk(
             "vid",
             "j",
             *[
-                l2r(F.col(f"v{s}"), F.col(f"c{s}")).alias(f"d{s}")
-                for s in range(nsub)
+                F.round(l2_sq(F.col(f"v{s}"), F.col(f"c{s}")), 6).alias(f"d{s}")
+                for s in range(NSUB)
             ],
         )
         .groupBy("vid")
-        .agg(
-            *[
-                F.min(F.struct(F.col(f"d{s}").alias("d"), F.col("j").alias("j")))
-                .getField("j")
-                .alias(f"code{s}")
-                for s in range(nsub)
-            ]
-        )
+        .agg(*[_argmin(F.col(f"d{s}"), F.col("j")).alias(f"code{s}") for s in range(NSUB)])
     )
     pvecs = probes.select(
         F.col(id_col).alias("probe_id"),
-        *[sub(v, s).alias(f"p{s}") for s in range(nsub)],
+        *[_sub(v, s).alias(f"p{s}") for s in range(NSUB)],
     )
     dt = pvecs.crossJoin(F.broadcast(cents)).select(
         "probe_id",
         "j",
-        *[l2r(F.col(f"p{s}"), F.col(f"c{s}")).alias(f"t{s}") for s in range(nsub)],
+        *[
+            F.round(l2_sq(F.col(f"p{s}"), F.col(f"c{s}")), 6).alias(f"t{s}")
+            for s in range(NSUB)
+        ],
     )
     scored = enc
-    for s in range(nsub):
+    for s in range(NSUB):
         dts = dt.select(
             "probe_id" if s == 0 else F.col("probe_id").alias(f"_pb{s}"),
             F.col("j").alias(f"_j{s}"),
@@ -356,19 +352,12 @@ def pq_topk(
         if s > 0:
             on.append(F.col("probe_id") == F.col(f"_pb{s}"))
         scored = scored.join(F.broadcast(dts), on[0] if len(on) == 1 else on[0] & on[1])
-    adist = F.round(sum(F.col(f"t{s}") for s in range(nsub)), 6)
+    adist = F.round(sum(F.col(f"t{s}") for s in range(NSUB)), 6)
     scored = (
         scored.filter(F.col("vid") != F.col("probe_id"))
         .select("probe_id", F.col("vid").alias("neighbor_id"), adist.alias("adist"))
     )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("adist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("probe_id", "neighbor_id", "adist", "rk")
-    )
+    return per_probe_topk(scored, "adist", k, asc=True)
 
 
 def ivf_pq_topk(
@@ -379,8 +368,6 @@ def ivf_pq_topk(
     vec_col: str,
     k: int = 5,
     nprobe: int = 2,
-    nsub: int = 4,
-    dsub: int = 16,
 ) -> DataFrame:
     """IVF+PQ — the two scale levers composed, as a billion-vector
     index actually deploys them: the IVF coarse quantizer prunes the
@@ -391,7 +378,7 @@ def ivf_pq_topk(
 
     One broadcast(centroids) pass over the corpus computes BOTH the
     cell assignment (argmax rounded cosine, ties to the smaller
-    centroid id) and the ``nsub`` PQ codes (per-subspace argmin L2) in
+    centroid id) and the NSUB PQ codes (per-subspace argmin L2) in
     a single groupBy — in production this is the one-time index build;
     the query side is all broadcast-hash joins against |probes|-sized
     frames. Cell argmax keys on (1 - cos) rather than -cos so the
@@ -401,43 +388,18 @@ def ivf_pq_topk(
     Non-residual variant (codes quantize the raw vector, not
     v - centroid): residual encoding needs a per-cell codebook train
     pass, which is a model-fitting step, not a query."""
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-
-    def sub(col, s):
-        return F.slice(col, s * dsub + 1, dsub)
-
-    def l2r(a, b):
-        return F.round(
-            F.aggregate(
-                F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,
-        )
-
-    def cosr(avec, an, bvec, bn):
-        return F.round(
-            F.aggregate(
-                F.zip_with(avec, bvec, lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            / F.sqrt(an * bn),
-            6,
-        )
-
+    v = as_double(F.col(vec_col))
     cents = centroids_src.select(
         F.col(id_col).alias("j"),
         v.alias("cvec"),
         norm_sq(v).alias("cn"),
-        *[sub(v, s).alias(f"c{s}") for s in range(nsub)],
+        *[_sub(v, s).alias(f"c{s}") for s in range(NSUB)],
     )
     base = corpus.select(
         F.col(id_col).alias("vid"),
         v.alias("bvec"),
         norm_sq(v).alias("bn"),
-        *[sub(v, s).alias(f"v{s}") for s in range(nsub)],
+        *[_sub(v, s).alias(f"v{s}") for s in range(NSUB)],
     )
     # index build: cell + codes from ONE pass over broadcast centroids
     enc = (
@@ -445,27 +407,25 @@ def ivf_pq_topk(
         .select(
             "vid",
             "j",
-            (1.0 - cosr(F.col("bvec"), F.col("bn"), F.col("cvec"), F.col("cn"))).alias("ic"),
-            *[l2r(F.col(f"v{s}"), F.col(f"c{s}")).alias(f"d{s}") for s in range(nsub)],
+            (
+                1.0 - rounded_cosine(F.col("bvec"), F.col("cvec"), F.col("bn"), F.col("cn"))
+            ).alias("ic"),
+            *[
+                F.round(l2_sq(F.col(f"v{s}"), F.col(f"c{s}")), 6).alias(f"d{s}")
+                for s in range(NSUB)
+            ],
         )
         .groupBy("vid")
         .agg(
-            F.min(F.struct(F.col("ic").alias("d"), F.col("j").alias("j")))
-            .getField("j")
-            .alias("cell"),
-            *[
-                F.min(F.struct(F.col(f"d{s}").alias("d"), F.col("j").alias("j")))
-                .getField("j")
-                .alias(f"code{s}")
-                for s in range(nsub)
-            ],
+            _argmin(F.col("ic"), F.col("j")).alias("cell"),
+            *[_argmin(F.col(f"d{s}"), F.col("j")).alias(f"code{s}") for s in range(NSUB)],
         )
     )
     pv = probes.select(
         F.col(id_col).alias("probe_id"),
         v.alias("pvec"),
         norm_sq(v).alias("pn"),
-        *[sub(v, s).alias(f"p{s}") for s in range(nsub)],
+        *[_sub(v, s).alias(f"p{s}") for s in range(NSUB)],
     )
     w_probe = Window.partitionBy("probe_id").orderBy(
         F.col("ic").asc(), F.col("j").asc()
@@ -475,7 +435,9 @@ def ivf_pq_topk(
         .select(
             "probe_id",
             "j",
-            (1.0 - cosr(F.col("pvec"), F.col("pn"), F.col("cvec"), F.col("cn"))).alias("ic"),
+            (
+                1.0 - rounded_cosine(F.col("pvec"), F.col("cvec"), F.col("pn"), F.col("cn"))
+            ).alias("ic"),
         )
         .withColumn("_rk", F.row_number().over(w_probe))
         .filter(F.col("_rk") <= nprobe)
@@ -484,12 +446,15 @@ def ivf_pq_topk(
     dt = pv.crossJoin(F.broadcast(cents)).select(
         "probe_id",
         "j",
-        *[l2r(F.col(f"p{s}"), F.col(f"c{s}")).alias(f"t{s}") for s in range(nsub)],
+        *[
+            F.round(l2_sq(F.col(f"p{s}"), F.col(f"c{s}")), 6).alias(f"t{s}")
+            for s in range(NSUB)
+        ],
     )
     scored = enc.join(F.broadcast(pcells), "cell").filter(
         F.col("vid") != F.col("probe_id")
     )
-    for s in range(nsub):
+    for s in range(NSUB):
         dts = dt.select(
             F.col("probe_id").alias(f"_pb{s}"),
             F.col("j").alias(f"_j{s}"),
@@ -500,18 +465,11 @@ def ivf_pq_topk(
             (F.col("probe_id") == F.col(f"_pb{s}"))
             & (F.col(f"code{s}") == F.col(f"_j{s}")),
         )
-    adist = F.round(sum(F.col(f"t{s}") for s in range(nsub)), 6)
+    adist = F.round(sum(F.col(f"t{s}") for s in range(NSUB)), 6)
     scored = scored.select(
         "probe_id", F.col("vid").alias("neighbor_id"), adist.alias("adist")
     )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("adist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("probe_id", "neighbor_id", "adist", "rk")
-    )
+    return per_probe_topk(scored, "adist", k, asc=True)
 
 
 def rq_topk(
@@ -521,7 +479,6 @@ def rq_topk(
     id_col: str,
     vec_col: str,
     k: int = 5,
-    shrink: float = 0.25,
 ) -> DataFrame:
     """Residual-quantization ANN (2-level additive codes) — the third
     compression family after int8 and PQ, and the one modern vector
@@ -538,78 +495,49 @@ def rq_topk(
 
     Codebook convention matches pq_topk/ivf_topk ("trained centroids"
     = the deterministic codebook_src rows); the level-2 codebook is
-    the same rows shrunk by 0.25 — an EXACT power-of-two scale, so
+    the same rows shrunk by SHRINK = 0.25 — an EXACT power-of-two scale, so
     both engines derive identical doubles. Every distance rounds to 6
     decimals before argmin/rank; ties break to the smaller codebook
     id, making codes and ranking oracle-exact. Plan shape: two
     broadcast(16-row) encode passes over the corpus (only ids + 2
     codes ever shuffle), three broadcast-hash lookup joins to score.
     """
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-
-    def l2r(a, b):
-        return F.round(
-            F.aggregate(
-                F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,
-        )
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
+    v = as_double(F.col(vec_col))
     cb1 = codebook_src.select(F.col(id_col).alias("j"), v.alias("a"))
     cb2 = codebook_src.select(
         F.col(id_col).alias("kk"),
-        F.transform(v, lambda x: x * shrink).alias("b"),
+        F.transform(v, lambda x: x * SHRINK).alias("b"),
     )
 
-    def argmin(df, key_cols, d, idc):
-        return df.groupBy(*key_cols).agg(
-            F.min(F.struct(d.alias("d"), F.col(idc).cast("double").alias("i")))
-            .getField("i")
-            .cast("bigint")
-            .alias("_code")
+    def encode(df: DataFrame, keys: list, vec: str, cb: DataFrame, cw: str, idc: str, out: str):
+        # argmin over the broadcast codebook; the id rides the struct
+        # as a double, the oracle's MIN([d, CAST(j AS DOUBLE)]) shape
+        code = _argmin(F.col("d"), F.col(idc).cast("double"), "i").cast("bigint")
+        return (
+            df.crossJoin(F.broadcast(cb))
+            .select(*keys, idc, F.round(l2_sq(F.col(vec), F.col(cw)), 6).alias("d"))
+            .groupBy(*keys)
+            .agg(code.alias(out))
         )
 
     vecs = corpus.select(F.col(id_col).alias("vid"), v.alias("v"))
-    enc1 = argmin(
-        vecs.crossJoin(F.broadcast(cb1)).select(
-            "vid", "j", l2r(F.col("v"), F.col("a")).alias("d")
-        ),
-        ["vid"],
-        F.col("d"),
-        "j",
-    ).withColumnRenamed("_code", "code1")
+    enc1 = encode(vecs, ["vid"], "v", cb1, "a", "j", "code1")
     res = (
         vecs.join(enc1, "vid")
         .join(F.broadcast(cb1), F.col("code1") == F.col("j"))
         .select("vid", "code1", F.zip_with("v", "a", lambda x, y: x - y).alias("r"))
     )
-    enc2 = argmin(
-        res.crossJoin(F.broadcast(cb2)).select(
-            "vid", "code1", "kk", l2r(F.col("r"), F.col("b")).alias("d")
-        ),
-        ["vid", "code1"],
-        F.col("d"),
-        "kk",
-    ).withColumnRenamed("_code", "code2")
+    enc2 = encode(res, ["vid", "code1"], "r", cb2, "b", "kk", "code2")
 
     pv = probes.select(F.col(id_col).alias("probe_id"), v.alias("p"))
     t1 = pv.crossJoin(F.broadcast(cb1)).select(
-        "probe_id", "j", l2r(F.col("p"), F.col("a")).alias("t1")
+        "probe_id", "j", F.round(l2_sq(F.col("p"), F.col("a")), 6).alias("t1")
     )
     t2 = pv.crossJoin(F.broadcast(cb2)).select(
         "probe_id",
         "kk",
         F.round(
-            dot(F.col("b"), F.col("b")) - 2 * dot(F.col("p"), F.col("b")), 6
+            norm_sq(F.col("b")) - 2 * dot(F.col("p"), F.col("b")), 6
         ).alias("t2"),
     )
     xt = cb1.crossJoin(F.broadcast(cb2)).select(
@@ -634,14 +562,7 @@ def rq_topk(
             F.round(F.col("t1") + F.col("t2") + F.col("x"), 6).alias("adist"),
         )
     )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("adist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("probe_id", "neighbor_id", "adist", "rk")
-    )
+    return per_probe_topk(scored, "adist", k, asc=True)
 
 
 def nn_descent(
@@ -674,29 +595,8 @@ def nn_descent(
     only; no global state, no driver collect; the edge frame is
     checkpointed per iteration so lineage depth stays 1.
     """
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    vec = vectors.select(
-        F.col(id_col).alias("vid"), v.alias("v")
-    ).withColumn("n2", dot(F.col("v"), F.col("v")))
-    # key-spread the vector table before checkpointing: the source is
-    # typically one parquet split, and every scoring join downstream
-    # would otherwise stream on a single core. An explicit keyed
-    # repartition (not AQE-owned) keeps the exchange at cluster
-    # parallelism at any scale (guide §2.6).
+    vec = spread_vector_table(vectors, id_col, vec_col)
     fan = vectors.sparkSession.sparkContext.defaultParallelism
-    vec = (
-        vec.filter(F.col("n2") > 0)
-        .repartition(fan, "vid")
-        .localCheckpoint(eager=False)
-    )
     # Join-strategy gate (r13, guide §3.1): every refinement round
     # equi-joins the candidate pairs against this vector table TWICE
     # (src endpoint, dst endpoint). The table sits behind a
@@ -800,19 +700,12 @@ def nn_descent(
             .select(
                 "src",
                 "dst",
-                F.round(
-                    dot(F.col("sv"), F.col("dv"))
-                    / F.sqrt(F.col("sn") * F.col("dn")),
-                    6,
+                rounded_cosine(
+                    F.col("sv"), F.col("dv"), F.col("sn"), F.col("dn")
                 ).alias("cos_sim"),
             )
         )
-        w = Window.partitionBy("src").orderBy(F.desc("cos_sim"), F.asc("dst"))
-        return (
-            scored.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= k)
-            .select("src", "dst", "cos_sim", "rk")
-        )
+        return per_probe_topk(scored, "cos_sim", k, by="src", tie="dst")
 
     edges = top_k(cand).localCheckpoint(eager=False)
     for _ in range(iters):

@@ -1,3 +1,3 @@
-from koalas_spark.plans.session import CONSTANT_DIMS, dim, get_spark
+from koalas_spark.plans.session import get_spark
 
-__all__ = ["CONSTANT_DIMS", "dim", "get_spark"]
+__all__ = ["get_spark"]

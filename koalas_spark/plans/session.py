@@ -83,28 +83,3 @@ def get_spark(app_name: str = "koalas_spark", cpus: int | None = None) -> SparkS
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-# Dimension tables whose cardinality is CONSTANT in the scale factor
-# (TPC-H: nation = 25 rows, region = 5 rows at every SF). Only these
-# are safe to force-broadcast: a forced hint OVERRIDES AQE's size
-# check, so hinting an SF-linear table (customer 150k×SF, supplier
-# 10k×SF, part 200k×SF) is fatal at the 100 TB target (sf≈1e5 → 1e9+
-# rows) — the job OOMs instead of degrading to a shuffle join.
-CONSTANT_DIMS = frozenset({"nation", "region"})
-
-
-def dim(df, table: str):
-    """Scale-aware broadcast hint for a dimension-table join side.
-
-    Force-broadcasts only constant-cardinality dims (CONSTANT_DIMS);
-    everything else is returned unhinted so AQE owns the decision —
-    at bench SFs AQE still broadcasts customer/supplier/part (they sit
-    under spark.sql.autoBroadcastJoinThreshold), and at cluster scale
-    it degrades gracefully to a shuffle join. Matches the reference's
-    hint-free semantics (dataframe.d declares no join hints at all).
-    """
-    from pyspark.sql import functions as F
-
-    if table in CONSTANT_DIMS:
-        return F.broadcast(df)
-    return df

@@ -12,7 +12,6 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from koalas_spark.memo import artifact
-from koalas_spark.plans.session import dim
 
 # decimal(18,6): per-row values fit 12 integer digits at any SF (SF
 # scales row count, not magnitudes); precision<=18 is long-backed in
@@ -223,7 +222,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(dim(cust, "customer"), orders.o_custkey == cust.c_custkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
         .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
@@ -262,7 +261,7 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------
 # 24. Q5 local supplier volume — 6-way join; constant dims broadcast,
-# SF-linear customer/supplier left to AQE (dim() gates the hint),
+# SF-linear customer/supplier unhinted so AQE owns the strategy,
 # fact-fact join shuffles once on orderkey.
 @query(
     "q5_local_supplier",
@@ -292,13 +291,13 @@ def q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(dim(cust, "customer"), orders.o_custkey == cust.c_custkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
         .join(
-            dim(supp, "supplier"),
+            supp,
             (li.l_suppkey == supp.s_suppkey) & (cust.c_nationkey == supp.s_nationkey),
         )
-        .join(dim(nation, "nation"), supp.s_nationkey == nation.n_nationkey)
-        .join(dim(region, "region"), nation.n_regionkey == region.r_regionkey)
+        .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
+        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
         .groupBy("n_name")
         .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
     )
@@ -362,8 +361,8 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = _t(spark, sf_dir, "nation")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(dim(cust, "customer"), orders.o_custkey == cust.c_custkey)
-        .join(dim(nation, "nation"), cust.c_nationkey == nation.n_nationkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
+        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
         .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
         .select("c_custkey", "c_name", "revenue", "c_acctbal", "n_name")

@@ -241,6 +241,9 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_vals,
        CAST(MAX(aerr) AS BIGINT) AS max_abs_err
 FROM e
 """,
+    # the mapInArrow (MapInArrow) stage is the API under test; it emits
+    # one partial-stats row per Arrow batch
+    allow={"Python"},
 )
 def int8_quant_error_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings").select("embedding")

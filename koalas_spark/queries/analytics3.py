@@ -10,7 +10,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from koalas_spark.plans.session import dim
 from koalas_spark.queries import query
 from koalas_spark.queries.analytics import _t, dsum, _dsum_sql, DEC
 
@@ -41,7 +40,7 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast(DEC)
     )
     return (
-        li.join(dim(p, "part"), F.col("l_partkey") == F.col("p_partkey"))
+        li.join(p, F.col("l_partkey") == F.col("p_partkey"))
         .agg(
             F.round(
                 (F.lit(100.0) * F.sum(promo) / F.sum(rev.cast(DEC))).cast("double"), 8
@@ -79,7 +78,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     sup = _t(spark, sf_dir, "supplier")
     return (
         revenue.join(F.broadcast(mx), F.col("total_revenue") == F.col("_mx"))
-        .join(dim(sup, "supplier"), F.col("s_suppkey") == F.col("supplier_no"))
+        .join(sup, F.col("s_suppkey") == F.col("supplier_no"))
         .select("s_suppkey", "s_name", "total_revenue")
     )
 
@@ -88,8 +87,8 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # TPC-H Q19 — OR-of-ANDs predicate join (brand × size-band × quantity
 # band). The disjunction references both sides, so it can't push into
 # either scan alone — but each disjunct's single-side conjuncts are
-# inferred and pushed (Catalyst's CNF extraction); part joins via
-# dim() so AQE picks broadcast at bench SF, shuffle at cluster scale.
+# inferred and pushed (Catalyst's CNF extraction); part joins
+# unhinted so AQE picks broadcast at bench SF, shuffle at cluster scale.
 @query(
     "q19_discount_revenue",
     oracle=f"""
@@ -103,7 +102,7 @@ WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15 AND l_quantity >= 1 AND 
 def q19_discount_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     p = _t(spark, sf_dir, "part")
-    j = li.join(dim(p, "part"), F.col("p_partkey") == F.col("l_partkey"))
+    j = li.join(p, F.col("p_partkey") == F.col("l_partkey"))
     qty = F.col("l_quantity")
     cond = (
         ((F.col("p_brand") == "Brand#12") & F.col("p_size").between(1, 15) & qty.between(1, 11))

@@ -121,19 +121,12 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("sq"),
     )
-    from koalas_spark.functions.vectorfn import dot, norm_sq
+    from koalas_spark.functions.vectorfn import as_double, norm_sq, rounded_cosine
 
     cvec = cand.join(emb, "vec_id").select("vec_id", "sq", "embedding")
-    a = cvec.select(
-        F.col("vec_id").alias("a"),
-        F.col("embedding").alias("ea"),
-        norm_sq(F.col("embedding")).alias("na"),
-    )
-    b = cvec.select(
-        F.col("vec_id").alias("b"),
-        F.col("embedding").alias("eb"),
-        norm_sq(F.col("embedding")).alias("nb"),
-    )
+    e = as_double(F.col("embedding"))
+    a = cvec.select(F.col("vec_id").alias("a"), e.alias("ea"), norm_sq(e).alias("na"))
+    b = cvec.select(F.col("vec_id").alias("b"), e.alias("eb"), norm_sq(e).alias("nb"))
     pairs = (
         a.crossJoin(b)
         .filter(F.col("a") != F.col("b"))
@@ -141,11 +134,7 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "a",
             "b",
             F.floor(
-                F.round(
-                    dot(F.col("ea"), F.col("eb"))
-                    / F.sqrt(F.col("na") * F.col("nb")),
-                    6,
-                )
+                rounded_cosine(F.col("ea"), F.col("eb"), F.col("na"), F.col("nb"))
                 * 1000000000
                 + 0.5
             )

@@ -16,7 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from koalas_spark.plans.session import dim
 from koalas_spark.queries import query
 from koalas_spark.queries.analytics import _t, davg, dsum, _dsum_sql
 
@@ -69,7 +68,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("s_suppkey", "s_name", "s_acctbal", "n_name")
     )
     offer = (
-        li.join(dim(eu_supp, "supplier"), li.l_suppkey == F.col("s_suppkey"))
+        li.join(eu_supp, li.l_suppkey == F.col("s_suppkey"))
         .groupBy("l_partkey", "l_suppkey")
         .agg(F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias("unit_price"))
     )
@@ -77,8 +76,8 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         offer.withColumn("_best", best)
         .filter(F.col("unit_price") == F.col("_best"))
-        .join(dim(part, "part"), F.col("l_partkey") == part.p_partkey)
-        .join(dim(eu_supp, "supplier"), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(part, F.col("l_partkey") == part.p_partkey)
+        .join(eu_supp, F.col("l_suppkey") == F.col("s_suppkey"))
         .select("s_acctbal", "s_name", "n_name", "p_partkey", "unit_price")
     )
 
@@ -132,10 +131,10 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
     )
     return (
-        li.join(dim(supp.filter(F.col("supp_nation").isin("NATION_1", "NATION_2")), "supplier"),
+        li.join(supp.filter(F.col("supp_nation").isin("NATION_1", "NATION_2")),
                 F.col("l_suppkey") == F.col("s_suppkey"))
         .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(dim(cust.filter(F.col("cust_nation").isin("NATION_1", "NATION_2")), "customer"),
+        .join(cust.filter(F.col("cust_nation").isin("NATION_1", "NATION_2")),
               F.col("o_custkey") == F.col("c_custkey"))
         .filter(pair)
         .withColumn("l_year", F.year("l_shipdate"))
@@ -148,7 +147,7 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 84. TPC-H Q8 — national market share: NATION_3 suppliers' share of
 # ASIA customers' PROMO-part revenue per year. Conditional-sum ratio
 # over one joined fact pass; constant dims (nation/region) broadcast,
-# SF-linear part/customer/supplier joins go through dim() so AQE owns
+# SF-linear part/customer/supplier joins stay unhinted so AQE owns
 # the strategy (broadcast at bench SF, shuffle at cluster scale).
 @query(
     "q8_market_share",
@@ -197,10 +196,10 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     target = F.when(F.col("nation") == "NATION_3", vol).otherwise(F.lit(0.0))
     return (
-        li.join(dim(part, "part"), F.col("l_partkey") == F.col("p_partkey"))
+        li.join(part, F.col("l_partkey") == F.col("p_partkey"))
         .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(dim(cust, "customer"), F.col("o_custkey") == F.col("c_custkey"))
-        .join(dim(supp, "supplier"), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
+        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
         .withColumn("o_year", F.year("o_orderdate"))
         .groupBy("o_year")
         .agg((dsum(target) / dsum(vol)).cast("double").alias("mkt_share"))
@@ -240,8 +239,8 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         - F.col("p_retailprice") * F.col("l_quantity")
     )
     return (
-        li.join(dim(part, "part"), F.col("l_partkey") == F.col("p_partkey"))
-        .join(dim(supp, "supplier"), F.col("l_suppkey") == F.col("s_suppkey"))
+        li.join(part, F.col("l_partkey") == F.col("p_partkey"))
+        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
         .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
         .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .withColumn("o_year", F.year("o_orderdate"))
@@ -281,7 +280,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey")
     ).select("s_suppkey")
     val = (
-        li.join(dim(supp, "supplier"), F.col("l_suppkey") == F.col("s_suppkey"))
+        li.join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy("l_partkey")
         .agg(dsum("l_extendedprice").alias("value"))
     )
@@ -380,7 +379,7 @@ def q16_supplier_part_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     li = _t(spark, sf_dir, "lineitem")
     return (
-        li.join(dim(part, "part"), F.col("l_partkey") == F.col("p_partkey"))
+        li.join(part, F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
     )
@@ -417,7 +416,7 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         davg("l_quantity").alias("avg_qty")
     )
     return (
-        li.join(dim(part, "part"), F.col("l_partkey") == F.col("p_partkey"))
+        li.join(part, F.col("l_partkey") == F.col("p_partkey"))
         .join(avg_qty, F.col("l_partkey") == F.col("a_partkey"))
         .filter(F.col("l_quantity") < 0.2 * F.col("avg_qty"))
         .agg((dsum("l_extendedprice") / F.lit(7.0)).cast("double").alias("avg_yearly"))
@@ -453,7 +452,7 @@ def q20_promo_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = _t(spark, sf_dir, "part").filter(F.col("p_name").like("red%"))
     supp = _t(spark, sf_dir, "supplier")
     heavy = (
-        li.join(dim(part, "part"), F.col("l_partkey") == F.col("p_partkey"))
+        li.join(part, F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("l_suppkey")
         .agg(F.sum(F.col("l_quantity").cast(DEC)).alias("_qty"))
         .filter(F.col("_qty") > 250)
@@ -521,7 +520,7 @@ def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("s_suppkey", "s_name")
     return (
         per_order.filter((F.col("_n_supp") >= 2) & (F.col("_n_late") == 1))
-        .join(dim(supp, "supplier"), F.col("_late_supp") == F.col("s_suppkey"))
+        .join(supp, F.col("_late_supp") == F.col("s_suppkey"))
         .groupBy("s_name")
         .agg(F.sum("_late_lines").cast("bigint").alias("numwait"))
     )

@@ -114,13 +114,8 @@ def nation_trade_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("c_nationkey").alias("nk"))
         .agg(F.sum("cents").cast("bigint").alias("consumed"))
     )
-    from koalas_spark.plans.session import dim
-
-    n = dim(
-        _t(spark, sf_dir, "nation").select(
-            "n_nationkey", F.col("n_name").alias("nation")
-        ),
-        "nation",
+    n = F.broadcast(
+        _t(spark, sf_dir, "nation").select("n_nationkey", F.col("n_name").alias("nation"))
     )
     return (
         n.join(sup, sup.nk == F.col("n_nationkey"), "left")

@@ -62,10 +62,11 @@ WHERE rk <= 5
 def hard_negative_mining_embeddings(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from koalas_spark.functions.vectorfn import dot, norm_sq
+    from koalas_spark.functions.vectorfn import as_double, norm_sq, rounded_cosine
+    from koalas_spark.operators.similarity import per_probe_topk
 
     emb = _t(spark, sf_dir, "embeddings")
-    vec = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    vec = as_double(F.col("embedding"))
     p = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("probe_id"),
         vec.alias("_p_vec"),
@@ -85,20 +86,13 @@ def hard_negative_mining_embeddings(
             "probe_id",
             "neighbor_id",
             "neg_label",
-            F.round(
-                dot(F.col("_p_vec"), F.col("_c_vec"))
-                / F.sqrt(F.col("_p_n") * F.col("_c_n")),
-                6,
+            rounded_cosine(
+                F.col("_p_vec"), F.col("_c_vec"), F.col("_p_n"), F.col("_c_n")
             ).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select("probe_id", "neighbor_id", "neg_label", "cos_sim", "rk")
+    return per_probe_topk(
+        scored, "cos_sim", 5, "probe_id", "neighbor_id", "neg_label", "cos_sim", "rk"
     )
 
 

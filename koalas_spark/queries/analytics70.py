@@ -62,8 +62,6 @@ FROM fit WHERE np >= 2
 """,
 )
 def price_elasticity_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from koalas_spark.plans.session import dim
-
     li = _t(spark, sf_dir, "lineitem").select(
         "l_partkey",
         F.floor(
@@ -77,7 +75,7 @@ def price_elasticity_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p_partkey").alias("l_partkey"), F.col("p_brand").alias("brand")
     )
     cell = (
-        li.join(dim(p, "part"), "l_partkey")
+        li.join(p, "l_partkey")
         .groupBy("brand", "unit_cents")
         .agg(F.sum("qi").cast("bigint").alias("q"))
     )

@@ -257,23 +257,15 @@ def centroid_similarity_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(*sv)
         .select("label", F.array(*[F.col(f"_s{i}") for i in range(dim)]).alias("v"))
     )
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+    from koalas_spark.functions.vectorfn import norm_sq, rounded_cosine
 
     a = vecs.alias("a")
     b = vecs.alias("b")
     return a.join(b, F.col("a.label") < F.col("b.label")).select(
         F.col("a.label").alias("label_a"),
         F.col("b.label").alias("label_b"),
-        F.round(
-            dot(F.col("a.v"), F.col("b.v"))
-            / F.sqrt(dot(F.col("a.v"), F.col("a.v")) * dot(F.col("b.v"), F.col("b.v"))),
-            6,
+        rounded_cosine(
+            F.col("a.v"), F.col("b.v"), norm_sq(F.col("a.v")), norm_sq(F.col("b.v"))
         ).alias("cosine"),
     )
 
@@ -284,7 +276,7 @@ def centroid_similarity_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # standing in for the GDPR request queue) and prove the erasure with a
 # per-type before/after audit. The kept side is a LEFT ANTI join on
 # the deletion list — unhinted (the list is user-cardinality, i.e.
-# SF-linear: dim() policy), so AQE broadcasts it at bench SF and
+# SF-linear, never force-broadcast): AQE broadcasts it at bench SF and
 # degrades to shuffle at cluster scale; Spark additionally pushes a
 # runtime bloom of the list into the event scan. users_erased counts
 # the listed users actually seen in each type.
@@ -1234,8 +1226,6 @@ FROM m
 """,
 )
 def grouped_ols_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from koalas_spark.plans.session import dim
-
     li = _t(spark, sf_dir, "lineitem").select(
         "l_suppkey",
         F.floor(F.col("l_quantity") * 100 + F.lit(0.5)).cast("long").alias("x"),
@@ -1243,8 +1233,8 @@ def grouped_ols_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    base = li.join(dim(s, "supplier"), F.col("l_suppkey") == F.col("s_suppkey")).join(
-        dim(n, "nation"), F.col("s_nationkey") == F.col("n_nationkey")
+    base = li.join(s, F.col("l_suppkey") == F.col("s_suppkey")).join(
+        F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey")
     )
     d = lambda c: F.sum(c.cast("decimal(25,0)")).cast("string").cast("double")
     m = base.groupBy(F.col("n_name").alias("nation")).agg(

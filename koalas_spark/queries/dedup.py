@@ -261,17 +261,15 @@ NEARDUP_BLOCK_LIMIT = 20_000
 
 def _neardup_embedding_exact(emb: DataFrame) -> DataFrame:
     """Exact all-pairs cosine >= 0.35 within label blocks."""
-    from koalas_spark.functions.vectorfn import dot, norm_sq
+    from koalas_spark.functions.vectorfn import as_double, norm_sq, rounded_cosine
 
     # cast + norm once per row, BEFORE the pair join — the join then
     # pays only the dot product per pair
-    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    v = as_double(F.col("embedding"))
     prep = emb.select("vec_id", "label", v.alias("_v"), norm_sq(v).alias("_n"))
     a = prep.alias("a")
     b = prep.alias("b")
-    cos = F.round(
-        dot(F.col("a._v"), F.col("b._v")) / F.sqrt(F.col("a._n") * F.col("b._n")), 6
-    )
+    cos = rounded_cosine(F.col("a._v"), F.col("b._v"), F.col("a._n"), F.col("b._n"))
     return (
         a.join(b, (F.col("a.label") == F.col("b.label")) & (F.col("a.vec_id") < F.col("b.vec_id")))
         .select(
@@ -541,17 +539,15 @@ WHERE {_NDC_COS.format(a="a", b="b")} >= 0.35
     allow={"BroadcastNestedLoopJoin"},
 )
 def neardup_embedding_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from koalas_spark.functions.vectorfn import dot, norm_sq
+    from koalas_spark.functions.vectorfn import as_double, norm_sq, rounded_cosine
 
     emb = _t(spark, sf_dir, "embeddings")
-    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    v = as_double(F.col("embedding"))
     prep = emb.select("vec_id", "label", v.alias("_v"), norm_sq(v).alias("_n"))
     cents = emb.filter(F.col("vec_id") < 16).select(
         F.col("vec_id").alias("j"), v.alias("_c"), norm_sq(v).alias("_cn")
     )
-    ccos = F.round(
-        dot(F.col("_v"), F.col("_c")) / F.sqrt(F.col("_n") * F.col("_cn")), 6
-    )
+    ccos = rounded_cosine(F.col("_v"), F.col("_c"), F.col("_n"), F.col("_cn"))
     w_assign = Window.partitionBy("vec_id").orderBy(
         F.col("_cc").desc(), F.col("j").asc()
     )
@@ -565,9 +561,7 @@ def neardup_embedding_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "label", "_v", "_n", F.col("j").alias("cell"))
     )
     a, b = av.alias("a"), av.alias("b")
-    cos = F.round(
-        dot(F.col("a._v"), F.col("b._v")) / F.sqrt(F.col("a._n") * F.col("b._n")), 6
-    )
+    cos = rounded_cosine(F.col("a._v"), F.col("b._v"), F.col("a._n"), F.col("b._n"))
     return (
         a.join(
             b,

@@ -15,7 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from koalas_spark.plans.session import dim
 from koalas_spark.queries import query
 from koalas_spark.queries.analytics import _t
 
@@ -85,8 +84,8 @@ def pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     edges = (
         li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(dim(c, "customer"), F.col("o_custkey") == F.col("c_custkey"))
-        .join(dim(s, "supplier"), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(c, F.col("o_custkey") == F.col("c_custkey"))
+        .join(s, F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy(
             F.col("s_nationkey").alias("u"), F.col("c_nationkey").alias("v")
         )

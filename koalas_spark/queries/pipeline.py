@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from koalas_spark.functions.vectorfn import norm_sq
 from koalas_spark.memo import staged
 from koalas_spark.queries import query
 from koalas_spark.queries.analytics import _t
@@ -323,12 +324,7 @@ def embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
         lambda x: (x.cast("double") * 1048576).cast("bigint"),
     )
-    sq = F.aggregate(
-        F.zip_with(sv, sv, lambda a, b: a * b),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    nrm = F.sqrt(sq.cast("double")) / 1048576.0
+    nrm = F.sqrt(norm_sq(sv, 0).cast("double")) / 1048576.0
     return (
         e.select("label", nrm.alias("nrm"))
         .groupBy("label")

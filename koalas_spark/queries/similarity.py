@@ -2,10 +2,16 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from koalas_spark.operators.similarity import brute_force_topk, lsh_topk
+from koalas_spark.functions.vectorfn import rounded_cosine
+from koalas_spark.operators.similarity import (
+    brute_force_topk,
+    lsh_topk,
+    per_probe_topk,
+    spread_vector_table,
+)
 from koalas_spark import memo
 from koalas_spark.queries import query
 from koalas_spark.queries.analytics import _t
@@ -82,7 +88,7 @@ WHERE rk <= 5
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     probes = emb.filter(F.col("vec_id") < 5)
-    return lsh_topk(emb, probes, "vec_id", "embedding", k=5, num_planes=8, dim=64)
+    return lsh_topk(emb, probes, "vec_id", "embedding", k=5, num_planes=8)
 
 
 def _kmeans_oracle_sql(
@@ -715,25 +721,7 @@ def _graph_search_frames(
     # memoized nn_descent_graph_table — already checkpointed by the
     # final refinement round, so no extra checkpoint is needed here
     graph = nn_descent_graph_table(spark, sf_dir).select("src", "dst")
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    # key-spread before checkpointing (the nn_descent discipline): the
-    # one-split embeddings scan would otherwise serialize every
-    # downstream scoring join on a single core.
-    vec = (
-        emb.select(F.col("vec_id").alias("vid"), v.alias("v"))
-        .withColumn("n2", dot(F.col("v"), F.col("v")))
-        .filter(F.col("n2") > 0)
-        .repartition(spark.sparkContext.defaultParallelism, "vid")
-        .localCheckpoint(eager=False)
-    )
+    vec = spread_vector_table(emb, "vec_id", "embedding")
     probe = vec.filter(F.col("vid") < 5).select(
         F.col("vid").alias("pid"),
         F.col("v").alias("pv"),
@@ -771,25 +759,21 @@ def _graph_search_frames(
             .select(
                 "pid",
                 "node",
-                F.round(
-                    dot(F.col("pv"), F.col("cv"))
-                    / F.sqrt(F.col("pn2") * F.col("cn2")),
-                    6,
+                rounded_cosine(
+                    F.col("pv"), F.col("cv"), F.col("pn2"), F.col("cn2")
                 ).alias("cs"),
             )
         )
 
-    w = Window.partitionBy("pid").orderBy(F.desc("cs"), F.asc("node"))
+    def top(scored: DataFrame, k: int, *cols) -> DataFrame:
+        return per_probe_topk(scored, "cs", k, *cols, by="pid", tie="node")
+
     sc = score(
         probe.select("pid").crossJoin(
             vec.filter(F.col("vid") < 16).select(F.col("vid").alias("node"))
         )
     ).localCheckpoint(eager=False)
-    beam = (
-        sc.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 8)
-        .select("pid", "node")
-    )
+    beam = top(sc, 8, "pid", "node")
     # visited-set lifecycle (r13): the walk never reads `vis` inside
     # the loop, so the old per-round unionByName().distinct()
     # .localCheckpoint() rotation (3 extra shuffles + 3 checkpoint
@@ -818,11 +802,7 @@ def _graph_search_frames(
             .dropDuplicates(["pid", "node"])
         )
         sc = score(cand).localCheckpoint(eager=False)
-        beam = (
-            sc.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= 8)
-            .select("pid", "node")
-        )
+        beam = top(sc, 8, "pid", "node")
         vis_parts.append(sc)
     vis = vis_parts[0]
     for part in vis_parts[1:]:
@@ -831,18 +811,15 @@ def _graph_search_frames(
     # deterministic per (pid, node), so dedup on (pid, node) over the
     # appended rounds ≡ the old full-row distinct, and both it and
     # the window ride one pid-keyed exchange.
-    ranked = (
+    ranked = top(
         vis.filter(F.col("node") != F.col("pid"))
         .repartition(spark.sparkContext.defaultParallelism, "pid")
-        .dropDuplicates(["pid", "node"])
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select(
-            F.col("pid").alias("probe_id"),
-            F.col("node").alias("neighbor_id"),
-            F.col("cs").alias("cos_sim"),
-            "rk",
-        )
+        .dropDuplicates(["pid", "node"]),
+        5,
+        F.col("pid").alias("probe_id"),
+        F.col("node").alias("neighbor_id"),
+        F.col("cs").alias("cos_sim"),
+        "rk",
     )
     return vec, ranked
 
@@ -868,35 +845,23 @@ def ann_graph_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def graph_search_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec, gsr = _graph_search_frames(spark, sf_dir)
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
     p = vec.filter(F.col("vid") < 5).select(
         F.col("vid").alias("probe_id"),
         F.col("v").alias("pv"),
         F.col("n2").alias("pn2"),
     )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cs"), F.asc("neighbor_id"))
-    bf = (
+    bf = per_probe_topk(
         F.broadcast(p)
         .join(vec, p["probe_id"] != vec["vid"])
         .select(
             "probe_id",
             F.col("vid").alias("neighbor_id"),
-            F.round(
-                dot(F.col("pv"), F.col("v"))
-                / F.sqrt(F.col("pn2") * F.col("n2")),
-                6,
-            ).alias("cs"),
-        )
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select("probe_id", "neighbor_id")
+            rounded_cosine(F.col("pv"), F.col("v"), F.col("pn2"), F.col("n2")).alias("cs"),
+        ),
+        "cs",
+        5,
+        "probe_id",
+        "neighbor_id",
     )
     hits = (
         gsr.select("probe_id", "neighbor_id")

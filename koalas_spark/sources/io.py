@@ -118,34 +118,3 @@ def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Distributed JSONL sink."""
     df.write.mode(mode).json(path)
 
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC source (JVM-native, vectorized, predicate pushdown + column
-    pruning like parquet — the interchange format for Hive-era lakes)."""
-    return spark.read.orc(path)
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Distributed ORC sink."""
-    df.write.mode(mode).orc(path)
-
-
-def write_parquet_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_by: tuple[str, ...],
-    mode: str = "overwrite",
-    max_records_per_file: int = 5_000_000,
-) -> None:
-    """Hive-partitioned parquet sink: one directory level per
-    partition column, enabling partition pruning on read (a filter on
-    a partition column skips whole directories without touching file
-    footers). Choose low-cardinality columns; maxRecordsPerFile caps
-    file size so a skewed partition value still splits into
-    scan-parallel files."""
-    (
-        df.write.mode(mode)
-        .option("maxRecordsPerFile", max_records_per_file)
-        .partitionBy(*partition_by)
-        .parquet(path)
-    )

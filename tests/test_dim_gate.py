@@ -5,7 +5,7 @@ SF-linear table (customer 150k x SF, supplier 10k x SF, part 200k x SF)
 is fatal at the 100 TB target: the executors OOM building the hash
 relation instead of degrading to a shuffle join. Only constant-
 cardinality dims (nation=25 rows, region=5 rows at every SF) may carry
-the hint — `koalas_spark.plans.session.dim` encodes that policy.
+the hint; SF-linear tables join unhinted so AQE owns the strategy.
 
 This test walks the ANALYZED logical plan of every registered batch
 query and collects the output columns of each ResolvedHint node (the
@@ -16,8 +16,6 @@ averages, probe sets, k-row stats) rename their outputs, so they pass.
 """
 
 from __future__ import annotations
-
-from koalas_spark.plans.session import CONSTANT_DIMS, dim
 
 # raw column prefixes of the SF-linear TPC-H tables
 _LINEAR_PREFIXES = ("c_", "s_", "p_")
@@ -41,17 +39,6 @@ def _hint_outputs(df) -> list[list[str]]:
     return out
 
 
-def test_dim_broadcasts_only_constant_tables(spark):
-    small = spark.range(3)
-    assert "nation" in CONSTANT_DIMS and "region" in CONSTANT_DIMS
-    for t in ("nation", "region"):
-        hinted = dim(small, t)
-        assert _hint_outputs(hinted.crossJoin(spark.range(2))), t
-    for t in ("customer", "supplier", "part", "orders", "lineitem"):
-        unhinted = dim(small, t)
-        assert not _hint_outputs(unhinted.crossJoin(spark.range(2))), t
-
-
 def test_no_forced_broadcast_of_sf_linear_tables(registry_frames):
     offenders = []
     for name, df in registry_frames.items():
@@ -61,6 +48,6 @@ def test_no_forced_broadcast_of_sf_linear_tables(registry_frames):
                 offenders.append(f"{name}: hinted frame exposes {bad}")
     assert not offenders, (
         "forced broadcast of SF-linear customer/supplier/part columns "
-        "(route these joins through plans.session.dim):\n"
+        "(join these tables unhinted and let AQE pick the strategy):\n"
         + "\n".join(offenders)
     )

@@ -26,14 +26,12 @@ def test_jsonl_roundtrip(spark, tmp_path):
 
 
 def test_orc_roundtrip_pushdown(spark, tmp_path):
-    from koalas_spark.sources.io import read_orc, write_orc
-
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").select(
         "doc_id", "lang", "n_chars"
     )
     path = str(tmp_path / "docs_orc")
-    write_orc(docs, path)
-    back = read_orc(spark, path)
+    docs.write.orc(path)
+    back = spark.read.orc(path)
     assert back.schema == docs.schema
     a = {(r.doc_id, r.lang, r.n_chars) for r in docs.collect()}
     b = {(r.doc_id, r.lang, r.n_chars) for r in back.collect()}
@@ -50,11 +48,9 @@ def test_orc_roundtrip_pushdown(spark, tmp_path):
 
 
 def test_partitioned_parquet_prunes(spark, tmp_path):
-    from koalas_spark.sources.io import write_parquet_partitioned
-
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     path = str(tmp_path / "docs_by_lang")
-    write_parquet_partitioned(docs, path, ("lang",))
+    docs.write.partitionBy("lang").parquet(path)
     back = spark.read.parquet(path)
     assert back.count() == docs.count()
     one = back.filter(F.col("lang") == "en")

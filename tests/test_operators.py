@@ -105,7 +105,7 @@ def test_ann_topk_and_lsh_recall(spark):
         neigh = {res[(p, rk)] for rk in (1, 2, 3)}
         assert neigh == {p + 3, p + 6, p + 9}
 
-    approx = lsh_topk(emb, probes, "vec_id", "embedding", k=3, num_planes=4, dim=8)
+    approx = lsh_topk(emb, probes, "vec_id", "embedding", k=3, num_planes=4)
     arr = {(r["probe_id"], r["neighbor_id"]) for r in approx.collect()}
     exact_set = {(r["probe_id"], r["neighbor_id"]) for r in exact.collect()}
     recall = len(arr & exact_set) / len(exact_set)

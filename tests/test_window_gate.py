@@ -4,7 +4,8 @@
 The registry-wide enforcement lives in tests/test_plan_audit.py (any
 UnboundedGlobalWindow! flag is unallowlistable there); these tests pin
 the DETECTOR's behavior on the four canonical shapes so a parser
-regression can't quietly turn the gate off."""
+regression can't quietly turn the gate off. The last test pins the
+Python-stage detector of ``inspect_plan`` the same way."""
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -14,6 +15,7 @@ from tools.audit_plans import (
     _bounded_rdd_scan_ids,
     _global_window_audit,
     _partitionless_window_ids,
+    inspect_plan,
 )
 
 
@@ -146,3 +148,22 @@ def test_window_group_limit_partitioned_not_flagged(spark):
         "Arguments: [], [id#0L ASC NULLS FIRST], row_number(), 3, Final\n"
     )
     assert _partitionless_window_ids(synth) == {1}
+
+
+def test_cogroup_and_map_in_arrow_are_python_stages(spark):
+    # Spark 4.1 prints a cogrouped applyInPandas as
+    # FlatMapCoGroupsInPandas and mapInArrow as MapInArrow; both run
+    # Python workers, so both must raise the Python flag
+    left = spark.createDataFrame([(1, 1.0), (2, 2.0)], "k long, x double")
+    right = spark.createDataFrame([(1, 3.0)], "k long, y double")
+    cog = left.groupBy("k").cogroup(right.groupBy("k")).applyInPandas(
+        lambda a, b: a[["k"]], schema="k long"
+    )
+    arrow = left.mapInArrow(lambda batches: batches, schema=left.schema)
+    for df, node, name in (
+        (cog, "FlatMapCoGroupsInPandas", "cogroup_monthly_reconciliation"),
+        (arrow, "MapInArrow", "int8_quant_error_scan"),
+    ):
+        plan = _fmt(spark, df)
+        assert node in plan
+        assert "Python" in inspect_plan(plan, name)["flags"], node

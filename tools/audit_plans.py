@@ -241,6 +241,18 @@ def _global_window_audit(plan: str, name: str) -> tuple[int, int]:
     return (len(pl_ids), n_unbounded)
 
 
+# physical nodes that run Python workers, as Spark 4.1 prints them
+# (cogrouped applyInPandas is FlatMapCoGroupsInPandas, mapInArrow is
+# MapInArrow)
+_PYTHON_NODES = (
+    "ArrowEvalPython",
+    "FlatMapGroupsInPandas",
+    "FlatMapCoGroupsInPandas",
+    "MapInPandas",
+    "MapInArrow",
+)
+
+
 def inspect_plan(plan: str, name: str) -> dict:
     """Extract the audited facts from one formatted plan string."""
     import re
@@ -252,7 +264,7 @@ def inspect_plan(plan: str, name: str) -> dict:
         flags.append("BroadcastNestedLoopJoin")
     if "BatchEvalPython" in plan:
         flags.append("BatchEvalPython(row-wise!)")
-    if "ArrowEvalPython" in plan or "FlatMapGroupsInPandas" in plan or "MapInPandas" in plan or "PythonMapInArrow" in plan:
+    if any(node in plan for node in _PYTHON_NODES):
         flags.append("Python")
     # a partition-less Window funnels its whole input through ONE task
     # — the classic global-top-k scale trap. Detected per NODE (empty

@@ -2,7 +2,7 @@
 
 Runs the given ops — plus the top-N wall-clock queries from the last
 full bench map (BENCH_local.json) — at an sf10 replica under the
-DEFAULT 16g heap with ANSI mode on, through a noop sink so every
+session's default heap with ANSI mode on, through a noop sink so every
 query executes fully. Pass/fail per op is "ran to completion": ANSI
 surfaces the scale-only landmines (int64 overflow — the r11
 littles_law_audit catch — cast truncation, div-by-zero) as errors
@@ -16,10 +16,8 @@ discipline): the gate's first same-session run died of accumulated
 JVM pressure after 14 heavy queries (GCLocker thrash -> dead session
 -> every later op falsely FAILed), and isolation also gives every op
 the full heap — the same failure-isolation a per-query driver job
-gets on a real cluster. Session-shared artifacts persist as on-disk
-snapshots, so each subprocess pays only the checkpoint respread, and
-a warmup step (--one=__warmup__) charges the one-time artifact BUILD
-to its own row instead of whichever graph consumer runs first.
+gets on a real cluster. Session artifacts are per process, so each
+op pays its own artifact builds.
 
 Usage:
     python tools/sf10_gate.py [sf_dir] [--ops=a,b,c] [--top=20]
@@ -58,20 +56,13 @@ def _bench_map() -> tuple[float, dict[str, float]]:
 
 
 def _run_one(name: str, sf_dir: str) -> int:
-    """Child-process entry: execute one op (or the artifact warmup)
-    through the noop sink; exit 0 on success."""
+    """Child-process entry: execute one op through the noop sink;
+    exit 0 on success."""
     from koalas_spark import get_spark
     from koalas_spark.queries import all_queries
 
     spark = get_spark("sf10_gate")
     queries = all_queries()
-    if name == "__warmup__":
-        for art in ("degree_distribution_copurchase", "acf_daily_revenue"):
-            if art in queries:
-                queries[art](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-        return 0
     # stamp the QUERY-ONLY wall (session startup excluded) for the
     # parent to parse — a cold JVM adds ~13s that would otherwise
     # swamp the per-decade ratio of sub-second ops
@@ -134,7 +125,6 @@ def main(argv: list[str]) -> int:
     if missing:
         print(f"UNKNOWN OPS: {missing}")
         return 2
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
     decades = math.log10(10.0 / bsf)
 
     def _spawn(op: str) -> tuple[bool, float, str]:
@@ -170,8 +160,6 @@ def main(argv: list[str]) -> int:
             tail = (lines[-1] if lines else f"exit {p.returncode}")[:160]
         return (p.returncode == 0, wall, tail)
 
-    ok_w, wall_w, _ = _spawn("__warmup__")
-    print(f"(artifact warmup: {wall_w:.1f}s, {'OK' if ok_w else 'FAIL'})\n")
     print(f"| op | sf10 wall | sf{bsf} wall | per-decade | status |")
     print("| --- | --- | --- | --- | --- |")
     n_ok = 0
@@ -207,8 +195,7 @@ def main(argv: list[str]) -> int:
             )
     verdict = "PASS" if n_ok == len(names) else "FAIL"
     print(
-        f"\nSF10 GATE {verdict}: {n_ok}/{len(names)} ops ran clean "
-        f"at {mem} heap ({sf_dir})"
+        f"\nSF10 GATE {verdict}: {n_ok}/{len(names)} ops ran clean ({sf_dir})"
     )
     return 0 if n_ok == len(names) else 1
 
