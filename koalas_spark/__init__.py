@@ -10,12 +10,12 @@ large-scale LLM-training-data pipeline needs (dedup, similarity search,
 text analysis, multimodal columns, streaming).
 
 Public API:
-    from koalas_spark import KFrame, get_spark, read_table, read_parquet
+    from koalas_spark import KFrame, get_spark, read_table
 """
 
 from koalas_spark.plans.session import get_spark
 from koalas_spark.frame import KFrame
-from koalas_spark.sources.io import read_table, read_parquet, load_tables
+from koalas_spark.sources.io import read_table
 
-__all__ = ["KFrame", "get_spark", "read_table", "read_parquet", "load_tables"]
+__all__ = ["KFrame", "get_spark", "read_table"]
 __version__ = "0.1.0"

@@ -51,4 +51,10 @@ def rounded_cosine(a: Column, b: Column, na: Column, nb: Column) -> Column:
     norms — one sqrt of the product, the shape DuckDB's
     list_cosine_similarity uses; the 6-decimal round makes rankings
     tie-stable across engines."""
-    return F.round(dot(a, b) / F.sqrt(na * nb), 6)
+    return cosine_of_dot(dot(a, b), na, nb)
+
+
+def cosine_of_dot(ab: Column, na: Column, nb: Column) -> Column:
+    """rounded_cosine from a dot product the caller also keeps, so
+    each scored pair folds its terms once."""
+    return F.round(ab / F.sqrt(na * nb), 6)

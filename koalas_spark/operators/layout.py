@@ -53,7 +53,7 @@ def zorder_key(df: DataFrame, cols: list[str], bits: int = 12) -> DataFrame:
         *[F.min(c).cast("double").alias(f"_mn_{c}") for c in cols],
         *[F.max(c).cast("double").alias(f"_mx_{c}") for c in cols],
     )
-    d = df.crossJoin(F.broadcast(stats))
+    d = df.crossJoin(stats)
     top = (1 << bits) - 1
     scaled = [
         F.coalesce(
@@ -115,7 +115,7 @@ def hilbert_key_2d(df: DataFrame, cols: list[str], bits: int = 12) -> DataFrame:
         *[F.min(c).cast("double").alias(f"_mn_{c}") for c in cols],
         *[F.max(c).cast("double").alias(f"_mx_{c}") for c in cols],
     )
-    d = df.crossJoin(F.broadcast(stats))
+    d = df.crossJoin(stats)
     top = (1 << bits) - 1
     scaled = [
         F.coalesce(

@@ -18,7 +18,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from koalas_spark.functions.vectorfn import as_double, dot, l2_sq, norm_sq, rounded_cosine
+from koalas_spark.functions.vectorfn import (
+    as_double,
+    cosine_of_dot,
+    dot,
+    l2_sq,
+    norm_sq,
+    rounded_cosine,
+)
 
 # PQ splits a vector into NSUB subspaces of DSUB dims; RQ's level-2
 # codebook is the level-1 rows scaled by SHRINK (an exact power of
@@ -267,11 +274,7 @@ def int8_brute_force_topk(
         F.col("_neighbor_id_qn") > 0
     )
     qdot = dot(F.col("_probe_id_qv"), F.col("_neighbor_id_qv"), 0)
-    qcos = F.round(
-        qdot.cast("double")
-        / F.sqrt((F.col("_probe_id_qn") * F.col("_neighbor_id_qn")).cast("double")),
-        6,
-    )
+    qcos = cosine_of_dot(qdot, F.col("_probe_id_qn"), F.col("_neighbor_id_qn"))
     scored = (
         qc.crossJoin(F.broadcast(qp))
         .filter(F.col("neighbor_id") != F.col("probe_id"))
@@ -607,7 +610,9 @@ def nn_descent(
     # that every round reuses anyway) and hint broadcast under the
     # same kind of size gate AQE itself applies; above the gate the
     # shuffle joins stay, so the plan degrades exactly as before at
-    # cluster scale. Join strategy never changes values.
+    # cluster scale. Join strategy never changes values. The gate
+    # counts rows instead of reading memo.source_bytes: the operator takes
+    # frames, not an sf_dir, and it pays this count for cand_fan anyway.
     n_vec = vec.count()
     bcast_vec = n_vec <= 100_000
     # Scale-adaptive candidate fan (guide §2): each refinement round

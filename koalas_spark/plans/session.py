@@ -68,7 +68,17 @@ def get_spark(app_name: str = "koalas_spark", cpus: int | None = None) -> SparkS
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", heap))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # dims under 64MB broadcast automatically; AQE can upgrade at runtime
+        # The broadcast policy. Any join side the planner sizes under
+        # 64 MB broadcasts without a hint (1-row aggregates, nation/
+        # region, literal frames), and AQE can still upgrade a join at
+        # runtime. A frame carries an explicit F.broadcast only where
+        # the planner cannot size it: a checkpoint with no estimate, or
+        # a frame bounded by construction whose estimate grows with the
+        # input (probe sets, per-probe top-k beams). A hint whose bound
+        # depends on input size compares memo.source_bytes of its
+        # source with a named limit (mining.V_GATE_BYTES, E_GATE_BYTES,
+        # similarity.WALK_GATE_BYTES); forcing source_bytes high (the
+        # tier-1 above-gate sweep) exercises every above-gate plan.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.ui.enabled", "false")

@@ -296,8 +296,8 @@ def q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             supp,
             (li.l_suppkey == supp.s_suppkey) & (cust.c_nationkey == supp.s_nationkey),
         )
-        .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        .join(nation, supp.s_nationkey == nation.n_nationkey)
+        .join(region, nation.n_regionkey == region.r_regionkey)
         .groupBy("n_name")
         .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
     )
@@ -362,7 +362,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
+        .join(nation, cust.c_nationkey == nation.n_nationkey)
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
         .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
         .select("c_custkey", "c_name", "revenue", "c_acctbal", "n_name")

@@ -586,7 +586,7 @@ def event_cusum_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cum"),
         F.row_number().over(w).cast("bigint").alias("i"),
     )
-    d = c.crossJoin(F.broadcast(st)).select(
+    d = c.crossJoin(st).select(
         "day",
         "n_events",
         (F.col("nd") * F.col("cum") - F.col("i") * F.col("tot")).alias(
@@ -594,7 +594,7 @@ def event_cusum_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     mx = d.agg(F.max(F.abs(F.col("cum_dev_scaled"))).alias("m"))
-    return d.crossJoin(F.broadcast(mx)).select(
+    return d.crossJoin(mx).select(
         "day",
         "n_events",
         "cum_dev_scaled",
@@ -748,7 +748,7 @@ def rrf_fusion_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         tf.join(F.broadcast(dfq), "term")
         .join(dl, "doc_id")
-        .crossJoin(F.broadcast(st))
+        .crossJoin(st)
         .groupBy("doc_id")
         .agg(F.sum(idf_s * tfnorm).alias("score"))
     )
@@ -962,7 +962,7 @@ def skew_audit_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_keys"),
         F.max("cnt").cast("bigint").alias("max_cnt"),
     )
-    return st.crossJoin(F.broadcast(t10)).select(
+    return st.crossJoin(t10).select(
         "n_rows",
         "n_keys",
         "max_cnt",
@@ -1134,16 +1134,16 @@ def decile_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = s.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     qs = spark.range(1, 10).select(F.col("id").alias("q"))
     bnds = (
-        cumh.crossJoin(F.broadcast(n))
+        cumh.crossJoin(n)
         .join(
-            F.broadcast(qs),
+            qs,
             F.col("cum") >= F.expr("(q * n + 9) div 10"),  # ceil(q*n/10)
         )
         .groupBy("q")
         .agg(F.min("bucket").alias("bval"))
     )
     arr = bnds.agg(F.sort_array(F.collect_list("bval")).alias("bnds"))
-    dec = s.crossJoin(F.broadcast(arr)).select(
+    dec = s.crossJoin(arr).select(
         "urgent",
         (
             F.lit(1)
@@ -1282,7 +1282,7 @@ def bloom_filter_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     hs = spark.range(3).select(F.col("id").cast("int").alias("i"))
 
     def positions(kdf: DataFrame) -> DataFrame:
-        return kdf.crossJoin(F.broadcast(hs)).select(
+        return kdf.crossJoin(hs).select(
             "k",
             (
                 portable_hash60(
@@ -1327,8 +1327,8 @@ def bloom_filter_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     st = keys.agg(F.count(F.lit(1)).cast("bigint").alias("n_keys"))
     sp = probes.agg(F.count(F.lit(1)).cast("bigint").alias("n_probes"))
     return (
-        st.crossJoin(F.broadcast(sp))
-        .crossJoin(F.broadcast(fp))
+        st.crossJoin(sp)
+        .crossJoin(fp)
         .select(
             F.lit(M).cast("int").alias("m_bits"),
             "n_keys",
@@ -1402,14 +1402,12 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         % W
     )
     cells = (
-        c.crossJoin(F.broadcast(ds))
+        c.crossJoin(ds)
         .groupBy("d", cell.alias("cell"))
         .agg(F.sum("cnt").cast("bigint").alias("v"))
     )
     top = c.orderBy(F.col("cnt").desc(), F.col("token").asc()).limit(20)
-    probe = top.crossJoin(F.broadcast(ds)).select(
-        "token", "cnt", "d", cell.alias("cell")
-    )
+    probe = top.crossJoin(ds).select("token", "cnt", "d", cell.alias("cell"))
     est = (
         probe.join(cells, ["d", "cell"])
         .groupBy("token", "cnt")

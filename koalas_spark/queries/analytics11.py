@@ -254,7 +254,7 @@ def psi_price_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("ca").cast("bigint").alias("ta"),
         F.sum("cb").cast("bigint").alias("tb"),
     )
-    p = h.crossJoin(F.broadcast(t)).select(
+    p = h.crossJoin(t).select(
         "bucket",
         F.expr("1000000 * (ca + 1) div (ta + 10)").alias("p_ppm"),
         F.expr("1000000 * (cb + 1) div (tb + 10)").alias("q_ppm"),
@@ -398,7 +398,7 @@ def benford_price_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     exp_col = F.element_at(
         F.array(*[F.lit(v) for v in exp_ppm]), F.col("digit").cast("int")
     ).cast("bigint")
-    j = h.crossJoin(F.broadcast(t))
+    j = h.crossJoin(t)
     return j.select(
         "digit",
         "n",
@@ -571,7 +571,7 @@ def naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = vocab.agg(F.count(F.lit(1)).cast("bigint").alias("vs"))
     model = (
         langs.crossJoin(vocab)
-        .crossJoin(F.broadcast(v))
+        .crossJoin(v)
         .join(F.broadcast(tot), "lang")
         .join(cnt, ["lang", "token"], "left")
         .select(
@@ -595,7 +595,7 @@ def naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.filter("is_train")
         .groupBy("lang")
         .agg(F.count(F.lit(1)).cast("bigint").alias("nl"))
-        .crossJoin(F.broadcast(n_train))
+        .crossJoin(n_train)
         .select(
             "lang",
             F.floor(
@@ -744,7 +744,7 @@ def sketch_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     inter = (
         ka.join(kb, "hv")
-        .crossJoin(F.broadcast(tmin.select("th")))
+        .crossJoin(tmin.select("th"))
         .filter(F.col("hv") <= F.col("th"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("ni"))
     )
@@ -851,7 +851,7 @@ def chi2_feature_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("a") + F.col("b") >= 5)
     )
-    x = ct.crossJoin(F.broadcast(n)).select(
+    x = ct.crossJoin(n).select(
         "token",
         "a",
         "b",

@@ -390,9 +390,7 @@ def acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     daily = daily_revenue_table(spark, sf_dir)
     ks = spark.range(1, 8).select(F.col("id").cast("bigint").alias("k"))
-    probe = daily.crossJoin(F.broadcast(ks)).select(
-        "k", "x", (F.col("d") + F.col("k")).alias("pd")
-    )
+    probe = daily.crossJoin(ks).select("k", "x", (F.col("d") + F.col("k")).alias("pd"))
     right = daily.select(F.col("d").alias("pd"), F.col("x").alias("y"))
     pairs = probe.join(right, "pd")
     d38 = lambda col: col.cast("decimal(38,0)")  # noqa: E731
@@ -529,7 +527,7 @@ def km_survival_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.col("o_orderdate").cast("date")).alias("l"),
     )
     horizon = o.agg(F.max(F.col("o_orderdate").cast("date")).alias("m"))
-    lt = cust.crossJoin(F.broadcast(horizon)).select(
+    lt = cust.crossJoin(horizon).select(
         F.datediff("l", "f").cast("bigint").alias("dur"),
         F.when(F.datediff("m", "l") > 365, 1).otherwise(0).alias("ev"),
     )

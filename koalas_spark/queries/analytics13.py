@@ -441,11 +441,11 @@ def theil_sen_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = h.agg(F.sum("c").cast("bigint").alias("n_pairs"))
     days_n = daily.agg(F.count(F.lit(1)).cast("bigint").alias("n_days"))
     med = (
-        cum.crossJoin(F.broadcast(tot))
+        cum.crossJoin(tot)
         .filter(F.col("cum") >= F.expr("(n_pairs + 1) div 2"))
         .agg(F.min("slope").cast("bigint").alias("median_slope_micro"))
     )
-    return days_n.crossJoin(F.broadcast(tot)).crossJoin(F.broadcast(med))
+    return days_n.crossJoin(tot).crossJoin(med)
 
 
 # --------------------------------------------------------------------

@@ -169,7 +169,7 @@ def item_item_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("u").alias("s")
         )
     )
-    cand = sym.join(F.broadcast(seeds), sym.u == F.col("s")).drop("s")
+    cand = sym.join(seeds, sym.u == F.col("s")).drop("s")
     du = deg.select(F.col("p").alias("u"), F.col("d").alias("du"))
     dv = deg.select(F.col("p").alias("v"), F.col("d").alias("dv"))
     scored = (

@@ -89,9 +89,7 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     ks = spark.createDataFrame([(100,), (500,), (1000,), (5000,)], "k bigint")
-    j = ks.crossJoin(F.broadcast(tot)).join(
-        F.broadcast(top), F.col("rk") <= F.col("k"), "left"
-    )
+    j = ks.crossJoin(tot).join(top, F.col("rk") <= F.col("k"), "left")
     return (
         j.groupBy("k", "n_vocab", "total")
         .agg(
@@ -294,12 +292,12 @@ def type_entropy_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = h.agg(F.sum("c").cast("bigint").alias("nd"))
     med = (
-        cum.crossJoin(F.broadcast(tot))
+        cum.crossJoin(tot)
         .filter(F.col("cum") >= F.expr("(nd + 1) div 2"))
         .agg(F.min("ent_nano").cast("bigint").alias("med"))
     )
     return (
-        ent.crossJoin(F.broadcast(med))
+        ent.crossJoin(med)
         .select(
             "day",
             F.col("n").alias("n_events"),
@@ -372,7 +370,7 @@ def revenue_share_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     grev = nd.agg(F.sum("rev").cast("bigint").alias("grev"))
     return (
         nd.join(F.broadcast(rrev), "rk")
-        .crossJoin(F.broadcast(grev))
+        .crossJoin(grev)
         .select(
             "n_name",
             "r_name",

@@ -84,7 +84,7 @@ def basket_affinity_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         cooc.join(du, "u")
         .join(dv, "v")
-        .crossJoin(F.broadcast(nb))
+        .crossJoin(nb)
         .select(
             "u",
             "v",

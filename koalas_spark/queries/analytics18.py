@@ -100,7 +100,7 @@ def ks_test_price_eras(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("ca").over(w).cast("bigint").alias("cca"),
         F.sum("cb").over(w).cast("bigint").alias("ccb"),
     )
-    d = cum.crossJoin(F.broadcast(n)).select(
+    d = cum.crossJoin(n).select(
         "cents",
         "na",
         "nb",
@@ -110,13 +110,13 @@ def ks_test_price_eras(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=False)
     mx = d.agg(F.max("diff_ppm").cast("bigint").alias("d_ppm"))
     arg = (
-        d.crossJoin(F.broadcast(mx))
+        d.crossJoin(mx)
         .filter(F.col("diff_ppm") == F.col("d_ppm"))
         .agg(F.min("cents").cast("bigint").alias("argmax_cents"))
     )
     return (
-        n.crossJoin(F.broadcast(mx))
-        .crossJoin(F.broadcast(arg))
+        n.crossJoin(mx)
+        .crossJoin(arg)
         .select(
             F.col("na").alias("n_era_a"),
             F.col("nb").alias("n_era_b"),
@@ -203,7 +203,7 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("tadj")
         )
     )
-    v = nn.crossJoin(F.broadcast(ties)).select(
+    v = nn.crossJoin(ties).select(
         (
             F.col("n") * (F.col("n") - 1) * (2 * F.col("n") + 5)
             - F.col("tadj")
@@ -215,8 +215,8 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("s") > 0, 1).when(F.col("s") < 0, -1).otherwise(0)
     )
     return (
-        nn.crossJoin(F.broadcast(s))
-        .crossJoin(F.broadcast(v))
+        nn.crossJoin(s)
+        .crossJoin(v)
         .select(
             F.col("n").alias("n_days"),
             F.col("s").alias("s_stat"),

@@ -235,12 +235,12 @@ def daily_revenue_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     cum = h.select("v", F.sum("c").over(wcum).cast("bigint").alias("cum"))
     tot = h.agg(F.sum("c").cast("bigint").alias("n"))
     p90 = (
-        cum.crossJoin(F.broadcast(tot))
+        cum.crossJoin(tot)
         .filter(F.col("cum") >= F.expr("(9 * n + 9) div 10"))
         .agg(F.min("v").cast("bigint").alias("p90"))
     )
     return (
-        nbr.crossJoin(F.broadcast(p90))
+        nbr.crossJoin(p90)
         .filter(
             F.col("prev").isNotNull()
             & F.col("nxt").isNotNull()

@@ -245,7 +245,7 @@ def max_drawdown_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mx = dd.agg(F.min("drawdown").cast("bigint").alias("max_dd"))
     at = (
-        dd.crossJoin(F.broadcast(mx))
+        dd.crossJoin(mx)
         .filter(F.col("drawdown") == F.col("max_dd"))
         .agg(
             F.min("d").cast("bigint").alias("trough_day_idx"),
@@ -253,7 +253,7 @@ def max_drawdown_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        mx.crossJoin(F.broadcast(at)).select(
+        mx.crossJoin(at).select(
             F.col("max_dd").alias("max_drawdown_cents"),
             "trough_day_idx",
             "peak_cents",

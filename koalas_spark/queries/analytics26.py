@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from koalas_spark.functions.vectorfn import norm_sq
 from koalas_spark.queries import query
 from koalas_spark.queries.analytics import _t
 
@@ -58,18 +59,18 @@ GROUP BY 1
 """,
 )
 def matryoshka_energy_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    qv = F.transform(
-        F.col("embedding"),
-        lambda x: F.floor(x.cast("double") * 10000 + 0.5).cast("bigint"),
+    emb = _t(spark, sf_dir, "embeddings").select(
+        "vec_id",
+        F.transform(
+            F.col("embedding"),
+            lambda x: F.floor(x.cast("double") * 10000 + 0.5).cast("bigint"),
+        ).alias("qv"),
     )
-    zero = F.lit(0).cast("bigint")
+    qv = F.col("qv")
     e = emb.select(
         "vec_id",
-        F.aggregate(
-            F.slice(qv, 1, 32), zero, lambda acc, x: acc + x * x
-        ).alias("e_half"),
-        F.aggregate(qv, zero, lambda acc, x: acc + x * x).alias("e_full"),
+        norm_sq(F.slice(qv, 1, 32), 0).alias("e_half"),
+        norm_sq(qv, 0).alias("e_full"),
     )
     r = e.select(
         "vec_id",
@@ -169,7 +170,7 @@ def ngram_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mx = docs.agg(F.max("doc_id").cast("bigint").alias("m"))
     return (
-        per_doc.crossJoin(F.broadcast(mx))
+        per_doc.crossJoin(mx)
         .groupBy(F.expr("CAST((doc_id * 10) div (m + 1) AS INT)").alias("decile"))
         .agg(
             F.sum("n_grams").cast("bigint").alias("n_grams"),
@@ -306,7 +307,7 @@ def dict_encoding_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
         dict_bytes = vals.distinct().agg(
             F.sum(F.length("v")).cast("bigint").alias("dict_val_bytes")
         )
-        return stats.crossJoin(F.broadcast(dict_bytes))
+        return stats.crossJoin(dict_bytes)
     o = _t(spark, sf_dir, "orders")
     li = _t(spark, sf_dir, "lineitem")
     u = (

@@ -136,7 +136,7 @@ def event_burstiness_fano(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("c") * F.col("c")).cast("bigint").alias("sc2"),
         F.count(F.lit(1)).cast("bigint").alias("n_occupied"),
     )
-    return m.crossJoin(F.broadcast(span)).select(
+    return m.crossJoin(span).select(
         "event_type",
         (F.col("h1") - F.col("h0") + 1).alias("n_hours"),
         "n_occupied",
@@ -191,7 +191,7 @@ def last_digit_uniformity_audit(
     )
     d = li.groupBy("digit").agg(F.count(F.lit(1)).cast("bigint").alias("obs"))
     t = d.agg(F.sum("obs").cast("bigint").alias("n"))
-    return d.crossJoin(F.broadcast(t)).select(
+    return d.crossJoin(t).select(
         "digit",
         "obs",
         F.expr("CAST((obs * 10000000) div n AS BIGINT)").alias("share_e7"),
@@ -272,8 +272,8 @@ def join_cardinality_estimate_audit(
         F.sum("cb").cast("bigint").alias("nb"),
         F.count(F.lit(1)).cast("bigint").alias("ndvb"),
     )
-    st = sa.crossJoin(F.broadcast(sb))
-    return st.crossJoin(F.broadcast(x)).select(
+    st = sa.crossJoin(sb)
+    return st.crossJoin(x).select(
         "na",
         "ndva",
         "nb",

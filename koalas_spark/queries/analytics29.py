@@ -201,9 +201,9 @@ def topk_churn_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_left"))
     )
     return (
-        n_stay.crossJoin(F.broadcast(n_ent))
-        .crossJoin(F.broadcast(n_left))
-        .crossJoin(F.broadcast(pairs))
+        n_stay.crossJoin(n_ent)
+        .crossJoin(n_left)
+        .crossJoin(pairs)
         .select("n_stayed", "n_entered", "n_left", "conc", "disc")
     )
 
@@ -264,7 +264,7 @@ def quantity_return_mutual_info(
         "c",
         F.sum("c").over(wx).cast("bigint").alias("cx"),
         F.sum("c").over(wy).cast("bigint").alias("cy"),
-    ).crossJoin(F.broadcast(tot))
+    ).crossJoin(tot)
     w = p.withColumn(
         "lr_nano",
         F.floor(

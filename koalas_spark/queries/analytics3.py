@@ -77,7 +77,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     mx = revenue.agg(F.max("total_revenue").alias("_mx"))
     sup = _t(spark, sf_dir, "supplier")
     return (
-        revenue.join(F.broadcast(mx), F.col("total_revenue") == F.col("_mx"))
+        revenue.join(mx, F.col("total_revenue") == F.col("_mx"))
         .join(sup, F.col("s_suppkey") == F.col("supplier_no"))
         .select("s_suppkey", "s_name", "total_revenue")
     )
@@ -142,7 +142,7 @@ def q22_prospects(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.avg("c_acctbal").alias("_avg")
     )
     return (
-        cust.join(F.broadcast(avg_bal), F.col("c_acctbal") > F.col("_avg"))
+        cust.join(avg_bal, F.col("c_acctbal") > F.col("_avg"))
         .join(big_orders, cust.c_custkey == big_orders.o_custkey, "left_anti")
         .groupBy(F.substring("c_name", 1, 10).alias("cntrycode_proxy"))
         .agg(

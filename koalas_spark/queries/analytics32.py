@@ -258,7 +258,7 @@ def hash_uniformity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c").cast("bigint").alias("n"),
         F.count(F.lit(1)).cast("bigint").alias("n_cells"),
     )
-    j = b.crossJoin(F.broadcast(t))
+    j = b.crossJoin(t)
     return j.groupBy("n_cells", "n").agg(
         F.expr(
             "CAST(MAX(ABS(c * 256 - n)) * 1000000 div n AS BIGINT)"

@@ -81,7 +81,7 @@ def weekly_type_kl_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w0 = c.agg(F.min("wk").alias("wk0"))
     base = (
-        c.crossJoin(F.broadcast(w0))
+        c.crossJoin(w0)
         .filter(F.col("wk") == F.col("wk0"))
         .select(
             "event_type",
@@ -198,7 +198,7 @@ def source_token_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = (
         st.join(tot, "tok")
         .join(F.broadcast(sn), "src")
-        .crossJoin(F.broadcast(n))
+        .crossJoin(n)
         .select(
             "src",
             "c",

@@ -92,7 +92,7 @@ def lineitems_poisson_gof(spark: SparkSession, sf_dir: str) -> DataFrame:
         "         CAST(k AS DOUBLE))"
         " / CAST(factorial(CAST(k AS INT)) AS DOUBLE)"
     )
-    return h.crossJoin(F.broadcast(t)).select(
+    return h.crossJoin(t).select(
         "k",
         "obs",
         F.round(F.expr(exp_expr), 6).alias("expected"),

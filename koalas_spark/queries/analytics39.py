@@ -99,7 +99,7 @@ def cross_correlation_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lg = spark.range(0, 15).select(F.col("id").cast("bigint").alias("lag"))
     j = (
-        F.broadcast(lg)
+        lg
         .crossJoin(xd)
         .join(yd, yd["d"] == xd["d"] + F.col("lag"))
         .select("lag", "x", "y")
@@ -390,7 +390,7 @@ def variance_ratio_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         vars_.filter(F.col("q") > 1)
-        .crossJoin(F.broadcast(base))
+        .crossJoin(base)
         .select(
             "q",
             F.col("n").alias("n_diffs"),
@@ -453,7 +453,7 @@ def grubbs_outlier_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("ss_d"),
     )
-    dev = daily.crossJoin(F.broadcast(s)).select(
+    dev = daily.crossJoin(s).select(
         "d",
         F.abs(F.col("x") * F.col("n") - F.col("s1")).alias("dv"),
         "n",
@@ -462,7 +462,7 @@ def grubbs_outlier_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mx = dev.agg(F.max("dv").alias("mdv"))
     pick = (
-        dev.crossJoin(F.broadcast(mx))
+        dev.crossJoin(mx)
         .filter(F.col("dv") == F.col("mdv"))
         .agg(
             F.min("d").alias("day_idx"),

@@ -310,7 +310,7 @@ def bootstrap_ci_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     # subexpression elimination — computing it explicitly guarantees
     # one hash per row at any scale (guide §1.2 per-task work)
     w = (
-        c.crossJoin(F.broadcast(reps))
+        c.crossJoin(reps)
         .select(
             "b",
             "c",
@@ -337,7 +337,7 @@ def bootstrap_ci_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("r"),
     )
     return (
-        rk.crossJoin(F.broadcast(full_m))
+        rk.crossJoin(full_m)
         .groupBy("n", "s1")
         .agg(
             F.round(

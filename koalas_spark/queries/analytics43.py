@@ -113,7 +113,7 @@ def kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n0"),
     )
     nd = daily.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    return s.crossJoin(F.broadcast(nd)).select(
+    return s.crossJoin(nd).select(
         F.col("n").alias("n_days"),
         F.col("c").alias("concordant"),
         F.col("dct").alias("discordant"),
@@ -263,7 +263,7 @@ def pacf_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ]
     )
-    cd = g.crossJoin(F.broadcast(pv)).select(
+    cd = g.crossJoin(pv).select(
         "n",
         F.col("n").cast("double").alias("n_d"),
         F.expr("CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE)").alias("m"),

@@ -89,7 +89,7 @@ def theil_u_priority_status(
         "c",
         F.sum("c").over(Window.partitionBy("x")).cast("bigint").alias("cx"),
         F.sum("c").over(Window.partitionBy("y")).cast("bigint").alias("cy"),
-    ).crossJoin(F.broadcast(tot))
+    ).crossJoin(tot)
     w = p.select(
         "c",
         "cx",
@@ -122,7 +122,7 @@ def theil_u_priority_status(
     hx = (
         p.select("x", "cx")
         .distinct()
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .agg(
             F.expr(
                 "CAST(FLOOR(1000000000 * LN(CAST(MAX(n) AS DOUBLE)))"
@@ -133,7 +133,7 @@ def theil_u_priority_status(
             ).alias("hx_nano")
         )
     )
-    u = mi.crossJoin(F.broadcast(hx))
+    u = mi.crossJoin(hx)
     return u.select(
         "n",
         "mi_nano",
@@ -321,7 +321,7 @@ def hurst_rs_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     nd = daily.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     pv = nd
     for m in mws:
-        pv = pv.crossJoin(F.broadcast(m))
+        pv = pv.crossJoin(m)
     pv = pv.select(
         "n",
         *[c for w in _HURST_WS for c in (f"m{w}", f"b{w}")],

@@ -223,7 +223,7 @@ def source_token_hellinger(
     terms = (
         st.join(ct, "token")
         .join(ns, "source")
-        .crossJoin(F.broadcast(nt))
+        .crossJoin(nt)
         .select(
             "source",
             F.floor(

@@ -87,7 +87,7 @@ def sax_transition_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sym = (
         daily.select("d", F.col("x").cast("double").alias("x_d"))
-        .crossJoin(F.broadcast(ms))
+        .crossJoin(ms)
         .select("d", F.expr(f"CAST({_SAX_SYM} AS INT)").alias("s"))
     )
     # domain-bounded window (~2.4k day rows)
@@ -185,7 +185,7 @@ def burrows_delta_sources(
         F.sum("c").cast("bigint").alias("n_s")
     )
     q = (
-        ns.crossJoin(F.broadcast(top))
+        ns.crossJoin(top)
         .join(st, ["source", "token"], "left")
         .select(
             "source",

@@ -106,7 +106,7 @@ def friedman_dow_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             for j_ in range(7)
         ]
     )
-    cd = pv.crossJoin(F.broadcast(nw)).select(
+    cd = pv.crossJoin(nw).select(
         "n",
         F.col("n").cast("double").alias("n_d"),
         *[

@@ -79,7 +79,7 @@ def hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     terms = (
         top.filter(F.col("rn") <= _HILL_K)
-        .crossJoin(F.broadcast(ref))
+        .crossJoin(ref)
         .select(
             F.floor(
                 1000000000
@@ -293,7 +293,7 @@ def ewma_control_chart_daily(
         .groupBy("d", "tx")
         .agg(F.sum(F.expr(_EWMA_TERM)).cast("bigint").alias("z_cents"))
     )
-    v = z.crossJoin(F.broadcast(ms)).select(
+    v = z.crossJoin(ms).select(
         "d",
         "z_cents",
         F.expr("CAST(z_cents AS DOUBLE) - m").alias("dev"),

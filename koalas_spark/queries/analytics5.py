@@ -63,8 +63,8 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("p_size") == 15) & (F.col("p_type") == "LARGE")
     )
     eu_supp = (
-        supp.join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        supp.join(nation, supp.s_nationkey == nation.n_nationkey)
+        .join(region, nation.n_regionkey == region.r_regionkey)
         .select("s_suppkey", "s_name", "s_acctbal", "n_name")
     )
     offer = (
@@ -118,12 +118,12 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = _t(spark, sf_dir, "nation")
     supp = (
         _t(spark, sf_dir, "supplier")
-        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(nation, F.col("s_nationkey") == F.col("n_nationkey"))
         .select("s_suppkey", F.col("n_name").alias("supp_nation"))
     )
     cust = (
         _t(spark, sf_dir, "customer")
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
+        .join(nation, F.col("c_nationkey") == F.col("n_nationkey"))
         .select("c_custkey", F.col("n_name").alias("cust_nation"))
     )
     pair = (
@@ -184,13 +184,13 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     cust = (
         _t(spark, sf_dir, "customer")
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
+        .join(nation, F.col("c_nationkey") == F.col("n_nationkey"))
+        .join(region, F.col("n_regionkey") == F.col("r_regionkey"))
         .select("c_custkey")
     )
     supp = (
         _t(spark, sf_dir, "supplier")
-        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(nation, F.col("s_nationkey") == F.col("n_nationkey"))
         .select("s_suppkey", F.col("n_name").alias("nation"))
     )
     vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -241,7 +241,7 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(part, F.col("l_partkey") == F.col("p_partkey"))
         .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(nation, F.col("s_nationkey") == F.col("n_nationkey"))
         .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .withColumn("o_year", F.year("o_orderdate"))
         .groupBy("n_name", "o_year")
@@ -277,7 +277,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     nation = _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_5")
     supp = _t(spark, sf_dir, "supplier").join(
-        F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey")
+        nation, F.col("s_nationkey") == F.col("n_nationkey")
     ).select("s_suppkey")
     val = (
         li.join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
@@ -286,7 +286,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     thresh = val.agg((dsum("value") * F.lit(0.001)).alias("_thr"))
     return (
-        val.join(F.broadcast(thresh), F.col("value") > F.col("_thr"))
+        val.join(thresh, F.col("value") > F.col("_thr"))
         .select("l_partkey", "value")
     )
 
@@ -516,7 +516,7 @@ def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nation = _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_1")
     supp = _t(spark, sf_dir, "supplier").join(
-        F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey")
+        nation, F.col("s_nationkey") == F.col("n_nationkey")
     ).select("s_suppkey", "s_name")
     return (
         per_order.filter((F.col("_n_supp") >= 2) & (F.col("_n_late") == 1))

@@ -307,6 +307,4 @@ def rbo_token_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("overlap_at_50"),
         F.sum("t_nano").cast("bigint").alias("rbo_nano"),
     )
-    return nsh.crossJoin(F.broadcast(agg)).select(
-        "n_shared", "overlap_at_50", "rbo_nano"
-    )
+    return nsh.crossJoin(agg).select("n_shared", "overlap_at_50", "rbo_nano")

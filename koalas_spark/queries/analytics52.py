@@ -143,9 +143,9 @@ def capture_recapture_customers(
         F.count(F.lit(1)).cast("bigint").alias("true_n")
     )
     s = (
-        n1.crossJoin(F.broadcast(n2))
-        .crossJoin(F.broadcast(m))
-        .crossJoin(F.broadcast(tn))
+        n1.crossJoin(n2)
+        .crossJoin(m)
+        .crossJoin(tn)
     )
     return s.select(
         "n1",

@@ -116,7 +116,7 @@ def modularity_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # three 1-row frames — broadcast cross joins, then the exact
     # rational -> double division (identical shape to the oracle)
-    out = m.crossJoin(F.broadcast(m_in)).crossJoin(F.broadcast(comm))
+    out = m.crossJoin(m_in).crossJoin(comm)
     return out.select(
         "m_edges",
         "m_in",
@@ -320,7 +320,7 @@ def simpson_reversal_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         " ELSE 0 END"
     )
     return (
-        s.crossJoin(F.broadcast(o))
+        s.crossJoin(o)
         .select(
             "status",
             "yr",
@@ -411,7 +411,7 @@ def shift_share_nation_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .join(n, c.c_nationkey == n.n_nationkey)
         .groupBy("nation", "prio", "yr")
         .agg(F.sum("lcents").cast("bigint").alias("cents"))
     )

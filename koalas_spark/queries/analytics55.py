@@ -251,7 +251,7 @@ def source_lang_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         ct.join(F.broadcast(rt), "source")
         .join(F.broadcast(lt), "lang")
-        .crossJoin(F.broadcast(n))
+        .crossJoin(n)
         .select(
             "source",
             "lang",

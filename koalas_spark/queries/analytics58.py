@@ -94,8 +94,8 @@ def spatial_grid_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=False)
     off = spark.range(-1, 2).select(F.col("id").alias("o"))
     b = (
-        cells.crossJoin(F.broadcast(off.select(F.col("o").alias("dxo"))))
-        .crossJoin(F.broadcast(off.select(F.col("o").alias("dyo"))))
+        cells.crossJoin(off.select(F.col("o").alias("dxo")))
+        .crossJoin(off.select(F.col("o").alias("dyo")))
         .select(
             F.col("id").alias("idb"),
             F.col("x").alias("xb"),
@@ -134,8 +134,8 @@ def spatial_grid_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_neighbor_pairs")
     )
     return (
-        n_pt.crossJoin(F.broadcast(cell_stats))
-        .crossJoin(F.broadcast(n_pr))
+        n_pt.crossJoin(cell_stats)
+        .crossJoin(n_pr)
         .select("n_points", "n_cells", "max_cell_pop", "n_neighbor_pairs")
     )
 

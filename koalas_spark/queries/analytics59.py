@@ -104,7 +104,7 @@ def ljung_box_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = daily.select(F.col("d").alias("da"), F.col("x").alias("x"))
     b = daily.select(F.col("d").alias("db"), F.col("x").alias("y"))
     pairs = (
-        a.crossJoin(F.broadcast(ks))
+        a.crossJoin(ks)
         .join(b, F.col("db") == F.col("da") + F.col("k"))
         .select("k", "x", "y")
     )
@@ -142,7 +142,7 @@ def ljung_box_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             " * CAST(CAST(sy AS STRING) AS DOUBLE)))"
         ).alias("rk"),
     )
-    t = r.crossJoin(F.broadcast(nn)).select(
+    t = r.crossJoin(nn).select(
         "k",
         F.round("rk", 6).alias("r_k"),
         F.expr(
@@ -235,8 +235,8 @@ def theil_between_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_nationkey", F.col("n_name").alias("nation")
     )
     return (
-        g.crossJoin(F.broadcast(tot))
-        .join(F.broadcast(nat), F.col("nk") == F.col("n_nationkey"))
+        g.crossJoin(tot)
+        .join(nat, F.col("nk") == F.col("n_nationkey"))
         .select(
             "nation",
             "n_g",

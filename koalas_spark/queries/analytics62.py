@@ -81,9 +81,7 @@ def event_journey_edit_distance(
         .limit(1)
         .select(F.col("journey").alias("modal"))
     )
-    d = j.crossJoin(F.broadcast(m)).select(
-        F.levenshtein("journey", "modal").alias("dist")
-    )
+    d = j.crossJoin(m).select(F.levenshtein("journey", "modal").alias("dist"))
     return (
         d.groupBy(F.col("dist").cast("int").alias("dist"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_users"))

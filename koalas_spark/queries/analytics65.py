@@ -114,9 +114,7 @@ def nation_trade_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("c_nationkey").alias("nk"))
         .agg(F.sum("cents").cast("bigint").alias("consumed"))
     )
-    n = F.broadcast(
-        _t(spark, sf_dir, "nation").select("n_nationkey", F.col("n_name").alias("nation"))
-    )
+    n = _t(spark, sf_dir, "nation").select("n_nationkey", F.col("n_name").alias("nation"))
     return (
         n.join(sup, sup.nk == F.col("n_nationkey"), "left")
         .drop("nk")

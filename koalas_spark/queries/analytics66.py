@@ -167,7 +167,7 @@ def jackknife_variance_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("s"),
     )
     num = (
-        days.crossJoin(F.broadcast(m))
+        days.crossJoin(m)
         .select(
             (
                 (F.col("s") - F.col("n") * F.col("x").cast("decimal(38,0)"))
@@ -469,7 +469,7 @@ def text_perplexity_unigram(
     model = (
         st.groupBy("token")
         .agg(F.sum("c").cast("bigint").alias("ct"))
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
     )
     nano = model.select(
         "token",

@@ -316,7 +316,7 @@ def conformal_interval_order_value(
         .alias("cr"),
     )
     qh = (
-        cum.crossJoin(F.broadcast(nc))
+        cum.crossJoin(nc)
         .filter(
             F.col("cr")
             >= F.ceil(0.9 * (F.col("n_cal") + 1)).cast("bigint")
@@ -325,7 +325,7 @@ def conformal_interval_order_value(
     )
     tst = (
         res.filter(~F.col("is_cal"))
-        .crossJoin(F.broadcast(qh))
+        .crossJoin(qh)
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_test"),
             F.sum(F.when(F.col("r") <= F.col("q_hat"), 1).otherwise(0))
@@ -334,8 +334,8 @@ def conformal_interval_order_value(
         )
     )
     return (
-        nc.crossJoin(F.broadcast(qh))
-        .crossJoin(F.broadcast(tst))
+        nc.crossJoin(qh)
+        .crossJoin(tst)
         .select(
             "n_cal",
             "n_test",
@@ -421,18 +421,18 @@ def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cks = (
         spark.range(4, 18)
         .select(F.pow(2, F.col("id")).cast("bigint").alias("c"))
-        .crossJoin(F.broadcast(mx))
+        .crossJoin(mx)
         .filter(F.col("c") <= F.col("md"))
         .select("c")
     )
     v = (
-        F.broadcast(cks)
+        cks
         .join(firstd, firstd["fd"] <= cks["c"], "left")
         .groupBy("c")
         .agg(F.count("fd").cast("bigint").alias("v"))
     )
     n = (
-        F.broadcast(cks)
+        cks
         .join(dcount, dcount["doc_id"] <= cks["c"], "left")
         .groupBy("c")
         .agg(F.coalesce(F.sum("nt"), F.lit(0)).cast("bigint").alias("n"))

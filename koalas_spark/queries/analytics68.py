@@ -296,7 +296,7 @@ def brier_decomposition_quality(
         F.sum("nb").cast("bigint").alias("n"),
         F.sum("yb").cast("bigint").alias("ybar_num"),
     )
-    gm = g.crossJoin(F.broadcast(m))
+    gm = g.crossJoin(m)
     terms = gm.select(
         "n",
         "ybar_num",

@@ -152,7 +152,7 @@ def cronbach_alpha_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     xd = F.col("x").cast("decimal(38,0)")
     num = (
-        c.crossJoin(F.broadcast(n))
+        c.crossJoin(n)
         .groupBy("item", "n")
         .agg(
             (
@@ -164,7 +164,7 @@ def cronbach_alpha_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     td = F.col("t").cast("decimal(38,0)")
     den = (
-        tot.crossJoin(F.broadcast(n))
+        tot.crossJoin(n)
         .groupBy("n")
         .agg(
             (
@@ -177,7 +177,7 @@ def cronbach_alpha_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("denv")
     )
     return (
-        n.crossJoin(F.broadcast(num))
+        n.crossJoin(num)
         .crossJoin(F.broadcast(den))
         .select(
             F.col("n").alias("n_weeks"),
@@ -243,7 +243,7 @@ def g_test_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = (
         o.join(F.broadcast(r), "rf")
         .join(F.broadcast(cc), "ls")
-        .crossJoin(F.broadcast(n))
+        .crossJoin(n)
         .select(
             "c",
             F.floor(
@@ -269,9 +269,9 @@ def g_test_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     nr = r.agg(F.count(F.lit(1)).alias("nrows"))
     ncl = cc.agg(F.count(F.lit(1)).alias("ncols"))
     return (
-        n.crossJoin(F.broadcast(agg))
-        .crossJoin(F.broadcast(nr))
-        .crossJoin(F.broadcast(ncl))
+        n.crossJoin(agg)
+        .crossJoin(nr)
+        .crossJoin(ncl)
         .select(
             F.col("n").alias("n_obs"),
             "n_cells",
@@ -393,7 +393,7 @@ def littles_law_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("backlog"),
     )
     intr = (
-        bk.crossJoin(F.broadcast(m))
+        bk.crossJoin(m)
         .filter(
             (F.col("d") >= F.col("d0") + F.expr("(d1 - d0) div 4"))
             & (F.col("d") < F.col("d0") + F.expr("(3 * (d1 - d0)) div 4"))
@@ -403,7 +403,7 @@ def littles_law_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("nint"),
         )
     )
-    return m.crossJoin(F.broadcast(intr)).select(
+    return m.crossJoin(intr).select(
         F.col("n").alias("n_orders"),
         (F.col("d1") - F.col("d0") + 1).cast("bigint").alias("horizon_days"),
         F.expr("CAST(sres * 1000 div n AS BIGINT)").alias("w_milli_days"),
@@ -504,7 +504,7 @@ def weibull_survival_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "t", F.sum("c").over(ws).cast("bigint").alias("ngt")
     )
     pts = (
-        surv.crossJoin(F.broadcast(n))
+        surv.crossJoin(n)
         .filter(
             F.col("ngt").isNotNull()
             & (F.col("ngt") > 0)

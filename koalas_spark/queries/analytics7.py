@@ -378,7 +378,7 @@ def conversion_latency_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("secs").cast("bigint").alias("max_s"),
     )
     n_v = v.agg(F.count(F.lit(1)).cast("bigint").alias("n_viewers"))
-    return n_v.crossJoin(F.broadcast(stats)).select(
+    return n_v.crossJoin(stats).select(
         "n_viewers", "n_converted", "p50_s", "p90_s", "max_s"
     )
 

@@ -500,7 +500,7 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("m_spend") >= F.col("med_m"), "M").otherwise("m"),
     )
     return (
-        rfm.crossJoin(F.broadcast(med))  # 1-row threshold frame
+        rfm.crossJoin(med)  # 1-row threshold frame
         .groupBy(seg.alias("segment"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_customers"),
@@ -691,7 +691,7 @@ def bigram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("b", F.lit(1).alias("_in_lm"))
     )
     per_doc = (
-        bg.join(F.broadcast(lm), "b", "left")  # 500-row LM table
+        bg.join(lm, "b", "left")  # 500-row LM table
         .groupBy("doc_id", "lang")
         .agg(
             F.count(F.lit(1)).alias("n_bg"),
@@ -1234,7 +1234,7 @@ def grouped_ols_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     base = li.join(s, F.col("l_suppkey") == F.col("s_suppkey")).join(
-        F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey")
+        n, F.col("s_nationkey") == F.col("n_nationkey")
     )
     d = lambda c: F.sum(c.cast("decimal(25,0)")).cast("string").cast("double")
     m = base.groupBy(F.col("n_name").alias("nation")).agg(

@@ -66,7 +66,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = d.agg(F.count(F.lit(1)).alias("n"))
     scored = (
         tf.join(df_, "term")
-        .crossJoin(F.broadcast(n))
+        .crossJoin(n)
         .withColumn("score", F.col("tf") * F.expr("(n * 1000000) div df"))
     )
     w = Window.partitionBy("lang").orderBy(F.col("score").desc(), F.col("term"))

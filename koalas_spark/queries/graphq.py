@@ -100,7 +100,7 @@ def pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=False)  # freeze the edge pass: 3 consumers
 
     n = nation.agg(F.count(F.lit(1)).alias("n"))
-    ranks = nation.crossJoin(F.broadcast(n)).select(
+    ranks = nation.crossJoin(n).select(
         F.col("n_nationkey").alias("node"), F.expr(f"{_SCALE} div n").alias("r")
     )
     for _ in range(3):
@@ -111,7 +111,7 @@ def pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum("m").alias("m"))
         )
         ranks = (
-            nation.crossJoin(F.broadcast(n))
+            nation.crossJoin(n)
             .join(F.broadcast(contrib), F.col("n_nationkey") == F.col("v"), "left")
             .select(
                 F.col("n_nationkey").alias("node"),
@@ -121,6 +121,6 @@ def pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("r"),
             )
         )
-    return ranks.join(F.broadcast(nation), ranks.node == nation.n_nationkey).select(
+    return ranks.join(nation, ranks.node == nation.n_nationkey).select(
         F.col("n_name").alias("nation"), F.col("r").alias("rank_scaled")
     )

@@ -303,7 +303,7 @@ def triangle_count_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     n_e = e.agg(F.count(F.lit(1)).cast("bigint").alias("n_edges"))
-    return n_e.crossJoin(F.broadcast(tri))  # two 1-row frames
+    return n_e.crossJoin(tri)  # two 1-row frames
 
 
 def copurchase_pair_table(
@@ -374,13 +374,14 @@ def copurchase_pair_table(
     # re-reads compact serialized blocks from local disk, trading
     # ~seconds of re-read for ~13 GB of resident heap. Driver-graded
     # SFs (<=0.1) keep the in-memory default.
+    level = graph_ckpt_level(sf_dir)
     return memo.artifact(
         spark,
         "copurchase_pairs",
         (sf_dir, "lineitem"),
         lambda: fresh.repartition(
             spark.sparkContext.defaultParallelism, "u", "v"
-        ).localCheckpoint(eager=False, storageLevel=graph_ckpt_level(sf_dir)),
+        ).localCheckpoint(eager=False, storageLevel=level),
     )
 
 
@@ -418,10 +419,17 @@ def copurchase_degree_table(
     )
 
 
-# Source lineitem bytes above which |E|-sized frames stop fitting in
-# memory (sf1's lineitem is 103 MB, sf10's 1.1 GB): graph checkpoints
-# go DISK_ONLY, bcast_e drops its hint and the triangle wedge joins
-# fall back from SHUFFLE_HASH to sort-merge.
+# Source lineitem bytes up to which frames of each size class of the
+# co-purchase graph broadcast (memo.source_bytes). |V|-sized frames (one
+# (long, long) row per node, ~16 B/node: 200k nodes = ~3 MB at sf10)
+# stay broadcast-sized well past sf10. |E|-sized frames outgrow
+# broadcast where sf1's 103 MB lineitem (a ~12M-edge, ~190 MB hash
+# relation — heavy but measured cheaper than re-shuffling the wedge
+# fan-out) gives way to sf10's 1.1 GB; above E_GATE_BYTES graph
+# checkpoints also go DISK_ONLY and the triangle wedge joins fall back
+# from SHUFFLE_HASH to sort-merge. Above either gate the hint is
+# dropped and the planner shuffles — values never depend on strategy.
+V_GATE_BYTES = 8 << 30
 E_GATE_BYTES = 512 << 20
 
 
@@ -429,52 +437,27 @@ def graph_ckpt_level(sf_dir: str):
     """Storage level for GRAPH-SIZED per-call checkpoints (symmetrized
     edge frames, adjacency derivatives): DISK_ONLY above E_GATE_BYTES
     (sf10+), None (the MEMORY_AND_DESER default) at driver-graded SFs.
+    Both softer alternatives, MEMORY_AND_DISK and the deserialized
+    default at a 48 GB heap, measured slower at sf10 (SCALING.md,
+    round 12)."""
+    if memo.source_bytes(sf_dir, "lineitem") <= E_GATE_BYTES:
+        return None
+    from pyspark.storagelevel import StorageLevel
 
-    BOTH softer alternatives were A/B-measured at sf10 in round 12
-    and REJECTED (SCALING.md r12, the Bloom-precedent disposition):
-    MEMORY_AND_DISK (serialized heap + overflow) degenerates to
-    DISK_ONLY plus eviction overhead under 16g execution pressure —
-    the unified manager evicted the pair artifact fully to disk
-    (mem=0 / disk=1.19 GB observed) and harmonic_centrality_probes
-    regressed 80.1s -> 118.5s; the deserialized default at a 48 GB
-    heap (r10's configuration) no longer reproduces r10's walls
-    either (jaccard_link_sampled 77-140s across reps vs 36.8s
-    recorded in r10, triangle 133-169s vs 110s — the rep-to-rep
-    spread is the GCLocker thrash r11 documented at 48g). DISK_ONLY
-    remains both the fastest stable choice and the one that holds
-    the default 16 GB heap; serialized disk blocks bound the heap,
-    trading a local re-read per consumer pass."""
-    if memo.source_bytes(sf_dir, "lineitem") > E_GATE_BYTES:
-        from pyspark.storagelevel import StorageLevel
-
-        return StorageLevel.DISK_ONLY
-    return None
+    return StorageLevel.DISK_ONLY
 
 
 def bcast_v(df: DataFrame, sf_dir: str) -> DataFrame:
-    """Metadata-only broadcast gate for |V|-SIZED frames of the
-    co-purchase family (degree/cap/label tables — one row per part
-    key). Driven by the source lineitem bytes like graph_ckpt_level:
-    |V| grows ~linearly with the source, and a (long, long) row per
-    node stays broadcast-sized (~16 B/node) well past sf10 (200k
-    nodes = ~3 MB). Above the gate the hint is dropped and the
-    planner shuffles as before — values never depend on strategy."""
-    if memo.source_bytes(sf_dir, "lineitem") <= 8 << 30:
-        return F.broadcast(df)
-    return df
+    """``df``, a |V|-SIZED frame of the co-purchase family (degree,
+    cap and label tables), broadcast under V_GATE_BYTES."""
+    return F.broadcast(df) if memo.source_bytes(sf_dir, "lineitem") <= V_GATE_BYTES else df
 
 
 def bcast_e(df: DataFrame, sf_dir: str) -> DataFrame:
-    """Metadata-only broadcast gate for |E|-DERIVED frames (probe-
-    filtered adjacency slices, the edge set itself in closing/anti
-    joins, wedge frames). Edge-linear frames outgrow broadcast around
-    the same scale the graph checkpoints go DISK_ONLY, so the gate is
-    E_GATE_BYTES (sf1's 103 MB lineitem broadcasts a ~12M-edge frame
-    ≈ 190 MB hash relation — heavy but measured cheaper than
-    re-shuffling the wedge fan-out; sf10 does not)."""
-    if memo.source_bytes(sf_dir, "lineitem") <= E_GATE_BYTES:
-        return F.broadcast(df)
-    return df
+    """``df``, an |E|-DERIVED frame (probe-filtered adjacency slices,
+    the edge set in closing/anti joins, wedge frames), broadcast under
+    E_GATE_BYTES."""
+    return F.broadcast(df) if memo.source_bytes(sf_dir, "lineitem") <= E_GATE_BYTES else df
 
 
 def _copurchase_edge_set(
@@ -776,7 +759,7 @@ def triangle_count_doulion(spark: SparkSession, sf_dir: str) -> DataFrame:
     es = _copurchase_edge_set(spark, sf_dir, pre_distinct_filter=coin < "8000")
     tri = _count_triangles(es, sf_dir)
     n_e = es.agg(F.count(F.lit(1)).cast("bigint").alias("n_edges_sampled"))
-    return n_e.crossJoin(F.broadcast(tri)).select(
+    return n_e.crossJoin(tri).select(
         "n_edges_sampled",
         F.col("n_triangles").alias("n_tri_sampled"),
         (F.col("n_triangles") * 8).cast("bigint").alias("est_triangles"),
@@ -875,7 +858,7 @@ def token_freq_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     total = b.agg(F.sum("mass").alias("tot"))
     return (
-        b.crossJoin(F.broadcast(total))  # ≤64 rows × 1 row
+        b.crossJoin(total)  # ≤64 rows × 1 row
         .withColumn(
             "cum_ppm",
             F.expr("sum(mass) over (order by bucket desc) * 1000000 div tot")

@@ -634,7 +634,7 @@ def lang_temperature_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = d.groupBy("lang").agg(F.count(F.lit(1)).alias("cnt"))
     cmin = counts.agg(F.min("cnt").alias("cmin"))
     rates = (
-        counts.crossJoin(F.broadcast(cmin))
+        counts.crossJoin(cmin)
         .withColumn(
             "thresh",
             F.floor(
@@ -1331,7 +1331,7 @@ def dsir_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nano = F.lit(1000000000)
     model = (
-        bcounts.crossJoin(F.broadcast(tot))
+        bcounts.crossJoin(tot)
         .select(
             "bucket",
             (

@@ -174,7 +174,7 @@ def _bm25_build(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]
         tf.join(F.broadcast(q), "term")
         .join(F.broadcast(dfq), "term")
         .join(dl, "doc_id")
-        .crossJoin(F.broadcast(st))
+        .crossJoin(st)
         .groupBy("query_id", "doc_id")
         .agg(F.sum(idf_s * tfnorm).alias("score"))
     )
@@ -185,32 +185,21 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _bm25_parts(spark, sf_dir)[1]
 
 
-def _relevance(spark: SparkSession, sf_dir: str, tf: DataFrame | None = None) -> DataFrame:
+def _relevance(spark: SparkSession, tf: DataFrame) -> DataFrame:
     """Graded pseudo-relevance labels for the benchmark queries:
     rel(query, doc) = number of the query's DISTINCT terms present in
     the doc (1..3 — docs matching no term are unlabeled). Purely
     term-presence-derived, so both engines agree exactly; this is the
     judgment set the eval ops (#467-469) grade rankings against.
 
-    ``tf`` (r13, guide §1.2 "don't compute things twice"): when the
-    caller already built #148's (term, doc_id, tf) posting slice,
-    rel derives from it directly — a (term, doc) appears in tf iff
-    the doc contains the term, so COUNT per (query, doc) over tf ⋈ q
-    is value-identical to re-exploding the corpus, and the eval ops
-    drop their second full-corpus pass."""
+    ``tf`` is #148's (term, doc_id, tf) posting slice (r13, guide §1.2
+    "don't compute things twice"): a (term, doc) appears in tf iff the
+    doc contains the term, so COUNT per (query, doc) over tf ⋈ q is
+    value-identical to re-exploding the corpus, and the eval ops pay
+    one full-corpus pass."""
     q = spark.createDataFrame(_QUERIES, "query_id int, term string")
-    if tf is not None:
-        return (
-            tf.join(F.broadcast(q), "term")
-            .groupBy("query_id", "doc_id")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("rel"))
-        )
-    d = _t(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
     return (
-        tok.join(F.broadcast(q), "term")
-        .select("query_id", "doc_id", "term")
-        .distinct()
+        tf.join(F.broadcast(q), "term")
         .groupBy("query_id", "doc_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("rel"))
     )
@@ -313,7 +302,7 @@ ORDER BY dcg.query_id
 )
 def ndcg_at_10_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf, scored = _bm25_parts(spark, sf_dir)
-    rel = _relevance(spark, sf_dir, tf=tf).localCheckpoint(
+    rel = _relevance(spark, tf).localCheckpoint(
         eager=False
     )  # feeds both the DCG join and the ideal ranking
     w = Window.partitionBy("query_id").orderBy(
@@ -387,7 +376,7 @@ ORDER BY nt.query_id
 )
 def mrr_full_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf, scored = _bm25_parts(spark, sf_dir)
-    rel = _relevance(spark, sf_dir, tf=tf)
+    rel = _relevance(spark, tf)
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("doc_id").asc()
     )
@@ -453,7 +442,7 @@ ORDER BY h.query_id, k
 )
 def precision_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf, scored = _bm25_parts(spark, sf_dir)
-    rel = _relevance(spark, sf_dir, tf=tf)
+    rel = _relevance(spark, tf)
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("doc_id").asc()
     )
@@ -561,7 +550,7 @@ def query_likelihood_dirichlet(
     ct = dl.agg(F.sum("dl").cast("bigint").alias("c"))
     tnano = (
         tf.join(F.broadcast(cf), "term")
-        .crossJoin(F.broadcast(ct))
+        .crossJoin(ct)
         .select(
             "term",
             "doc_id",
@@ -740,7 +729,7 @@ def collocation_pmi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         big.filter(F.col("c_xy") >= 25)
         .join(F.broadcast(u1), "w1")
         .join(F.broadcast(u2), "w2")
-        .crossJoin(F.broadcast(n))
+        .crossJoin(n)
         .select(
             "w1",
             "w2",

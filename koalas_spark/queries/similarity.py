@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from koalas_spark.functions.vectorfn import rounded_cosine
+from koalas_spark.functions.vectorfn import dot, norm_sq, rounded_cosine
 from koalas_spark.operators.similarity import (
     brute_force_topk,
     lsh_topk,
@@ -693,6 +693,12 @@ def ann_nn_descent(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Embeddings bytes up to which the beam walk broadcasts its vector
+# and k-NN edge tables: 64 MB of source parquet ≈ 160k vectors ≈ a
+# ~160 MB vector relation / ~26 MB edge relation.
+WALK_GATE_BYTES = 64 << 20
+
+
 # 474. greedy beam search over the NN-Descent graph — the QUERY path
 # that completes the graph-ANN story (#199 builds the k-NN graph;
 # this walks it, the NSW/HNSW-family search shape): start from a
@@ -739,22 +745,17 @@ def _graph_search_frames(
     # candidate frame, the two broadcast builds are REUSED across all
     # rounds (identical build plans → ReuseExchange), and the walk
     # stops paying one full corpus/graph scan PER ROUND. Above the
-    # gate the r13 shape returns unchanged: broadcast(tiny cand)
-    # probing the corpus-sized tables. Join strategy only — values
-    # are identical either way. 64 MB of source parquet ≈ 160k
-    # vectors ≈ a ~160 MB vector relation / ~26 MB edge relation.
-    _bc_walk = memo.source_bytes(sf_dir, "embeddings") <= 64 << 20
-
-    def walk_side(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if _bc_walk else df
+    # gate the r13 shape returns unchanged: the tiny frontier
+    # broadcasts and probes the corpus-sized table. Join strategy
+    # only — values are identical either way.
+    def walk_join(frontier: DataFrame, table: DataFrame, on) -> DataFrame:
+        if memo.source_bytes(sf_dir, "embeddings") <= WALK_GATE_BYTES:
+            return frontier.join(F.broadcast(table), on)
+        return F.broadcast(frontier).join(table, on)
 
     def score(cand: DataFrame) -> DataFrame:
-        # cand is probes×beam×degree-bounded — IT broadcasts (above
-        # the walk gate); the corpus-sized vector table is probed by
-        # equi-join on node
         return (
-            (cand if _bc_walk else F.broadcast(cand))
-            .join(walk_side(cvec), "node")
+            walk_join(cand, cvec, "node")
             .join(F.broadcast(probe), "pid")
             .select(
                 "pid",
@@ -783,10 +784,8 @@ def _graph_search_frames(
     # the end yields the identical visited set.
     vis_parts = [sc]
     for _ in range(3):
-        nb = (
-            (beam if _bc_walk else F.broadcast(beam))
-            .join(walk_side(graph), beam["node"] == graph["src"])
-            .select("pid", F.col("dst").alias("node"))
+        nb = walk_join(beam, graph, beam["node"] == graph["src"]).select(
+            "pid", F.col("dst").alias("node")
         )
         # ONE exchange per round (r14, guide §2.4):
         # the candidate union is hash-partitioned on pid once; the
@@ -954,24 +953,10 @@ def jl_projection_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
             "x -> cast(floor(x * 10000 + 0.5) as bigint))"
         ),
     )
-    yps = [
-        F.expr(
-            "aggregate(zip_with(q, array("
-            + ", ".join(str(s) for s in row)
-            + "), (x, s) -> x * s), cast(0 as bigint), (a, x) -> a + x)"
-        )
-        for row in _jl_signs()
-    ]
-    y = v.select(
-        F.expr(
-            "aggregate(q, cast(0 as bigint), (a, x) -> a + x * x)"
-        ).alias("den"),
-        F.array(*yps).alias("ys"),
-    ).select(
-        "den",
-        F.expr(
-            "aggregate(ys, cast(0 as bigint), (a, yy) -> a + yy * yy)"
-        ).alias("num"),
+    q = F.col("q")
+    ys = [dot(q, F.array(*map(F.lit, row)), 0) for row in _jl_signs()]
+    y = v.select(norm_sq(q, 0).alias("den"), F.array(*ys).alias("ys")).select(
+        "den", norm_sq(F.col("ys"), 0).alias("num")
     )
     r = y.select(
         F.expr(

@@ -71,7 +71,7 @@ def _partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("supp_cnt"))
     )
     return (
-        p.crossJoin(F.broadcast(supp_cnt))
+        p.crossJoin(supp_cnt)
         .select(
             "p_partkey",
             "supp_cnt",
@@ -149,8 +149,8 @@ def q2_min_cost_supplier_ps(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("p_size") == 15) & (F.col("p_type") == "LARGE")
     )
     eu_supp = (
-        supp.join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        supp.join(nation, supp.s_nationkey == nation.n_nationkey)
+        .join(region, nation.n_regionkey == region.r_regionkey)
         .select("s_suppkey", "s_name", "s_acctbal", "n_name")
     )
     eu = ps.join(eu_supp, ps.ps_suppkey == eu_supp.s_suppkey).select(
@@ -216,9 +216,7 @@ def q11_important_parts_ps(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = _t(spark, sf_dir, "nation").filter(
         F.col("n_name") == "NATION_7"
     )
-    n7 = supp.join(
-        F.broadcast(nation), supp.s_nationkey == nation.n_nationkey
-    ).select("s_suppkey")
+    n7 = supp.join(nation, supp.s_nationkey == nation.n_nationkey).select("s_suppkey")
     de = ps.join(n7, ps.ps_suppkey == n7.s_suppkey).select(
         "ps_partkey",
         (F.col("ps_supplycost_cents") * F.col("ps_availqty"))
@@ -230,7 +228,7 @@ def q11_important_parts_ps(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("val").cast("bigint").alias("value_cents")
     )
     return (
-        grp.crossJoin(F.broadcast(tot))
+        grp.crossJoin(tot)
         .filter(
             F.col("value_cents").cast("decimal(38,0)") * 10000
             > F.col("total")

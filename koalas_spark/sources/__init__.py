@@ -1,3 +1,3 @@
-from koalas_spark.sources.io import read_table, read_parquet, load_tables, write_csv
+from koalas_spark.sources.io import read_table, write_csv
 
-__all__ = ["read_table", "read_parquet", "load_tables", "write_csv"]
+__all__ = ["read_table", "write_csv"]

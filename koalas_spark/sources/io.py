@@ -58,10 +58,6 @@ def read_table(
     return df
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def normalize_event_time(df: DataFrame, col: str = "ts") -> DataFrame:
     """Make an event-time column robust to parquet timestamp flavor.
 
@@ -84,13 +80,6 @@ def normalize_event_time(df: DataFrame, col: str = "ts") -> DataFrame:
     if isinstance(dt, T.TimestampNTZType):
         return df.withColumn(col, F.col(col).cast("timestamp_ltz"))
     return df
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TPCH_TABLES
-) -> dict[str, DataFrame]:
-    """Load the benchmark star schema from a scale-factor directory."""
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}
 
 
 def write_csv(

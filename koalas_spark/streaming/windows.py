@@ -385,7 +385,7 @@ def stream_rate_alert_windows(
             F.count(F.lit(1)).cast("bigint").alias("n_windows"),
         )
         return (
-            t.crossJoin(F.broadcast(tot))
+            t.crossJoin(tot)
             .filter(
                 # n ~ corpus events in a spike window and total is
                 # corpus-proportional, so the cross-multiplication

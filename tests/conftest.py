@@ -1,3 +1,5 @@
+from typing import NamedTuple
+
 import pytest
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -11,20 +13,85 @@ def spark():
     yield s
 
 
+def _seq(s):
+    return [s.apply(i) for i in range(s.size())]
+
+
+class Hint(NamedTuple):
+    cols: tuple[str, ...]  # output columns of the hinted frame
+    strategy: str  # "(strategy=broadcast)", "(strategy=shuffle_hash)"
+    child: object  # the hinted analyzed plan (a JVM LogicalPlan)
+
+
+class Build(NamedTuple):
+    df: object  # the query's frame
+    hints: list  # [Hint] of its plan and of every plan it checkpointed
+    sized: bool  # whether the build asked a size gate (memo.source_bytes)
+
+
+def watched_build(spark, build) -> Build:
+    """``build()`` run under two spies. Iterative rounds end in a
+    localCheckpoint, so the joins of every round are read from the
+    analyzed plans handed to it as well as from the returned frame's;
+    and every read of ``memo.source_bytes`` marks the build as sized."""
+    from koalas_spark import memo
+
+    DataFrame = type(spark.range(1))  # the concrete (classic) class
+    plans, reads = [], []
+    real_ckpt, real_bytes = DataFrame.localCheckpoint, memo.source_bytes
+
+    def ckpt(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().analyzed())  # noqa: SLF001
+        return real_ckpt(self, *args, **kwargs)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(DataFrame, "localCheckpoint", ckpt)
+        mp.setattr(memo, "source_bytes", lambda *a: reads.append(a) or real_bytes(*a))
+        df = build()
+    plans.append(df._jdf.queryExecution().analyzed())  # noqa: SLF001
+    hints = []
+
+    def walk(node) -> None:
+        if node.getClass().getSimpleName() == "ResolvedHint":
+            cols = tuple(a.name() for a in _seq(node.output()))
+            hints.append(Hint(cols, node.hints().toString(), node.child()))
+        for child in _seq(node.children()):
+            walk(child)
+
+    for plan in plans:
+        walk(plan)
+    return Build(df, hints, bool(reads))
+
+
 @pytest.fixture(scope="session")
-def registry_frames(spark):
-    """name -> DataFrame of every query the plan audit covers (the
-    registry minus ``audit=False``), built once per session at SF_SMOKE
-    and shared by the two registry-wide plan gates (test_plan_audit,
-    test_dim_gate)."""
+def registry_builds(spark):
+    """name -> Build of every query the plan audit covers (the registry
+    minus ``audit=False``), built once per session at SF_SMOKE. The
+    oracle smoke test collects these frames, the registry-wide plan
+    gates (test_plan_audit, test_dim_gate) read their plans and hints,
+    and test_dim_gate's above-gate sweep rebuilds the sized ones."""
     from koalas_spark.queries import registry
 
-    frames = {}
+    builds = {}
     for name, q in sorted(registry().items()):
         if not q.audit:
             continue
         try:
-            frames[name] = q.fn(spark, SF_SMOKE)
+            builds[name] = watched_build(spark, lambda q=q: q.fn(spark, SF_SMOKE))
         except Exception as exc:  # pragma: no cover - surface build errors
             pytest.fail(f"{name}: query build failed: {exc}")
-    return frames
+    return builds
+
+
+@pytest.fixture
+def private_artifacts(monkeypatch):
+    """A private artifact store for one test: what it memoizes or
+    stages is dropped afterwards, and the session's store, which the
+    shared registry frames read from, is left untouched."""
+    from koalas_spark import memo
+
+    store: dict = {}
+    monkeypatch.setattr(memo, "_ARTIFACTS", store)
+    monkeypatch.setattr(memo, "_REGISTRY", [store])
+    yield
+    memo.reset_session_artifacts()

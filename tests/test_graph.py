@@ -4,7 +4,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from koalas_spark.operators.graph import connected_components
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, watched_build
 
 
 def _comps(spark, pairs, driver_edge_limit=0):
@@ -185,44 +185,6 @@ _V_HINTED = {
 }
 
 
-def _graph_hints(spark, name):
-    """(rows, [(output columns, hint)] of every hint in the plans of
-    query ``name``). Iterative rounds end in a localCheckpoint, so the
-    analyzed plans handed to it are read as well as the final frame's."""
-    from koalas_spark.queries import all_queries
-
-    DataFrame = type(spark.range(1))  # the concrete (classic) class
-    plans = []
-    real = DataFrame.localCheckpoint
-
-    def spy(self, *args, **kwargs):
-        plans.append(self._jdf.queryExecution().analyzed())
-        return real(self, *args, **kwargs)
-
-    DataFrame.localCheckpoint = spy
-    try:
-        df = all_queries()[name](spark, SF_SMOKE)
-    finally:
-        DataFrame.localCheckpoint = real
-    plans.append(df._jdf.queryExecution().analyzed())  # noqa: SLF001
-
-    def seq(s):
-        return [s.apply(i) for i in range(s.size())]
-
-    hints = []
-
-    def walk(node) -> None:
-        if node.getClass().getSimpleName() == "ResolvedHint":
-            cols = tuple(a.name() for a in seq(node.output()))
-            hints.append((cols, node.hints().toString()))
-        for child in seq(node.children()):
-            walk(child)
-
-    for plan in plans:
-        walk(plan)
-    return df.collect(), hints
-
-
 @pytest.mark.parametrize(
     "name",
     [
@@ -239,22 +201,19 @@ def test_graph_gates_above_threshold_drop_hints(spark, monkeypatch, name):
     gate too (16 GB) none over a |V|-sized one either. The rows must
     equal the oracle's on every side of the gates."""
     from koalas_spark import memo
-    from koalas_spark.queries import all_oracles
-    from tools.check_oracle import _norm, connect_duck
+    from koalas_spark.queries import all_queries
+    from tools.check_oracle import check, connect_duck
 
-    res = connect_duck(SF_SMOKE).execute(all_oracles()[name])
-    names = [d[0] for d in res.description]
-    want = sorted(tuple(_norm(v) for v in r) for r in res.fetchall())
+    duck = connect_duck(SF_SMOKE)
 
-    def check(allowed):
-        rows, hints = _graph_hints(spark, name)
-        got = sorted(tuple(_norm(r[c]) for c in names) for r in rows)
-        assert got == want
-        return [h for h in hints if h[0] not in allowed]
+    def hints_over(allowed):
+        built = watched_build(spark, lambda: all_queries()[name](spark, SF_SMOKE))
+        assert check(spark, duck, SF_SMOKE, name, built.df)[0] == "OK"
+        return [(h.cols, h.strategy) for h in built.hints if h.cols not in allowed]
 
     # below the gates a non-constant frame is hinted, so the checks
     # above them have something to drop
-    assert check(_CONST_HINTED), "below the gates the graph joins carry hints"
+    assert hints_over(_CONST_HINTED), "below the gates the graph joins carry hints"
     for gb, allowed in ((1, _CONST_HINTED | _V_HINTED), (16, _CONST_HINTED)):
         monkeypatch.setattr(memo, "source_bytes", lambda sf_dir, t, gb=gb: gb << 30)
-        assert check(allowed) == [], f"hints above the {gb} GB gate"
+        assert hints_over(allowed) == [], f"hints above the {gb} GB gate"

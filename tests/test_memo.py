@@ -14,9 +14,13 @@ import subprocess
 import sys
 from pathlib import Path
 
+import pytest
+
 from tests.conftest import SF_SMOKE
 
 ROOT = Path(__file__).parents[1]
+# resets must not delete what the session's shared frames read
+private_store = pytest.mark.usefixtures("private_artifacts")
 
 
 def test_registry_is_one_artifact_store():
@@ -28,6 +32,7 @@ def test_registry_is_one_artifact_store():
     assert memo._REGISTRY[0] is memo._ARTIFACTS
 
 
+@private_store
 def test_reset_forces_rebuild_with_identical_rows(spark):
     from koalas_spark.memo import _ARTIFACTS, reset_session_artifacts
     from koalas_spark.queries.analytics import daily_revenue_table
@@ -49,6 +54,7 @@ def test_reset_forces_rebuild_with_identical_rows(spark):
     reset_session_artifacts()
 
 
+@private_store
 def test_staged_writes_once_per_session_and_reset_deletes(spark, tmp_path):
     from koalas_spark.memo import reset_session_artifacts, staged, workdir
 
@@ -78,6 +84,7 @@ def test_staged_writes_once_per_session_and_reset_deletes(spark, tmp_path):
     reset_session_artifacts()
 
 
+@private_store
 def test_staged_query_writes_again_after_reset(spark, monkeypatch):
     """partitioned_write_prune stages a partitioned copy of events; every
     reset (one per bench sample) must make the next run pay that write."""

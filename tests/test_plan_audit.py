@@ -23,10 +23,10 @@ from tests.conftest import SF_SMOKE
 from tools.audit_plans import collect
 
 
-def test_plans_match_expectations(spark, registry_frames):
+def test_plans_match_expectations(spark, registry_builds):
     with open(Path(__file__).parents[1] / "PLAN_BASELINE.json") as f:
         baseline = json.load(f)
-    facts = collect(spark, SF_SMOKE, registry_frames)
+    facts = collect(spark, SF_SMOKE, {n: b.df for n, b in registry_builds.items()})
 
     problems = []
     for name, d in facts.items():

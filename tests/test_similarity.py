@@ -2,7 +2,7 @@
 
 """IVF recall property: probing every cell is exhaustive search."""
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, watched_build
 
 
 def test_ivf_nprobe_all_cells_equals_bruteforce(spark):
@@ -201,48 +201,27 @@ def test_nn_graph_artifact_matches_fresh_build(spark):
 
 def _walk_table_broadcasts(spark, sf: str):
     """(rows of ann_graph_search, broadcast hints the beam walk puts
-    over the vector or k-NN edge tables). Each round ends in a
-    localCheckpoint, so the walk's joins are read from the analyzed
-    plans handed to it rather than from the final frame."""
+    over the vector table (its ``cv`` column) or the k-NN edge table
+    (``dst``))."""
     from koalas_spark.queries.similarity import ann_graph_search
 
-    DataFrame = type(spark.range(1))  # the concrete (classic) class
-    plans = []
-    real = DataFrame.localCheckpoint
-
-    def spy(self, *args, **kwargs):
-        plans.append(self._jdf.queryExecution().analyzed().toString())
-        return real(self, *args, **kwargs)
-
-    DataFrame.localCheckpoint = spy
-    try:
-        rows = ann_graph_search(spark, sf).collect()
-    finally:
-        DataFrame.localCheckpoint = real
-    hinted = []
-    for plan in plans:
-        lines = plan.splitlines()
-        for line, child in zip(lines, lines[1:]):
-            # the hinted child: cvec projects `v AS cv`, the graph `src, dst`
-            if "ResolvedHint (strategy=broadcast)" in line and (
-                " AS cv#" in child or "dst#" in child
-            ):
-                hinted.append(child.strip())
-    return rows, hinted
+    built = watched_build(spark, lambda: ann_graph_search(spark, sf))
+    hinted = [
+        h.cols
+        for h in built.hints
+        if "broadcast" in h.strategy and {"cv", "dst"} & set(h.cols)
+    ]
+    return built.df.collect(), hinted
 
 
 def test_walk_gate_above_threshold_drops_table_broadcasts(spark, monkeypatch):
     """The beam walk's broadcast gate sizes embeddings by their files
     (memo.source_bytes), so a directory-shaped table is measured, not
     its inode. Above the 64 MB gate neither the vector table nor the
-    k-NN edge table may carry a broadcast hint, and the rows must
-    still equal the oracle's."""
-    import duckdb
-
+    k-NN edge table may carry a broadcast hint, and the rows stay the
+    same (test_dim_gate's above-gate sweep holds them to the oracle)."""
     from koalas_spark import memo
-    from koalas_spark.queries import all_oracles
     from koalas_spark.queries.similarity import nn_descent_graph_table
-    from tools.check_oracle import _norm
 
     # the graph's own construction has hints of its own; build it first
     nn_descent_graph_table(spark, SF_SMOKE)
@@ -252,17 +231,4 @@ def test_walk_gate_above_threshold_drops_table_broadcasts(spark, monkeypatch):
     monkeypatch.setattr(memo, "source_bytes", lambda sf_dir, table: 65 << 20)
     rows, hinted = _walk_table_broadcasts(spark, SF_SMOKE)
     assert hinted == []
-
-    cols = sorted(rows[0].asDict())
-    got = sorted(tuple(_norm(r[c]) for c in cols) for r in rows)
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM '{SF_SMOKE}/embeddings.parquet'"
-    )
-    res = con.execute(all_oracles()["ann_graph_search"])
-    names = [d[0] for d in res.description]
-    want = sorted(
-        tuple(_norm(r[names.index(c)]) for c in cols) for r in res.fetchall()
-    )
-    assert got == want
-    assert got == sorted(tuple(_norm(r[c]) for c in cols) for r in under_rows)
+    assert sorted(rows) == sorted(under_rows)

@@ -136,15 +136,17 @@ def connect_duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
     return con
 
 
-def check(spark, con, sf_dir: str, name: str) -> tuple[str, str]:
-    """(status, detail) of one query against its oracle at ``sf_dir``.
+def check(spark, con, sf_dir: str, name: str, sdf=None) -> tuple[str, str]:
+    """(status, detail) of one query against its oracle at ``sf_dir``;
+    ``sdf`` is the query's frame if already built there.
 
     ``status`` is ``OK``, ``rows-only`` (no oracle) or the first failing
     check of column names, dtype families, row count and sorted values
     (``*-MISMATCH``); ``detail`` leads with the Spark row count and
     names what differs."""
     q = registry()[name]
-    sdf = q.fn(spark, sf_dir)
+    if sdf is None:
+        sdf = q.fn(spark, sf_dir)
     s_cols = sorted(sdf.columns)
     s_rows = [tuple(_norm(r[c]) for c in s_cols) for r in sdf.collect()]
     rows = f"({len(s_rows)} rows)"
