@@ -33,10 +33,10 @@ def stream_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stream has seen exactly the full file, so results must be equal.
 @query(
     "stream_static_join",
-    oracle="""
+    oracle=f"""
 SELECT event_type, COALESCE(band, 'none') AS band,
        COUNT(*) AS n,
-       CAST(CAST(SUM(CAST(value AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE) AS sum_value
+       {_dsum_sql('value')} AS sum_value
 FROM events e LEFT JOIN (
   SELECT o_custkey AS user_id,
          CASE WHEN SUM(CAST(o_totalprice AS DECIMAL(25,6))) > 1000000
@@ -61,9 +61,9 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the result equals the plain batch aggregation, which is the oracle.
 @query(
     "stream_dedup_agg",
-    oracle="""
+    oracle=f"""
 SELECT event_type, COUNT(*) AS n,
-       CAST(CAST(SUM(CAST(value AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE) AS sum_value
+       {_dsum_sql('value')} AS sum_value
 FROM (SELECT DISTINCT ON (event_id) event_type, value FROM events ORDER BY event_id) t
 GROUP BY event_type
 """,
@@ -101,10 +101,8 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # 51. custom stateful streaming operator — per-user sessionization via
 # applyInPandasWithState. Since r7 the open-session tail is FLUSHED
-# (two far-future sentinel events advance the watermark after the
-# source drains, firing every event-time timeout — see
-# streaming/stateful.stream_sessionize), so the emitted rows are
-# exactly the batch sessionization and the op shares a batch oracle
+# (streaming/windows._run_to_memory), so the emitted rows are exactly
+# the batch sessionization and the op shares a batch oracle
 # (previously rows-only with prefix-subset asserts). Session boundary
 # is strictly-greater-than-gap, matching the stateful op's
 # `t - last > gap`; session_end is the LAST EVENT's ts (no gap pad).
@@ -194,29 +192,18 @@ def stream_windowed_distinct_users(spark: SparkSession, sf_dir: str) -> DataFram
 # to the batch source, which is the oracle.
 @query(
     "stream_foreachbatch_sink",
-    oracle="""
+    oracle=f"""
 SELECT event_type, COUNT(*) AS n,
-       CAST(CAST(SUM(CAST(value AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE) AS sum_value
+       {_dsum_sql('value')} AS sum_value
 FROM events GROUP BY event_type
 """,
     bench=False,
     audit=False,
 )
 def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from koalas_spark.memo import staged
     from koalas_spark.streaming.windows import stream_foreachbatch_parquet
 
-    src = f"{sf_dir}/events.parquet"
-    # the lake is a staged session artifact: the stream runs once per
-    # session, the returned frame re-reads the lake
-    out = staged(
-        spark,
-        "fb_lake",
-        (sf_dir, "events"),
-        lambda p: stream_foreachbatch_parquet(spark, src, p),
-        "_DONE",
-    )
-    return stream_foreachbatch_parquet(spark, src, out)
+    return stream_foreachbatch_parquet(spark, f"{sf_dir}/events.parquet")
 
 
 # 155. streaming sliding-window agg — the batch sliding definition
@@ -249,11 +236,10 @@ def stream_sliding_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # replays time-ordered, the result is EXACTLY the batch window's —
 # so this custom streaming operator shares the batch oracle (the
 # strongest check a stateful op can get; since r7
-# stream_stateful_sessions reaches the same bar via sentinel-driven
-# watermark advancement).
+# stream_stateful_sessions reaches the same bar by its tail flush).
 @query(
     "stream_locf_impute",
-    oracle="""
+    oracle=f"""
 WITH masked AS (
   SELECT user_id, event_type, ts, event_id, value,
          CASE WHEN substr(md5(CAST(event_id AS VARCHAR)), 1, 4) < '2667'
@@ -270,7 +256,7 @@ SELECT event_type,
        CAST(SUM(CASE WHEN v IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_masked,
        CAST(SUM(CASE WHEN v IS NULL AND v_filled IS NOT NULL
                      THEN 1 ELSE 0 END) AS BIGINT) AS n_filled,
-       CAST(CAST(SUM(CAST(v_filled AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE)
+       {_dsum_sql('v_filled')}
          AS sum_filled
 FROM filled GROUP BY event_type
 """,
@@ -391,13 +377,9 @@ def stream_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 402. stream-stream LEFT OUTER interval join — #97's attribution
 # join with the rows the inner form drops: clicks that never convert
 # EMIT with a null purchase side once the watermark proves no match
-# can still arrive. Outer emission is watermark-driven and eviction
-# compares against the PREVIOUS batch's watermark, so the bounded
-# replay closes its tail with the sessionizer's sentinel device (one
-# far-future sentinel per join side — the operator watermark is the
-# min of both sides'; see streaming/windows.py
-# stream_left_outer_interval_join). Batch-equal after the flush, so
-# the oracle is the plain SQL left join.
+# can still arrive. Outer emission is watermark-driven, so the bounded
+# replay flushes its tail (streaming/windows._run_to_memory).
+# Batch-equal after the flush, so the oracle is the plain SQL left join.
 @query(
     "stream_left_outer_join",
     oracle="""

@@ -15,15 +15,21 @@ streams — grouped state, Arrow-batched.
 
 from __future__ import annotations
 
-import os
-import uuid
 from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from koalas_spark.streaming.windows import (
+    _SENTINEL_USER,
+    _run_to_memory,
+    _staged_events_stream,
+    _tail_stream,
+)
 
 OUT_SCHEMA = "user_id bigint, session_start timestamp, session_end timestamp, n_events bigint"
 STATE_SCHEMA = "start long, last long, n long"
@@ -78,38 +84,13 @@ def _sessionize_group(
         )
 
 
-_SENTINEL_USER = -1
-
-
 def stream_sessionize(spark: SparkSession, events_path: str) -> DataFrame:
     """Drive the bounded events file through the stateful sessionizer
-    and FLUSH the tail, so the emitted rows are exactly the batch
-    sessionization (value-checked by a shared SQL oracle since r7;
-    previously the trailing open session per user stayed in state and
-    the op was rows-only).
-
-    Tail flush: after the source drains, two far-future sentinel
-    events (user −1) are staged into the monitored dir. Sentinel 1
-    advances the event-time watermark past every open session's
-    last + gap; sentinel 2 forces the follow-up micro-batch in which
-    those event-time timeouts actually fire (timeouts compare against
-    the PREVIOUS batch's watermark, so one sentinel alone isn't
-    enough). That is exactly how a production stream's tail closes —
-    by later traffic moving the watermark — just compressed to the end
-    of the bounded replay. The stage dir is therefore per-run (the
-    sentinels must not leak into a later run's batch 1, where they'd
-    advance the watermark before any timeout could be registered) and
-    is removed on exit."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from koalas_spark.streaming.windows import _staged_events_stream
-
-    run = uuid.uuid4().hex[:8]
-    src, stage = _staged_events_stream(
-        spark, events_path, f"sess_{run}", with_stage_dir=True
-    )
+    and flush the tail (windows._run_to_memory), so the emitted rows
+    are exactly the batch sessionization (value-checked by a shared
+    SQL oracle since r7; previously the trailing open session per user
+    stayed in state and the op was rows-only)."""
+    src, tail = _tail_stream(spark, events_path)
     sessions = (
         src.select("user_id", "ts")
         .withWatermark("ts", f"{GAP_SECONDS} seconds")
@@ -122,71 +103,13 @@ def stream_sessionize(spark: SparkSession, events_path: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
-
-    batch_src = spark.read.parquet(events_path)
-    ts_dtype = dict(batch_src.dtypes)["ts"]
-
-    def _stage_sentinel(n: int, gaps_ahead: int) -> None:
-        # one-row parquet derived from the source file itself so the
-        # column types (incl. the ts flavor) match the staged schema;
-        # ts must clear max(ts) + 2*gap for EVERY user, so shift the max
-        mx = batch_src.agg(F.max("ts")).first()[0]
-        if mx is None:
-            # empty source: nothing in state, no tail to flush — and
-            # limit(1) below would have no row to derive a sentinel from
-            return
-        if ts_dtype == "bigint":  # nanos-as-long flavor
-            new_ts = F.lit(int(mx) + gaps_ahead * GAP_SECONDS * 1_000_000_000)
-        else:
-            new_ts = (
-                F.lit(mx).cast(ts_dtype)
-                + F.expr(f"INTERVAL {gaps_ahead * GAP_SECONDS} SECONDS")
-            ).cast(ts_dtype)
-        one = (
-            batch_src.limit(1)
-            .withColumn("user_id", F.lit(_SENTINEL_USER).cast("long"))
-            .withColumn("ts", new_ts)
-        )
-        tmp = os.path.join(stage, f"_sentinel_build_{n}")
-        one.coalesce(1).write.mode("overwrite").parquet(tmp)
-        import glob
-
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        os.replace(part, os.path.join(stage, f"zz_sentinel_{n}.parquet"))
-        shutil.rmtree(tmp, ignore_errors=True)
-
-    qname = f"sessions_{run}"
-    # state partitions sized to state volume, not cores — see
-    # windows._run_to_memory for the measurement
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            sessions.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(qname)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            _stage_sentinel(1, gaps_ahead=3)
-            q.processAllAvailable()
-            _stage_sentinel(2, gaps_ahead=10)
-            q.processAllAvailable()
-            result = (
-                spark.table(qname)
-                .filter(F.col("user_id") != _SENTINEL_USER)
-                .persist()
-            )
-            # materialize the cache before stopping the query (the
-            # memory sink's rows are tied to it) — no driver collect()
-            result.count()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-        shutil.rmtree(stage, ignore_errors=True)
-    return result
+    return _run_to_memory(
+        spark,
+        sessions,
+        lambda t: t.filter(F.col("user_id") != _SENTINEL_USER),
+        output_mode="append",
+        tail=tail,
+    )
 
 
 LOCF_OUT_SCHEMA = "event_type string, was_masked boolean, v_filled double"
@@ -234,10 +157,6 @@ def stream_locf(spark: SparkSession, events_path: str) -> DataFrame:
     the batch window's, so this stateful op shares the batch oracle —
     the strongest check a custom streaming operator can get. The
     emitted per-row frame aggregates batch-side into the audit."""
-    from pyspark.sql import functions as F
-
-    from koalas_spark.streaming.windows import _staged_events_stream
-
     src = _staged_events_stream(spark, events_path, "locf")
     coin = F.substring(F.md5(F.col("event_id").cast("string")), 1, 4)
     masked = src.select(
@@ -256,36 +175,25 @@ def stream_locf(spark: SparkSession, events_path: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    qname = f"locf_{uuid.uuid4().hex[:8]}"
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            filled.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(qname)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            rows = spark.table(qname).persist()
-            rows.count()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    return rows.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        F.sum(F.when(F.col("was_masked"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_masked"),
-        F.sum(
-            F.when(F.col("was_masked") & F.col("v_filled").isNotNull(), 1).otherwise(0)
-        )
-        .cast("bigint")
-        .alias("n_filled"),
-        F.sum(F.col("v_filled").cast("decimal(25,6)"))
-        .cast("string")
-        .cast("double")
-        .alias("sum_filled"),
+    return _run_to_memory(
+        spark,
+        filled,
+        lambda rows: rows.groupBy("event_type").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+            F.sum(F.when(F.col("was_masked"), 1).otherwise(0))
+            .cast("bigint")
+            .alias("n_masked"),
+            F.sum(
+                F.when(
+                    F.col("was_masked") & F.col("v_filled").isNotNull(), 1
+                ).otherwise(0)
+            )
+            .cast("bigint")
+            .alias("n_filled"),
+            F.sum(F.col("v_filled").cast("decimal(25,6)"))
+            .cast("string")
+            .cast("double")
+            .alias("sum_filled"),
+        ),
+        output_mode="append",
     )

@@ -5,62 +5,141 @@ with a watermark → sink. Locally we drive the stream from the parquet
 file source and a memory sink with processAllAvailable() so a batch of
 rows flows through the *streaming* engine synchronously; in production
 the same query runs off Kafka with the identical plan.
+
+Every operator is driven by one device. The source is staged in a
+directory the file source monitors (:func:`_staged_events_stream`).
+:func:`_run_to_memory` runs the query until processAllAvailable()
+drains it, and flushes event-time state with far-future sentinels
+where the output waits on the watermark. The foreachBatch lakes are
+session artifacts written by :func:`_write_lake`.
 """
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
+import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from koalas_spark.memo import staged, workdir
+from koalas_spark.sources.io import normalize_event_time
+
+# the user of the tail-flush sentinels; no real user id is negative
+_SENTINEL_USER = -1
+# how far past the source's last event the two sentinels land: 3 h
+# clears every flushed operator's watermark delay plus gap (1 h + 30
+# min at most), and the second only has to be later than the first
+_SENTINEL_HOURS = (3, 10)
+
+
+def _read_source(spark: SparkSession, path: str) -> DataFrame:
+    """The one batch read of a streamed source: its schema types the
+    stream, and the tail flush and the lakes stage rows from it.
+    TIMESTAMP(NANOS) event times load as longs (normalize_event_time
+    casts them)."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return spark.read.parquet(path)
+
+
+def _link_parts(path: str, stage: str) -> None:
+    # the file source lists plain files in the monitored dir — it
+    # does NOT recurse into a symlinked Spark output DIRECTORY (sf1
+    # scaled tables are directories of part files; this silently
+    # streamed 0 rows before the sf1 sweep caught it) — so link
+    # part files flat
+    if os.path.isdir(path):
+        parts = sorted(glob.glob(os.path.join(path, "*.parquet")))
+    else:
+        parts = [path]
+    os.makedirs(stage, exist_ok=True)
+    for i, p in enumerate(parts):
+        os.symlink(p, os.path.join(stage, f"part_{i:05d}.parquet"))
+
+
+def _stream(
+    spark: SparkSession, raw: DataFrame, stage: str, normalize: bool = True
+) -> DataFrame:
+    """readStream over ``stage`` with ``raw``'s schema. Normalizes
+    nanos/NTZ ts flavors to TIMESTAMP_LTZ (withWatermark rejects
+    TIMESTAMP_NTZ) via the shared read-path cast, so oracles agree;
+    normalize=False for sources without an event-time column (e.g. the
+    documents table)."""
+    src = spark.readStream.schema(raw.schema).parquet(stage)
+    return normalize_event_time(src) if normalize else src
+
 
 def _staged_events_stream(
-    spark: SparkSession,
-    events_path: str,
-    prefix: str,
-    with_stage_dir: bool = False,
-    normalize: bool = True,
-):
-    """readStream over a single (read-only) parquet file: the file
-    streaming source monitors a directory, so the input is staged
-    behind a symlink dir. Normalizes nanos/NTZ ts flavors to
-    TIMESTAMP_LTZ (withWatermark rejects TIMESTAMP_NTZ) via the shared
-    read-path cast, so oracles agree. The stage is a session artifact
-    (koalas_spark.memo)."""
-    import glob
-
-    from koalas_spark.memo import staged
-    from koalas_spark.sources.io import normalize_event_time
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(events_path).schema
-
-    def link_parts(stage: str) -> None:
-        # the file source lists plain files in the monitored dir — it
-        # does NOT recurse into a symlinked Spark output DIRECTORY (sf1
-        # scaled tables are directories of part files; this silently
-        # streamed 0 rows before the sf1 sweep caught it) — so link
-        # part files flat
-        if os.path.isdir(events_path):
-            parts = sorted(glob.glob(os.path.join(events_path, "*.parquet")))
-        else:
-            parts = [events_path]
-        os.makedirs(stage)
-        for i, p in enumerate(parts):
-            os.symlink(p, os.path.join(stage, f"part_{i:05d}.parquet"))
-
+    spark: SparkSession, events_path: str, prefix: str, normalize: bool = True
+) -> DataFrame:
+    """readStream over a (read-only) parquet source: the file streaming
+    source monitors a directory, so the input is staged behind a
+    symlink dir, a session artifact (koalas_spark.memo)."""
+    raw = _read_source(spark, events_path)
     stage = staged(
-        spark, f"stream_{prefix}", (events_path,), link_parts, "part_00000.parquet"
+        spark,
+        f"stream_{prefix}",
+        (events_path,),
+        lambda s: _link_parts(events_path, s),
+        "part_00000.parquet",
     )
-    src = spark.readStream.schema(schema).parquet(stage)
-    # normalize=False for sources without an event-time column
-    # (e.g. the documents table)
-    out = normalize_event_time(src) if normalize else src
-    # with_stage_dir: callers that inject watermark-advance sentinel
-    # files mid-run (stream_sessionize) need the monitored dir
-    return (out, stage) if with_stage_dir else out
+    return _stream(spark, raw, stage, normalize)
+
+
+def _tail_stream(spark: SparkSession, events_path: str):
+    """(stream, tail) for an operator whose tail :func:`_run_to_memory`
+    flushes. The stage is this run's own, under the work directory, and
+    the run removes it: sentinels left in a shared stage would lead a
+    later run's first batch and advance its watermark before any state
+    exists."""
+    raw = _read_source(spark, events_path)
+    stage = tempfile.mkdtemp(prefix="stream_tail_", dir=workdir())
+    _link_parts(events_path, stage)
+    return _stream(spark, raw, stage), (raw, stage)
+
+
+def _stage_file(df: DataFrame, stage: str, name: str) -> None:
+    """``df`` as the single parquet file ``stage/name``: built in a
+    "_"-prefixed dir the file source skips, then moved in whole, so a
+    running query never lists a half-written file."""
+    tmp = os.path.join(stage, f"_build_{name}")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
+    os.replace(part, os.path.join(stage, name))
+    shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _flush_tail(q, raw: DataFrame, stage: str) -> None:
+    mx = raw.agg(F.max("ts")).first()[0]
+    if mx is None:
+        # empty source: nothing in state, no tail to flush, and no row
+        # to derive a sentinel from
+        return
+    ts_dtype = dict(raw.dtypes)["ts"]
+    for n, hours in enumerate(_SENTINEL_HOURS, 1):
+        if ts_dtype == "bigint":  # nanos-as-long flavor
+            ts = F.lit(int(mx) + hours * 3600 * 1_000_000_000)
+        else:
+            ts = (
+                F.lit(mx).cast(ts_dtype) + F.expr(f"INTERVAL {hours * 3600} SECONDS")
+            ).cast(ts_dtype)
+        # derived from a source row so every column type, the ts flavor
+        # included, matches the stream's schema; one row per event type
+        # an interval join's sides filter on, since each side's
+        # watermark only sees its own rows and the operator's is their min
+        sentinel = (
+            raw.limit(1)
+            .withColumn("user_id", F.lit(_SENTINEL_USER).cast("long"))
+            .withColumn("ts", ts)
+            .withColumn(
+                "event_type", F.explode(F.array(F.lit("click"), F.lit("purchase")))
+            )
+        )
+        _stage_file(sentinel, stage, f"zz_sentinel_{n}.parquet")
+        q.processAllAvailable()
 
 
 def stream_tumbling_counts(
@@ -184,7 +263,22 @@ def stream_stream_interval_join(
     )
 
 
-def _run_to_memory(spark, agg, project, output_mode: str = "complete") -> DataFrame:
+def _run_to_memory(
+    spark, agg, project, output_mode: str = "complete", tail=None
+) -> DataFrame:
+    """Drive ``agg`` through a memory sink until its source drains;
+    return ``project`` of the sink table, persisted.
+
+    ``tail`` (from :func:`_tail_stream`) flushes what waits on the
+    watermark: open sessions, unmatched outer-join rows. After the
+    source drains, a far-future sentinel event (user −1) is staged and
+    drained, then a later one. The first advances every event-time
+    watermark past each key's last event plus its gap; the second
+    forces the micro-batch in which the timeouts and evictions fire,
+    because those compare against the PREVIOUS batch's watermark. That
+    is how a production stream's tail closes, by later traffic moving
+    the watermark, compressed to the end of the bounded replay.
+    ``project`` drops the sentinel's rows."""
     qname = f"stream_out_{uuid.uuid4().hex[:8]}"
     # STREAMING state partitions are sized to state volume, not core
     # count: every micro-batch loads/commits one state store PER
@@ -205,6 +299,8 @@ def _run_to_memory(spark, agg, project, output_mode: str = "complete") -> DataFr
         )
         try:
             q.processAllAvailable()
+            if tail is not None:
+                _flush_tail(q, *tail)
             result = project(spark.table(qname)).persist()
             # materialize the cache before stopping the query (the
             # memory sink's rows are tied to it) — keeps the result
@@ -215,7 +311,10 @@ def _run_to_memory(spark, agg, project, output_mode: str = "complete") -> DataFr
             q.stop()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
+        if tail is not None:
+            shutil.rmtree(tail[1], ignore_errors=True)
     return result
+
 
 def stream_session_counts(
     spark: SparkSession,
@@ -282,35 +381,29 @@ def stream_windowed_distinct_users(
     )
 
 
-def stream_foreachbatch_parquet(
-    spark: SparkSession, events_path: str, out_dir: str
-) -> DataFrame:
-    """Streaming → parquet lake via foreachBatch, the production sink
-    shape: each micro-batch OVERWRITES its own batch_id=N directory,
-    so a replayed batch (at-least-once delivery after recovery)
-    rewrites the same path instead of duplicating rows — idempotent
-    writes on top of checkpointed offsets is how exactly-once parquet
-    sinks are actually built. Returns the re-read lake aggregated per
-    event_type, which must equal the batch aggregation of the source
-    (the oracle)."""
-    import shutil
+def _write_lake(spark: SparkSession, raw: DataFrame, out: str, phases) -> None:
+    """Stream ``phases`` (frames of ``raw``) through foreachBatch into
+    the parquet lake ``out/lake``, one query per phase on the one
+    checkpoint ``out/ckpt``: each phase is staged as one file, and a
+    query (fresh for the first phase, a RESTART after that) drains it.
 
-    src = _staged_events_stream(spark, events_path, "fb")
+    Each micro-batch OVERWRITES its own batch_id=N directory, so a
+    replayed batch (at-least-once delivery after recovery) rewrites
+    the same path instead of duplicating rows — idempotent writes on
+    top of checkpointed offsets is how exactly-once parquet sinks are
+    actually built. ``_DONE`` is written last."""
+    stage, ckpt, lake = (os.path.join(out, d) for d in ("stage", "ckpt", "lake"))
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.write.mode("overwrite").parquet(
-                os.path.join(out_dir, f"batch_id={batch_id}")
-            )
+        batch_df.write.mode("overwrite").parquet(
+            os.path.join(lake, f"batch_id={batch_id}")
         )
 
-    done = os.path.join(out_dir, "_DONE")
-    if not os.path.exists(done):
-        shutil.rmtree(out_dir, ignore_errors=True)
-        # inside the lake, which the re-read skips ("_" prefix)
-        ckpt = os.path.join(out_dir, "_ckpt")
+    for n, phase in enumerate(phases, 1):
+        _stage_file(phase, stage, f"phase_{n}.parquet")
         q = (
-            src.writeStream.foreachBatch(write_batch)
+            _stream(spark, raw, stage)
+            .writeStream.foreachBatch(write_batch)
             .option("checkpointLocation", ckpt)
             .start()
         )
@@ -318,13 +411,41 @@ def stream_foreachbatch_parquet(
             q.processAllAvailable()
         finally:
             q.stop()
-        with open(done, "w") as fh:
-            fh.write("ok\n")
-    lake = spark.read.parquet(out_dir)
-    return lake.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
+    with open(os.path.join(lake, "_DONE"), "w") as fh:
+        fh.write("ok\n")
+
+
+def _lake_totals(
+    spark: SparkSession, events_path: str, name: str, split
+) -> DataFrame:
+    """Per-event_type totals of the lake :func:`_write_lake` streams
+    ``split(raw)`` into. The lake is a session artifact
+    (koalas_spark.memo), so the stream runs once per session; the
+    totals must equal one batch pass over the source (the oracle)."""
+
+    def write(out: str) -> None:
+        raw = _read_source(spark, events_path)
+        _write_lake(spark, raw, out, split(raw))
+
+    out = staged(spark, name, (events_path,), write, "lake/_DONE")
+    return (
+        spark.read.parquet(os.path.join(out, "lake"))
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            F.sum(F.col("value").cast("decimal(18,6)"))
+            .cast("double")
+            .alias("sum_value"),
+        )
     )
+
+
+def stream_foreachbatch_parquet(spark: SparkSession, events_path: str) -> DataFrame:
+    """Streaming → parquet lake via foreachBatch, the production sink
+    shape (:func:`_write_lake`), in one phase. Returns the re-read lake
+    aggregated per event_type, which must equal the batch aggregation
+    of the source (the oracle)."""
+    return _lake_totals(spark, events_path, "fb_lake", lambda raw: [raw])
 
 
 def stream_sliding_counts(
@@ -589,26 +710,13 @@ def stream_left_outer_interval_join(
 
     Outer emission is watermark-driven: an unmatched click row leaves
     state and emits nulls only when the operator watermark passes
-    c_ts + gap, and eviction runs against the PREVIOUS batch's
-    watermark — so a bounded replay needs the sessionizer's tail
-    device (streaming/stateful.stream_sessionize): after the source
-    drains, stage far-future sentinel rows (user -1, one per join
-    side so BOTH sides' watermark columns advance — the operator
-    watermark is their min) and kick two extra micro-batches. The
-    stage dir is per-run for the same reason as the sessionizer's
-    (sentinels must not lead a later run's batch 1).
+    c_ts + gap, so the bounded replay has its tail flushed
+    (:func:`_run_to_memory`).
 
     Returns the per-user rollup: clicks, matched pairs, expired
     (unmatched) clicks — batch-equal, so a plain SQL left join is the
     oracle."""
-    import glob
-    import shutil
-    import uuid as _uuid
-
-    run = _uuid.uuid4().hex[:8]
-    src, stage = _staged_events_stream(
-        spark, events_path, f"loj_{run}", with_stage_dir=True
-    )
+    src, tail = _tail_stream(spark, events_path)
     clicks = (
         src.filter(F.col("event_type") == "click")
         .select(F.col("user_id").alias("c_user"), F.col("ts").alias("c_ts"))
@@ -626,75 +734,21 @@ def stream_left_outer_interval_join(
         ),
         "leftOuter",
     )
-
-    batch_src = spark.read.parquet(events_path)
-    ts_dtype = dict(batch_src.dtypes)["ts"]
-
-    def _stage_sentinels(n: int, hours_ahead: int) -> None:
-        mx = batch_src.agg(F.max("ts")).first()[0]
-        if mx is None:
-            return
-        if ts_dtype == "bigint":
-            new_ts = F.lit(int(mx) + hours_ahead * 3600 * 1_000_000_000)
-        else:
-            new_ts = (
-                F.lit(mx).cast(ts_dtype)
-                + F.expr(f"INTERVAL {hours_ahead * 3600} SECONDS")
-            ).cast(ts_dtype)
-        one = (
-            batch_src.limit(1)
-            .withColumn("user_id", F.lit(-1).cast("long"))
-            .withColumn("ts", new_ts)
-        )
-        # one sentinel per join side: each side's watermark column only
-        # sees rows surviving that side's event_type filter
-        both = one.withColumn(
-            "event_type", F.explode(F.array(F.lit("click"), F.lit("purchase")))
-        )
-        tmp = os.path.join(stage, f"_sentinel_build_{n}")
-        both.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        os.replace(part, os.path.join(stage, f"zz_sentinel_{n}.parquet"))
-        shutil.rmtree(tmp, ignore_errors=True)
-
-    qname = f"loj_{run}"
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(qname)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            _stage_sentinels(1, hours_ahead=3)
-            q.processAllAvailable()
-            _stage_sentinels(2, hours_ahead=10)
-            q.processAllAvailable()
-            result = (
-                spark.table(qname)
-                .filter(F.col("c_user") != -1)
-                .groupBy(F.col("c_user").alias("user_id"))
-                .agg(
-                    F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-                    F.count("p_ts").cast("bigint").alias("n_matched"),
-                    F.sum(
-                        F.when(F.col("p_ts").isNull(), 1).otherwise(0)
-                    )
-                    .cast("bigint")
-                    .alias("n_expired"),
-                )
-                .persist()
-            )
-            result.count()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-        shutil.rmtree(stage, ignore_errors=True)
-    return result
+    return _run_to_memory(
+        spark,
+        joined,
+        lambda t: t.filter(F.col("c_user") != _SENTINEL_USER)
+        .groupBy(F.col("c_user").alias("user_id"))
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+            F.count("p_ts").cast("bigint").alias("n_matched"),
+            F.sum(F.when(F.col("p_ts").isNull(), 1).otherwise(0))
+            .cast("bigint")
+            .alias("n_expired"),
+        ),
+        output_mode="append",
+        tail=tail,
+    )
 
 
 def stream_chained_window_agg(
@@ -748,64 +802,16 @@ def stream_checkpoint_restart(spark: SparkSession, events_path: str) -> DataFram
     STOPS; phase 2 stages the other half and starts a NEW query on the
     SAME checkpoint — the file source's committed offsets make the
     restarted query process only the unseen file, and the
-    idempotent-by-batch_id sink absorbs any replay. The re-read lake
-    must equal ONE batch pass over the full source (the oracle): rows
-    lost on restart or duplicated on replay both break the equality.
-    Stage, checkpoint and lake live under one staged path
-    (koalas_spark.memo), so the replay runs once per session."""
-    import glob
-    import shutil
-
-    from koalas_spark.memo import staged
-    from koalas_spark.sources.io import normalize_event_time
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(events_path).schema
-
-    def replay(out: str) -> None:
-        stage, ckpt, lake = (os.path.join(out, d) for d in ("stage", "ckpt", "lake"))
-
-        def start_query():
-            src = normalize_event_time(
-                spark.readStream.schema(schema).parquet(stage)
-            )
-
-            def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-                batch_df.write.mode("overwrite").parquet(
-                    os.path.join(lake, f"batch_id={batch_id}")
-                )
-
-            return (
-                src.writeStream.foreachBatch(write_batch)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-
-        os.makedirs(stage)
-        full = spark.read.parquet(events_path)
-        # deterministic halves; each written as one file, staged in turn
-        for n, half in (
-            (1, full.filter(F.col("event_id") % 2 == 0)),
-            (2, full.filter(F.col("event_id") % 2 != 0)),
-        ):
-            tmp = os.path.join(out, f"build_{n}")
-            half.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            os.replace(part, os.path.join(stage, f"half_{n}.parquet"))
-            shutil.rmtree(tmp, ignore_errors=True)
-            q = start_query()  # phase 1: fresh; phase 2: RESTART
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        with open(os.path.join(lake, "_DONE"), "w") as fh:
-            fh.write("ok\n")
-
-    out = staged(spark, "ckpt_restart", (events_path,), replay, "lake/_DONE")
-    lake = spark.read.parquet(os.path.join(out, "lake"))
-    return lake.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.col("value").cast("decimal(18,6)"))
-        .cast("double")
-        .alias("sum_value"),
+    idempotent-by-batch_id sink absorbs any replay (:func:`_write_lake`).
+    The re-read lake must equal ONE batch pass over the full source
+    (the oracle): rows lost on restart or duplicated on replay both
+    break the equality."""
+    return _lake_totals(
+        spark,
+        events_path,
+        "ckpt_restart",
+        lambda raw: [
+            raw.filter(F.col("event_id") % 2 == 0),
+            raw.filter(F.col("event_id") % 2 != 0),
+        ],
     )

@@ -1,3 +1,4 @@
+from collections.abc import Mapping
 from typing import NamedTuple
 
 import pytest
@@ -63,24 +64,44 @@ def watched_build(spark, build) -> Build:
     return Build(df, hints, bool(reads))
 
 
+class LazyBuilds(Mapping):
+    """name -> Build of every query the plan audit covers (the registry
+    minus ``audit=False``) at SF_SMOKE, each built on first access and
+    kept for the session. A failed build fails the test that asked for
+    it; a query outside the audit is a missing key."""
+
+    def __init__(self, spark):
+        from koalas_spark.queries import registry
+
+        self._spark = spark
+        self._queries = {n: q for n, q in sorted(registry().items()) if q.audit}
+        self._built: dict[str, Build] = {}
+
+    def __getitem__(self, name: str) -> Build:
+        if name not in self._built:
+            q = self._queries[name]
+            try:
+                self._built[name] = watched_build(
+                    self._spark, lambda: q.fn(self._spark, SF_SMOKE)
+                )
+            except Exception as exc:
+                pytest.fail(f"{name}: query build failed: {exc}")
+        return self._built[name]
+
+    def __iter__(self):
+        return iter(self._queries)
+
+    def __len__(self) -> int:
+        return len(self._queries)
+
+
 @pytest.fixture(scope="session")
 def registry_builds(spark):
-    """name -> Build of every query the plan audit covers (the registry
-    minus ``audit=False``), built once per session at SF_SMOKE. The
-    oracle smoke test collects these frames, the registry-wide plan
-    gates (test_plan_audit, test_dim_gate) read their plans and hints,
-    and test_dim_gate's above-gate sweep rebuilds the sized ones."""
-    from koalas_spark.queries import registry
-
-    builds = {}
-    for name, q in sorted(registry().items()):
-        if not q.audit:
-            continue
-        try:
-            builds[name] = watched_build(spark, lambda q=q: q.fn(spark, SF_SMOKE))
-        except Exception as exc:  # pragma: no cover - surface build errors
-            pytest.fail(f"{name}: query build failed: {exc}")
-    return builds
+    """The session's LazyBuilds. The oracle smoke test collects these
+    frames, the registry-wide plan gates (test_plan_audit,
+    test_dim_gate) read their plans and hints, and test_dim_gate's
+    above-gate sweep rebuilds the sized ones."""
+    return LazyBuilds(spark)
 
 
 @pytest.fixture

@@ -59,14 +59,15 @@ def test_no_forced_broadcast_of_sf_linear_tables(registry_builds):
     )
 
 
-def test_above_gate_plans_match_oracle(
-    spark, registry_builds, private_artifacts, monkeypatch
-):
+def test_above_gate_plans_match_oracle(spark, registry_builds, request, monkeypatch):
     from koalas_spark import memo
     from koalas_spark.queries import registry
     from tools.check_oracle import check, connect_duck
 
+    # the shared builds go to the session's artifact store, so they are
+    # all made before this test swaps in a private one
     sized = sorted(n for n, b in registry_builds.items() if b.sized)
+    request.getfixturevalue("private_artifacts")
     # the spy sees the graph gates and the beam walk's
     assert {"kcore_peeling_rounds", "ann_graph_search"} <= set(sized)
     monkeypatch.setattr(memo, "source_bytes", lambda sf_dir, table: 100 << 40)

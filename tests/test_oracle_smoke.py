@@ -6,8 +6,8 @@ materialized through Arrow because DuckDB's silent HUGEINT/DOUBLE
 promotions hash differently at the driver even when every
 Python-level value matches (the grouped_demean_arrow r4/r5 lesson),
 so a family mismatch fails here before it can fail there. Audited
-queries are built once per session (conftest.registry_builds); this
-test collects those frames."""
+queries are built once per session, on first use
+(conftest.registry_builds); this test collects those frames."""
 
 import pytest
 
@@ -24,7 +24,5 @@ def duck():
 @pytest.mark.parametrize("name", sorted(all_queries()))
 def test_query_matches_oracle(spark, duck, registry_builds, name):
     built = registry_builds.get(name)
-    # collect a new Dataset over the shared frame's plan: collecting the
-    # frame itself would swap the plan the audit reads for AQE's final one
-    status, detail = check(spark, duck, SF_SMOKE, name, built and built.df.select("*"))
+    status, detail = check(spark, duck, SF_SMOKE, name, built and built.df)
     assert status in ("OK", "rows-only"), f"{status} {detail}"

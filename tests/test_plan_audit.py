@@ -23,9 +23,13 @@ from tests.conftest import SF_SMOKE
 from tools.audit_plans import collect
 
 
-def test_plans_match_expectations(spark, registry_builds):
+def _baseline() -> dict:
     with open(Path(__file__).parents[1] / "PLAN_BASELINE.json") as f:
-        baseline = json.load(f)
+        return json.load(f)
+
+
+def test_plans_match_expectations(spark, registry_builds):
+    baseline = _baseline()
     facts = collect(spark, SF_SMOKE, {n: b.df for n, b in registry_builds.items()})
 
     problems = []
@@ -46,3 +50,15 @@ def test_plans_match_expectations(spark, registry_builds):
         if base["pushdown"] and not d["pushdown"]:
             problems.append(f"{name}: lost parquet filter pushdown")
     assert not problems, "\n".join(problems)
+
+
+def test_audit_reads_the_plan_not_the_executed_one(spark, registry_builds):
+    """A collected frame holds AQE's final plan, whose global window
+    the audit would misread as unbounded; the audit must still read
+    the planned one."""
+    name = "daily_revenue_discord"
+    df = registry_builds[name].df
+    df.collect()
+    facts = collect(spark, SF_SMOKE, {name: df})[name]
+    assert sorted(facts["flags"]) == _baseline()[name]["flags"]
+    assert not facts["unexpected"] and not facts["unused"]

@@ -9,12 +9,19 @@
   batch-twin agreement independent of the SQL formulation).
 """
 
+import os
+import shutil
+from pathlib import Path
+
+import pytest
+
+from koalas_spark.streaming import windows
+from koalas_spark.streaming.stateful import stream_sessionize
 from tests.conftest import SF_SMOKE
 
 
 def test_stateful_sessions_equal_batch(spark):
     from koalas_spark.queries.analytics import sessionize_events
-    from koalas_spark.streaming.stateful import stream_sessionize
 
     batch = {
         (r.user_id, r.session_start, r.session_end, r.n_events)
@@ -29,37 +36,34 @@ def test_stateful_sessions_equal_batch(spark):
 
 
 def test_foreachbatch_sink_replay_idempotent(spark, tmp_path):
-    """The exactly-once claim: re-running the stream over the same
-    source (checkpoint wiped, as after a catastrophic recovery) must
-    OVERWRITE each batch directory, not append duplicates — the lake
-    aggregates identically both times."""
-    import shutil
-
+    """The exactly-once claim: replaying the stream into a lake that
+    is still on disk (checkpoint lost, as after a catastrophic
+    recovery) must OVERWRITE each batch directory, not append
+    duplicates — the lake aggregates identically both times."""
     from pyspark.sql import functions as F
 
-    from koalas_spark.streaming.windows import stream_foreachbatch_parquet
+    from koalas_spark.streaming.windows import _read_source, _write_lake
 
-    out = str(tmp_path / "lake")
-    src = f"{SF_SMOKE}/events.parquet"
+    out = str(tmp_path / "out")
+    raw = _read_source(spark, f"{SF_SMOKE}/events.parquet")
 
-    def totals():
-        df = stream_foreachbatch_parquet(spark, src, out)
-        row = df.agg(
-            F.sum("n").alias("n"),
-            F.sum(F.col("sum_value").cast("decimal(25,6)")).cast("double").alias("s"),
-        ).collect()[0]
+    def replay_totals():
+        _write_lake(spark, raw, out, [raw])
+        row = (
+            spark.read.parquet(os.path.join(out, "lake"))
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.col("value").cast("decimal(25,6)")).alias("s"),
+            )
+            .collect()[0]
+        )
         return (row.n, row.s)
 
-    first = totals()
-    # second call short-circuits on the _DONE marker (idempotent rerun)
-    assert totals() == first
-    # crash-recovery shape: _DONE lost, checkpoint lost, lake still on
-    # disk -> the replay must overwrite, not duplicate
-    import os
-
-    os.remove(os.path.join(out, "_DONE"))
-    shutil.rmtree(out + "_ckpt", ignore_errors=True)
-    assert totals() == first
+    first = replay_totals()
+    assert first[0] > 0
+    # keep the lake and the staged source, drop only the checkpoint
+    shutil.rmtree(os.path.join(out, "ckpt"))
+    assert replay_totals() == first
 
 
 def test_windowed_distinct_users_matches_batch(spark):
@@ -126,16 +130,34 @@ def test_statestore_reader_exposes_agg_state(spark, tmp_path):
     assert state == want
 
 
-def test_stream_sessionize_empty_source(spark, tmp_path):
+@pytest.mark.parametrize(
+    "op",
+    [stream_sessionize, windows.stream_left_outer_interval_join],
+    ids=lambda op: op.__name__,
+)
+def test_stream_sessionize_empty_source(spark, tmp_path, op):
     """An empty events source must yield an empty result, not crash in
-    the sentinel tail-flush (ADVICE r7: agg(max(ts)) returns None)."""
-    import pyspark.sql.functions as F
-
-    from koalas_spark.streaming.stateful import stream_sessionize
-
+    the sentinel tail flush the two operators share (ADVICE r7:
+    agg(max(ts)) returns None)."""
     empty = str(tmp_path / "empty_events")
     spark.read.parquet(f"{SF_SMOKE}/events.parquet").limit(0).write.parquet(
         empty
     )
-    out = stream_sessionize(spark, empty)
-    assert out.count() == 0
+    assert op(spark, empty).count() == 0
+
+
+def test_one_stream_driver():
+    """The streaming shelf drives every operator through one run helper
+    and one lake writer: each of these appears once in its source."""
+    src = "".join(
+        p.read_text() for p in sorted(Path(windows.__file__).parent.glob("*.py"))
+    )
+    for needle in (
+        'format("memory")',
+        'conf.get("spark.sql.shuffle.partitions")',
+        "foreachBatch(",
+        "coalesce(1).write",
+        "nanosAsLong",
+    ):
+        assert src.count(needle) == 1, needle
+    assert "with_stage_dir" not in src

@@ -307,9 +307,12 @@ def collect(spark, sf_dir: str, frames: dict | None = None) -> dict[str, dict]:
     jvm = spark._jvm  # noqa: SLF001
     out = {}
     for name, df in frames.items():
-        plan = jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-            df._jdf.queryExecution(), "formatted"  # noqa: SLF001
+        # explain a fresh Dataset over the frame's plan: once a frame has
+        # been collected, its own queryExecution holds AQE's final plan
+        fresh = jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+            spark._jsparkSession, df._jdf.logicalPlan()  # noqa: SLF001
         )
+        plan = jvm.PythonSQLUtils.explainString(fresh.queryExecution(), "formatted")
         out[name] = inspect_plan(plan, name)
     return out
 
