@@ -38,15 +38,13 @@ import os
 import shutil
 import tempfile
 
+from koalas_spark.sources.io import source_path
+
 _ARTIFACTS: dict = {}
 # the stores bench/perfbench count and clear between samples
 _REGISTRY: list[dict] = [_ARTIFACTS]
 _SEQ = itertools.count()
 _WORKDIR: str | None = None
-
-
-def _table_path(sf_dir: str, table: str) -> str:
-    return os.path.join(sf_dir, f"{table}.parquet")
 
 
 def _scan(path: str) -> tuple[int, int]:
@@ -68,13 +66,13 @@ def _scan(path: str) -> tuple[int, int]:
 def source_bytes(sf_dir: str, table: str) -> int:
     """On-disk bytes of ``table`` under ``sf_dir``, file or directory —
     the metadata-only input of every size gate."""
-    return _scan(_table_path(sf_dir, table))[0]
+    return _scan(source_path(sf_dir, table))[0]
 
 
 def source_key(sf_dir: str, *tables: str) -> tuple:
     """Identity of each named table under ``sf_dir`` (of ``sf_dir``
     itself when no table is named): path, bytes and newest mtime_ns."""
-    paths = [_table_path(sf_dir, t) for t in tables] or [sf_dir]
+    paths = [source_path(sf_dir, t) for t in tables] or [sf_dir]
     return tuple((os.path.abspath(p), *_scan(p)) for p in paths)
 
 

@@ -16,6 +16,7 @@ import zlib
 from pyspark.sql import DataFrame, SparkSession
 
 from koalas_spark.memo import artifact, source_key
+from koalas_spark.sources.io import read_source, source_path
 
 
 def write_bucketed(
@@ -51,7 +52,7 @@ def bucketed_pair(
         # one catalog table per source identity
         tag = zlib.crc32(repr(source_key(sf_dir, name)).encode())
         tbl = f"bkt_{name}_{tag}_{buckets}"
-        src = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        src = read_source(spark, source_path(sf_dir, name), name)
         write_bucketed(spark, src, tbl, key, buckets)
         return spark.table(tbl)
 

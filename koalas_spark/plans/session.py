@@ -80,6 +80,13 @@ def get_spark(app_name: str = "koalas_spark", cpus: int | None = None) -> SparkS
         # similarity.WALK_GATE_BYTES); forcing source_bytes high (the
         # tier-1 above-gate sweep) exercises every above-gate plan.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # an inferred parquet TIMESTAMP(NANOS) column reads as its long
+        # instead of failing; micros files read as before
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # recursive_subtree_rollup's ~|docs| * depth (<= 64) rows pass
+        # the 1M-row recursion guard at sf>=1 (sf1 sweep); structural
+        # termination still bounds the loop
+        .config("spark.sql.cteRecursionRowLimit", str((1 << 31) - 1))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
         # Python workers (UDFs, Python data sources) import koalas_spark

@@ -12,6 +12,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from koalas_spark.memo import artifact
+from koalas_spark.sources.io import normalize_event_time, read_source, source_path
 
 # decimal(18,6): per-row values fit 12 integer digits at any SF (SF
 # scales row count, not magnitudes); precision<=18 is long-backed in
@@ -21,9 +22,8 @@ DEC = "decimal(18,6)"
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name == "events":
-        return _load_events(spark, sf_dir)
-    path = f"{sf_dir}/{name}.parquet"
+    """Source table ``name``, event time normalized to TIMESTAMP_LTZ."""
+    path = source_path(sf_dir, name)
     if name in ("documents", "embeddings"):
         # one spread (checkpointed) scan per session artifact
         # (koalas_spark.memo): each localCheckpoint pins blocks until
@@ -32,9 +32,10 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # eviction churn shows up as multi-second timing noise on the
         # compute-heavy pipelines
         return artifact(
-            spark, "spread", (sf_dir, name), lambda: _spread(spark.read.parquet(path))
+            spark, "spread", (sf_dir, name), lambda: _spread(read_source(spark, path, name))
         )
-    return spark.read.parquet(path)
+    df = read_source(spark, path, name)
+    return normalize_event_time(df) if name == "events" else df
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -61,23 +62,6 @@ def _spread(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < max(2, target // 2):
         return df.repartition(target).localCheckpoint(eager=False)
     return df
-
-
-def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Normalize the events scan against parquet timestamp flavor.
-
-    The generator has written ts as TIMESTAMP(NANOS) (rejected by the
-    reader without the nanosAsLong conf) and as tz-less TIMESTAMP(MICROS)
-    (read as TIMESTAMP_NTZ by Spark 4.x). Every downstream consumer —
-    unix-epoch casts, withWatermark, window() — requires TIMESTAMP_LTZ,
-    so normalize both flavors here, once, instead of per query. Under
-    the UTC session tz the NTZ->LTZ cast is an identity relabel, so
-    DuckDB oracles (which read the raw micros) still agree."""
-    from koalas_spark.sources.io import normalize_event_time
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return normalize_event_time(df)
 
 
 def daily_revenue_table(

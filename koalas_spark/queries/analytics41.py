@@ -66,18 +66,13 @@ ORDER BY 1
 def footer_stats_integrity_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import glob
-    import os
+    from koalas_spark.sources.io import source_files, source_path
 
-    rows = []
-    for t, key in _FOOTER_TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        files = (
-            sorted(glob.glob(os.path.join(p, "*.parquet")))
-            if os.path.isdir(p)
-            else [p]
-        )
-        rows += [(t, key, f) for f in files]
+    rows = [
+        (t, key, f)
+        for t, key in _FOOTER_TABLES
+        for f in source_files(source_path(sf_dir, t))
+    ]
     fdf = spark.createDataFrame(
         rows, "tbl string, key string, path string"
     ).repartition(min(len(rows), 32))

@@ -107,9 +107,7 @@ SELECT channel, shapley_x6, share_ppm FROM (
 def shapley_channel_attribution(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from koalas_spark.queries.analytics import _load_events
-
-    ev = _load_events(spark, sf_dir)
+    ev = _t(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
         F.max(
             F.when(F.col("event_type") == "click", 1).otherwise(0)

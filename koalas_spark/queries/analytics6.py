@@ -553,9 +553,7 @@ FROM events GROUP BY event_type
 """,
 )
 def hll_user_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from koalas_spark.queries.analytics import _load_events
-
-    ev = _load_events(spark, sf_dir).select(
+    ev = _t(spark, sf_dir, "events").select(
         "event_type", F.to_date("ts").alias("day"), "user_id"
     )
     daily = ev.groupBy("event_type", "day").agg(
@@ -770,11 +768,6 @@ FROM up GROUP BY anc
 def recursive_subtree_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     d.select("doc_id", "n_chars").createOrReplaceTempView("_rollup_docs")
-    # the ancestor expansion emits ~|docs| * depth rows (depth <= 64:
-    # anc halves each step), which trips Spark's 1M-row recursion
-    # safety default at sf>=1 (sf1 sweep: RECURSION_ROW_LIMIT_EXCEEDED)
-    # — raise the guard; structural termination still bounds the loop
-    spark.conf.set("spark.sql.cteRecursionRowLimit", str((1 << 31) - 1))
     return spark.sql(
         """
 WITH RECURSIVE up(node, anc, n_chars) AS (

@@ -7,6 +7,8 @@ Reference parity:
     — never inferSchema, which double-scans and guesses types).
   - ``write_csv`` ~ koalas ``Dataframe.toCsv`` (dataframe.d:128), but
     distributed: each task writes its partition; header per file.
+  - ``read_source``: the same contract for the parquet source tables,
+    each declared once in :data:`SOURCES`.
 
 Parquet is the canonical analytical format: columnar, predicate
 pushdown, min/max pruning, splittable — the right scan at 100 TB.
@@ -14,21 +16,59 @@ pushdown, min/max pruning, splittable — the right scan at 100 TB.
 
 from __future__ import annotations
 
+import glob
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-TPCH_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+# the ten source tables as the data stores them: tz-less
+# TIMESTAMP(MICROS) is timestamp_ntz, and every column is nullable
+SOURCES = {
+    "region": "r_regionkey int, r_name string",
+    "nation": "n_nationkey int, n_name string, n_regionkey int",
+    "customer": "c_custkey bigint, c_name string, c_nationkey int, c_acctbal double, "
+    "c_mktsegment string",
+    "supplier": "s_suppkey bigint, s_name string, s_nationkey int, s_acctbal double",
+    "part": "p_partkey bigint, p_name string, p_brand string, p_type string, "
+    "p_size int, p_retailprice double",
+    "orders": "o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
+    "o_totalprice double, o_orderdate timestamp_ntz, o_orderpriority string",
+    "lineitem": "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, l_linenumber int, "
+    "l_quantity double, l_extendedprice double, l_discount double, l_tax double, "
+    "l_returnflag string, l_linestatus string, l_shipdate timestamp_ntz",
+    "events": "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string, "
+    "value double, props string",
+    "documents": "doc_id bigint, text string, lang string, source string, n_chars bigint",
+    "embeddings": "vec_id bigint, embedding array<float>, label int",
+}
+
+
+def source_path(sf_dir: str, name: str) -> str:
+    """Source table ``name`` under ``sf_dir``: a parquet file or a
+    directory of part files."""
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def source_files(path: str) -> list[str]:
+    """The parquet files of the source at ``path``, in name order."""
+    return sorted(glob.glob(os.path.join(path, "*.parquet"))) if os.path.isdir(path) else [path]
+
+
+def read_source(spark: SparkSession, path: str, name: str) -> DataFrame:
+    """The parquet at ``path`` read as source table ``name``, its
+    declared schema passed, so no schema-inference job runs. Event times
+    stored as TIMESTAMP(NANOS), an earlier generator's flavor, are
+    declared ``bigint`` (:func:`normalize_event_time` casts them); one
+    part file's footer, read on the driver, tells the flavor."""
+    ddl = SOURCES[name]
+    if name == "events":
+        import pyarrow.parquet as pq
+
+        ts = pq.read_schema(source_files(path)[0]).field("ts").type
+        if getattr(ts, "unit", None) == "ns":
+            ddl = ddl.replace("ts timestamp_ntz", "ts bigint")
+    return spark.read.schema(ddl).parquet(path)
 
 
 def read_table(
@@ -61,9 +101,9 @@ def read_table(
 def normalize_event_time(df: DataFrame, col: str = "ts") -> DataFrame:
     """Make an event-time column robust to parquet timestamp flavor.
 
-    Generators variously write event time as TIMESTAMP(NANOS) (which the
-    reader surfaces as LONG under spark.sql.legacy.parquet.nanosAsLong)
-    or tz-less TIMESTAMP(MICROS) (read as TIMESTAMP_NTZ by Spark 4.x).
+    Generators variously write event time as TIMESTAMP(NANOS) (which
+    read_source declares LONG) or tz-less TIMESTAMP(MICROS) (read as
+    TIMESTAMP_NTZ by Spark 4.x).
     Everything downstream — unix-epoch casts, withWatermark (which
     rejects TIMESTAMP_NTZ), window()/session_window() — wants
     TIMESTAMP_LTZ, so every events scan funnels through this one cast.

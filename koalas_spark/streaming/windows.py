@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from koalas_spark.memo import staged, workdir
-from koalas_spark.sources.io import normalize_event_time
+from koalas_spark.sources.io import normalize_event_time, read_source, source_files
 
 # the user of the tail-flush sentinels; no real user id is negative
 _SENTINEL_USER = -1
@@ -36,49 +36,32 @@ _SENTINEL_USER = -1
 _SENTINEL_HOURS = (3, 10)
 
 
-def _read_source(spark: SparkSession, path: str) -> DataFrame:
-    """The one batch read of a streamed source: its schema types the
-    stream, and the tail flush and the lakes stage rows from it.
-    TIMESTAMP(NANOS) event times load as longs (normalize_event_time
-    casts them)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(path)
-
-
 def _link_parts(path: str, stage: str) -> None:
     # the file source lists plain files in the monitored dir — it
     # does NOT recurse into a symlinked Spark output DIRECTORY (sf1
     # scaled tables are directories of part files; this silently
     # streamed 0 rows before the sf1 sweep caught it) — so link
     # part files flat
-    if os.path.isdir(path):
-        parts = sorted(glob.glob(os.path.join(path, "*.parquet")))
-    else:
-        parts = [path]
     os.makedirs(stage, exist_ok=True)
-    for i, p in enumerate(parts):
+    for i, p in enumerate(source_files(path)):
         os.symlink(p, os.path.join(stage, f"part_{i:05d}.parquet"))
 
 
-def _stream(
-    spark: SparkSession, raw: DataFrame, stage: str, normalize: bool = True
-) -> DataFrame:
-    """readStream over ``stage`` with ``raw``'s schema. Normalizes
-    nanos/NTZ ts flavors to TIMESTAMP_LTZ (withWatermark rejects
-    TIMESTAMP_NTZ) via the shared read-path cast, so oracles agree;
-    normalize=False for sources without an event-time column (e.g. the
-    documents table)."""
+def _stream(spark: SparkSession, raw: DataFrame, stage: str) -> DataFrame:
+    """readStream over ``stage`` with ``raw``'s schema; an event time
+    ``ts`` of either flavor gets the batch read's TIMESTAMP_LTZ cast
+    (withWatermark rejects TIMESTAMP_NTZ), so oracles agree."""
     src = spark.readStream.schema(raw.schema).parquet(stage)
-    return normalize_event_time(src) if normalize else src
+    return normalize_event_time(src) if "ts" in raw.columns else src
 
 
 def _staged_events_stream(
-    spark: SparkSession, events_path: str, prefix: str, normalize: bool = True
+    spark: SparkSession, events_path: str, prefix: str, table: str = "events"
 ) -> DataFrame:
-    """readStream over a (read-only) parquet source: the file streaming
-    source monitors a directory, so the input is staged behind a
-    symlink dir, a session artifact (koalas_spark.memo)."""
-    raw = _read_source(spark, events_path)
+    """readStream over a (read-only) parquet source of ``table``: the
+    file streaming source monitors a directory, so the input is staged
+    behind a symlink dir, a session artifact (koalas_spark.memo)."""
+    raw = read_source(spark, events_path, table)
     stage = staged(
         spark,
         f"stream_{prefix}",
@@ -86,7 +69,7 @@ def _staged_events_stream(
         lambda s: _link_parts(events_path, s),
         "part_00000.parquet",
     )
-    return _stream(spark, raw, stage, normalize)
+    return _stream(spark, raw, stage)
 
 
 def _tail_stream(spark: SparkSession, events_path: str):
@@ -95,7 +78,7 @@ def _tail_stream(spark: SparkSession, events_path: str):
     the run removes it: sentinels left in a shared stage would lead a
     later run's first batch and advance its watermark before any state
     exists."""
-    raw = _read_source(spark, events_path)
+    raw = read_source(spark, events_path, "events")
     stage = tempfile.mkdtemp(prefix="stream_tail_", dir=workdir())
     _link_parts(events_path, stage)
     return _stream(spark, raw, stage), (raw, stage)
@@ -424,7 +407,7 @@ def _lake_totals(
     totals must equal one batch pass over the source (the oracle)."""
 
     def write(out: str) -> None:
-        raw = _read_source(spark, events_path)
+        raw = read_source(spark, events_path, "events")
         _write_lake(spark, raw, out, split(raw))
 
     out = staged(spark, name, (events_path,), write, "lake/_DONE")
@@ -626,7 +609,7 @@ def stream_incremental_neardup(
     num_perm = bands * rows
 
     # static catalog: signatures + band keys for doc_id < split
-    static_docs = spark.read.parquet(docs_path).filter(
+    static_docs = read_source(spark, docs_path, "documents").filter(
         F.col("doc_id") < catalog_split
     )
     cat_sigs = minhash_sigs(
@@ -662,7 +645,7 @@ def stream_incremental_neardup(
     cat_bands = band_keys(cat_sigs, "old_id")
     cat_full = cat_sigs.select(F.col("id").alias("old_id"), F.col("sig").alias("_cs"))
 
-    src = _staged_events_stream(spark, docs_path, "incnd", normalize=False)
+    src = _staged_events_stream(spark, docs_path, "incnd", "documents")
     batch_docs = src.filter(F.col("doc_id") >= catalog_split)
     bat_sigs = minhash_sigs(
         shingle_sets(batch_docs, "doc_id", "text"), num_perm=num_perm

@@ -1,9 +1,97 @@
-"""Sources/sinks: JSONL round-trip, partitioned parquet write with
-partition pruning visible in the plan."""
+"""Sources/sinks: the declared source schemas, JSONL round-trip,
+partitioned parquet write with partition pruning visible in the plan."""
 
+import ast
+import os
+from pathlib import Path
+
+import pytest
 from pyspark.sql import functions as F
 
+import koalas_spark
+from koalas_spark.sources.io import SOURCES, read_source, source_path
 from tests.conftest import SF_SMOKE
+
+
+@pytest.fixture(params=["sf0.001", "sf0.01", "sf0.1", "perfbench"])
+def source_dir(request, tmp_path):
+    """Each test data scale, and the benchmark's generator output with
+    every table a directory of part files."""
+    if request.param != "perfbench":
+        return os.path.join(os.path.dirname(SF_SMOKE), request.param)
+    from perfbench import datagen
+
+    datagen.generate(str(tmp_path), 0.002, seed=1, replicas=2, offset=10**9)
+    return str(tmp_path)
+
+
+def test_declared_schemas_match_the_data(spark, source_dir):
+    """Each source table's declared schema is the one Spark infers from
+    the files, nullability included: a regenerated table whose types
+    drift fails here, not as a wrong cast deep inside some query."""
+    drift = []
+    for name in SOURCES:
+        path = source_path(source_dir, name)
+        inferred = spark.read.parquet(path).schema
+        declared = read_source(spark, path, name).schema
+        if inferred != declared:
+            drift.append(f"{name}: inferred {inferred.simpleString()}")
+    assert not drift, "\n".join(drift)
+
+
+def _calls(path: Path):
+    """(enclosing function, call) of every call in the module ``path``."""
+
+    def visit(node, fn):
+        for child in ast.iter_child_nodes(node):
+            name = child.name if isinstance(child, ast.FunctionDef) else fn
+            if isinstance(child, ast.Call):
+                yield name, child
+            yield from visit(child, name)
+
+    return visit(ast.parse(path.read_text()), None)
+
+
+def _receiver_attrs(call: ast.Call) -> list[str]:
+    """The attribute names along ``call``'s receiver chain."""
+    names, node = [], call.func
+    while isinstance(node, (ast.Attribute, ast.Call)):
+        if isinstance(node, ast.Attribute):
+            names.append(node.attr)
+            node = node.value
+        else:
+            node = node.func
+    return names
+
+
+def test_one_source_reader():
+    """Source tables are read only through read_source, and building a
+    query changes no session conf: the nanos reader conf is set once,
+    in the session factory, and the streaming run is the one place that
+    scopes a conf (its shuffle partitions)."""
+    root = Path(koalas_spark.__file__).parent
+    modules = sorted(root.rglob("*.py"))
+    nanos = [p.relative_to(root) for p in modules if "nanosAsLong" in p.read_text()]
+    assert nanos == [Path("plans/session.py")]
+    assert (root / "plans/session.py").read_text().count("nanosAsLong") == 1
+    conf_sets, source_reads = [], []
+    source_args = ("sf_dir", "events_path", "docs_path", *(f"{t}.parquet" for t in SOURCES))
+    for p in modules:
+        for fn, call in _calls(p):
+            attrs = _receiver_attrs(call)
+            if attrs[:2] == ["set", "conf"] and fn != "_run_to_memory":
+                conf_sets.append(f"{p.relative_to(root)}:{call.lineno} in {fn}")
+            args = " ".join(ast.unparse(a) for a in call.args)
+            if (
+                attrs[:1] == ["parquet"]
+                and "read" in attrs
+                and "write" not in attrs
+                and fn != "read_source"
+                and any(a in args for a in source_args)
+            ):
+                source_reads.append(f"{p.relative_to(root)}:{call.lineno} in {fn}")
+    assert not conf_sets, conf_sets
+    assert not source_reads, source_reads
 
 
 def test_jsonl_roundtrip(spark, tmp_path):

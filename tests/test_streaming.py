@@ -42,10 +42,11 @@ def test_foreachbatch_sink_replay_idempotent(spark, tmp_path):
     duplicates — the lake aggregates identically both times."""
     from pyspark.sql import functions as F
 
-    from koalas_spark.streaming.windows import _read_source, _write_lake
+    from koalas_spark.sources.io import read_source
+    from koalas_spark.streaming.windows import _write_lake
 
     out = str(tmp_path / "out")
-    raw = _read_source(spark, f"{SF_SMOKE}/events.parquet")
+    raw = read_source(spark, f"{SF_SMOKE}/events.parquet", "events")
 
     def replay_totals():
         _write_lake(spark, raw, out, [raw])
@@ -69,7 +70,7 @@ def test_foreachbatch_sink_replay_idempotent(spark, tmp_path):
 def test_windowed_distinct_users_matches_batch(spark):
     from pyspark.sql import functions as F
 
-    from koalas_spark.queries.analytics import _load_events
+    from koalas_spark.queries.analytics import _t
     from koalas_spark.streaming.windows import stream_windowed_distinct_users
 
     got = {
@@ -80,7 +81,7 @@ def test_windowed_distinct_users_matches_batch(spark):
     }
     want = {
         (r.ws, r.n)
-        for r in _load_events(spark, SF_SMOKE)
+        for r in _t(spark, SF_SMOKE, "events")
         .groupBy(F.date_trunc("hour", "ts").alias("ws"))
         .agg(F.count_distinct("user_id").alias("n"))
         .collect()
@@ -95,7 +96,7 @@ def test_statestore_reader_exposes_agg_state(spark, tmp_path):
     touching the running query. Contents must equal the batch twin."""
     from pyspark.sql import functions as F
 
-    from koalas_spark.queries.analytics import _load_events
+    from koalas_spark.queries.analytics import _t
     from koalas_spark.streaming.windows import _staged_events_stream
 
     src = _staged_events_stream(spark, f"{SF_SMOKE}/events.parquet", "ssr")
@@ -122,7 +123,7 @@ def test_statestore_reader_exposes_agg_state(spark, tmp_path):
     }
     want = {
         (r.event_type, r.n)
-        for r in _load_events(spark, SF_SMOKE)
+        for r in _t(spark, SF_SMOKE, "events")
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
@@ -146,6 +147,35 @@ def test_stream_sessionize_empty_source(spark, tmp_path, op):
     assert op(spark, empty).count() == 0
 
 
+def test_nanos_events_read_as_micros(spark, tmp_path):
+    """Events stored as TIMESTAMP(NANOS), a flavor the generator has
+    written before, read through the batch source and both tail-flushed
+    streaming operators give the rows the micros source gives."""
+    from collections import Counter
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from koalas_spark.queries.analytics import _t
+    from koalas_spark.sources.io import read_source
+
+    micros = f"{SF_SMOKE}/events.parquet"
+    nanos = str(tmp_path / "events.parquet")
+    tbl = pq.read_table(micros)
+    i = tbl.schema.get_field_index("ts")
+    pq.write_table(tbl.set_column(i, "ts", tbl.column(i).cast(pa.timestamp("ns"))), nanos)
+    assert read_source(spark, nanos, "events").schema["ts"].dataType == T.LongType()
+
+    def rows(df):
+        return Counter(tuple(r) for r in df.collect())
+
+    assert _t(spark, str(tmp_path), "events").schema == _t(spark, SF_SMOKE, "events").schema
+    assert rows(_t(spark, str(tmp_path), "events")) == rows(_t(spark, SF_SMOKE, "events"))
+    for op in (stream_sessionize, windows.stream_left_outer_interval_join):
+        assert rows(op(spark, nanos)) == rows(op(spark, micros)), op.__name__
+
+
 def test_one_stream_driver():
     """The streaming shelf drives every operator through one run helper
     and one lake writer: each of these appears once in its source."""
@@ -157,7 +187,6 @@ def test_one_stream_driver():
         'conf.get("spark.sql.shuffle.partitions")',
         "foreachBatch(",
         "coalesce(1).write",
-        "nanosAsLong",
     ):
         assert src.count(needle) == 1, needle
     assert "with_stage_dir" not in src

@@ -38,7 +38,7 @@ from pyspark.sql import types as T
 
 from koalas_spark import get_spark
 from koalas_spark.queries import registry
-from koalas_spark.sources.io import TPCH_TABLES
+from koalas_spark.sources.io import SOURCES, source_path
 
 
 def _norm(v):
@@ -126,8 +126,8 @@ def connect_duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
     import os
 
     con = duckdb.connect()
-    for t in TPCH_TABLES:
-        p = f"{sf_dir}/{t}.parquet"
+    for t in SOURCES:
+        p = source_path(sf_dir, t)
         # driver testdata ships single files; Spark-written scaled dirs
         # (tools/make_scaled.py) need the part-file glob
         if os.path.isdir(p):
