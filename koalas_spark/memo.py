@@ -16,6 +16,12 @@ The contract:
   "build the edge list once, fan out". :func:`staged` does the same for
   data a query writes and reads back: it returns a path under
   :func:`workdir` and calls the writer once per session.
+* **Staged output is complete or absent.** :func:`staged` owns the
+  completion marker: it writes ``_STAGED`` after the writer returns
+  (Spark's file index skips ``_`` files), so no writer names or writes
+  a marker of its own, and a path without it is cleared and written
+  again. A read of staged output passes the schema of the frame that
+  was written, so reuse launches no schema-inference job.
 * **Reset per bench sample.** A harness that keeps the minimum of
   several samples would otherwise charge every shared build or staged
   write to one discarded sample and time memo hits. bench.py calls
@@ -45,6 +51,8 @@ _ARTIFACTS: dict = {}
 _REGISTRY: list[dict] = [_ARTIFACTS]
 _SEQ = itertools.count()
 _WORKDIR: str | None = None
+# written into a staged path once its writer returns
+_MARKER = "_STAGED"
 
 
 def _scan(path: str) -> tuple[int, int]:
@@ -101,10 +109,10 @@ def workdir() -> str:
     return _WORKDIR
 
 
-def staged(spark, name: str, sources: tuple, write, marker: str) -> str:
+def staged(spark, name: str, sources: tuple, write) -> str:
     """A path under :func:`workdir` holding what ``write(path)`` wrote
-    from ``sources``, written once per session. ``marker`` is the file
-    ``write`` leaves last; while it is missing (first use, or a write
+    from ``sources``, written once per session. The marker is written
+    once ``write`` returns; while it is missing (first use, or a write
     that died half way) the path is cleared and written again."""
     path = artifact(
         spark,
@@ -112,9 +120,11 @@ def staged(spark, name: str, sources: tuple, write, marker: str) -> str:
         sources,
         lambda: _Staged(os.path.join(workdir(), f"{name}_{next(_SEQ)}")),
     )
-    if not os.path.exists(os.path.join(path, marker)):
+    marker = os.path.join(path, _MARKER)
+    if not os.path.exists(marker):
         shutil.rmtree(path, ignore_errors=True)
         write(path)
+        open(marker, "w").close()
     return path
 
 

@@ -310,23 +310,19 @@ def knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PRUNE_DAYS = ("2024-01-05", "2024-01-12", "2024-01-21")
 
 
-def _partitioned_events(spark: SparkSession, sf_dir: str) -> str:
+def partitioned_scan_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The pruned scan itself, exposed for the plan test."""
     ev = _t(spark, sf_dir, "events").withColumn(
         "day", F.date_format("ts", "yyyy-MM-dd")
     )
-    return staged(
-        spark,
-        "part_events",
-        (sf_dir, "events"),
-        ev.write.partitionBy("day").parquet,
-        "_SUCCESS",
+    path = staged(
+        spark, "part_events", (sf_dir, "events"), ev.write.partitionBy("day").parquet
     )
-
-
-def partitioned_scan_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pruned scan itself, exposed for the plan test."""
-    path = _partitioned_events(spark, sf_dir)
-    return spark.read.parquet(path).filter(F.col("day").isin(*_PRUNE_DAYS))
+    return (
+        spark.read.schema(ev.schema)
+        .parquet(path)
+        .filter(F.col("day").isin(*_PRUNE_DAYS))
+    )
 
 
 @query(
@@ -344,9 +340,7 @@ GROUP BY 1, 2
 )
 def partitioned_write_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned = partitioned_scan_source(spark, sf_dir)
-    return pruned.groupBy(
-        F.col("day").cast("string").alias("day"), "event_type"
-    ).agg(
+    return pruned.groupBy("day", "event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum(F.col("value").cast("decimal(25,6)"))
         .cast("string")
@@ -374,9 +368,7 @@ FROM documents GROUP BY lang
 )
 def jsonl_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    path = staged(
-        spark, "docs_jsonl", (sf_dir, "documents"), docs.write.json, "_SUCCESS"
-    )
+    path = staged(spark, "docs_jsonl", (sf_dir, "documents"), docs.write.json)
     back = spark.read.schema(docs.schema).json(path)
     return back.groupBy("lang").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),

@@ -445,9 +445,7 @@ def orc_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )
-    path = staged(
-        spark, "events_orc", (sf_dir, "events"), ev.write.orc, "_SUCCESS"
-    )
+    path = staged(spark, "events_orc", (sf_dir, "events"), ev.write.orc)
     back = spark.read.schema(ev.schema).orc(path)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),

@@ -303,7 +303,7 @@ def schema_evolution_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id", "ts", "event_type", "value"
         ).write.parquet(f"{base}/v2")
 
-    base = staged(spark, "events_evol", (sf_dir, "events"), write, "v2/_SUCCESS")
+    base = staged(spark, "events_evol", (sf_dir, "events"), write)
     v1, v2 = f"{base}/v1", f"{base}/v2"
     merged = spark.read.option("mergeSchema", "true").parquet(v1, v2)
     # n_legacy counts by the partition key that DEFINES a legacy row
@@ -483,7 +483,6 @@ def csv_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("timestampNTZFormat", fmt)
         .option("timestampFormat", fmt)
         .csv,
-        "_SUCCESS",
     )
     back = (
         spark.read.schema(ev.schema)

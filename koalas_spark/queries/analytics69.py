@@ -62,10 +62,8 @@ def binaryfile_ingest_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in rows:
             with open(os.path.join(stage, f"doc_{r['doc_id']:06d}.bin"), "wb") as f:
                 f.write(r["text"].encode("utf-8"))
-        with open(os.path.join(stage, "_DONE"), "w") as f:
-            f.write("ok")
 
-    stage = staged(spark, "binfiles", (sf_dir, "documents"), write, "_DONE")
+    stage = staged(spark, "binfiles", (sf_dir, "documents"), write)
     files = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.bin")

@@ -263,7 +263,7 @@ def snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 def orders_snapshot(spark: SparkSession, sf_dir: str) -> str:
     """The two-version orders snapshot table (v1 = pre-1995, v2 = the
     rest appended), staged once per session. A write interrupted
-    between the two commits leaves no ``_v2.json``, so the staging
+    between the two commits leaves the stage unmarked, so the staging
     rebuilds the table from scratch rather than append to it."""
     from koalas_spark.sources.snapshots import write_snapshot
 
@@ -274,7 +274,7 @@ def orders_snapshot(spark: SparkSession, sf_dir: str) -> str:
         write_snapshot(o.filter(F.col("o_orderdate") < cut), path)
         write_snapshot(o.filter(F.col("o_orderdate") >= cut), path)
 
-    return staged(spark, "snap_orders", (sf_dir, "orders"), write, "_v2.json")
+    return staged(spark, "snap_orders", (sf_dir, "orders"), write)
 
 
 # --------------------------------------------------------------------

@@ -411,7 +411,6 @@ def partition_overwrite_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         "backfill_daily",
         (sf_dir, "events"),
         daily.write.partitionBy("day").parquet,
-        "_SUCCESS",
     )
 
     # the backfill: recompute the earliest day and dynamically
@@ -422,7 +421,7 @@ def partition_overwrite_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         "partitionOverwriteMode", "dynamic"
     ).partitionBy("day").parquet(table)
 
-    return spark.read.parquet(table).agg(
+    return spark.read.schema(daily.schema).parquet(table).agg(
         F.countDistinct("day").cast("bigint").alias("n_days"),
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
         F.sum("n").cast("bigint").alias("total_events"),
@@ -794,17 +793,13 @@ def incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(25,6)")).alias("psum"),
         )
 
-    state = staged(
-        spark,
-        "ivm_state",
-        (sf_dir, "events"),
-        partials(ev.filter(F.col("day") < cut)).write.parquet,
-        "_SUCCESS",
-    )
+    history = partials(ev.filter(F.col("day") < cut))
+    state = staged(spark, "ivm_state", (sf_dir, "events"), history.write.parquet)
 
     delta = partials(ev.filter(F.col("day") >= cut))
     merged = (
-        spark.read.parquet(state)
+        spark.read.schema(history.schema)
+        .parquet(state)
         .unionByName(delta)
         .groupBy("day", "event_type")
         .agg(

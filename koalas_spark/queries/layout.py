@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from koalas_spark.memo import staged
 from koalas_spark.queries import query
 from koalas_spark.queries.analytics import _t
+from koalas_spark.sources.io import read_source
 
 
 # --------------------------------------------------------------------
@@ -39,8 +40,7 @@ GROUP BY l_returnflag
 """,
 )
 def zorder_box_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = zordered_lineitem_path(spark, sf_dir)
-    li = spark.read.parquet(path)
+    li = read_source(spark, zordered_lineitem_path(spark, sf_dir), "lineitem")
     return (
         li.filter(
             F.col("l_partkey").between(40, 99)
@@ -70,7 +70,6 @@ def zordered_lineitem_path(spark: SparkSession, sf_dir: str) -> str:
             bits=12,
             num_files=16,
         ),
-        "_SUCCESS",
     )
 
 
@@ -98,8 +97,7 @@ GROUP BY l_returnflag
     bench=False,
 )
 def hilbert_box_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = hilbert_lineitem_path(spark, sf_dir)
-    li = spark.read.parquet(path)
+    li = read_source(spark, hilbert_lineitem_path(spark, sf_dir), "lineitem")
     return (
         li.filter(
             F.col("l_partkey").between(120, 180)
@@ -129,5 +127,4 @@ def hilbert_lineitem_path(spark: SparkSession, sf_dir: str) -> str:
             bits=12,
             num_files=16,
         ),
-        "_SUCCESS",
     )

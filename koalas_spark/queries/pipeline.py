@@ -566,21 +566,19 @@ def shard_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.dataSource.register(ShardSinkSource)
     except Exception:
         pass  # already registered in this session
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
     path = staged(
         spark,
         "shards",
         (sf_dir, "documents"),
-        lambda p: _t(spark, sf_dir, "documents")
-        .select("doc_id", "lang", "n_chars")
-        .repartition(8, "doc_id")
+        lambda p: docs.repartition(8, "doc_id")
         .write.format("shardsink")
         .option("path", p)
         .mode("append")
         .save(),
-        "_manifest.json",
     )
     loaded = (
-        spark.read.schema("doc_id bigint, lang string, n_chars bigint")
+        spark.read.schema(docs.schema)
         .format("shardsink")
         .option("path", path)
         .load()
@@ -948,15 +946,17 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def write(base: str) -> None:
         d.repartition(64).write.parquet(f"{base}/small")
-        spark.read.parquet(f"{base}/small").repartition(4).write.parquet(f"{base}/big")
+        small = spark.read.schema(d.schema).parquet(f"{base}/small")
+        small.repartition(4).write.parquet(f"{base}/big")
 
-    base = staged(spark, "compact", (sf_dir, "documents"), write, "big/_SUCCESS")
+    base = staged(spark, "compact", (sf_dir, "documents"), write)
     small, big = f"{base}/small", f"{base}/big"
 
     def stats(path: str, label: str):
         n_files = len(glob.glob(os.path.join(path, "part-*.parquet")))
         return (
-            spark.read.parquet(path)
+            spark.read.schema(d.schema)
+            .parquet(path)
             .agg(
                 F.count(F.lit(1)).cast("bigint").alias("n_rows"),
                 F.sum(F.col("n_chars").cast("decimal(25,0)"))

@@ -92,7 +92,7 @@ def read_table(
             T.StructField(f"_idx{i}", T.StringType(), True) for i in range(index_cols)
         ]
         schema = T.StructType(idx_fields + list(schema.fields))
-    df = spark.read.csv(path, schema=schema, sep=sep, header=header)
+    df = spark.read.schema(schema).csv(path, sep=sep, header=header)
     if index_cols:
         df = df.drop(*[f"_idx{i}" for i in range(index_cols)])
     return df

@@ -1,10 +1,12 @@
 """Minimal snapshot/time-travel table layout (the Delta/Iceberg core
 idea with none of the format lock-in): every commit writes its data
 files into an immutable version directory and records a JSON manifest
-listing ALL directories visible at that version. Readers resolve a
-manifest — never the directory tree — so a reader pinned to version N
-is immune to concurrent appends (snapshot isolation), and `version=`
-gives as-of reads for reproducing yesterday's training set.
+listing ALL directories visible at that version, and the committed
+frame's schema. Readers resolve a manifest — never the directory tree —
+so a reader pinned to version N is immune to concurrent appends
+(snapshot isolation), `version=` gives as-of reads for reproducing
+yesterday's training set, and the log, not the files, owns the schema:
+a read infers nothing.
 
 Scale notes: the manifest holds directory paths, not per-file lists —
 listing stays on the distributed reader (Spark's parquet scan), so a
@@ -21,6 +23,7 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _manifest_path(path: str, version: int) -> str:
@@ -38,17 +41,11 @@ def latest_version(path: str) -> int:
     return max(versions)
 
 
-def write_snapshot(df: DataFrame, path: str, replace: bool = False) -> int:
+def write_snapshot(df: DataFrame, path: str) -> int:
     """Commit ``df`` as a new version: data into a uniquely named
     immutable dir, manifest ``_v{N}.json`` = previous manifest's dirs
-    + the new one. Returns the committed version number.
-
-    ``replace=True`` makes it an OVERWRITE commit: the new manifest
-    lists ONLY the new data dir (the snapshot-isolation analogue of
-    INSERT OVERWRITE — old versions stay readable via ``version=``,
-    but latest sees a full replacement). Used for derived artifacts
-    (e.g. the co-purchase pair table) where two racing builders must
-    converge to ONE copy of the data, not an append-duplicated union.
+    + the new one, and ``df``'s schema. Returns the committed version
+    number.
 
     Crash safety: the data write completes before any manifest
     appears, so a crash mid-commit leaves an orphan data dir but never
@@ -80,7 +77,8 @@ def write_snapshot(df: DataFrame, path: str, replace: bool = False) -> int:
             dirs, version = [], 1
         manifest = {
             "version": version,
-            "dirs": [data_dir_name] if replace else dirs + [data_dir_name],
+            "dirs": dirs + [data_dir_name],
+            "schema": df.schema.jsonValue(),
         }
         tmp = _manifest_path(path, version) + f".tmp-{suffix}"
         with open(tmp, "w") as f:
@@ -98,10 +96,13 @@ def read_snapshot(
     spark: SparkSession, path: str, version: int | None = None
 ) -> DataFrame:
     """Read the table as of ``version`` (default: latest). The
-    manifest names the visible version dirs; the scan unions them as
-    one parquet load (partition pruning / pushdown intact)."""
+    manifest names the visible version dirs and the schema; the scan
+    unions the dirs as one parquet load with that schema (partition
+    pruning / pushdown intact)."""
     if version is None:
         version = latest_version(path)
     with open(_manifest_path(path, version)) as f:
-        dirs = json.load(f)["dirs"]
-    return spark.read.parquet(*[os.path.join(path, d) for d in dirs])
+        manifest = json.load(f)
+    return spark.read.schema(StructType.fromJson(manifest["schema"])).parquet(
+        *[os.path.join(path, d) for d in manifest["dirs"]]
+    )

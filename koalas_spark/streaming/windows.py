@@ -67,7 +67,6 @@ def _staged_events_stream(
         f"stream_{prefix}",
         (events_path,),
         lambda s: _link_parts(events_path, s),
-        "part_00000.parquet",
     )
     return _stream(spark, raw, stage)
 
@@ -84,14 +83,14 @@ def _tail_stream(spark: SparkSession, events_path: str):
     return _stream(spark, raw, stage), (raw, stage)
 
 
-def _stage_file(df: DataFrame, stage: str, name: str) -> None:
-    """``df`` as the single parquet file ``stage/name``: built in a
-    "_"-prefixed dir the file source skips, then moved in whole, so a
-    running query never lists a half-written file."""
+def _stage_parts(df: DataFrame, stage: str, name: str) -> None:
+    """``df``'s part files as ``stage/{name}_{i}.parquet``: written in a
+    "_"-prefixed dir the file source skips, then each moved in whole,
+    so a running query never lists a half-written file."""
     tmp = os.path.join(stage, f"_build_{name}")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-    os.replace(part, os.path.join(stage, name))
+    df.write.mode("overwrite").parquet(tmp)
+    for i, part in enumerate(glob.glob(os.path.join(tmp, "part-*.parquet"))):
+        os.replace(part, os.path.join(stage, f"{name}_{i:05d}.parquet"))
     shutil.rmtree(tmp, ignore_errors=True)
 
 
@@ -121,7 +120,8 @@ def _flush_tail(q, raw: DataFrame, stage: str) -> None:
                 "event_type", F.explode(F.array(F.lit("click"), F.lit("purchase")))
             )
         )
-        _stage_file(sentinel, stage, f"zz_sentinel_{n}.parquet")
+        # one part file: raw.limit(1) is one partition
+        _stage_parts(sentinel, stage, f"zz_sentinel_{n}")
         q.processAllAvailable()
 
 
@@ -367,14 +367,14 @@ def stream_windowed_distinct_users(
 def _write_lake(spark: SparkSession, raw: DataFrame, out: str, phases) -> None:
     """Stream ``phases`` (frames of ``raw``) through foreachBatch into
     the parquet lake ``out/lake``, one query per phase on the one
-    checkpoint ``out/ckpt``: each phase is staged as one file, and a
-    query (fresh for the first phase, a RESTART after that) drains it.
+    checkpoint ``out/ckpt``: each phase's part files are staged, and a
+    query (fresh for the first phase, a RESTART after that) drains them.
 
     Each micro-batch OVERWRITES its own batch_id=N directory, so a
     replayed batch (at-least-once delivery after recovery) rewrites
     the same path instead of duplicating rows — idempotent writes on
     top of checkpointed offsets is how exactly-once parquet sinks are
-    actually built. ``_DONE`` is written last."""
+    actually built."""
     stage, ckpt, lake = (os.path.join(out, d) for d in ("stage", "ckpt", "lake"))
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -383,7 +383,7 @@ def _write_lake(spark: SparkSession, raw: DataFrame, out: str, phases) -> None:
         )
 
     for n, phase in enumerate(phases, 1):
-        _stage_file(phase, stage, f"phase_{n}.parquet")
+        _stage_parts(phase, stage, f"phase_{n}")
         q = (
             _stream(spark, raw, stage)
             .writeStream.foreachBatch(write_batch)
@@ -394,8 +394,6 @@ def _write_lake(spark: SparkSession, raw: DataFrame, out: str, phases) -> None:
             q.processAllAvailable()
         finally:
             q.stop()
-    with open(os.path.join(lake, "_DONE"), "w") as fh:
-        fh.write("ok\n")
 
 
 def _lake_totals(
@@ -405,14 +403,14 @@ def _lake_totals(
     ``split(raw)`` into. The lake is a session artifact
     (koalas_spark.memo), so the stream runs once per session; the
     totals must equal one batch pass over the source (the oracle)."""
-
-    def write(out: str) -> None:
-        raw = read_source(spark, events_path, "events")
-        _write_lake(spark, raw, out, split(raw))
-
-    out = staged(spark, name, (events_path,), write, "lake/_DONE")
+    raw = read_source(spark, events_path, "events")
+    out = staged(
+        spark, name, (events_path,), lambda o: _write_lake(spark, raw, o, split(raw))
+    )
+    # the lake holds the stream's rows: raw with its event time normalized
     return (
-        spark.read.parquet(os.path.join(out, "lake"))
+        spark.read.schema(normalize_event_time(raw).schema)
+        .parquet(os.path.join(out, "lake"))
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),

@@ -92,24 +92,6 @@ def test_daily_revenue_artifact_matches_fresh_build(spark):
     assert len({r["d"] for r in cached}) == len(cached)  # d unique
 
 
-def test_snapshot_replace_commit(spark, tmp_path):
-    """replace=True publishes a manifest listing ONLY the new data
-    dir — latest readers see a full replacement, while the previous
-    version stays readable (time travel intact)."""
-    from koalas_spark.sources.snapshots import read_snapshot, write_snapshot
-
-    p = str(tmp_path / "tbl")
-    df1 = spark.range(5).withColumnRenamed("id", "x")
-    df2 = spark.range(100, 103).withColumnRenamed("id", "x")
-    v1 = write_snapshot(df1, p)
-    v2 = write_snapshot(df2, p, replace=True)
-    assert (v1, v2) == (1, 2)
-    latest = sorted(r["x"] for r in read_snapshot(spark, p).collect())
-    assert latest == [100, 101, 102]
-    pinned = sorted(r["x"] for r in read_snapshot(spark, p, version=1).collect())
-    assert pinned == [0, 1, 2, 3, 4]
-
-
 def test_bfs_layer_plan_shape(spark):
     """Pin the PER-HOP expansion plan of mining._bfs_layer_counts
     (ADVICE r11 medium): khop_reach_copurchase and

@@ -65,16 +65,19 @@ def _receiver_attrs(call: ast.Call) -> list[str]:
 
 
 def test_one_source_reader():
-    """Source tables are read only through read_source, and building a
-    query changes no session conf: the nanos reader conf is set once,
-    in the session factory, and the streaming run is the one place that
-    scopes a conf (its shuffle partitions)."""
+    """Source tables are read only through read_source, every other read
+    passes the schema its writer wrote, and building a query changes no
+    session conf: the nanos reader conf is set once, in the session
+    factory, and the streaming run is the one place that scopes a conf
+    (its shuffle partitions). ``memo.staged`` owns the completion
+    marker, so no caller names one. binaryFile has a fixed schema, and
+    schema_evolution_stats' mergeSchema read is that query's subject."""
     root = Path(koalas_spark.__file__).parent
     modules = sorted(root.rglob("*.py"))
     nanos = [p.relative_to(root) for p in modules if "nanosAsLong" in p.read_text()]
     assert nanos == [Path("plans/session.py")]
     assert (root / "plans/session.py").read_text().count("nanosAsLong") == 1
-    conf_sets, source_reads = [], []
+    conf_sets, source_reads, inferred, exempt, markers = [], [], [], [], []
     source_args = ("sf_dir", "events_path", "docs_path", *(f"{t}.parquet" for t in SOURCES))
     for p in modules:
         for fn, call in _calls(p):
@@ -90,8 +93,30 @@ def test_one_source_reader():
                 and any(a in args for a in source_args)
             ):
                 source_reads.append(f"{p.relative_to(root)}:{call.lineno} in {fn}")
+            where = f"{p.relative_to(root)}:{call.lineno} in {fn}"
+            if (
+                attrs[:1] in (["parquet"], ["orc"], ["csv"], ["json"], ["load"], ["text"])
+                and {"read", "readStream"} & set(attrs)
+                and "schema" not in attrs
+            ):
+                chain = ast.unparse(call)
+                if "'binaryFile'" in chain or "'mergeSchema'" in chain:
+                    exempt.append(where)
+                else:
+                    inferred.append(where)
+            if isinstance(call.func, ast.Name) and call.func.id == "staged":
+                strings = [
+                    n.value
+                    for n in ast.walk(call)
+                    if isinstance(n, ast.Constant) and isinstance(n.value, str)
+                ]
+                if any("_SUCCESS" in v or "_DONE" in v for v in strings):
+                    markers.append(where)
     assert not conf_sets, conf_sets
     assert not source_reads, source_reads
+    assert not inferred, inferred
+    assert len(exempt) == 2, exempt
+    assert not markers, markers
 
 
 def test_jsonl_roundtrip(spark, tmp_path):
@@ -191,7 +216,9 @@ def test_ntz_parquet_event_time_normalized(spark, tmp_path):
 
 
 def test_snapshot_time_travel_isolation(spark, tmp_path):
-    """Version-pinned reads must not see later appends; latest sees all."""
+    """Version-pinned reads must not see later appends; latest sees all.
+    The manifest owns the schema, so a read launches no Spark job and
+    returns the written schema (nullable, as every file read is)."""
     from koalas_spark.sources.snapshots import (
         latest_version,
         read_snapshot,
@@ -209,6 +236,17 @@ def test_snapshot_time_travel_isolation(spark, tmp_path):
     # v1's content is exactly the frozen population
     got = sorted(r.k for r in read_snapshot(spark, path, version=1).collect())
     assert got == list(range(10))
+
+    sc = spark.sparkContext
+    sc.setJobGroup("read_snapshot", "read_snapshot")
+    back = read_snapshot(spark, path)
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert not sc.statusTracker().getJobIdsForGroup("read_snapshot")
+    assert not df1.schema["k"].nullable
+    assert [(f.name, f.dataType.simpleString(), f.nullable) for f in back.schema] == [
+        ("k", "bigint", True)
+    ]
 
 
 def test_snapshot_commit_race_retries_next_version(spark, tmp_path):
@@ -232,8 +270,9 @@ def test_snapshot_commit_race_retries_next_version(spark, tmp_path):
     spark.range(100, 103).withColumnRenamed("id", "k").write.parquet(racer_dir)
     with open(os.path.join(path, "_v1.json")) as f:
         v1_dirs = json.load(f)["dirs"]
+    schema = spark.range(0).withColumnRenamed("id", "k").schema.jsonValue()
     with open(os.path.join(path, "_v2.json"), "w") as f:
-        json.dump({"version": 2, "dirs": v1_dirs + ["d-racer"]}, f)
+        json.dump({"version": 2, "dirs": v1_dirs + ["d-racer"], "schema": schema}, f)
 
     # our commit must observe the racer and serialize after it
     assert write_snapshot(spark.range(200, 202).withColumnRenamed("id", "k"), path) == 3
@@ -241,3 +280,6 @@ def test_snapshot_commit_race_retries_next_version(spark, tmp_path):
     # racer's manifest intact, v3 sees everything: 5 + 3 + 2 rows
     assert read_snapshot(spark, path, version=2).count() == 8
     assert read_snapshot(spark, path, version=3).count() == 10
+    # every manifest, the racer's included, publishes the schema it commits
+    with open(os.path.join(path, "_v3.json")) as f:
+        assert json.load(f)["schema"] == schema

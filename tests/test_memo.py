@@ -56,7 +56,7 @@ def test_reset_forces_rebuild_with_identical_rows(spark):
 
 @private_store
 def test_staged_writes_once_per_session_and_reset_deletes(spark, tmp_path):
-    from koalas_spark.memo import reset_session_artifacts, staged, workdir
+    from koalas_spark.memo import _MARKER, reset_session_artifacts, staged, workdir
 
     src = tmp_path / "src.bin"
     src.write_bytes(b"x")
@@ -65,22 +65,28 @@ def test_staged_writes_once_per_session_and_reset_deletes(spark, tmp_path):
     def write(path):
         writes.append(path)
         os.makedirs(path)
-        Path(path, "_DONE").write_text("ok")
+        Path(path, "data").write_text("ok")
+        if len(writes) == 1:
+            raise OSError("write died half way")
 
-    first = staged(spark, "probe", (str(src),), write, "_DONE")
-    assert os.path.dirname(first) == workdir()
-    assert staged(spark, "probe", (str(src),), write, "_DONE") == first
-    assert writes == [first]
-
-    # a write that lost its marker is redone from scratch
-    os.remove(os.path.join(first, "_DONE"))
-    assert staged(spark, "probe", (str(src),), write, "_DONE") == first
+    # a write that raises leaves no marker and is redone on the next call
+    with pytest.raises(OSError):
+        staged(spark, "probe", (str(src),), write)
+    first = staged(spark, "probe", (str(src),), write)
     assert writes == [first, first]
+    assert os.path.dirname(first) == workdir()
+    assert staged(spark, "probe", (str(src),), write) == first
+    assert writes == [first, first]
+
+    # staged writes its own marker; without it the path is written again
+    os.remove(os.path.join(first, _MARKER))
+    assert staged(spark, "probe", (str(src),), write) == first
+    assert len(writes) == 3 and os.path.exists(os.path.join(first, _MARKER))
 
     reset_session_artifacts()
     assert not os.path.exists(first)
-    again = staged(spark, "probe", (str(src),), write, "_DONE")
-    assert len(writes) == 3 and os.path.exists(again)
+    again = staged(spark, "probe", (str(src),), write)
+    assert len(writes) == 4 and os.path.exists(again)
     reset_session_artifacts()
 
 
@@ -161,3 +167,64 @@ def test_only_memo_fingerprints_sources():
                 continue
             found.append(f"{rel}:{i}: {line.strip()}")
     assert not found, "\n".join(found)
+
+
+def _callers(target: str, functions: dict[str, set[str]]) -> set[str]:
+    """Every function name that reaches ``target`` through the call
+    graph ``functions`` (name -> names it calls)."""
+    found, grew = {target}, True
+    while grew:
+        grew = False
+        for name, calls in functions.items():
+            if name not in found and calls & found:
+                found.add(name)
+                grew = True
+    return found - {target}
+
+
+def _staged_queries() -> list[str]:
+    """The registered queries that read back output they staged: every
+    query whose function reaches ``memo.staged``, except the memory-sink
+    streams, which run their stream at every build by design."""
+    import ast
+
+    from koalas_spark.queries import registry
+
+    functions: dict[str, set[str]] = {}
+    for p in sorted((ROOT / "koalas_spark").rglob("*.py")):
+        for node in ast.walk(ast.parse(p.read_text())):
+            if isinstance(node, ast.FunctionDef):
+                functions.setdefault(node.name, set()).update(
+                    c.func.id if isinstance(c.func, ast.Name) else c.func.attr
+                    for c in ast.walk(node)
+                    if isinstance(c, ast.Call)
+                    and isinstance(c.func, (ast.Name, ast.Attribute))
+                )
+    readers = _callers("staged", functions) - _callers("_run_to_memory", functions)
+    return sorted(n for n, q in registry().items() if q.fn.__name__ in readers)
+
+
+@private_store
+def test_second_build_of_a_staged_query_launches_no_job(spark):
+    """Built a second time in one session, a query that reads back its
+    staged output finds it written and passes the writer's schema, so
+    the build launches no Spark job. partition_overwrite_backfill
+    re-runs its backfill on every build, and schema_evolution_stats'
+    mergeSchema read reads footers: both by design."""
+    from koalas_spark.queries import registry
+
+    names = _staged_queries()
+    assert len(names) >= 16, names
+    sc = spark.sparkContext
+    jobs = {}
+    for name in names:
+        build = registry()[name].fn
+        build(spark, SF_SMOKE)
+        sc.setJobGroup(name, name)
+        build(spark, SF_SMOKE)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(name))
+    assert jobs.pop("partition_overwrite_backfill") > 0
+    assert jobs.pop("schema_evolution_stats") > 0
+    assert jobs == dict.fromkeys(jobs, 0)

@@ -177,8 +177,9 @@ def test_nanos_events_read_as_micros(spark, tmp_path):
 
 
 def test_one_stream_driver():
-    """The streaming shelf drives every operator through one run helper
-    and one lake writer: each of these appears once in its source."""
+    """The streaming shelf drives every operator through one run helper,
+    one lake writer and one stager: each of these appears once in its
+    source."""
     src = "".join(
         p.read_text() for p in sorted(Path(windows.__file__).parent.glob("*.py"))
     )
@@ -186,7 +187,10 @@ def test_one_stream_driver():
         'format("memory")',
         'conf.get("spark.sql.shuffle.partitions")',
         "foreachBatch(",
-        "coalesce(1).write",
+        "os.replace(",
     ):
         assert src.count(needle) == 1, needle
     assert "with_stage_dir" not in src
+    # the stager moves every part file in; nothing funnels a phase
+    # through one task
+    assert "coalesce(1)" not in src
