@@ -50,6 +50,34 @@ def _is_numeric(dtype: T.DataType) -> bool:
     return isinstance(dtype, T.NumericType)
 
 
+def local_rows(
+    spark: SparkSession, rows: Sequence[tuple], schema: T.StructType | str
+) -> DataFrame:
+    """``rows``, assembled on the driver, as a one-partition frame of
+    ``schema``.
+
+    ``spark.createDataFrame(list)`` parallelizes the list over every
+    core and unpickles it in Python workers. Here the rows are one array
+    literal of structs, each value cast to its declared type (and the
+    array to the declared nullability), that ``inline`` expands over a
+    one-row range: forcing the frame runs one task and no Python
+    worker. Empty ``rows`` give an empty frame of ``schema``."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    structs = [
+        F.struct(
+            *[
+                F.lit(v).cast(f.dataType).alias(f.name)
+                for v, f in zip(row, schema.fields, strict=True)
+            ]
+        )
+        for row in rows
+    ]
+    return spark.range(1, numPartitions=1).select(
+        F.inline(F.array(*structs).cast(T.ArrayType(schema, containsNull=False)))
+    )
+
+
 class KFrame:
     """A typed, distributed frame with the koalas reference surface."""
 
@@ -80,7 +108,7 @@ class KFrame:
     def from_rows(
         cls, spark: SparkSession, rows: Sequence[tuple], schema: T.StructType | str
     ) -> "KFrame":
-        return cls(spark.createDataFrame(rows, schema=schema))
+        return cls(local_rows(spark, rows, schema))
 
     def to_csv(self, path: str, sep: str = ",", header: bool = True) -> None:
         from koalas_spark.sources.io import write_csv
@@ -153,11 +181,12 @@ class KFrame:
         return KFrame(self._df.distinct()).sort()
 
     def append(self, other: "KFrame | Sequence[tuple]") -> "KFrame":
-        """Append rows (reference ``~=``). Literal rows become a local
-        relation unioned into the plan."""
+        """Append rows (reference ``~=``). Literal rows become a
+        one-partition literal frame (:func:`local_rows`) unioned into
+        the plan."""
         if isinstance(other, KFrame):
             return KFrame(self._df.unionByName(other._df))
-        lit = self._df.sparkSession.createDataFrame(list(other), schema=self._df.schema)
+        lit = local_rows(self._df.sparkSession, list(other), self._df.schema)
         return KFrame(self._df.unionByName(lit))
 
     # -- apply ---------------------------------------------------------

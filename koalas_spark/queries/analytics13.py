@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from koalas_spark.frame import local_rows
 from koalas_spark.memo import staged
 from koalas_spark.queries import query
 from koalas_spark.queries.analytics import _t
@@ -189,9 +190,7 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rq_den = sum(x * x for x in v)
     out = [(i, v[i], rq_num, rq_den) for i in range(d)]
-    return spark.createDataFrame(
-        out, "i int, loading bigint, rq_num bigint, rq_den bigint"
-    )
+    return local_rows(spark, out, "i int, loading bigint, rq_num bigint, rq_den bigint")
 
 
 # --------------------------------------------------------------------
@@ -262,9 +261,7 @@ def khop_reach_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [
         (int(s), int(hop), int(n)) for (s, hop), n in sorted(counts.items())
     ]
-    return spark.createDataFrame(
-        rows, "seed bigint, hop int, n_reach bigint"
-    )
+    return local_rows(spark, rows, "seed bigint, hop int, n_reach bigint")
 
 
 # --------------------------------------------------------------------

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from koalas_spark.frame import local_rows
 from koalas_spark.queries import query
 from koalas_spark.queries.analytics import _t
 
@@ -109,7 +110,8 @@ def harmonic_centrality_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
         )
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         rows,
         "probe bigint, n_d1 bigint, n_d2 bigint, n_d3 bigint,"
         " harmonic_nano bigint",

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from koalas_spark.frame import local_rows
 from koalas_spark.queries import query
 from koalas_spark.queries.analytics import _t
 
@@ -22,12 +23,11 @@ from koalas_spark.queries.analytics import _t
 # 327. k-core peeling rounds — the dense-subgraph extractor behind
 # community seeds and spam-ring detection: iteratively drop nodes of
 # degree < k from the co-purchase graph (#170 artifact) and report
-# each round's survivor count. Three FIXED peel rounds (the converged
-# core needs a loop; the fixed-round prefix is the distributable,
-# oracle-replayable shape — the same discipline as #258's fixed-hop
-# BFS): each round is one degree groupBy + one semi-join of the edge
-# list against surviving nodes, cost O(|E|) per round, never
-# quadratic. k = 8.
+# each round's survivor count. Three peel rounds, the oracle's fixed-
+# round prefix (the converged core needs a loop; the fixed prefix is
+# the oracle-replayable shape, the same discipline as #258's fixed-hop
+# BFS); k = 8. A peel round is one semi-join of the edge list against
+# the surviving nodes plus one degree groupBy, O(|E|), never quadratic.
 @query(
     "kcore_peeling_rounds",
     oracle="""
@@ -62,56 +62,43 @@ def kcore_peeling_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         copurchase_degree_table,
     )
 
-    # Round-13 rewrite of the peel loop (VERDICT r12 #3 — was
-    # 8.1×/decade, 226.6s at sf10, the worst non-guarded scaler):
-    #   * round-1 degrees come FREE from the shared |V|-sized
-    #     copurchase_degree_table artifact (mining.py — the r12 trick
-    #     that halved local_clustering_probes), replacing a full
-    #     2|E|-row groupBy scan;
-    #   * survivor sets are |V|-bounded single-long frames, so BOTH
-    #     per-round semi-joins BROADCAST them (bcast_v) instead of
-    #     sort-merge-shuffling the 2|E|-row edge frame twice per round
-    #     (the r12 plan's dominant cost — 4 full-graph shuffles across
-    #     the loop). The adjacency is checkpointed ONCE and every
-    #     later pass re-reads it with ≤4 stacked broadcast-hash
-    #     probes — no intermediate graph checkpoints, no graph
-    #     shuffle after the first. Above the |V| gate the semi-joins
-    #     shuffle instead; the values are unchanged either way.
-    #   * the per-round degree groupBy keeps map-side partial combine:
-    #     the shuffle moves O(partitions × |V|) partial counts, never
-    #     2|E| rows.
-    g = copurchase_adjacency(spark, sf_dir)
-    surv = (
-        copurchase_degree_table(spark, sf_dir)
-        .filter(F.col("dg") >= 8)
-        .select(F.col("x").alias("u"))
-        .localCheckpoint(eager=False)
-    )
-    counts = []
-    for rnd in (1, 2, 3):
-        counts.append(
-            surv.agg(
-                F.lit(rnd).alias("rnd"),
-                F.count(F.lit(1)).cast("bigint").alias("n_survivors"),
-            )
+    # Exact fixed-point exit. Peeling only removes nodes, s_r ⊆ s_{r-1}
+    # ⊆ V (s_0 = V), so a round that keeps the survivor count keeps the
+    # survivor set and the graph: every later round repeats that count.
+    # Round 1's count and |V| are one aggregate over the |V|-sized
+    # degree artifact; at every shipped scale factor |s_1| = |V| and no
+    # peel round runs. A peel round semi-joins the adjacency (built on
+    # first need) against the survivors, broadcast under the bcast_v
+    # gate, and its survivors' count() is its one action.
+    deg = copurchase_degree_table(spark, sf_dir)
+    n_v, n_1 = deg.agg(F.count(F.lit(1)), F.count_if(F.col("dg") >= 8)).first()
+    counts = [n_v, n_1]
+    adj = g = None
+    surv = deg.filter(F.col("dg") >= 8).select(F.col("x").alias("u"))
+    for _ in (2, 3):
+        if counts[-1] == counts[-2]:
+            counts.append(counts[-1])
+            continue
+        if adj is None:
+            adj = g = copurchase_adjacency(spark, sf_dir)
+        g = g.join(bcast_v(surv, sf_dir), "u", "left_semi").join(
+            bcast_v(surv.select(F.col("u").alias("v")), sf_dir), "v", "left_semi"
         )
-        if rnd < 3:
-            g = g.join(bcast_v(surv, sf_dir), "u", "left_semi").join(
-                bcast_v(surv.select(F.col("u").alias("v")), sf_dir),
-                "v",
-                "left_semi",
-            )
-            surv = (
-                g.groupBy("u")
-                .agg(F.count(F.lit(1)).alias("dg"))
-                .filter(F.col("dg") >= 8)
-                .select("u")
-                .localCheckpoint(eager=False)
-            )
-    out = counts[0]
-    for f in counts[1:]:
-        out = out.unionAll(f)
-    return out
+        surv = (
+            g.groupBy("u")
+            .agg(F.count(F.lit(1)).alias("dg"))
+            .filter(F.col("dg") >= 8)
+            .select("u")
+            .localCheckpoint(eager=False)
+        )
+        counts.append(surv.count())
+    if adj is not None:
+        adj.unpersist()
+    return local_rows(
+        spark,
+        [(rnd, n) for rnd, n in enumerate(counts[1:], 1)],
+        "rnd int, n_survivors bigint",
+    )
 
 
 # --------------------------------------------------------------------

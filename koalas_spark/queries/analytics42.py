@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from koalas_spark.frame import local_rows
 from koalas_spark.queries import query
 from koalas_spark.queries.analytics import _t
 
@@ -165,9 +166,8 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         selected.append((k, best[1]))
         chosen.add(best[1])
     out = [(rk, vid, int(sq[vid])) for rk, vid in selected]
-    return spark.createDataFrame(
-        out, "sel_rank int, vec_id bigint, simq_nano bigint"
-    ).orderBy("sel_rank")
+    schema = "sel_rank int, vec_id bigint, simq_nano bigint"
+    return local_rows(spark, out, schema).orderBy("sel_rank")
 
 
 # --------------------------------------------------------------------

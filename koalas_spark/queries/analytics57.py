@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from koalas_spark.frame import local_rows
 from koalas_spark.queries import query
 from koalas_spark.queries.analytics import _t
 
@@ -182,7 +183,8 @@ def observe_metrics_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     observed.count()  # the action the metrics piggyback on
     got = obs.get
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(int(got["n_rows"]), int(got["revenue_cents"]))],
         "n_rows bigint, revenue_cents bigint",
     )

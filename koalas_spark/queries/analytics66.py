@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from koalas_spark.frame import local_rows
 from koalas_spark.queries import query
 from koalas_spark.queries.analytics import _t
 
@@ -275,7 +276,8 @@ def holt_linear_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         new_lvl = trunc2(xs[t] + lvl + trend)
         trend = trunc2(new_lvl - lvl + trend)
         lvl = new_lvl
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(n, lvl, trend, lvl + 7 * trend)],
         "n_days bigint, level_cents bigint, trend_cents bigint,"
         " forecast_7d_cents bigint",

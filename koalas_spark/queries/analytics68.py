@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from koalas_spark.frame import local_rows
 from koalas_spark.queries import query
 from koalas_spark.queries.analytics import _t
 
@@ -435,7 +436,8 @@ def holt_winters_dow_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         new_s = trunc2(xs[t] - new_lvl + s_lag7)
         lvl = new_lvl
         ring = [new_s] + ring[:6]
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(n, lvl, trend, lvl + trend + ring[6])],
         "n_days bigint, level_cents bigint, trend_cents bigint,"
         " forecast_1d_cents bigint",

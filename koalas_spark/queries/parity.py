@@ -7,13 +7,11 @@ KFrame API, against the benchmark tables, with a DuckDB oracle.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from koalas_spark.frame import KFrame, concat
-from koalas_spark.memo import workdir
+from koalas_spark.memo import staged
 from koalas_spark.queries import query
 from koalas_spark.queries.analytics import _t, dsum, _dsum_sql
 
@@ -39,8 +37,12 @@ def read_table_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("l_orderkey") <= 100)
         .select("l_orderkey", "l_linenumber", "l_returnflag", "l_linestatus")
     )
-    path = os.path.join(workdir(), "read_table_roundtrip")
-    KFrame(src).to_csv(path, sep="\t")
+    path = staged(
+        spark,
+        "read_table_roundtrip",
+        (sf_dir, "lineitem"),
+        lambda p: KFrame(src).to_csv(p, sep="\t"),
+    )
     return KFrame.from_table(
         spark,
         path,

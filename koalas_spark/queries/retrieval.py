@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from koalas_spark.frame import local_rows
 from koalas_spark.functions.textfn import token_count, tokens, word_shingles
 from koalas_spark.memo import artifact
 from koalas_spark.queries import query
@@ -909,9 +910,7 @@ def bpe_learn_merges(
             ),
         ).localCheckpoint(eager=False)
 
-    return spark.createDataFrame(
-        merges, "merge_rank int, pair string, freq bigint"
-    )
+    return local_rows(spark, merges, "merge_rank int, pair string, freq bigint")
 
 
 # --------------------------------------------------------------------

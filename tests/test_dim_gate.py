@@ -71,8 +71,10 @@ def test_above_gate_plans_match_oracle(spark, registry_builds, request, monkeypa
     # all made before this test swaps in a private one
     sized = sorted(n for n, b in registry_builds.items() if b.sized)
     request.getfixturevalue("private_artifacts")
-    # the spy sees the graph gates and the beam walk's
-    assert {"kcore_peeling_rounds", "ann_graph_search"} <= set(sized)
+    # the spy sees the graph gates and the beam walk's (k-core's peel
+    # rounds, which never run at SF_SMOKE, are swept above the gates on
+    # their own input in test_graph)
+    assert {"label_propagation_communities", "ann_graph_search"} <= set(sized)
     monkeypatch.setattr(memo, "source_bytes", lambda sf_dir, table: 100 << 40)
     frames = dict.fromkeys(sized)
     for name in _UNAUDITED_SIZED:

@@ -1,5 +1,7 @@
 """connected_components semantics on known graphs."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -167,6 +169,46 @@ _V_HINTED = {
 }
 
 
+@pytest.fixture(scope="module")
+def kcore_peel_sf(tmp_path_factory):
+    """A copy of SF_SMOKE whose lineitem gains two-line orders over 23
+    new parts: a 20-part clique C and a chain p1-p2-p3 hanging off it.
+    p1 has C[0:6] and p2 (degree 7), p2 has p1, p3 and C[6:12] (8), p3
+    has p2 and C[12:19] (8). Every sf0.001 part keeps degree >= 49, so
+    each k = 8 peel round drops exactly one node: p1, then p2, then p3
+    — the input on which k-core's peel rounds run at all."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from koalas_spark.sources.io import SOURCES, source_path
+
+    out = tmp_path_factory.mktemp("kcore_peel")
+    for t in SOURCES:
+        if t != "lineitem":
+            src = source_path(SF_SMOKE, t)
+            os.symlink(src, out / os.path.basename(src))
+    li = pq.read_table(source_path(SF_SMOKE, "lineitem"))
+    clique = list(range(10_000, 10_020))
+    p1, p2, p3 = 10_020, 10_021, 10_022
+    edges = [(a, b) for i, a in enumerate(clique) for b in clique[i + 1 :]]
+    edges += [(p1, c) for c in clique[0:6]] + [(p1, p2), (p2, p3)]
+    edges += [(p2, c) for c in clique[6:12]] + [(p3, c) for c in clique[12:19]]
+    template = li.slice(0, 1).to_pylist()[0]
+    base = max(li["l_orderkey"].to_pylist()) + 1
+    rows = [
+        {**template, "l_orderkey": base + i, "l_partkey": part, "l_linenumber": n}
+        for i, edge in enumerate(edges)
+        for n, part in enumerate(edge, 1)
+    ]
+    grown = pa.concat_tables([li, pa.Table.from_pylist(rows, schema=li.schema)])
+    pq.write_table(grown, source_path(str(out), "lineitem"))
+    return str(out)
+
+
+# the survivor counts of the three peel rounds on kcore_peel_sf
+_PEEL_COUNTS = [(1, 222), (2, 221), (3, 220)]
+
+
 @pytest.mark.parametrize(
     "name",
     [
@@ -177,20 +219,24 @@ _V_HINTED = {
         "jaccard_link_copurchase",
     ],
 )
-def test_graph_gates_above_threshold_drop_hints(spark, monkeypatch, name):
+def test_graph_gates_above_threshold_drop_hints(spark, monkeypatch, request, name):
     """Above the |E| gate (1 GB of lineitem) no broadcast or
     shuffle_hash hint may sit over an |E|-sized frame; above the |V|
     gate too (16 GB) none over a |V|-sized one either. The rows must
-    equal the oracle's on every side of the gates."""
+    equal the oracle's on every side of the gates. k-core runs on the
+    peel input: at SF_SMOKE its fixed-point exit fires before any
+    join."""
     from koalas_spark import memo
     from koalas_spark.queries import all_queries
     from tools.check_oracle import check, connect_duck
 
-    duck = connect_duck(SF_SMOKE)
+    peel = name == "kcore_peeling_rounds"
+    sf = request.getfixturevalue("kcore_peel_sf") if peel else SF_SMOKE
+    duck = connect_duck(sf)
 
     def hints_over(allowed):
-        built = watched_build(spark, lambda: all_queries()[name](spark, SF_SMOKE))
-        assert check(spark, duck, SF_SMOKE, name, built.df)[0] == "OK"
+        built = watched_build(spark, lambda: all_queries()[name](spark, sf))
+        assert check(spark, duck, sf, name, built.df)[0] == "OK"
         return [(h.cols, h.strategy) for h in built.hints if h.cols not in allowed]
 
     # below the gates a non-constant frame is hinted, so the checks
@@ -199,3 +245,39 @@ def test_graph_gates_above_threshold_drop_hints(spark, monkeypatch, name):
     for gb, allowed in ((1, _CONST_HINTED | _V_HINTED), (16, _CONST_HINTED)):
         monkeypatch.setattr(memo, "source_bytes", lambda sf_dir, t, gb=gb: gb << 30)
         assert hints_over(allowed) == [], f"hints above the {gb} GB gate"
+
+
+@pytest.mark.parametrize("forced_bytes", [None, 100 << 40])
+def test_kcore_peel_rounds_match_oracle(spark, monkeypatch, kcore_peel_sf, forced_bytes):
+    """On the peel input every round drops a node, so all three rounds
+    run; the counts equal the oracle's at the real gates and with the
+    source sized at 100 TB, where every gate has given way."""
+    from koalas_spark import memo
+    from koalas_spark.queries import all_queries
+    from tools.check_oracle import check, connect_duck
+
+    if forced_bytes is not None:
+        monkeypatch.setattr(memo, "source_bytes", lambda sf_dir, t: forced_bytes)
+    df = all_queries()["kcore_peeling_rounds"](spark, kcore_peel_sf)
+    assert sorted(map(tuple, df.collect())) == _PEEL_COUNTS
+    duck = connect_duck(kcore_peel_sf)
+    assert check(spark, duck, kcore_peel_sf, "kcore_peeling_rounds", df)[0] == "OK"
+
+
+def test_kcore_exit_runs_no_peel_round_at_smoke_scale(spark, monkeypatch):
+    """At SF_SMOKE no node has degree < 8, so round 1 keeps |V| and the
+    fixed-point exit repeats that count: k-core never builds the
+    adjacency and sizes no broadcast, and the rows equal the oracle."""
+    from koalas_spark.queries import all_queries, mining
+    from tools.check_oracle import check, connect_duck
+
+    calls = []
+    for fn in ("copurchase_adjacency", "bcast_v"):
+        real = getattr(mining, fn)
+        monkeypatch.setattr(
+            mining, fn, lambda *a, fn=fn, real=real: calls.append(fn) or real(*a)
+        )
+    name = "kcore_peeling_rounds"
+    built = watched_build(spark, lambda: all_queries()[name](spark, SF_SMOKE))
+    assert calls == [] and built.hints == []
+    assert check(spark, connect_duck(SF_SMOKE), SF_SMOKE, name, built.df)[0] == "OK"

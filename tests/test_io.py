@@ -119,6 +119,25 @@ def test_one_source_reader():
     assert not markers, markers
 
 
+def test_driver_assembled_results_are_built_in_the_jvm():
+    """A frame returned from rows assembled on the driver is built by
+    ``frame.local_rows``, one JVM task; ``createDataFrame`` parallelizes
+    the list over every core and unpickles it in Python workers.
+    ``operators/graph._driver_components`` keeps it: its callers join
+    its output, and a literal frame would change how the planner sizes
+    that join."""
+    root = Path(koalas_spark.__file__).parent
+    found = set()
+    for p in sorted(root.rglob("*.py")):
+        for fn in ast.walk(ast.parse(p.read_text())):
+            if not isinstance(fn, ast.FunctionDef) or fn.name == "_driver_components":
+                continue
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Return) and "createDataFrame(" in ast.unparse(node):
+                    found.add(f"{p.relative_to(root)}:{node.lineno}")
+    assert not found, sorted(found)
+
+
 def test_jsonl_roundtrip(spark, tmp_path):
     from koalas_spark.sources.io import read_jsonl, write_jsonl
 

@@ -214,7 +214,7 @@ def test_second_build_of_a_staged_query_launches_no_job(spark):
     from koalas_spark.queries import registry
 
     names = _staged_queries()
-    assert len(names) >= 16, names
+    assert len(names) >= 17, names
     sc = spark.sparkContext
     jobs = {}
     for name in names:

@@ -140,3 +140,48 @@ def test_apply_batch_arbitrary_python(spark):
     out = {r.id: (r.bits, r.rev) for r in
            kf.apply_batch(fancy, "id long, bits int, rev string").df.collect()}
     assert out == {1: ((7).bit_count(), "ba"), 2: ((14).bit_count(), "zyx"), 3: ((21).bit_count(), "")}
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [
+        [(1, 2**40, float("nan"), "x", None), (None, 3, 1.5, None, "y")],
+        [],
+    ],
+    ids=["values", "empty"],
+)
+def test_local_rows_is_one_jvm_task_of_the_declared_schema(spark, rows):
+    """local_rows keeps the declared types and nullability, NaN and nulls
+    included, and an empty list gives an empty frame of the schema.
+    Forcing it runs one task over no parallelized Python list."""
+    import math
+
+    from pyspark.sql import types as T
+
+    from koalas_spark.frame import local_rows
+
+    ddl = "a int, b bigint, c double, d string, e string"
+    lit = local_rows(spark, rows, ddl)
+    assert lit.schema == T.StructType.fromDDL(ddl)
+
+    def nan_as_str(row):
+        return tuple("NaN" if isinstance(v, float) and math.isnan(v) else v for v in row)
+
+    assert [nan_as_str(r) for r in lit.collect()] == [nan_as_str(r) for r in rows]
+    plan = spark._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
+        lit._jdf.queryExecution(), "formatted"  # noqa: SLF001
+    )
+    assert "ExistingRDD" not in plan and "Python" not in plan, plan
+    sc = spark.sparkContext
+    group = f"local_rows_{len(rows)}"
+    sc.setJobGroup(group, group)
+    lit.write.format("noop").mode("overwrite").save()
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    tracker = sc.statusTracker()
+    tasks = [
+        tracker.getStageInfo(s).numTasks
+        for j in tracker.getJobIdsForGroup(group)
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    assert tasks == [1]
